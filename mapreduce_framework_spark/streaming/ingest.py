@@ -37,40 +37,35 @@ appended to the index.
 The reference has no streaming surface (batch-only, hard map→reduce
 barrier, src/mr/coordinator.go:143-155); this is [EXT] (SURVEY §7 M5).
 
-Four admission sinks share the lifecycle: the single-tier MinHash sink
-(``make_ingest_batch_fn``), its semantic-embedding twin
-(``make_semantic_ingest_batch_fn``), the TIERED CASCADE
-(``make_cascade_ingest_batch_fn``) that runs an exact md5-fingerprint
-tier in front of MinHash so crawl re-fetches are rejected at an
-equi-join's cost before any shingling runs, and the FULL three-tier
-cascade (``make_full_cascade_ingest_batch_fn``: exact → MinHash →
-semantic, registered end-to-end as q104). Every MinHash-tier sink can
-additionally maintain the PERSISTED BANDED LAYOUT
-(``bands_root``/``sig_bands_root`` + pipeline/dedup.py:banded_signatures)
-on the same delta/manifest lifecycle, cutting the per-batch candidate
-scan ~5.8× (SCALING.md); semantic sinks stamp and check the codebook
-fingerprint, and ``reindex_semantic_root`` is the codebook-refresh swap.
+One admission sink (``_tiered_sink``) carries this lifecycle for every
+public name. It runs an ordered list of tiers, each doc paying the
+cheapest test that can reject it: quality → exact → media_dup → near_dup
+→ semantic → contaminated. Each tier's policy is documented once, on its
+tier function (``_quality_tier``, ``_exact_tiers``, ``_media_tier``,
+``_near_dup_tier``, ``_semantic_tier``, ``_contamination_tier``). The
+four public names are configurations of that sink:
+- ``make_ingest_batch_fn``: near_dup alone, the single-tier MinHash sink;
+- ``make_semantic_ingest_batch_fn``: semantic alone, keyed by ``vec_id``;
+- ``make_cascade_ingest_batch_fn``: every tier but semantic (quality,
+  media_dup and contaminated are opt-in);
+- ``make_full_cascade_ingest_batch_fn``: all six, registered end-to-end
+  as q104.
+``reindex_semantic_root`` is the codebook-refresh swap and
+``admission_report`` the per-tier ops rollup over any decisions root.
 
-Round-8 lifecycle hardening (all measured/argued in SCALING.md):
-- WRITER FENCING: every sink acquires its roots at construction
-  (storage.acquire_index_root) and presents the epoch token on every
-  publish — two streams on one root, or a zombie retry of a replaced
-  driver, hard-error with nothing committed.
-- DRIFT TRIGGER: semantic sinks log each batch's quantization error
-  under the held codebook into the index manifest; ``needs_refit``
-  reads the trend and ``refresh_semantic_root_if_needed`` is the
-  between-batches measure→decide→act autopilot for the refresh.
-- HOT-BAND CAP: ``band_cap`` re-bounds the persisted banded layout's
-  (band, bsig) groups at every compaction (pipeline/dedup.py:cap_banded
-  has the recall argument), so a boilerplate cluster cannot serialize
-  the candidate join through one hot key.
-- ``admission_report`` is the per-tier ops rollup over any decisions
-  root.
+Round-8 lifecycle hardening (all measured/argued in SCALING.md): writer
+fencing (_tiered_sink), the codebook drift trigger (``needs_refit``,
+``refresh_semantic_root_if_needed``) and the hot-band cap
+(_near_dup_tier's ``band_cap``).
 """
 
 from __future__ import annotations
 
+import operator
 import os
+from collections.abc import Callable
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -163,27 +158,27 @@ def _check_bands_coverage(
         )
 
 
-def _require_codebook(index_root: str, fingerprint: str) -> None:
-    """Hard-fail when a semantic index root was built under a DIFFERENT
-    codebook than the sink holds (manifest ``codebook_id`` vs the sink's
-    own fingerprint). Cell assignments are only comparable under one
-    codebook: a refreshed codebook paired with a stale index silently
-    mis-matches every batch — this check runs BEFORE the batch's first
-    publish, so no decision is ever committed under the mismatch. A
-    manifest without a stamp (pre-check legacy root, or first batch) is
-    accepted and stamped at publish time."""
+def _require_stamp(index_root: str, key: str, held: str, mismatch) -> None:
+    """Hard-fail when an index root was built under a DIFFERENT config than
+    the sink holds: the manifest's ``key`` stamp (``codebook_id``, the
+    codebook fingerprint; ``phash_config``,
+    multimodal_dedup.phash_fingerprint's (cells, bands, threshold)) vs
+    ``held``. Index rows are only comparable under one config: a refreshed
+    codebook paired with a stale index silently mis-matches every batch,
+    and a 32-cell phash index probed by a 64-cell sink (the SCALING.md
+    round-12 width guidance) silently matches NOTHING — every re-encoded
+    copy admits. A tier runs this as its guard, UNCONDITIONALLY before the
+    batch is read, not only once its index becomes visible: a sink
+    restarted at batch 0 over an existing never-compacted root sees no
+    loaded index, and a load-gated check would let it publish a delta
+    under the new config before any probe ever runs (round-12 ADVICE). So
+    no decision is ever committed under a mismatch. A manifest without a
+    stamp (pre-check legacy root, or first batch) is accepted and stamped
+    at publish time. ``mismatch(stamped)`` builds the error message."""
     man = read_index_manifest(index_root)
-    if man is None:
-        return
-    cid = man.get("codebook_id")
-    if cid is not None and cid != fingerprint:
-        raise ValueError(
-            f"semantic index at {index_root} was built under codebook "
-            f"{cid[:12]}... but this sink holds {fingerprint[:12]}... — "
-            "cell assignments are only comparable under ONE codebook; "
-            "after a refresh run reindex_semantic_root and hand the SAME "
-            "centroids frame to the sink"
-        )
+    stamped = None if man is None else man.get(key)
+    if stamped is not None and stamped != held:
+        raise ValueError(mismatch(stamped))
 
 
 # --- codebook-drift trigger (round 8) ----------------------------------------
@@ -354,43 +349,14 @@ def refresh_semantic_root_if_needed(
     return refreshed
 
 
-def _require_phash_config(index_root: str, fingerprint: str) -> None:
-    """Hard-fail when a phash index root was built under a DIFFERENT
-    (cells, bands, threshold) configuration than the sink holds
-    (manifest ``phash_config`` vs multimodal_dedup.phash_fingerprint()).
-    Hashes are only comparable under one grid: a 32-cell index probed by
-    a 64-cell sink (the SCALING.md round-12 width guidance) silently
-    matches NOTHING — every re-encoded copy admits. Runs UNCONDITIONALLY
-    at the top of apply_batch whenever the sink holds a phash root
-    (exactly _require_codebook's placement), not just once the index
-    becomes visible: a sink restarted at batch 0 over an existing
-    never-compacted root sees no loaded index, and a load-gated check
-    would let it publish a new-width delta into the old-width root
-    before any probe ever runs (round-12 ADVICE). An unstamped manifest
-    (legacy root or first batches) is accepted and stamped at publish
-    time — _require_codebook's contract."""
-    man = read_index_manifest(index_root)
-    if man is None:
-        return
-    cfg = man.get("phash_config")
-    if cfg is not None and cfg != fingerprint:
-        raise ValueError(
-            f"phash index at {index_root} was built under config {cfg} but "
-            f"this sink computes {fingerprint} — perceptual hashes are only "
-            "comparable under ONE (cells, bands, threshold) configuration; "
-            "rebuild the index (phash_index over the corpus) at the new "
-            "width, or run the sink at the index's width"
-        )
-
-
 def _stamp_phash_config(
     index_root: str, fingerprint: str, epoch: int | None = None
 ) -> None:
     """Record the sink's phash config in the index manifest if ABSENT
     (first publish, or a pre-check legacy root) — same stamp-if-absent
     contract and crash/fencing story as _stamp_codebook below. Never
-    overwrites a differing stamp: a mismatch is _require_phash_config's
-    hard failure (which runs unconditionally at the top of apply_batch),
+    overwrites a differing stamp: a mismatch is _require_stamp's hard
+    failure (the media tier's guard, run before every batch),
     and overwriting here would let a batch-0 restart under a different
     grid clobber the old stamp and silently legitimize a mixed-width
     index (round-12 ADVICE)."""
@@ -433,7 +399,8 @@ def reindex_semantic_root(
     a manifest already committing ``next_batch`` or later is a hard
     error, because the in-flight batch would have matched under the old
     codebook. The caller hands the SAME centroids frame to the next
-    sink; ``_require_codebook`` enforces the pairing from then on.
+    sink; the semantic tier's guard (_require_stamp) enforces the pairing
+    from then on.
     Cost: one O(index) rewrite per refresh — the same amortized shape as
     compaction, paid only when the codebook actually drifts (SCALING.md
     ANN-drift series quantifies when that is worth it)."""
@@ -603,32 +570,23 @@ def _run_publish_chains(*chains) -> None:
     prefix-only-published guarantee that redelivery never relied on).
 
     Round 14 (VERDICT r13 item 1): the driver's r13 steady-state uptick was
-    adjudicated with an in-process alternating A/B (tools/ab_publish_chains.py,
-    widths 1/2/3/6 interleaved ×3 in one session, 3-tier and 6-tier sinks):
-    sequential publishes are the SLOWEST arm on every series (3-tier match
-    8.2–8.6 s vs 6.2–6.5 s uncapped; 6-tier match 9.4–13.0 s vs 8.7–9.5 s),
-    and the regressed driver series included sem_codebook_fit/sem_index_build,
+    adjudicated with an in-process alternating A/B (pool widths 1/2/3/6
+    interleaved ×3 in one Spark application, 3-tier and 6-tier sinks): sequential
+    publishes are the SLOWEST arm on every series (3-tier match 8.2–8.6 s
+    vs 6.2–6.5 s uncapped; 6-tier match 9.4–13.0 s vs 8.7–9.5 s), and the
+    regressed series included sem_codebook_fit/sem_index_build,
     which never call this function — the uptick was host-window drift, not
     this concurrency. Guide §2.6's "2-3 jobs is plenty" caution does not
     bind because each chain is one small write job, not a stage-filling
-    query, so the default stays UNCAPPED (one worker per live chain); the
-    pool width is env-tunable for deployments where publish jobs are large
-    enough to fight for executors (SPARK_GRAFT_PUBLISH_CONCURRENCY; <=1
-    runs the chains sequentially, the pre-round-13 form)."""
+    query, so the pool is UNCAPPED: one worker per live chain."""
     from concurrent.futures import ThreadPoolExecutor
 
     live = [c for c in chains if c is not None]
-    try:
-        width = int(
-            os.environ.get("SPARK_GRAFT_PUBLISH_CONCURRENCY", str(len(live)))
-        )
-    except ValueError:
-        width = len(live)
-    if len(live) <= 1 or width <= 1:
+    if len(live) <= 1:
         for c in live:
             c()
         return
-    with ThreadPoolExecutor(max_workers=min(width, len(live))) as pool:
+    with ThreadPoolExecutor(max_workers=len(live)) as pool:
         futures = [pool.submit(c) for c in live]
         errors = [f.exception() for f in futures]
     for ex in errors:
@@ -658,6 +616,602 @@ def delta_dir(index_root: str, batch_id: int) -> str:
     )
 
 
+def _require_compaction_for_caps(
+    compact_every: int | None, band_cap: int | None = None, cell_cap: int | None = None
+) -> None:
+    """The hot-key caps are applied exclusively at compaction
+    (compact_transform in _publish_delta); accepting a cap with
+    compact_every=None would hand back an exact (uncapped,
+    unbounded-hot-key) index while the caller believes the guard is on —
+    hard error instead (round-9 ADVICE)."""
+    for name, cap in (("band_cap", band_cap), ("cell_cap", cell_cap)):
+        if compact_every is None and cap is not None:
+            raise ValueError(
+                f"{name} is applied at compaction, but compact_every=None means "
+                "compaction never runs — the index would stay uncapped. Set "
+                f"compact_every (the cap re-applies every fold) or drop {name}."
+            )
+
+
+# --- the tiered admission sink (module docstring: tier order and names) -------
+
+
+@dataclass(frozen=True)
+class _Tier:
+    """One admission test of :func:`_tiered_sink`.
+
+    ``match(survivors, index, batch_id)`` returns the tier's rejects among
+    the survivors of every earlier tier as ``(doc_id[, id_col][, score])``.
+    ``index`` is the tier root's strictly-before-batch_id index — the tier
+    is skipped while that index is empty — or None for an index-free tier.
+    A reject's ``matched_id`` is its ``id_col`` (None: the reject has no
+    corpus counterpart, reported as -1) and its score is the ``score``
+    column, or the constant when ``score`` is a float. ``guard`` runs
+    before the batch is read. A tier with a ``root`` indexes the batch's
+    admitted docs: ``delta(admitted)`` is published under ``root`` with
+    ``compact_transform`` (the tier's hot-key guard), then every
+    ``after_publish(delta, batch, batch_id)`` step runs on the same chain,
+    so a root's manifest is never written from two threads."""
+
+    name: str
+    match: Callable
+    id_col: str | None
+    score: str | float
+    root: str | None = None
+    epoch: int | None = None
+    delta: Callable | None = None
+    compact_transform: Callable | None = None
+    guard: Callable | None = None
+    after_publish: tuple = ()
+
+
+def _best_match(matches, new, old, score, id_col, score_col) -> DataFrame:
+    """Each probe doc's best index match: highest score, ties to the
+    lowest index id."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(new).orderBy(F.col(score).desc(), F.col(old).asc())
+    return (
+        matches.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select(
+            F.col(new).alias("doc_id"),
+            F.col(old).alias(id_col),
+            F.col(score).alias(score_col),
+        )
+    )
+
+
+def _quality_tier() -> _Tier:
+    """QUALITY (opt-in ``quality_gate``, round 10): the per-doc admission
+    gate of pipeline/quality.py:quality_rejects (the q105/q81 integer rule
+    + the Gopher repetition flags). Runs FIRST, before any index tier: it
+    is the only tier that needs NO index at all (pure per-doc compute, one
+    batch-local gram aggregate — O(batch)), and running it first keeps
+    junk out of every index — the production ordering (filter before
+    dedup). A rejected doc carries tier 'quality', score = dup_frac,
+    matched_id -1 (like 'contaminated', the reject has no corpus
+    counterpart) and is never indexed; it never consults the later tiers,
+    so a low-quality re-fetch reports 'quality', not 'exact' (tier
+    precedence is strict in BOTH directions). The streaming counterpart of
+    q105's batch quality stage — with it, the cascade reaches tier parity
+    with the batch flagship (quality → exact → near-dup [→ semantic] →
+    decon)."""
+
+    def match(live, _index, _batch_id):
+        from mapreduce_framework_spark.pipeline.quality import quality_rejects
+
+        return quality_rejects(live).select("doc_id", F.col("q_frac").alias("ql_frac"))
+
+    return _Tier("quality", match, None, "ql_frac")
+
+
+def _exact_tiers(
+    fp_index_root: str, fp_distinct: bool, intra_batch_exact: bool
+) -> list:
+    """EXACT: crawl re-fetches — typically the bulk of rejects — fall to
+    a narrow md5 equi-join against the fingerprint index
+    (pipeline/dedup.py:exact_match_batch) before any shingling/MinHash
+    work runs, and only the survivors reach the costlier tiers. A reject
+    reports the smallest byte-identical index id and score 1.0 (a
+    byte-identical copy IS a jaccard-1.0 pair). Tier precedence is strict:
+    an exact-rejected doc never consults the later tiers, so its matched_id
+    is the byte-identical index id even when a later tier would have found
+    a closer or lower-id match.
+
+    ``fp_distinct`` (default True — DECISION-LOSSLESS, see
+    pipeline/dedup.py:cap_fingerprints): the fp index keeps one
+    min-doc_id row per fingerprint — per-batch deltas are written
+    distinct, and compaction re-applies the rule index-wide — so a
+    boilerplate cluster can never pile 10⁶ identical rows behind one fp
+    join key (the exact tier's hot-key guard; the admission rule's
+    min(id1) makes the retained row exactly the one every decision
+    reports).
+
+    ``intra_batch_exact`` (default False — the module-wide
+    within-batch-is-upstream's-job policy): opt-in second pass that
+    pre-dedups BYTE-IDENTICAL copies arriving in one batch. It runs
+    strictly AFTER the index pass (same fp ⇒ same index verdict, so order
+    only matters for index-missed fps): among batch docs whose fp is new
+    to the corpus, the lowest doc_id (the batch REPRESENTATIVE) is
+    admitted past this tier and every other copy is rejected with tier
+    'exact' and matched_id = that representative. NOTE the representative
+    may itself be rejected by a LATER tier (near-dup/semantic/
+    contaminated) — its copies still carry tier 'exact' pointing at it, so
+    matched_id names the batch representative, which is not necessarily
+    an admitted/indexed corpus doc; the representative's own decision row
+    carries that provenance (round-10 ADVICE: this pass's matched_id
+    contract is weaker than the index tiers'). Changes decisions BY DESIGN
+    (stricter), hence opt-in and unregistered; differential-pinned by
+    tests/test_streaming.py::test_intra_batch_exact_pre_dedup."""
+    from mapreduce_framework_spark.pipeline.dedup import (
+        cap_fingerprints,
+        exact_fingerprint_index,
+        exact_match_batch,
+    )
+
+    def match(live, fp_idx, _batch_id):
+        return (
+            exact_match_batch(fp_idx, live)
+            .groupBy("id2")
+            .agg(F.min("id1").alias("ex_id"))
+            .select(F.col("id2").alias("doc_id"), "ex_id")
+        )
+
+    tiers = [
+        _Tier(
+            "exact", match, "ex_id", 1.0,
+            root=fp_index_root, epoch=acquire_index_root(fp_index_root),
+            delta=lambda adm: exact_fingerprint_index(adm, distinct=fp_distinct),
+            compact_transform=cap_fingerprints if fp_distinct else None,
+        )
+    ]
+
+    def intra_batch(survivors, _index, _batch_id):
+        # every copy of a lower doc_id in the index-surviving batch slice,
+        # matched to the lowest copy: one narrow min-aggregate + fp
+        # equi-join over the batch (no window, no index — strictly O(batch))
+        fps = survivors.select(
+            "doc_id", F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("fp")
+        )
+        best = fps.groupBy("fp").agg(F.min("doc_id").alias("ib_id"))
+        return (
+            fps.join(best, "fp")
+            .where(F.col("doc_id") > F.col("ib_id"))
+            .select("doc_id", "ib_id")
+        )
+
+    if intra_batch_exact:
+        tiers.append(_Tier("exact", intra_batch, "ib_id", 1.0))
+    return tiers
+
+
+def _media_tier(
+    phash_index_root: str,
+    phash_band_cap: int | None,
+    phash_cells: int | None,
+    phash_bands: int | None,
+) -> _Tier:
+    """MEDIA_DUP (opt-in ``phash_index_root``, round 11 — the q109 tier):
+    the MULTIMODAL near-dup tier between the exact and MinHash tiers
+    (cheaper than shingling: one Arrow hash pass + a 9-keys/doc band
+    join). The persisted index is ``multimodal_dedup.phash_index``'s
+    (doc_id, phash) — 16 bytes/doc — on the same delta/manifest lifecycle
+    as the other tiers; a re-encoded/retouched copy of an indexed doc
+    (small Hamming distance, shared bytes NOT required) is rejected with
+    tier 'media_dup', matched_id = the lowest matching index doc_id, and
+    score = (cells − hamming)/cells (the tier-typed similarity, ≥ 0.875
+    at the ≤ 4-bit threshold on 32 cells). NULL and zero-length payloads
+    have no pixels, hence no phash: such docs are invisible to this tier
+    (never phash-rejected, never phash-indexed) and stay fully subject to
+    every other tier — the multimodal family's no-bytes-no-media policy.
+    The tier is pixel/text-only (embeddings never touched), so an
+    embeddings-free deployment keeps perceptual media dedup too.
+
+    ``phash_band_cap`` bounds adversarial hot bands via cap_banded at
+    match time, with cap_banded's documented semantics exactly: every
+    reported match is REAL (a genuine index doc within the Hamming
+    threshold), but under adversarial saturation — lower-id non-matching
+    docs filling every band the true best match occupies — matched_id can
+    shift to a retained member, and row-level subset-of-uncapped is NOT
+    guaranteed (pinned both ways by tests/test_multimodal_dedup_props.py::
+    test_phash_match_batch_cap_shifts_matched_id_under_saturation). Scale
+    note: the band frame is derived from the (doc_id, phash) index per
+    batch — a projection+explode of a 16-byte row; if profiles ever show
+    that derivation dominating, the persisted-banded-layout pattern of
+    the near-dup tier (cap at compaction) applies verbatim.
+
+    ``phash_cells``/``phash_bands`` (round 13) select the grid width PER
+    ROOT (multimodal_dedup.phash_params; default the module 32/4): a
+    100 TB deployment passes phash_cells=64 — the SCALING.md birthday-mass
+    lever. The width is resolved ONCE here (fail-fast on a bad pair), and
+    the guard checks the manifest's phash_config stamp before every batch
+    (_require_stamp), so a mixed-width root is impossible."""
+    from mapreduce_framework_spark.pipeline.multimodal_dedup import (
+        phash_fingerprint,
+        phash_index,
+        phash_match_batch,
+        phash_params,
+    )
+
+    cells, bands = phash_params(phash_cells, phash_bands)
+    config = phash_fingerprint(cells, bands)
+    epoch = acquire_index_root(phash_index_root)
+
+    def match(survivors, ph_idx, _batch_id):
+        return phash_match_batch(
+            ph_idx, survivors.select("doc_id", "text"),
+            band_cap=phash_band_cap, cells=cells, bands=bands,
+        ).select(
+            "doc_id",
+            F.col("matched_id").alias("ph_id"),
+            ((F.lit(cells) - F.col("hamming")) / F.lit(float(cells))).alias("ph_sim"),
+        )
+
+    return _Tier(
+        "media_dup", match, "ph_id", "ph_sim",
+        root=phash_index_root, epoch=epoch,
+        delta=lambda adm: phash_index(adm.select("doc_id", "text"), cells=cells),
+        guard=lambda: _require_stamp(
+            phash_index_root, "phash_config", config,
+            lambda stamped: f"phash index at {phash_index_root} was built under "
+            f"config {stamped} but this sink computes {config} — perceptual "
+            "hashes are only comparable under ONE (cells, bands, threshold) "
+            "configuration; rebuild the index (phash_index over the corpus) at "
+            "the new width, or run the sink at the index's width",
+        ),
+        after_publish=(
+            lambda _d, _b, _i: _stamp_phash_config(
+                phash_index_root, config, epoch=epoch
+            ),
+        ),
+    )
+
+
+def _near_dup_tier(
+    spark: SparkSession,
+    sig_index_root: str,
+    threshold: float,
+    shingler,
+    compact_every: int | None,
+    bands_root: str | None,
+    band_cap: int | None,
+) -> _Tier:
+    """NEAR_DUP: the q91 MinHash tier — each batch doc is matched against
+    the signature index so far (pipeline/dedup.py:match_batch: cross-side
+    LSH band join + estimate prune + exact verify) and rejected with its
+    best match (highest verified Jaccard, ties to the lowest index id);
+    admitted docs' signatures are appended as a delta. ``shingler``: the
+    shingle function shared by index build and matching (default word
+    shingles; pass ``char_shingles_of`` + ``CHAR_JACCARD_THRESHOLD`` for
+    the character-8-gram tier — see pipeline/dedup.py:index_signatures).
+    A shingle-free doc (< SHINGLE_K tokens, incl. NULL/empty text — the
+    family's NULL-behaves-as-empty policy) is invisible to this tier.
+
+    ``bands_root``: optional PERSISTED BANDED LAYOUT root
+    (pipeline/dedup.py:banded_signatures) maintained on the same delta/
+    manifest lifecycle: each batch publishes its admitted docs' band rows
+    right after the signature delta (one chain: signatures → bands keeps
+    bands ⊆ sigs), and matching joins the narrow band table instead of
+    re-deriving bands from 64 minhash longs per batch — the 5.8× per-batch
+    index-scan reduction measured in SCALING.md. Decisions are
+    byte-identical either way; a bands root whose coverage diverges from
+    the signature root (enabled mid-stream, lost delta) is a hard error
+    before the tier matches (_check_bands_coverage).
+
+    ``band_cap`` (requires ``bands_root`` and compaction): hot-band skew
+    guard — every compaction of the bands root re-bounds each (band, bsig)
+    group to its cap lowest-doc_id rows (pipeline/dedup.py:cap_banded has
+    the recall argument). Between compactions the accumulated excess is
+    bounded by the tail (≤ compact_every batches), so the candidate join's
+    max key population stays ≤ band_cap + tail even against a
+    boilerplate-cluster adversary. None (default) keeps decisions exact."""
+    from mapreduce_framework_spark.pipeline.dedup import (
+        banded_signatures,
+        cap_banded,
+        index_signatures,
+        match_batch,
+    )
+
+    epoch = acquire_index_root(sig_index_root)
+    publish_bands = ()
+    if bands_root is not None:
+        bands_epoch = acquire_index_root(bands_root)
+        bands_transform = (
+            None if band_cap is None else (lambda df: cap_banded(df, band_cap))
+        )
+        publish_bands = (
+            lambda sig, _batch, b: _publish_delta(
+                spark, bands_root, b, banded_signatures(sig), compact_every,
+                epoch=bands_epoch, compact_transform=bands_transform,
+            ),
+        )
+
+    def match(survivors, sig_idx, batch_id):
+        bands = None
+        if bands_root is not None:
+            _check_bands_coverage(sig_index_root, bands_root, before_batch=batch_id)
+            bands = _index_so_far(spark, bands_root, before_batch=batch_id)
+        return _best_match(
+            match_batch(sig_idx, survivors, threshold, shingler, index_bands=bands),
+            "id2", "id1", "jaccard", "nd_id", "nd_jaccard",
+        )
+
+    def delta(admitted):
+        sig = index_signatures(admitted, shingler)
+        # with a bands root one materialization feeds both publishes (the
+        # band rows are a projection of the signature delta, not a recompute)
+        return sig if bands_root is None else sig.localCheckpoint(eager=True)
+
+    return _Tier(
+        "near_dup", match, "nd_id", "nd_jaccard",
+        root=sig_index_root, epoch=epoch, delta=delta, after_publish=publish_bands,
+    )
+
+
+def _sem_side(docs: DataFrame) -> DataFrame:
+    # NULL embeddings are invisible to the semantic tier (see
+    # _semantic_tier); zero-norm ones are excluded downstream by _norms_spark.
+    return docs.where(F.col("embedding").isNotNull()).select(
+        F.col("doc_id").alias("vec_id"), "embedding"
+    )
+
+
+def _semantic_tier(
+    sem_index_root: str,
+    centroids: DataFrame,
+    cos_threshold: float | None,
+    cell_cap: int | None,
+) -> _Tier:
+    """SEMANTIC: each doc's embedding is matched against the semantic cell
+    index so far (pipeline/semantic_dedup.py:semantic_match_batch — only
+    the batch scores centroids): paraphrases and translations that share
+    no shingles but sit within ``cos_threshold`` (default SEMDEDUP_COS)
+    cosine of an index doc — the SemDeDup motivation. A reject reports
+    its best match (highest cosine, then smallest id) and the exact
+    cosine; admitted docs' cell assignments are appended as a delta.
+
+    ``centroids`` is the FIXED fitted codebook every batch shares
+    (pipeline/codebook.py; typically read back from its parquet artifact):
+    cell assignments are only comparable under one codebook. The index
+    manifest records the codebook's fingerprint and the guard checks it
+    BEFORE any publish (_require_stamp), so pairing the sink with an
+    index built under a different codebook (e.g. after refit_codebook
+    without reindex_semantic_root) is a hard error, never silent
+    mis-matching. After each publish the tier logs the WHOLE batch's
+    quantization error under the held codebook (admitted and rejected,
+    whatever their tier — rejects carry drift signal too), so
+    needs_refit() can read the trend.
+
+    Edge policies (mirroring similarity._norms_spark's zero-norm gate): a
+    NULL or ZERO-NORM embedding has no cosine neighborhood, so the doc can
+    never be semantic-rejected and is never written to the semantic index
+    — admitted yet never indexed, so later duplicates of it are not
+    rejected against it; in a cascade it stays fully subject to the
+    lexical tiers, so unembedded docs degrade to the lexical cascade
+    rather than erroring.
+
+    ``cell_cap`` (requires compaction): hot-cell skew guard — every
+    compaction of the index root re-bounds each cell to its cap
+    lowest-vec_id rows (pipeline/semantic_dedup.py:cap_cells has the
+    recall argument, exact for identical-embedding clusters). None
+    (default) keeps the index exact."""
+    from mapreduce_framework_spark.pipeline.codebook import codebook_fingerprint
+    from mapreduce_framework_spark.pipeline.semantic_dedup import (
+        SEMDEDUP_COS,
+        cap_cells,
+        semantic_index,
+        semantic_match_batch,
+    )
+
+    if cos_threshold is None:
+        cos_threshold = SEMDEDUP_COS
+    codebook = codebook_fingerprint(centroids)
+    epoch = acquire_index_root(sem_index_root)
+
+    def match(survivors, sem_idx, _batch_id):
+        return _best_match(
+            semantic_match_batch(
+                sem_idx, _sem_side(survivors), centroids, cos_threshold
+            ),
+            "new_id", "index_id", "cos", "sm_id", "sm_cos",
+        )
+
+    def stamp_and_log_drift(_delta, batch, batch_id):
+        _stamp_codebook(sem_index_root, codebook, epoch=epoch)
+        _log_drift(
+            sem_index_root, batch_id,
+            _batch_quantization_error(_sem_side(batch), centroids), epoch=epoch,
+        )
+
+    return _Tier(
+        "semantic", match, "sm_id", "sm_cos",
+        root=sem_index_root, epoch=epoch,
+        delta=lambda adm: semantic_index(_sem_side(adm), centroids),
+        compact_transform=(
+            None if cell_cap is None else (lambda df: cap_cells(df, cell_cap))
+        ),
+        guard=lambda: _require_stamp(
+            sem_index_root, "codebook_id", codebook,
+            lambda stamped: f"semantic index at {sem_index_root} was built under "
+            f"codebook {stamped[:12]}... but this sink holds {codebook[:12]}... — "
+            "cell assignments are only comparable under ONE codebook; after a "
+            "refresh run reindex_semantic_root and hand the SAME centroids "
+            "frame to the sink",
+        ),
+        after_publish=(stamp_and_log_drift,),
+    )
+
+
+def _contamination_tier(
+    benchmark_span_index: DataFrame, cont_threshold: float
+) -> _Tier:
+    """CONTAMINATED (opt-in ``benchmark_span_index``, round 9): the
+    DECONTAMINATION tier — the streaming counterpart of q105's batch
+    span-trim stage. A persisted ``span_dedup.span_index`` artifact of the
+    benchmark/eval corpus (built once per benchmark release, exactly like
+    ``centroids`` — a static frame, no delta lifecycle) is span-checked
+    against the docs every DEDUP tier admitted: a doc whose
+    contaminated-token fraction (span_dedup.span_contamination) reaches
+    ``cont_threshold`` is rejected with tier 'contaminated' and score =
+    cont_frac; its matched_id is -1 — the reject has no corpus
+    counterpart (the hit is benchmark-side). Runs LAST (contamination is
+    orthogonal to dedup; a contaminated re-fetch is cheaper to reject as a
+    dup) and only over full survivors, so its per-batch cost is one
+    batch-side tokenize/shingle + a semi-join against the (distinct,
+    usually broadcastable) span-hash column — O(batch). The tier is purely
+    LEXICAL (embeddings never touched), so an embeddings-free deployment —
+    or the full cascade's no-usable-centroid degradation — keeps
+    decontamination. Rejected docs are NOT indexed by any tier, exactly
+    like dup rejects; admission REJECTS rather than trims (the trim form
+    stays the batch-side deliverable, sampling.training_corpus)."""
+
+    def match(admitted, _index, _batch_id):
+        from mapreduce_framework_spark.pipeline.span_dedup import span_contamination
+
+        return (
+            span_contamination(benchmark_span_index, admitted.select("doc_id", "text"))
+            .where(F.col("cont_frac") >= cont_threshold)
+            .select("doc_id", F.col("cont_frac").alias("ct_frac"))
+        )
+
+    return _Tier("contaminated", match, None, "ct_frac")
+
+
+def _tiered_sink(
+    spark: SparkSession,
+    tiers: list,
+    decisions_root: str,
+    compact_every: int | None,
+    score_col: str,
+    with_tier: bool,
+    key: str = "doc_id",
+):
+    """foreachBatch function running ``tiers`` in order over a
+    ``doc_id``-keyed batch: each tier matches the survivors of every
+    earlier tier, its rejects leave the batch, and what survives the last
+    tier is ADMITTED — indexed by every tier that keeps a root — while
+    every doc gets one decision row in ``decisions_root``. The decision
+    row is ``(key, admitted, matched_id, score_col[, tier])``:
+    ``matched_id`` is the first non-null tier id (else -1), and the score
+    and ``tier`` come from the first tier that fired (score 0.0 and tier
+    NULL for admitted docs).
+
+    Every root follows the module docstring's delta/manifest lifecycle. A
+    batch sees only deltas from batches strictly before it
+    (_index_so_far), so a crash between any of its publishes just
+    redelivers it, and the redelivery decides exactly as before.
+
+    The decisions root is acquired here (writer fencing, storage.py) and
+    every tier acquires its own roots when built: a second sink later
+    constructed over the same roots fences this one — its next publish
+    hard-errors with nothing committed, killing silent last-writer-wins
+    between two streams or a zombie retry of a replaced application (pinned by
+    tests/test_streaming.py::test_writer_fencing_two_sinks_one_root).
+
+    Round 13 (guide §2.3/§2.6): when two or more index deltas read the
+    admitted docs, their anti-join chain is materialized once instead of
+    re-executing inside every publish; a single reader keeps it lazy, so
+    no configuration pays a materialization it cannot share. The
+    per-root publish chains then run concurrently (_run_publish_chains)."""
+    ep_dec = acquire_index_root(decisions_root)
+    n_deltas = sum(t.delta is not None for t in tiers)
+
+    def publish_chain(t: _Tier, admitted: DataFrame, batch: DataFrame, batch_id: int):
+        def chain():
+            delta = t.delta(admitted)
+            _publish_delta(
+                spark, t.root, batch_id, delta, compact_every,
+                epoch=t.epoch, compact_transform=t.compact_transform,
+            )
+            for step in t.after_publish:
+                step(delta, batch, batch_id)
+
+        return chain
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        for t in tiers:
+            if t.guard is not None:
+                t.guard()
+        batch = batch_df.localCheckpoint(eager=True)  # read the source once
+        survivors = batch
+        decisions = batch.select("doc_id")
+        fired = []  # per tier, in order: (rejected the doc?, its score, its name)
+        for t in tiers:
+            index = None
+            if t.root is not None:
+                index = _index_so_far(spark, t.root, before_batch=batch_id)
+            if t.root is not None and index is None:  # nothing indexed yet
+                for c in (t.id_col, t.score):
+                    if isinstance(c, str):
+                        decisions = decisions.withColumn(
+                            c, F.lit(None).cast("long" if c == t.id_col else "double")
+                        )
+            else:
+                best = t.match(survivors, index, batch_id).localCheckpoint(eager=True)
+                decisions = decisions.join(best, "doc_id", "left")
+                survivors = survivors.join(best, "doc_id", "left_anti")
+            value = F.col(t.score) if isinstance(t.score, str) else F.lit(t.score)
+            fired.append((F.col(t.id_col or t.score).isNotNull(), value, t.name))
+        score = F.coalesce(*[F.when(hit, v) for hit, v, _ in fired], F.lit(0.0))
+        tier = F  # F.when and Column.when chain alike
+        for hit, _, name in fired:
+            tier = tier.when(hit, F.lit(name))
+        decisions = decisions.select(
+            F.col("doc_id").alias(key),
+            (~reduce(operator.or_, [hit for hit, _, _ in fired])).alias("admitted"),
+            F.coalesce(*[t.id_col for t in tiers if t.id_col], F.lit(-1))
+            .cast("long")
+            .alias("matched_id"),
+            score.alias(score_col),
+            *([tier.alias("tier")] if with_tier else []),
+        )
+        if n_deltas >= 2:
+            survivors = survivors.localCheckpoint(eager=True)
+        _run_publish_chains(
+            lambda: _publish_delta(
+                spark, decisions_root, batch_id, decisions, compact_every,
+                epoch=ep_dec,
+            ),
+            *[
+                publish_chain(t, survivors, batch, batch_id)
+                for t in tiers
+                if t.delta is not None
+            ],
+        )
+
+    return apply_batch
+
+
+def _run_stream(stream: DataFrame, make_fn, args: dict, what: str) -> DataFrame:
+    """The one stream runner behind every ``run_*_stream`` name: build the
+    sink with ``make_fn`` from the wrapper's own arguments (``args`` is its
+    ``locals()``; every parameter of ``make_fn`` is forwarded by name),
+    drive ``stream`` through it to completion (availableNow), and return
+    the union of all per-batch decision frames. A stream still running
+    after ``timeout_s`` is stopped and raises TimeoutError; one that
+    processed no batch raises ValueError."""
+    import inspect
+
+    fn = make_fn(**{k: args[k] for k in inspect.signature(make_fn).parameters})
+    q = (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", args["checkpoint"])
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(args["timeout_s"]):
+        q.stop()
+        raise TimeoutError(f"{what} stream did not finish in {args['timeout_s']}s")
+    decisions = _index_so_far(args["spark"], args["decisions_root"])
+    if decisions is None:
+        raise ValueError(
+            "stream processed no batches — no decisions under "
+            f"{args['decisions_root']}"
+        )
+    return decisions
+
+
 def make_ingest_batch_fn(
     spark: SparkSession,
     index_root: str,
@@ -668,128 +1222,21 @@ def make_ingest_batch_fn(
     bands_root: str | None = None,
     band_cap: int | None = None,
 ):
-    """foreachBatch function: match the batch against the index-so-far,
-    write decisions (admitted / matched_id / jaccard) and the admitted
-    docs' signature delta. ``shingler``: the shingle builder shared by
-    index build and matching (default word shingles; pass
-    ``char_shingles_of`` + ``CHAR_JACCARD_THRESHOLD`` for the
-    character-8-gram tier — see pipeline/dedup.py:index_signatures).
-    ``compact_every``: fold the delta tail into one compacted dir once it
-    reaches this many entries (None = never; decisions are byte-identical
-    either way — tests/test_streaming.py::test_ingest_compaction_preserves_decisions).
-    ``bands_root``: optional PERSISTED BANDED LAYOUT root
-    (pipeline/dedup.py:banded_signatures) maintained on the same delta/
-    manifest lifecycle: each batch publishes its admitted docs' band rows
-    alongside the signature delta, and matching joins the narrow band
-    table instead of re-deriving bands from 64 minhash longs per batch —
-    the 5.8× per-batch index-scan reduction measured in SCALING.md.
-    Decisions are byte-identical either way; a bands root whose coverage
-    diverges from the signature root (enabled mid-stream, lost delta) is
-    a hard error before any match runs.
-
-    Constructing the sink ACQUIRES every root it writes (writer fencing,
-    storage.py): a second sink later constructed over the same roots
-    fences this one — its next publish hard-errors with nothing
-    committed, killing silent last-writer-wins between two streams or a
-    zombie retry of a replaced driver (pinned by
-    tests/test_streaming.py::test_writer_fencing_two_sinks_one_root).
-
-    ``band_cap`` (requires ``bands_root``): hot-band skew guard — every
-    compaction of the bands root re-bounds each (band, bsig) group to its
-    cap lowest-doc_id rows (pipeline/dedup.py:cap_banded has the recall
-    argument). Between compactions the accumulated excess is bounded by
-    the tail (≤ compact_every batches), so the candidate join's max key
-    population stays ≤ band_cap + tail even against a boilerplate-cluster
-    adversary. None (default) keeps decisions exact."""
-    from pyspark.sql.window import Window
-
-    from mapreduce_framework_spark.pipeline.dedup import (
-        banded_signatures,
-        cap_banded,
-        index_signatures,
-        match_batch,
-    )
-
+    """The single-tier MinHash sink: the near-dup tier alone
+    (_near_dup_tier documents ``shingler``, ``bands_root`` and
+    ``band_cap``; _tiered_sink the shared lifecycle). Decisions are
+    ``(doc_id, admitted, matched_id, jaccard)``; a rejected doc reports
+    its best match and the verified Jaccard, an admitted one -1 and
+    0.0."""
     if band_cap is not None and bands_root is None:
         raise ValueError("band_cap requires bands_root (the persisted banded layout)")
     _require_compaction_for_caps(compact_every, band_cap=band_cap)
-    bands_transform = (
-        None if band_cap is None else (lambda df: cap_banded(df, band_cap))
+    near_dup = _near_dup_tier(
+        spark, index_root, threshold, shingler, compact_every, bands_root, band_cap
     )
-    ep_idx = acquire_index_root(index_root)
-    ep_dec = acquire_index_root(decisions_root)
-    ep_bands = acquire_index_root(bands_root) if bands_root is not None else None
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.localCheckpoint(eager=True)  # read the source once
-        idx = _index_so_far(spark, index_root, before_batch=batch_id)
-        if idx is None:
-            best = None
-        else:
-            if bands_root is not None:
-                _check_bands_coverage(index_root, bands_root, before_batch=batch_id)
-                bands = _index_so_far(spark, bands_root, before_batch=batch_id)
-            else:
-                bands = None
-            matches = match_batch(idx, batch, threshold, shingler, index_bands=bands)
-            w = Window.partitionBy("id2").orderBy(
-                F.col("jaccard").desc(), F.col("id1").asc()
-            )
-            best = (
-                matches.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select(
-                    F.col("id2").alias("doc_id"),
-                    F.col("id1").alias("matched_id"),
-                    "jaccard",
-                )
-                .localCheckpoint(eager=True)
-            )
-        if best is None:
-            decisions = batch.select(
-                "doc_id",
-                F.lit(True).alias("admitted"),
-                F.lit(-1).cast("long").alias("matched_id"),
-                F.lit(0.0).alias("jaccard"),
-            )
-            admitted_docs = batch
-        else:
-            decisions = batch.join(best, "doc_id", "left").select(
-                "doc_id",
-                F.col("matched_id").isNull().alias("admitted"),
-                F.coalesce("matched_id", F.lit(-1)).cast("long").alias("matched_id"),
-                F.coalesce("jaccard", F.lit(0.0)).alias("jaccard"),
-            )
-            admitted_docs = batch.join(best, "doc_id", "left_anti")
-        sig_delta = index_signatures(admitted_docs, shingler)
-        if bands_root is not None:
-            # one materialization feeds both publishes (the band rows are a
-            # projection of the signature delta, not a recompute)
-            sig_delta = sig_delta.localCheckpoint(eager=True)
-
-        # round 13: decisions and signatures(+bands) go to independent
-        # roots — publish the two chains concurrently (_run_publish_chains)
-        def _chain_decisions():
-            _publish_delta(
-                spark, decisions_root, batch_id, decisions, compact_every,
-                epoch=ep_dec,
-            )
-
-        def _chain_sig():
-            _publish_delta(
-                spark, index_root, batch_id, sig_delta, compact_every,
-                epoch=ep_idx,
-            )
-            if bands_root is not None:
-                _publish_delta(
-                    spark, bands_root, batch_id, banded_signatures(sig_delta),
-                    compact_every, epoch=ep_bands,
-                    compact_transform=bands_transform,
-                )
-
-        _run_publish_chains(_chain_decisions, _chain_sig)
-
-    return apply_batch
+    return _tiered_sink(
+        spark, [near_dup], decisions_root, compact_every, "jaccard", with_tier=False
+    )
 
 
 def run_ingest_stream(
@@ -805,34 +1252,9 @@ def run_ingest_stream(
     bands_root: str | None = None,
     band_cap: int | None = None,
 ) -> DataFrame:
-    """Drive the document stream through the ingest-dedup sink; returns
-    the union of all per-batch decision frames."""
-    q = (
-        docs_stream.writeStream.foreachBatch(
-            make_ingest_batch_fn(
-                spark,
-                index_root,
-                decisions_root,
-                threshold,
-                shingler,
-                compact_every,
-                bands_root,
-                band_cap,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"ingest stream did not finish in {timeout_s}s")
-    decisions = _index_so_far(spark, decisions_root)
-    if decisions is None:
-        raise ValueError(
-            f"stream processed no batches — no decisions under {decisions_root}"
-        )
-    return decisions
+    """Drive the document stream through :func:`make_ingest_batch_fn`
+    (:func:`_run_stream`)."""
+    return _run_stream(docs_stream, make_ingest_batch_fn, locals(), "ingest")
 
 
 def make_semantic_ingest_batch_fn(
@@ -844,126 +1266,22 @@ def make_semantic_ingest_batch_fn(
     compact_every: int | None = DEFAULT_COMPACT_EVERY,
     cell_cap: int | None = None,
 ):
-    """The semantic-family twin of :func:`make_ingest_batch_fn`: each
-    embedding micro-batch is matched against the semantic cell index so
-    far (`pipeline/semantic_dedup.py::semantic_match_batch` — only the
-    batch scores centroids), rejected vectors are reported with their
-    best (highest-cosine, then smallest-id) index match, and admitted
-    vectors' cell assignments are appended as a delta. Same delta-
-    directory topology, same strictly-before-batch_id visibility rule,
-    and therefore the same crash-restart redelivery idempotence as the
-    MinHash ingest (pinned by
-    tests/test_streaming.py::test_semantic_ingest_redelivery_is_idempotent).
-    ``centroids`` is the FIXED fitted codebook every batch shares
-    (pipeline/codebook.py; typically read back from its parquet
-    artifact) — admission decisions are only meaningful against one
-    codebook, exactly as the index itself.
-
-    Edge policies (mirroring similarity._norms_spark's zero-norm gate):
-    - A ZERO-NORM batch vector has no cosine neighborhood, so it can
-      never match the index: its decision row says ``admitted=True``,
-      but ``semantic_index``'s norm gate silently EXCLUDES it from the
-      written delta — it is admitted into the corpus yet never indexed,
-      so later duplicates of it are not rejected against it.
-    - INTRA-BATCH duplicates are all admitted: this sink owns only the
-      batch-vs-index decision; within-batch self-dedup is upstream's job
-      (q102 / semantic_dedup), same division of labor as the MinHash
-      sink's within-batch policy (module docstring).
-
-    The index manifest records the codebook's fingerprint; every batch
-    checks it BEFORE publishing anything, so pairing this sink with an
-    index built under a different codebook (e.g. after refit_codebook
-    without reindex_semantic_root) is a hard error, never silent
-    mis-matching.
-
-    ``cell_cap``: hot-cell skew guard — every compaction of the index
-    root re-bounds each cell to its cap lowest-vec_id rows
-    (pipeline/semantic_dedup.py:cap_cells has the recall argument,
-    exact for identical-embedding clusters). None (default) keeps the
-    index exact."""
-    from pyspark.sql.window import Window
-
-    from mapreduce_framework_spark.pipeline.codebook import codebook_fingerprint
-    from mapreduce_framework_spark.pipeline.semantic_dedup import (
-        SEMDEDUP_COS,
-        cap_cells,
-        semantic_index,
-        semantic_match_batch,
-    )
-
-    if threshold is None:
-        threshold = SEMDEDUP_COS
-    cb_fp = codebook_fingerprint(centroids)
+    """The semantic-family twin of :func:`make_ingest_batch_fn`: the
+    semantic tier alone over ``(vec_id, embedding)`` micro-batches
+    (_semantic_tier documents ``centroids``, ``threshold`` and
+    ``cell_cap``). Decisions are ``(vec_id, admitted, matched_id, cos)``;
+    ``vec_id`` is the batch key, mapped to the sink's ``doc_id`` on the
+    way in and back on the way out. Redelivery idempotence is pinned by
+    tests/test_streaming.py::test_semantic_ingest_redelivery_is_idempotent."""
     _require_compaction_for_caps(compact_every, cell_cap=cell_cap)
-    cells_transform = (
-        None if cell_cap is None else (lambda df: cap_cells(df, cell_cap))
+    sink = _tiered_sink(
+        spark,
+        [_semantic_tier(index_root, centroids, threshold, cell_cap)],
+        decisions_root, compact_every, "cos", with_tier=False, key="vec_id",
     )
-    # writer fencing (see make_ingest_batch_fn / storage.py)
-    ep_idx = acquire_index_root(index_root)
-    ep_dec = acquire_index_root(decisions_root)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _require_codebook(index_root, cb_fp)
-        batch = batch_df.localCheckpoint(eager=True)  # read the source once
-        idx = _index_so_far(spark, index_root, before_batch=batch_id)
-        if idx is None:
-            best = None
-        else:
-            matches = semantic_match_batch(idx, batch, centroids, threshold)
-            w = Window.partitionBy("new_id").orderBy(
-                F.col("cos").desc(), F.col("index_id").asc()
-            )
-            best = (
-                matches.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select(
-                    F.col("new_id").alias("vec_id"),
-                    F.col("index_id").alias("matched_id"),
-                    "cos",
-                )
-                .localCheckpoint(eager=True)
-            )
-        if best is None:
-            decisions = batch.select(
-                "vec_id",
-                F.lit(True).alias("admitted"),
-                F.lit(-1).cast("long").alias("matched_id"),
-                F.lit(0.0).alias("cos"),
-            )
-            admitted = batch
-        else:
-            decisions = batch.join(best, "vec_id", "left").select(
-                "vec_id",
-                F.col("matched_id").isNull().alias("admitted"),
-                F.coalesce("matched_id", F.lit(-1)).cast("long").alias("matched_id"),
-                F.coalesce("cos", F.lit(0.0)).alias("cos"),
-            )
-            admitted = batch.join(best, "vec_id", "left_anti")
-        # round 13: two independent roots — concurrent publish chains
-        # (_run_publish_chains); the index chain keeps its internal
-        # delta → stamp → drift order (one manifest, one thread)
-        def _chain_decisions():
-            _publish_delta(
-                spark, decisions_root, batch_id, decisions, compact_every,
-                epoch=ep_dec,
-            )
-
-        def _chain_sem():
-            _publish_delta(
-                spark, index_root, batch_id, semantic_index(admitted, centroids),
-                compact_every, epoch=ep_idx,
-                compact_transform=cells_transform,
-            )
-            _stamp_codebook(index_root, cb_fp, epoch=ep_idx)
-            # drift trigger: log the WHOLE batch's quantization error under
-            # the held codebook (admitted + rejected — rejects carry drift
-            # signal too), so needs_refit() can read the trend
-            _log_drift(
-                index_root, batch_id, _batch_quantization_error(batch, centroids),
-                epoch=ep_idx,
-            )
-
-        _run_publish_chains(_chain_decisions, _chain_sem)
+        sink(batch_df.select(F.col("vec_id").alias("doc_id"), "embedding"), batch_id)
 
     return apply_batch
 
@@ -980,28 +1298,53 @@ def run_semantic_ingest_stream(
     compact_every: int | None = DEFAULT_COMPACT_EVERY,
     cell_cap: int | None = None,
 ) -> DataFrame:
-    """Drive the embedding stream through the semantic admission sink;
-    returns the union of all per-batch decision frames."""
-    q = (
-        embs_stream.writeStream.foreachBatch(
-            make_semantic_ingest_batch_fn(
-                spark, index_root, decisions_root, centroids, threshold,
-                compact_every, cell_cap,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Drive the embedding stream through
+    :func:`make_semantic_ingest_batch_fn` (:func:`_run_stream`)."""
+    return _run_stream(
+        embs_stream, make_semantic_ingest_batch_fn, locals(), "semantic ingest"
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"semantic ingest stream did not finish in {timeout_s}s")
-    decisions = _index_so_far(spark, decisions_root)
-    if decisions is None:
+
+
+def _cascade_sink(
+    spark, fp_index_root, sig_index_root, decisions_root, threshold, shingler,
+    compact_every, sig_bands_root, band_cap, fp_distinct, intra_batch_exact,
+    benchmark_span_index, cont_threshold, quality_gate, phash_index_root,
+    phash_band_cap, phash_cells, phash_bands, semantic=False,
+    sem_index_root=None, centroids=None, cos_threshold=None, cell_cap=None,
+):
+    """The two cascade names (each passes its own arguments): every tier in
+    order, the semantic one only when ``semantic``. Its score is a cosine,
+    not a Jaccard, so the six-tier decision row names the column ``score``
+    and the lexical one ``jaccard``."""
+    if band_cap is not None and sig_bands_root is None:
         raise ValueError(
-            f"stream processed no batches — no decisions under {decisions_root}"
+            "band_cap requires sig_bands_root (the persisted banded layout)"
         )
-    return decisions
+    phash_options = (phash_band_cap, phash_cells, phash_bands)
+    if phash_index_root is None and phash_options != (None, None, None):
+        raise ValueError(
+            "phash_band_cap/phash_cells/phash_bands configure the media_dup tier, "
+            "which only runs with phash_index_root — pass the root or drop them"
+        )
+    _require_compaction_for_caps(compact_every, band_cap=band_cap, cell_cap=cell_cap)
+    tiers = [_quality_tier()] if quality_gate else []
+    tiers += _exact_tiers(fp_index_root, fp_distinct, intra_batch_exact)
+    if phash_index_root is not None:
+        tiers.append(
+            _media_tier(phash_index_root, phash_band_cap, phash_cells, phash_bands)
+        )
+    tiers.append(_near_dup_tier(
+        spark, sig_index_root, threshold, shingler, compact_every,
+        sig_bands_root, band_cap,
+    ))
+    if semantic:
+        tiers.append(_semantic_tier(sem_index_root, centroids, cos_threshold, cell_cap))
+    if benchmark_span_index is not None:
+        tiers.append(_contamination_tier(benchmark_span_index, cont_threshold))
+    score_col = "score" if semantic else "jaccard"
+    return _tiered_sink(
+        spark, tiers, decisions_root, compact_every, score_col, with_tier=True
+    )
 
 
 def make_cascade_ingest_batch_fn(
@@ -1024,438 +1367,62 @@ def make_cascade_ingest_batch_fn(
     phash_cells: int | None = None,
     phash_bands: int | None = None,
 ):
-    """Tiered admission: the EXACT fingerprint tier runs in front of the
-    MinHash near-dup tier, each batch doc paying the cheapest test that
-    can reject it. Real pretraining ingest is exactly this cascade
-    (exact → near-dup → semantic): crawl re-fetches — typically the bulk
-    of rejects — fall to a narrow md5 equi-join
-    (pipeline/dedup.py:exact_match_batch) before any shingling/MinHash
-    work runs, and only the survivors are shingled. Both tiers keep
-    their own manifest-addressed delta index (fingerprints under
-    ``fp_index_root``, signatures under ``sig_index_root``), the same
-    strictly-before-batch_id visibility rule, and therefore the same
-    crash-restart redelivery idempotence as the single-tier sinks — a
-    crash BETWEEN the two delta publishes just redelivers the batch,
-    which overwrites both deltas (each manifest keys entries by
-    batch_id, so re-commits replace rather than duplicate).
+    """The LEXICAL cascade — the six-tier sink without its semantic tier:
+    [quality →] exact → [media_dup →] near_dup [→ contaminated], each
+    batch doc paying the cheapest test that can reject it. Parameters map
+    to tiers: ``quality_gate`` → _quality_tier; ``fp_index_root``,
+    ``fp_distinct``, ``intra_batch_exact`` → _exact_tiers;
+    ``phash_index_root``, ``phash_band_cap``, ``phash_cells``,
+    ``phash_bands`` → _media_tier (the options without the root are an
+    error); ``sig_index_root``, ``threshold``, ``shingler``,
+    ``sig_bands_root``, ``band_cap`` → _near_dup_tier;
+    ``benchmark_span_index``, ``cont_threshold`` → _contamination_tier.
 
-    Decisions add a ``tier`` column over the single-tier schema:
-    'exact' (jaccard reported as 1.0 — a byte-identical copy IS a
-    jaccard-1.0 pair), 'near_dup' (the verified estimate), or NULL for
-    admitted docs. ``matched_id`` is the smallest exact-matching index
-    id in the exact tier, else the near-dup best match (highest
-    jaccard, ties to the lowest index id).
+    Decisions are ``(doc_id, admitted, matched_id, jaccard, tier)``:
+    ``tier`` names the rejecting tier (NULL for admitted docs) and
+    ``jaccard`` carries that tier's score (see each tier), 0.0 when
+    admitted.
 
     Decision parity with the single-tier MinHash sink: identical
     ``admitted`` sets for docs with at least SHINGLE_K tokens (pinned by
     tests/test_streaming.py::test_cascade_ingest_decisions). Degenerate
-    docs diverge BY DESIGN: a shingle-free doc (< SHINGLE_K tokens,
-    incl. NULL/empty text — the family's NULL-behaves-as-empty policy)
-    is invisible to MinHash but byte-collapses in the exact tier, so
-    the cascade is strictly stricter there. ``matched_id`` may differ
-    from the single tier's when an exact copy ALSO jaccard-ties with a
-    lower-id non-identical index doc (the single tier picks the lowest
-    id among all 1.0 ties; the cascade never consults the near-dup tier
-    for exact-rejected docs).
+    docs diverge BY DESIGN: a shingle-free doc is invisible to MinHash but
+    byte-collapses in the exact tier, so the cascade is strictly stricter
+    there. ``matched_id`` may differ from the single tier's when an exact
+    copy ALSO jaccard-ties with a lower-id non-identical index doc (the
+    single tier picks the lowest id among all 1.0 ties; the cascade never
+    consults the near-dup tier for exact-rejected docs)."""
+    return _cascade_sink(**locals())
 
-    ``fp_distinct`` (default True — DECISION-LOSSLESS, see
-    pipeline/dedup.py:cap_fingerprints): the fp index keeps one
-    min-doc_id row per fingerprint — per-batch deltas are written
-    distinct, and compaction re-applies the rule index-wide — so a
-    boilerplate cluster can never pile 10⁶ identical rows behind one fp
-    join key (the exact tier's hot-key guard; the admission rule's
-    min(id1) makes the retained row exactly the one every decision
-    reports).
 
-    ``intra_batch_exact`` (default False — the module-wide
-    within-batch-is-upstream's-job policy): opt-in pre-dedup of
-    BYTE-IDENTICAL copies arriving in one batch. Runs strictly AFTER the
-    index tier (same fp ⇒ same index verdict, so order only matters for
-    index-missed fps): among batch docs whose fp is new to the corpus,
-    the lowest doc_id (the batch REPRESENTATIVE) is admitted past this
-    tier and every other copy is rejected with tier 'exact' and
-    matched_id = that representative. NOTE the representative may itself
-    be rejected by a LATER tier (near-dup/semantic/contaminated) — its
-    copies still carry tier 'exact' pointing at it, so matched_id names
-    the batch representative, which is not necessarily an admitted/
-    indexed corpus doc; the representative's own decision row carries
-    that provenance (round-10 ADVICE: this tier's matched_id contract is
-    weaker than the index tiers'). Changes decisions BY DESIGN
-    (stricter), hence opt-in and unregistered; differential-pinned by
-    tests/test_streaming.py::test_intra_batch_exact_pre_dedup.
-
-    ``benchmark_span_index`` / ``cont_threshold`` (round 10): the opt-in
-    DECONTAMINATION tier, exactly as documented on
-    make_full_cascade_ingest_batch_fn — the tier is purely LEXICAL
-    (tokenize/shingle + span-hash semi-join; embeddings never touched),
-    so it composes with the two-tier cascade identically: it runs LAST,
-    over full survivors only, rejects at cont_frac >= cont_threshold
-    with tier 'contaminated', matched_id -1 (the hit is benchmark-side),
-    and the ``jaccard`` column carries the cont_frac for those rows (the
-    tier-typed score generalization the full cascade makes explicit).
-    This is what lets an embeddings-free deployment — or the full
-    cascade's documented no-usable-centroid degradation — keep
-    decontamination instead of silently dropping it.
-
-    ``quality_gate`` (round 10, library-first; the r11 registration
-    candidate per registry.py): the opt-in QUALITY tier — the per-doc
-    admission gate of pipeline/quality.py:quality_rejects (the q105/q81
-    integer rule + the Gopher repetition flags). Runs FIRST, before any
-    index tier: it is the only tier that needs NO index at all (pure
-    per-doc compute, one batch-local gram aggregate — O(batch)), and
-    running it first keeps junk out of every index — the production
-    ordering (filter before dedup). A rejected doc carries tier
-    'quality', score = dup_frac, matched_id -1 (like 'contaminated',
-    the reject has no corpus counterpart) and is never indexed; it never
-    consults the later tiers, so a low-quality re-fetch reports
-    'quality', not 'exact' (tier precedence is strict in BOTH
-    directions). The streaming counterpart of q105's batch quality
-    stage — with it, the cascade reaches tier parity with the batch
-    flagship (quality → exact → near-dup [→ semantic] → decon).
-
-    ``phash_index_root`` / ``phash_band_cap`` (round 12, tier parity with
-    the full cascade — the q110 staging prerequisite): the opt-in
-    MULTIMODAL 'media_dup' tier between the exact and MinHash tiers,
-    with EXACTLY make_full_cascade_ingest_batch_fn's semantics (same
-    matcher, same index artifact, same no-bytes-no-media NULL/empty
-    policy, same cap_banded degradation contract — see that docstring).
-    The tier is pixel/text-only (embeddings never touched), so an
-    embeddings-free deployment — or the full cascade's documented
-    no-usable-centroid degradation — keeps perceptual media dedup
-    instead of silently dropping it, the same composition argument as
-    the decontamination tier above. ``phash_cells``/``phash_bands``
-    (round 13) select the grid width PER ROOT (multimodal_dedup.
-    phash_params; default the module 32/4): a 100 TB deployment passes
-    phash_cells=64 — the SCALING.md birthday-mass lever — and the
-    manifest's phash_config stamp makes a mixed-width root impossible
-    either way."""
-    from pyspark.sql.window import Window
-
-    from mapreduce_framework_spark.pipeline.dedup import (
-        banded_signatures,
-        cap_banded,
-        cap_fingerprints,
-        exact_fingerprint_index,
-        exact_match_batch,
-        index_signatures,
-        match_batch,
+def run_cascade_ingest_stream(
+    docs_stream: DataFrame,
+    spark: SparkSession,
+    fp_index_root: str,
+    sig_index_root: str,
+    decisions_root: str,
+    checkpoint: str,
+    threshold: float,
+    timeout_s: int = 300,
+    shingler=None,
+    compact_every: int | None = DEFAULT_COMPACT_EVERY,
+    sig_bands_root: str | None = None,
+    band_cap: int | None = None,
+    fp_distinct: bool = True,
+    intra_batch_exact: bool = False,
+    benchmark_span_index: DataFrame | None = None,
+    cont_threshold: float = 0.05,
+    quality_gate: bool = False,
+    phash_index_root: str | None = None,
+    phash_band_cap: int | None = None,
+    phash_cells: int | None = None,
+    phash_bands: int | None = None,
+) -> DataFrame:
+    """Drive the document stream through
+    :func:`make_cascade_ingest_batch_fn` (:func:`_run_stream`)."""
+    return _run_stream(
+        docs_stream, make_cascade_ingest_batch_fn, locals(), "cascade ingest"
     )
-
-    if band_cap is not None and sig_bands_root is None:
-        raise ValueError(
-            "band_cap requires sig_bands_root (the persisted banded layout)"
-        )
-    _require_compaction_for_caps(compact_every, band_cap=band_cap)
-    bands_transform = (
-        None if band_cap is None else (lambda df: cap_banded(df, band_cap))
-    )
-    fp_transform = cap_fingerprints if fp_distinct else None
-    # writer fencing (see make_ingest_batch_fn / storage.py)
-    ep_fp = acquire_index_root(fp_index_root)
-    ep_sig = acquire_index_root(sig_index_root)
-    ep_dec = acquire_index_root(decisions_root)
-    ep_bands = (
-        acquire_index_root(sig_bands_root) if sig_bands_root is not None else None
-    )
-    ep_ph = (
-        acquire_index_root(phash_index_root)
-        if phash_index_root is not None
-        else None
-    )
-    ph_fp = None
-    if phash_index_root is not None:
-        from mapreduce_framework_spark.pipeline.multimodal_dedup import (
-            phash_fingerprint,
-            phash_params,
-        )
-
-        # resolve the width ONCE at construction (fail-fast on a bad
-        # pair) — the sink holds exactly one grid config for its life
-        phash_cells, phash_bands = phash_params(phash_cells, phash_bands)
-        ph_fp = phash_fingerprint(phash_cells, phash_bands)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if phash_index_root is not None:
-            # hashes are only comparable under one grid config — checked
-            # unconditionally (like _require_codebook) so even a batch-0
-            # restart over an existing root with no visible index cannot
-            # publish a new-width delta into an old-width root
-            _require_phash_config(phash_index_root, ph_fp)
-        batch = batch_df.localCheckpoint(eager=True)  # read the source once
-
-        qual_best = None
-        live = batch
-        if quality_gate:
-            from mapreduce_framework_spark.pipeline.quality import (
-                quality_rejects,
-            )
-
-            qual_best = (
-                quality_rejects(batch)
-                .select("doc_id", F.col("q_frac").alias("ql_frac"))
-                .localCheckpoint(eager=True)
-            )
-            live = batch.join(qual_best, "doc_id", "left_anti")
-
-        fp_idx = _index_so_far(spark, fp_index_root, before_batch=batch_id)
-        if fp_idx is None:
-            exact_best = None
-            survivors = live
-        else:
-            exact_best = (
-                exact_match_batch(fp_idx, live)
-                .groupBy("id2")
-                .agg(F.min("id1").alias("ex_id"))
-                .select(F.col("id2").alias("doc_id"), "ex_id")
-                .localCheckpoint(eager=True)
-            )
-            survivors = live.join(exact_best, "doc_id", "left_anti")
-
-        intra_best = None
-        if intra_batch_exact:
-            intra_best = _intra_batch_exact_best(survivors)
-            survivors = survivors.join(intra_best, "doc_id", "left_anti")
-
-        ph_best = None
-        if phash_index_root is not None:
-            ph_idx = _index_so_far(spark, phash_index_root, before_batch=batch_id)
-            if ph_idx is not None:
-                from mapreduce_framework_spark.pipeline.multimodal_dedup import (
-                    phash_match_batch,
-                )
-
-                ph_best = (
-                    phash_match_batch(
-                        ph_idx,
-                        survivors.select("doc_id", "text"),
-                        band_cap=phash_band_cap,
-                        cells=phash_cells,
-                        bands=phash_bands,
-                    )
-                    .select(
-                        "doc_id",
-                        F.col("matched_id").alias("ph_id"),
-                        (
-                            (F.lit(phash_cells) - F.col("hamming"))
-                            / F.lit(float(phash_cells))
-                        ).alias("ph_sim"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                survivors = survivors.join(ph_best, "doc_id", "left_anti")
-
-        sig_idx = _index_so_far(spark, sig_index_root, before_batch=batch_id)
-        if sig_idx is None:
-            near_best = None
-            admitted = survivors
-        else:
-            w = Window.partitionBy("id2").orderBy(
-                F.col("jaccard").desc(), F.col("id1").asc()
-            )
-            if sig_bands_root is not None:
-                _check_bands_coverage(
-                    sig_index_root, sig_bands_root, before_batch=batch_id
-                )
-                sig_bands = _index_so_far(
-                    spark, sig_bands_root, before_batch=batch_id
-                )
-            else:
-                sig_bands = None
-            near_best = (
-                match_batch(
-                    sig_idx, survivors, threshold, shingler, index_bands=sig_bands
-                )
-                .withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select(
-                    F.col("id2").alias("doc_id"),
-                    F.col("id1").alias("nd_id"),
-                    F.col("jaccard").alias("nd_jaccard"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            admitted = survivors.join(near_best, "doc_id", "left_anti")
-
-        cont_best = None
-        if benchmark_span_index is not None:
-            from mapreduce_framework_spark.pipeline.span_dedup import (
-                span_contamination,
-            )
-
-            cont_best = (
-                span_contamination(
-                    benchmark_span_index, admitted.select("doc_id", "text")
-                )
-                .where(F.col("cont_frac") >= cont_threshold)
-                .select("doc_id", F.col("cont_frac").alias("ct_frac"))
-                .localCheckpoint(eager=True)
-            )
-            admitted = admitted.join(cont_best, "doc_id", "left_anti")
-
-        decisions = batch.select("doc_id")
-        if qual_best is not None:
-            decisions = decisions.join(qual_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "ql_frac", F.lit(None).cast("double")
-            )
-        if exact_best is not None:
-            decisions = decisions.join(exact_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn("ex_id", F.lit(None).cast("long"))
-        if intra_best is not None:
-            decisions = decisions.join(intra_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn("ib_id", F.lit(None).cast("long"))
-        if ph_best is not None:
-            decisions = decisions.join(ph_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "ph_id", F.lit(None).cast("long")
-            ).withColumn("ph_sim", F.lit(None).cast("double"))
-        if near_best is not None:
-            decisions = decisions.join(near_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "nd_id", F.lit(None).cast("long")
-            ).withColumn("nd_jaccard", F.lit(None).cast("double"))
-        if cont_best is not None:
-            decisions = decisions.join(cont_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "ct_frac", F.lit(None).cast("double")
-            )
-        # ex_id and ib_id are mutually exclusive (intra-batch dedup runs on
-        # the index tier's survivors), so coalesce order is provenance, not
-        # precedence; ct_frac only on full survivors; ql_frac excludes a
-        # doc from every later tier (quality runs first)
-        ex_any = F.col("ex_id").isNotNull() | F.col("ib_id").isNotNull()
-        ql = F.col("ql_frac").isNotNull()
-        decisions = decisions.select(
-            "doc_id",
-            (
-                ~ql
-                & ~ex_any
-                & F.col("ph_id").isNull()
-                & F.col("nd_id").isNull()
-                & F.col("ct_frac").isNull()
-            ).alias("admitted"),
-            F.coalesce("ex_id", "ib_id", "ph_id", "nd_id", F.lit(-1))
-            .cast("long")
-            .alias("matched_id"),
-            F.when(ql, F.col("ql_frac"))
-            .when(ex_any, F.lit(1.0))
-            .when(F.col("ph_id").isNotNull(), F.col("ph_sim"))
-            .when(F.col("nd_id").isNotNull(), F.col("nd_jaccard"))
-            .otherwise(F.coalesce("ct_frac", F.lit(0.0)))
-            .alias("jaccard"),
-            F.when(ql, F.lit("quality"))
-            .when(ex_any, F.lit("exact"))
-            .when(F.col("ph_id").isNotNull(), F.lit("media_dup"))
-            .when(F.col("nd_id").isNotNull(), F.lit("near_dup"))
-            .when(F.col("ct_frac").isNotNull(), F.lit("contaminated"))
-            .alias("tier"),
-        )
-        # round 13: one materialization of `admitted` feeds every index
-        # delta; the per-root publish chains run concurrently (see
-        # _run_publish_chains — same rationale as the full cascade)
-        admitted = admitted.localCheckpoint(eager=True)
-        sig_delta = index_signatures(admitted, shingler)
-        if sig_bands_root is not None:
-            sig_delta = sig_delta.localCheckpoint(eager=True)
-
-        def _chain_decisions():
-            _publish_delta(
-                spark, decisions_root, batch_id, decisions, compact_every,
-                epoch=ep_dec,
-            )
-
-        def _chain_fp():
-            _publish_delta(
-                spark, fp_index_root, batch_id,
-                exact_fingerprint_index(admitted, distinct=fp_distinct),
-                compact_every, epoch=ep_fp,
-                compact_transform=fp_transform,
-            )
-
-        def _chain_sig():
-            _publish_delta(
-                spark, sig_index_root, batch_id, sig_delta, compact_every,
-                epoch=ep_sig,
-            )
-            if sig_bands_root is not None:
-                _publish_delta(
-                    spark, sig_bands_root, batch_id, banded_signatures(sig_delta),
-                    compact_every, epoch=ep_bands,
-                    compact_transform=bands_transform,
-                )
-
-        _chain_ph = None
-        if phash_index_root is not None:
-            from mapreduce_framework_spark.pipeline.multimodal_dedup import (
-                phash_index,
-            )
-
-            def _chain_ph():
-                _publish_delta(
-                    spark,
-                    phash_index_root,
-                    batch_id,
-                    phash_index(
-                        admitted.select("doc_id", "text"), cells=phash_cells
-                    ),
-                    compact_every,
-                    epoch=ep_ph,
-                )
-                _stamp_phash_config(phash_index_root, ph_fp, epoch=ep_ph)
-
-        _run_publish_chains(_chain_decisions, _chain_fp, _chain_sig, _chain_ph)
-
-    return apply_batch
-
-
-def _intra_batch_exact_best(docs: DataFrame) -> DataFrame:
-    """(doc_id, ib_id) for every batch doc that byte-duplicates a LOWER
-    doc_id in the same (index-surviving) batch slice; ib_id is the lowest
-    such copy — the batch REPRESENTATIVE, which proceeds to the later
-    tiers and is usually (not always) admitted and indexed: when a later
-    tier rejects the representative itself, its copies' matched_id still
-    names it, and the representative's own decision row carries the real
-    provenance (see make_cascade_ingest_batch_fn's intra_batch_exact
-    note). Shape: one narrow min-aggregate + fp equi-join over the batch
-    (no window, no index involvement — strictly O(batch))."""
-    fps = docs.select(
-        "doc_id", F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("fp")
-    )
-    best = fps.groupBy("fp").agg(F.min("doc_id").alias("ib_id"))
-    return (
-        fps.join(best, "fp")
-        .where(F.col("doc_id") > F.col("ib_id"))
-        .select("doc_id", "ib_id")
-        .localCheckpoint(eager=True)
-    )
-
-
-def _require_compaction_for_caps(
-    compact_every: int | None, band_cap: int | None = None, cell_cap: int | None = None
-) -> None:
-    """The hot-key caps are applied exclusively at compaction
-    (compact_transform in _publish_delta); accepting a cap with
-    compact_every=None would hand back an exact (uncapped,
-    unbounded-hot-key) index while the caller believes the guard is on —
-    hard error instead (round-9 ADVICE)."""
-    if compact_every is None and band_cap is not None:
-        raise ValueError(
-            "band_cap is applied at compaction, but compact_every=None means "
-            "compaction never runs — the index would stay uncapped. Set "
-            "compact_every (the cap re-applies every fold) or drop band_cap."
-        )
-    if compact_every is None and cell_cap is not None:
-        raise ValueError(
-            "cell_cap is applied at compaction, but compact_every=None means "
-            "compaction never runs — the index would stay uncapped. Set "
-            "compact_every (the cap re-applies every fold) or drop cell_cap."
-        )
 
 
 def make_full_cascade_ingest_batch_fn(
@@ -1482,470 +1449,18 @@ def make_full_cascade_ingest_batch_fn(
     phash_cells: int | None = None,
     phash_bands: int | None = None,
 ):
-    """The COMPLETE admission cascade the two-tier sink's docstring names
-    as the real pretraining shape: exact → near-dup → SEMANTIC. Batches
-    carry ``(doc_id, text, embedding)``; each doc pays the cheapest test
-    that can reject it — byte-identical re-fetches fall to the md5
-    equi-join, template/boilerplate rewrites to the MinHash tier, and
-    only the lexical survivors reach the semantic tier
-    (pipeline/semantic_dedup.py:semantic_match_batch — paraphrases and
-    translations that share no shingles but sit within ``cos_threshold``
-    cosine of an index doc, the SemDeDup motivation). Three
-    manifest-addressed delta indexes (fingerprints / signatures / cell
-    assignments), one decisions log, all on the q91 lifecycle: the same
-    strictly-before-batch_id visibility rule, so a crash between ANY of
-    the four publishes just redelivers the batch and every manifest
-    re-commit replaces rather than duplicates.
+    """The COMPLETE admission cascade over ``(doc_id, text, embedding)``
+    batches — the real pretraining shape, registered end-to-end as q104:
+    [quality →] exact → [media_dup →] near_dup → semantic
+    [→ contaminated]. Parameters are :func:`make_cascade_ingest_batch_fn`'s
+    plus the semantic tier's ``sem_index_root``, ``centroids``,
+    ``cos_threshold`` and ``cell_cap`` (_semantic_tier).
 
-    ``centroids`` is the FIXED fitted codebook all batches share
-    (pipeline/codebook.py) — cell assignments are only comparable under
-    one codebook, exactly as in the single-tier semantic sink.
-
-    Decisions schema: ``(doc_id, admitted, matched_id, score, tier)``.
-    ``tier`` ∈ {'exact', 'near_dup', 'semantic', NULL=admitted};
-    ``score`` is tier-typed — 1.0 for exact, the verified Jaccard for
-    near_dup, the exact cosine for semantic, 0.0 for admitted (the
-    two-tier sink's ``jaccard`` column generalized, since the third
-    tier's metric is not a Jaccard).
-
-    Edge policies (each pinned in tests/test_streaming.py):
-    - A NULL or zero-norm embedding has no cosine neighborhood
-      (similarity._norms_spark): the doc can never be semantic-rejected
-      and is never written to the semantic index — it remains fully
-      subject to the exact and MinHash tiers, so unembedded docs degrade
-      to the two-tier cascade rather than erroring.
-    - Tier precedence is strict: an exact-rejected doc never consults
-      the later tiers (its matched_id is the smallest byte-identical
-      index id even when a semantically closer index doc exists).
-    - Within-batch self-dedup stays upstream (q31/q102), as in every
-      sink in this module.
-
-    The semantic index manifest records the codebook's fingerprint;
-    every batch checks it BEFORE any publish (see
-    make_semantic_ingest_batch_fn / reindex_semantic_root).
-
-    ``fp_distinct`` / ``intra_batch_exact``: the exact tier's hot-fp
-    guard and the opt-in within-batch byte-identical pre-dedup — exactly
-    as documented on make_cascade_ingest_batch_fn (fp_distinct is
-    decision-lossless by the min(id1) rule; intra_batch_exact runs after
-    the index tier and is stricter by design).
-
-    ``benchmark_span_index`` (round 9, library-first): the opt-in
-    DECONTAMINATION tier — the streaming counterpart of q105's batch
-    span-trim stage. A persisted ``span_dedup.span_index`` artifact of
-    the benchmark/eval corpus (built once per benchmark release, exactly
-    like ``centroids`` — a static frame, no delta lifecycle) is
-    span-checked against the docs every DEDUP tier admitted: a doc whose
-    contaminated-token fraction (span_dedup.span_contamination) reaches
-    ``cont_threshold`` is rejected with tier 'contaminated' and
-    score = cont_frac; its matched_id is -1 — uniquely for this tier the
-    reject has no corpus counterpart (the hit is benchmark-side), which
-    the decisions schema states here once. Runs LAST (contamination is
-    orthogonal to dedup; a contaminated re-fetch is cheaper to reject as
-    a dup) and only over full survivors, so its per-batch cost is one
-    batch-side tokenize/shingle + a semi-join against the (distinct,
-    usually broadcastable) span-hash column — O(batch). Rejected docs
-    are NOT indexed by any tier, exactly like dup rejects; admission
-    REJECTS rather than trims (the trim form stays the batch-side
-    deliverable, sampling.training_corpus). None (default) keeps the
-    cascade exactly three-tier.
-
-    ``quality_gate`` (round 10): the opt-in per-doc QUALITY tier, run
-    FIRST — exactly as documented on make_cascade_ingest_batch_fn (the
-    gate is index-free and identical in both sinks).
-
-    ``phash_index_root`` (round 11, library-first — the q109 tier): the
-    opt-in MULTIMODAL near-dup tier between the exact and MinHash tiers
-    (cheaper than shingling: one Arrow hash pass + a 9-keys/doc band
-    join). The persisted index is ``multimodal_dedup.phash_index``'s
-    (doc_id, phash) — 16 bytes/doc — on the same delta/manifest
-    lifecycle as the other tiers; a re-encoded/retouched copy of an
-    indexed doc (small Hamming distance, shared bytes NOT required) is
-    rejected with tier 'media_dup', matched_id = the lowest matching
-    index doc_id, and score = (32 − hamming)/32 (the tier-typed
-    similarity, ≥ 0.875 at the ≤ 4-bit threshold). NULL and zero-length
-    payloads have no pixels, hence no phash: such docs are invisible to
-    this tier (never phash-rejected, never phash-indexed) and stay
-    fully subject to every other tier — the multimodal family's
-    no-bytes-no-media policy. ``phash_band_cap`` bounds adversarial hot
-    bands via cap_banded at match time, with cap_banded's documented
-    semantics exactly: every reported match is REAL (a genuine index doc
-    within the Hamming threshold), but under adversarial saturation —
-    lower-id non-matching docs filling every band the true best match
-    occupies — matched_id can shift to a retained member, and row-level
-    subset-of-uncapped is NOT guaranteed (pinned both ways by
-    tests/test_multimodal_dedup_props.py::
-    test_phash_match_batch_cap_shifts_matched_id_under_saturation). Scale note: the band frame is derived from the
-    (doc_id, phash) index per batch — a projection+explode of a
-    16-byte row; if profiles ever show that derivation dominating, the
-    sig_bands_root pattern (persisted banded layout, cap at compaction)
-    applies verbatim. None (default) keeps the cascade exactly as
-    before. ``phash_cells``/``phash_bands`` (round 13) select the grid
-    width PER ROOT (multimodal_dedup.phash_params; default the module
-    32/4) — a 100 TB deployment passes phash_cells=64, the SCALING.md
-    birthday-mass lever; the manifest's phash_config stamp hard-fails
-    any mixed-width pairing either way."""
-    from pyspark.sql.window import Window
-
-    from mapreduce_framework_spark.pipeline.codebook import codebook_fingerprint
-    from mapreduce_framework_spark.pipeline.dedup import (
-        banded_signatures,
-        cap_banded,
-        cap_fingerprints,
-        exact_fingerprint_index,
-        exact_match_batch,
-        index_signatures,
-        match_batch,
-    )
-    from mapreduce_framework_spark.pipeline.semantic_dedup import (
-        SEMDEDUP_COS,
-        cap_cells,
-        semantic_index,
-        semantic_match_batch,
-    )
-
-    if cos_threshold is None:
-        cos_threshold = SEMDEDUP_COS
-    cb_fp = codebook_fingerprint(centroids)
-    if band_cap is not None and sig_bands_root is None:
-        raise ValueError(
-            "band_cap requires sig_bands_root (the persisted banded layout)"
-        )
-    _require_compaction_for_caps(compact_every, band_cap=band_cap, cell_cap=cell_cap)
-    bands_transform = (
-        None if band_cap is None else (lambda df: cap_banded(df, band_cap))
-    )
-    cells_transform = (
-        None if cell_cap is None else (lambda df: cap_cells(df, cell_cap))
-    )
-    fp_transform = cap_fingerprints if fp_distinct else None
-    # writer fencing (see make_ingest_batch_fn / storage.py)
-    ep_fp = acquire_index_root(fp_index_root)
-    ep_sig = acquire_index_root(sig_index_root)
-    ep_sem = acquire_index_root(sem_index_root)
-    ep_dec = acquire_index_root(decisions_root)
-    ep_bands = (
-        acquire_index_root(sig_bands_root) if sig_bands_root is not None else None
-    )
-    ep_ph = (
-        acquire_index_root(phash_index_root)
-        if phash_index_root is not None
-        else None
-    )
-    ph_fp = None
-    if phash_index_root is not None:
-        from mapreduce_framework_spark.pipeline.multimodal_dedup import (
-            phash_fingerprint,
-            phash_params,
-        )
-
-        # resolve the width ONCE at construction (fail-fast on a bad
-        # pair) — the sink holds exactly one grid config for its life
-        phash_cells, phash_bands = phash_params(phash_cells, phash_bands)
-        ph_fp = phash_fingerprint(phash_cells, phash_bands)
-
-    def _sem_side(docs: DataFrame) -> DataFrame:
-        # NULL embeddings are invisible to the semantic tier (policy
-        # above); zero-norm ones are excluded downstream by _norms_spark.
-        return docs.where(F.col("embedding").isNotNull()).select(
-            F.col("doc_id").alias("vec_id"), "embedding"
-        )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _require_codebook(sem_index_root, cb_fp)
-        if phash_index_root is not None:
-            # unconditional, like _require_codebook above: a batch-0
-            # restart over an existing root must fail on a width
-            # mismatch before publishing anything (round-12 ADVICE)
-            _require_phash_config(phash_index_root, ph_fp)
-        batch = batch_df.localCheckpoint(eager=True)  # read the source once
-
-        qual_best = None
-        live = batch
-        if quality_gate:
-            from mapreduce_framework_spark.pipeline.quality import (
-                quality_rejects,
-            )
-
-            qual_best = (
-                quality_rejects(batch)
-                .select("doc_id", F.col("q_frac").alias("ql_frac"))
-                .localCheckpoint(eager=True)
-            )
-            live = batch.join(qual_best, "doc_id", "left_anti")
-
-        fp_idx = _index_so_far(spark, fp_index_root, before_batch=batch_id)
-        if fp_idx is None:
-            exact_best = None
-            survivors = live
-        else:
-            exact_best = (
-                exact_match_batch(fp_idx, live)
-                .groupBy("id2")
-                .agg(F.min("id1").alias("ex_id"))
-                .select(F.col("id2").alias("doc_id"), "ex_id")
-                .localCheckpoint(eager=True)
-            )
-            survivors = live.join(exact_best, "doc_id", "left_anti")
-
-        intra_best = None
-        if intra_batch_exact:
-            intra_best = _intra_batch_exact_best(survivors)
-            survivors = survivors.join(intra_best, "doc_id", "left_anti")
-
-        ph_best = None
-        if phash_index_root is not None:
-            ph_idx = _index_so_far(spark, phash_index_root, before_batch=batch_id)
-            if ph_idx is not None:
-                from mapreduce_framework_spark.pipeline.multimodal_dedup import (
-                    phash_match_batch,
-                )
-
-                ph_best = (
-                    phash_match_batch(
-                        ph_idx,
-                        survivors.select("doc_id", "text"),
-                        band_cap=phash_band_cap,
-                        cells=phash_cells,
-                        bands=phash_bands,
-                    )
-                    .select(
-                        "doc_id",
-                        F.col("matched_id").alias("ph_id"),
-                        (
-                            (F.lit(phash_cells) - F.col("hamming"))
-                            / F.lit(float(phash_cells))
-                        ).alias("ph_sim"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                survivors = survivors.join(ph_best, "doc_id", "left_anti")
-
-        sig_idx = _index_so_far(spark, sig_index_root, before_batch=batch_id)
-        if sig_idx is None:
-            near_best = None
-            survivors2 = survivors
-        else:
-            w = Window.partitionBy("id2").orderBy(
-                F.col("jaccard").desc(), F.col("id1").asc()
-            )
-            if sig_bands_root is not None:
-                _check_bands_coverage(
-                    sig_index_root, sig_bands_root, before_batch=batch_id
-                )
-                sig_bands = _index_so_far(
-                    spark, sig_bands_root, before_batch=batch_id
-                )
-            else:
-                sig_bands = None
-            near_best = (
-                match_batch(
-                    sig_idx, survivors, threshold, shingler, index_bands=sig_bands
-                )
-                .withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select(
-                    F.col("id2").alias("doc_id"),
-                    F.col("id1").alias("nd_id"),
-                    F.col("jaccard").alias("nd_jaccard"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            survivors2 = survivors.join(near_best, "doc_id", "left_anti")
-
-        sem_idx = _index_so_far(spark, sem_index_root, before_batch=batch_id)
-        if sem_idx is None:
-            sem_best = None
-            admitted = survivors2
-        else:
-            ws = Window.partitionBy("new_id").orderBy(
-                F.col("cos").desc(), F.col("index_id").asc()
-            )
-            sem_best = (
-                semantic_match_batch(
-                    sem_idx, _sem_side(survivors2), centroids, cos_threshold
-                )
-                .withColumn("rn", F.row_number().over(ws))
-                .where(F.col("rn") == 1)
-                .select(
-                    F.col("new_id").alias("doc_id"),
-                    F.col("index_id").alias("sm_id"),
-                    F.col("cos").alias("sm_cos"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            admitted = survivors2.join(sem_best, "doc_id", "left_anti")
-
-        cont_best = None
-        if benchmark_span_index is not None:
-            from mapreduce_framework_spark.pipeline.span_dedup import (
-                span_contamination,
-            )
-
-            cont_best = (
-                span_contamination(
-                    benchmark_span_index, admitted.select("doc_id", "text")
-                )
-                .where(F.col("cont_frac") >= cont_threshold)
-                .select("doc_id", F.col("cont_frac").alias("ct_frac"))
-                .localCheckpoint(eager=True)
-            )
-            admitted = admitted.join(cont_best, "doc_id", "left_anti")
-
-        decisions = batch.select("doc_id")
-        if qual_best is not None:
-            decisions = decisions.join(qual_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "ql_frac", F.lit(None).cast("double")
-            )
-        if exact_best is not None:
-            decisions = decisions.join(exact_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn("ex_id", F.lit(None).cast("long"))
-        if intra_best is not None:
-            decisions = decisions.join(intra_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn("ib_id", F.lit(None).cast("long"))
-        if ph_best is not None:
-            decisions = decisions.join(ph_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "ph_id", F.lit(None).cast("long")
-            ).withColumn("ph_sim", F.lit(None).cast("double"))
-        if near_best is not None:
-            decisions = decisions.join(near_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "nd_id", F.lit(None).cast("long")
-            ).withColumn("nd_jaccard", F.lit(None).cast("double"))
-        if sem_best is not None:
-            decisions = decisions.join(sem_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "sm_id", F.lit(None).cast("long")
-            ).withColumn("sm_cos", F.lit(None).cast("double"))
-        if cont_best is not None:
-            decisions = decisions.join(cont_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "ct_frac", F.lit(None).cast("double")
-            )
-        # ex_id / ib_id are mutually exclusive (intra-batch dedup runs on
-        # the index tier's survivors); ct_frac only on full survivors;
-        # ql_frac excludes a doc from every later tier (quality runs first)
-        ex_any = F.col("ex_id").isNotNull() | F.col("ib_id").isNotNull()
-        ql = F.col("ql_frac").isNotNull()
-        decisions = decisions.select(
-            "doc_id",
-            (
-                ~ql
-                & ~ex_any
-                & F.col("ph_id").isNull()
-                & F.col("nd_id").isNull()
-                & F.col("sm_id").isNull()
-                & F.col("ct_frac").isNull()
-            ).alias("admitted"),
-            F.coalesce("ex_id", "ib_id", "ph_id", "nd_id", "sm_id", F.lit(-1))
-            .cast("long")
-            .alias("matched_id"),
-            F.when(ql, F.col("ql_frac"))
-            .when(ex_any, F.lit(1.0))
-            .when(F.col("ph_id").isNotNull(), F.col("ph_sim"))
-            .when(F.col("nd_id").isNotNull(), F.col("nd_jaccard"))
-            .when(F.col("sm_id").isNotNull(), F.col("sm_cos"))
-            .otherwise(F.coalesce("ct_frac", F.lit(0.0)))
-            .alias("score"),
-            F.when(ql, F.lit("quality"))
-            .when(ex_any, F.lit("exact"))
-            .when(F.col("ph_id").isNotNull(), F.lit("media_dup"))
-            .when(F.col("nd_id").isNotNull(), F.lit("near_dup"))
-            .when(F.col("sm_id").isNotNull(), F.lit("semantic"))
-            .when(F.col("ct_frac").isNotNull(), F.lit("contaminated"))
-            .alias("tier"),
-        )
-        # round 13 (guide §2.3/§2.6): `admitted` feeds FOUR index deltas
-        # (fp / signatures / phash / semantic) — materialize its anti-join
-        # chain once instead of re-executing it inside every publish, then
-        # run the five per-root publish chains concurrently (each is a
-        # small independent write job; see _run_publish_chains for why
-        # cross-root order carries no invariant).
-        admitted = admitted.localCheckpoint(eager=True)
-        sig_delta = index_signatures(admitted, shingler)
-        if sig_bands_root is not None:
-            sig_delta = sig_delta.localCheckpoint(eager=True)
-
-        def _chain_decisions():
-            _publish_delta(
-                spark, decisions_root, batch_id, decisions, compact_every,
-                epoch=ep_dec,
-            )
-
-        def _chain_fp():
-            _publish_delta(
-                spark, fp_index_root, batch_id,
-                exact_fingerprint_index(admitted, distinct=fp_distinct),
-                compact_every, epoch=ep_fp,
-                compact_transform=fp_transform,
-            )
-
-        def _chain_sig():
-            _publish_delta(
-                spark, sig_index_root, batch_id, sig_delta, compact_every,
-                epoch=ep_sig,
-            )
-            if sig_bands_root is not None:
-                _publish_delta(
-                    spark, sig_bands_root, batch_id, banded_signatures(sig_delta),
-                    compact_every, epoch=ep_bands,
-                    compact_transform=bands_transform,
-                )
-
-        _chain_ph = None
-        if phash_index_root is not None:
-            from mapreduce_framework_spark.pipeline.multimodal_dedup import (
-                phash_index,
-            )
-
-            def _chain_ph():
-                _publish_delta(
-                    spark,
-                    phash_index_root,
-                    batch_id,
-                    phash_index(
-                        admitted.select("doc_id", "text"), cells=phash_cells
-                    ),
-                    compact_every,
-                    epoch=ep_ph,
-                )
-                _stamp_phash_config(phash_index_root, ph_fp, epoch=ep_ph)
-
-        def _chain_sem():
-            _publish_delta(
-                spark,
-                sem_index_root,
-                batch_id,
-                semantic_index(_sem_side(admitted), centroids),
-                compact_every,
-                epoch=ep_sem,
-                compact_transform=cells_transform,
-            )
-            _stamp_codebook(sem_index_root, cb_fp, epoch=ep_sem)
-            # drift trigger (see make_semantic_ingest_batch_fn): the
-            # statistic is over every embedded doc of the batch,
-            # regardless of tier
-            _log_drift(
-                sem_index_root,
-                batch_id,
-                _batch_quantization_error(_sem_side(batch), centroids),
-                epoch=ep_sem,
-            )
-
-        _run_publish_chains(
-            _chain_decisions, _chain_fp, _chain_sig, _chain_ph, _chain_sem
-        )
-
-    return apply_batch
+    Decisions are ``(doc_id, admitted, matched_id, score, tier)``:
+    ``score`` is the lexical cascade's ``jaccard`` column generalized,
+    since the semantic tier's metric (the exact cosine) is not a
+    Jaccard."""
+    return _cascade_sink(semantic=True, **locals())
 
 
 def run_full_cascade_ingest_stream(
@@ -1975,77 +1490,29 @@ def run_full_cascade_ingest_stream(
     phash_cells: int | None = None,
     phash_bands: int | None = None,
 ) -> DataFrame:
-    """Drive a ``(doc_id, text, embedding)`` stream through the
-    three-tier admission sink; returns the union of all per-batch
-    decision frames. ``sig_bands_root`` maintains the persisted banded
-    layout for the MinHash tier, exactly as in run_ingest_stream;
-    ``band_cap``/``cell_cap`` are the hot-key skew guards (re-applied at
-    every compaction of the bands / semantic roots);
-    ``fp_distinct``/``intra_batch_exact`` are the exact tier's hot-fp
-    guard and within-batch pre-dedup; ``benchmark_span_index`` adds the
-    opt-in decontamination tier and ``phash_index_root`` the opt-in
-    multimodal 'media_dup' tier, with ``phash_cells``/``phash_bands``
-    the per-root grid width (all on make_full_cascade_ingest_batch_fn)."""
-    q = (
-        docs_stream.writeStream.foreachBatch(
-            make_full_cascade_ingest_batch_fn(
-                spark,
-                fp_index_root,
-                sig_index_root,
-                sem_index_root,
-                decisions_root,
-                centroids,
-                threshold,
-                cos_threshold,
-                shingler,
-                compact_every,
-                sig_bands_root,
-                band_cap,
-                cell_cap,
-                fp_distinct,
-                intra_batch_exact,
-                benchmark_span_index,
-                cont_threshold,
-                quality_gate,
-                phash_index_root,
-                phash_band_cap,
-                phash_cells,
-                phash_bands,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Drive a ``(doc_id, text, embedding)`` stream through the six-tier
+    :func:`make_full_cascade_ingest_batch_fn` (:func:`_run_stream`)."""
+    return _run_stream(
+        docs_stream, make_full_cascade_ingest_batch_fn, locals(), "full-cascade ingest"
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"full-cascade ingest stream did not finish in {timeout_s}s"
-        )
-    decisions = _index_so_far(spark, decisions_root)
-    if decisions is None:
-        raise ValueError(
-            f"stream processed no batches — no decisions under {decisions_root}"
-        )
-    return decisions
 
 
 def admission_report_frame(decisions: DataFrame) -> DataFrame:
     """Per-tier rollup of an admission decisions log — the daily ops view
     a 100 TB ingest reads instead of the raw log: one row per outcome
     ('admitted', 'exact', 'near_dup', 'semantic', and — when the opt-in
-    tiers are on — 'contaminated' and 'quality') with document count,
-    share of the log, and the score distribution (min/avg/max of the
-    tier's metric — Jaccard for the lexical tiers, cosine for the
-    semantic tier, as the decisions schema defines). Works on every
-    sink's schema: the cascade logs carry ``tier`` and ``score``; the
-    single-tier logs carry no tier (rejected rows report their family
-    metric, ``jaccard``/``cos``), so rejected rows roll up under
-    'rejected'.
+    tiers are on — 'quality', 'media_dup' and 'contaminated') with
+    document count, share of the log, and the score distribution
+    (min/avg/max of the score each tier function defines — e.g.
+    Jaccard for near_dup, cosine for semantic). Works on every sink's
+    schema: the cascade logs carry ``tier`` (with ``score``, or
+    ``jaccard`` in the lexical cascade); the single-tier logs carry no
+    tier (rejected rows report their family metric, ``jaccard``/``cos``),
+    so rejected rows roll up under 'rejected'.
 
     Scale shape: aggregation-only — one partial-agg shuffle keyed by the
-    (≤5-value) tier column over a column-pruned scan of the log, then a
-    single-partition window over the ≤4 grouped rows for the shares.
+    outcome (≤7 values) over a column-pruned scan of the log, then a
+    single-partition window over the ≤7 grouped rows for the shares.
     No joins, no Python. Plan gate:
     tests/test_streaming.py::test_admission_report_plan.
 
@@ -2106,73 +1573,3 @@ def admission_report(spark: SparkSession, decisions_root: str) -> DataFrame:
         raise ValueError(f"no decisions committed under {decisions_root}")
     return admission_report_frame(dec)
 
-
-def run_cascade_ingest_stream(
-    docs_stream: DataFrame,
-    spark: SparkSession,
-    fp_index_root: str,
-    sig_index_root: str,
-    decisions_root: str,
-    checkpoint: str,
-    threshold: float,
-    timeout_s: int = 300,
-    shingler=None,
-    compact_every: int | None = DEFAULT_COMPACT_EVERY,
-    sig_bands_root: str | None = None,
-    band_cap: int | None = None,
-    fp_distinct: bool = True,
-    intra_batch_exact: bool = False,
-    benchmark_span_index: DataFrame | None = None,
-    cont_threshold: float = 0.05,
-    quality_gate: bool = False,
-    phash_index_root: str | None = None,
-    phash_band_cap: int | None = None,
-    phash_cells: int | None = None,
-    phash_bands: int | None = None,
-) -> DataFrame:
-    """Drive the document stream through the tiered admission sink;
-    returns the union of all per-batch decision frames. ``sig_bands_root``
-    maintains the persisted banded layout for the MinHash tier, exactly
-    as in run_ingest_stream; ``band_cap`` is the hot-band skew guard;
-    ``fp_distinct``/``intra_batch_exact`` are the exact tier's hot-fp
-    guard and within-batch pre-dedup; ``benchmark_span_index``/
-    ``cont_threshold`` the opt-in lexical decontamination tier and
-    ``phash_index_root`` the opt-in multimodal 'media_dup' tier, with
-    ``phash_cells``/``phash_bands`` the per-root grid width
-    (make_cascade_ingest_batch_fn)."""
-    q = (
-        docs_stream.writeStream.foreachBatch(
-            make_cascade_ingest_batch_fn(
-                spark,
-                fp_index_root,
-                sig_index_root,
-                decisions_root,
-                threshold,
-                shingler,
-                compact_every,
-                sig_bands_root,
-                band_cap,
-                fp_distinct,
-                intra_batch_exact,
-                benchmark_span_index,
-                cont_threshold,
-                quality_gate,
-                phash_index_root,
-                phash_band_cap,
-                phash_cells,
-                phash_bands,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"cascade ingest stream did not finish in {timeout_s}s")
-    decisions = _index_so_far(spark, decisions_root)
-    if decisions is None:
-        raise ValueError(
-            f"stream processed no batches — no decisions under {decisions_root}"
-        )
-    return decisions

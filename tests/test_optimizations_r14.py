@@ -1,7 +1,6 @@
 """Round-14 optimization pins (OPTIMIZATION_r14.md).
 
 Focused tests for the operator internals this round touched:
-- the publish-chain pool-width knob (SPARK_GRAFT_PUBLISH_CONCURRENCY),
 - the bucketed banded-index layout (publish/match identity + plan shape),
 - q88's per-row top-2-gram rewrite (equivalence vs the pre-r14
   distributed shape on clean/empty/NULL/tie-heavy inputs + plan shape),
@@ -12,43 +11,11 @@ from __future__ import annotations
 
 import os
 import re
-import threading
 
 import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.catalog import table
-
-
-def test_publish_chain_width_env_knob(monkeypatch):
-    """width<=1 runs chains sequentially on the caller thread; the default
-    (unset) runs them concurrently (pool threads), and every chain runs
-    either way."""
-    from mapreduce_framework_spark.streaming.ingest import _run_publish_chains
-
-    seen: list[str] = []
-
-    def mk(tag):
-        def chain():
-            seen.append(f"{tag}:{threading.current_thread() is threading.main_thread()}")
-
-        return chain
-
-    monkeypatch.setenv("SPARK_GRAFT_PUBLISH_CONCURRENCY", "1")
-    seen.clear()
-    _run_publish_chains(mk("a"), mk("b"), mk("c"))
-    assert sorted(seen) == ["a:True", "b:True", "c:True"]
-
-    monkeypatch.delenv("SPARK_GRAFT_PUBLISH_CONCURRENCY", raising=False)
-    seen.clear()
-    _run_publish_chains(mk("a"), mk("b"), mk("c"))
-    assert sorted(s.split(":")[0] for s in seen) == ["a", "b", "c"]
-    assert all(s.endswith("False") for s in seen)  # pool threads
-
-    monkeypatch.setenv("SPARK_GRAFT_PUBLISH_CONCURRENCY", "not-an-int")
-    seen.clear()
-    _run_publish_chains(mk("a"), mk("b"))
-    assert sorted(s.split(":")[0] for s in seen) == ["a", "b"]
 
 
 def test_bench_compact_line_fits_driver_tail_capture():

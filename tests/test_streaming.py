@@ -3306,7 +3306,8 @@ def test_intra_batch_exact_pre_dedup(spark, sf_dir, tmp_path):
 def test_caps_require_compaction(spark, tmp_path):
     """Round-9 ADVICE: a hot-key cap with compact_every=None would never
     be applied (caps run at compaction) — every sink that accepts a cap
-    must hard-error instead of silently returning an uncapped index."""
+    must hard-error instead of silently returning an uncapped index. The
+    same holds for a tier's options without the tier's root."""
     import pytest as _pytest
 
     from mapreduce_framework_spark.pipeline.codebook import fit_codebook
@@ -3352,6 +3353,99 @@ def test_caps_require_compaction(spark, tmp_path):
             str(tmp_path / "m4"), str(tmp_path / "d4"), cents, 0.8,
             compact_every=None, cell_cap=64,
         )
+    # the media_dup tier's options without its root used to be silently
+    # ignored; like band_cap without a bands root, they are a hard error
+    for opt in ({"phash_band_cap": 8}, {"phash_cells": 64}, {"phash_bands": 8}):
+        with _pytest.raises(ValueError, match="phash_index_root"):
+            make_cascade_ingest_batch_fn(
+                spark, str(tmp_path / "f5"), str(tmp_path / "s5"),
+                str(tmp_path / "d5"), 0.8, **opt,
+            )
+        with _pytest.raises(ValueError, match="phash_index_root"):
+            make_full_cascade_ingest_batch_fn(
+                spark, str(tmp_path / "f6"), str(tmp_path / "s6"),
+                str(tmp_path / "m6"), str(tmp_path / "d6"), cents, 0.8, **opt,
+            )
+
+
+def test_steady_state_batch_spark_job_count(spark, tmp_path):
+    """Every Spark job of an ingest batch adds fixed scheduling cost, so the job
+    count per steady-state batch is pinned for the two sinks the
+    benchmark runs: the MinHash sink and the six-tier sink with the
+    quality, media_dup and contaminated tiers on (every tier fires on the
+    second batch). The bounds are the counts measured when the four sinks
+    became one tiered sink (28 and 146); a change that adds a
+    materialization or an action per batch fails here."""
+    import random
+
+    from pyspark.sql import Row
+
+    from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
+    from mapreduce_framework_spark.pipeline.span_dedup import span_index
+    from mapreduce_framework_spark.streaming.ingest import (
+        make_full_cascade_ingest_batch_fn,
+        make_ingest_batch_fn,
+    )
+
+    def words(seed):
+        rng = random.Random(seed)
+        letters = "abcdefghijklmnopqrstuvwxyz"
+        return " ".join(
+            "".join(rng.choice(letters) for _ in range(rng.randint(2, 9)))
+            for _ in range(30)
+        )
+
+    a, b, c, bench_text = words(1), words(2), words(3), words(5)
+    rows = [
+        [(1, a, [4.0, 0.0, 0.0]), (2, b, [0.0, 4.0, 0.0]), (3, c, [0.0, 0.0, 4.0])],
+        [
+            (10, a, [0.0, 4.0, 0.0]),  # exact
+            (11, b + " tail", [0.0, 0.0, 5.0]),  # near_dup
+            (12, words(4), [4.0, 0.0, 0.0]),  # semantic
+            (13, words(6), [-4.0, 0.0, 0.0]),  # admitted
+            (14, "spam " * 40, [1.0, 1.0, 0.0]),  # quality
+            (15, bench_text, [0.0, -1.0, 0.0]),  # contaminated
+            (16, c[:40] + "q" + c[41:], [0.0, 0.0, -3.0]),  # media_dup
+        ],
+    ]
+    dfs = [
+        spark.createDataFrame(
+            [Row(doc_id=i, text=t, embedding=e) for i, t, e in batch],
+            "doc_id bigint, text string, embedding array<double>",
+        )
+        for batch in rows
+    ]
+    cents = spark.createDataFrame(
+        [Row(cent_id=i, cent=[float(x) for x in v])
+         for i, v in enumerate([[1, 0, 0], [0, 1, 0], [0, 0, 1], [1, 1, 0]])]
+    ).localCheckpoint(eager=True)
+    bench = span_index(
+        spark.createDataFrame([Row(doc_id=1, text=bench_text)])
+    ).localCheckpoint(eager=True)
+    tracker = spark.sparkContext.statusTracker()
+
+    def steady_state_jobs(fn):
+        fn(dfs[0], 0)
+        before = set(tracker.getJobIdsForGroup(None))
+        fn(dfs[1], 1)
+        return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    r = {k: str(tmp_path / k) for k in ["sig", "dec", "fp", "sig6", "sem", "dec6", "ph"]}
+    minhash = make_ingest_batch_fn(
+        spark, r["sig"], r["dec"], JACCARD_THRESHOLD, compact_every=None
+    )
+    assert steady_state_jobs(minhash) <= 28
+    six_tier = make_full_cascade_ingest_batch_fn(
+        spark, r["fp"], r["sig6"], r["sem"], r["dec6"], cents, JACCARD_THRESHOLD,
+        compact_every=None, quality_gate=True, phash_index_root=r["ph"],
+        benchmark_span_index=bench,
+    )
+    assert steady_state_jobs(six_tier) <= 146
+    tiers = {row["doc_id"]: row["tier"] for row in _decisions(spark, r["dec6"]).values()}
+    assert tiers == {
+        1: None, 2: None, 3: None, 10: "exact", 11: "near_dup", 12: "semantic",
+        13: None, 14: "quality", 15: "contaminated", 16: "media_dup",
+    }
 
 
 def test_zombie_delta_write_cannot_touch_committed_dirs(spark, sf_dir, tmp_path):
