@@ -641,17 +641,21 @@ class _Tier:
     """One admission test of :func:`_tiered_sink`.
 
     ``match(survivors, index, batch_id)`` returns the tier's rejects among
-    the survivors of every earlier tier as ``(doc_id[, id_col][, score])``.
-    ``index`` is the tier root's strictly-before-batch_id index — the tier
-    is skipped while that index is empty — or None for an index-free tier.
-    A reject's ``matched_id`` is its ``id_col`` (None: the reject has no
-    corpus counterpart, reported as -1) and its score is the ``score``
-    column, or the constant when ``score`` is a float. ``guard`` runs
-    before the batch is read. A tier with a ``root`` indexes the batch's
-    admitted docs: ``delta(admitted)`` is published under ``root`` with
-    ``compact_transform`` (the tier's hot-key guard), then every
-    ``after_publish(delta, batch, batch_id)`` step runs on the same chain,
-    so a root's manifest is never written from two threads."""
+    the survivors of every earlier tier as ``(doc_id[, id_col][, score])``,
+    or a ``(rejects, carry)`` pair when the tier has built a batch frame
+    its delta reuses. ``index`` is the tier root's strictly-before-batch_id
+    index — the tier is skipped while that index is empty — or None for an
+    index-free tier. A reject's ``matched_id`` is its ``id_col`` (None: the
+    reject has no corpus counterpart, reported as -1) and its score is the
+    ``score`` column, or the constant when ``score`` is a float. ``guard``
+    runs before the batch is read. A tier with a ``root`` indexes the
+    batch's admitted docs: ``delta(admitted, carry)`` is published under
+    ``root`` with ``compact_transform`` (the tier's hot-key guard), then
+    every ``after_publish(delta, batch, batch_id)`` step runs on the same
+    chain, so a root's manifest is never written from two threads.
+    ``carry`` is what this batch's ``match`` handed back (None when the
+    tier was skipped or returned no carry); the sink passes it along as a
+    value inside one batch and never keeps it."""
 
     name: str
     match: Callable
@@ -762,7 +766,7 @@ def _exact_tiers(
         _Tier(
             "exact", match, "ex_id", 1.0,
             root=fp_index_root, epoch=acquire_index_root(fp_index_root),
-            delta=lambda adm: exact_fingerprint_index(adm, distinct=fp_distinct),
+            delta=lambda adm, _: exact_fingerprint_index(adm, distinct=fp_distinct),
             compact_transform=cap_fingerprints if fp_distinct else None,
         )
     ]
@@ -851,7 +855,7 @@ def _media_tier(
     return _Tier(
         "media_dup", match, "ph_id", "ph_sim",
         root=phash_index_root, epoch=epoch,
-        delta=lambda adm: phash_index(adm.select("doc_id", "text"), cells=cells),
+        delta=lambda adm, _: phash_index(adm.select("doc_id", "text"), cells=cells),
         guard=lambda: _require_stamp(
             phash_index_root, "phash_config", config,
             lambda stamped: f"phash index at {phash_index_root} was built under "
@@ -881,7 +885,12 @@ def _near_dup_tier(
     the signature index so far (pipeline/dedup.py:match_batch: cross-side
     LSH band join + estimate prune + exact verify) and rejected with its
     best match (highest verified Jaccard, ties to the lowest index id);
-    admitted docs' signatures are appended as a delta. ``shingler``: the
+    admitted docs' signatures are appended as a delta. The survivors'
+    signature frame is built once (one checkpointed ``index_signatures``),
+    matched, and handed to the delta as the tier's carry: the delta is
+    that frame semi-joined to the admitted doc_ids, so admitted docs are
+    never re-shingled. While the index is empty the tier is skipped and
+    the delta is ``index_signatures(admitted)``. ``shingler``: the
     shingle function shared by index build and matching (default word
     shingles; pass ``char_shingles_of`` + ``CHAR_JACCARD_THRESHOLD`` for
     the character-8-gram tier — see pipeline/dedup.py:index_signatures).
@@ -907,10 +916,10 @@ def _near_dup_tier(
     max key population stays ≤ band_cap + tail even against a
     boilerplate-cluster adversary. None (default) keeps decisions exact."""
     from mapreduce_framework_spark.pipeline.dedup import (
+        _match_signatures,
         banded_signatures,
         cap_banded,
         index_signatures,
-        match_batch,
     )
 
     epoch = acquire_index_root(sig_index_root)
@@ -932,13 +941,18 @@ def _near_dup_tier(
         if bands_root is not None:
             _check_bands_coverage(sig_index_root, bands_root, before_batch=batch_id)
             bands = _index_so_far(spark, bands_root, before_batch=batch_id)
-        return _best_match(
-            match_batch(sig_idx, survivors, threshold, shingler, index_bands=bands),
+        sigs = index_signatures(survivors, shingler).localCheckpoint(eager=True)
+        best = _best_match(
+            _match_signatures(sig_idx, sigs, threshold, index_bands=bands),
             "id2", "id1", "jaccard", "nd_id", "nd_jaccard",
         )
+        return best, sigs
 
-    def delta(admitted):
-        sig = index_signatures(admitted, shingler)
+    def delta(admitted, sigs):
+        if sigs is None:  # skipped: nothing was matched, so nothing to reuse
+            sig = index_signatures(admitted, shingler)
+        else:
+            sig = sigs.join(admitted.select("doc_id"), "doc_id", "left_semi")
         # with a bands root one materialization feeds both publishes (the
         # band rows are a projection of the signature delta, not a recompute)
         return sig if bands_root is None else sig.localCheckpoint(eager=True)
@@ -1027,7 +1041,7 @@ def _semantic_tier(
     return _Tier(
         "semantic", match, "sm_id", "sm_cos",
         root=sem_index_root, epoch=epoch,
-        delta=lambda adm: semantic_index(_sem_side(adm), centroids),
+        delta=lambda adm, _: semantic_index(_sem_side(adm), centroids),
         compact_transform=(
             None if cell_cap is None else (lambda df: cap_cells(df, cell_cap))
         ),
@@ -1117,9 +1131,9 @@ def _tiered_sink(
     ep_dec = acquire_index_root(decisions_root)
     n_deltas = sum(t.delta is not None for t in tiers)
 
-    def publish_chain(t: _Tier, admitted: DataFrame, batch: DataFrame, batch_id: int):
+    def publish_chain(t: _Tier, admitted: DataFrame, carry, batch: DataFrame, batch_id: int):
         def chain():
-            delta = t.delta(admitted)
+            delta = t.delta(admitted, carry)
             _publish_delta(
                 spark, t.root, batch_id, delta, compact_every,
                 epoch=t.epoch, compact_transform=t.compact_transform,
@@ -1137,7 +1151,9 @@ def _tiered_sink(
         survivors = batch
         decisions = batch.select("doc_id")
         fired = []  # per tier, in order: (rejected the doc?, its score, its name)
+        carries = []  # per tier, in order: what its match handed to its delta
         for t in tiers:
+            carry = None
             index = None
             if t.root is not None:
                 index = _index_so_far(spark, t.root, before_batch=batch_id)
@@ -1148,11 +1164,15 @@ def _tiered_sink(
                             c, F.lit(None).cast("long" if c == t.id_col else "double")
                         )
             else:
-                best = t.match(survivors, index, batch_id).localCheckpoint(eager=True)
+                best = t.match(survivors, index, batch_id)
+                if isinstance(best, tuple):
+                    best, carry = best
+                best = best.localCheckpoint(eager=True)
                 decisions = decisions.join(best, "doc_id", "left")
                 survivors = survivors.join(best, "doc_id", "left_anti")
             value = F.col(t.score) if isinstance(t.score, str) else F.lit(t.score)
             fired.append((F.col(t.id_col or t.score).isNotNull(), value, t.name))
+            carries.append(carry)
         score = F.coalesce(*[F.when(hit, v) for hit, v, _ in fired], F.lit(0.0))
         tier = F  # F.when and Column.when chain alike
         for hit, _, name in fired:
@@ -1174,8 +1194,8 @@ def _tiered_sink(
                 epoch=ep_dec,
             ),
             *[
-                publish_chain(t, survivors, batch, batch_id)
-                for t in tiers
+                publish_chain(t, survivors, carry, batch, batch_id)
+                for t, carry in zip(tiers, carries)
                 if t.delta is not None
             ],
         )

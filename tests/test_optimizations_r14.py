@@ -133,10 +133,15 @@ def test_bucketed_bands_probe_side_has_no_exchange(spark, banded_fixture):
         str(fx["root"] / "bands_bucketed_plan"),
         n_buckets=8,
     )
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    # each key is restored to its own prior value, and an unset key to unset
+    saved = {k: spark.conf.get(k, None) for k in keys}
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        for k in keys:
+            spark.conf.set(k, "-1")
 
         def band_exchanges(bands):
             df = match_batch(fx["idx"], fx["new_docs"], index_bands=bands)
@@ -149,10 +154,11 @@ def test_bucketed_bands_probe_side_has_no_exchange(spark, banded_fixture):
             spark.table("t_r14_bands_bucketed_plan")
         )
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.set(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold", old_thresh
-        )
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     # The candidate-join subtree can appear k times in the executed plan
     # (the verify semi-joins re-derive candidates when AQE does not reuse
     # the stage); plain pays 2 band exchanges per appearance (both sides),

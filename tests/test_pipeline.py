@@ -388,6 +388,29 @@ def test_match_batch_with_persisted_index_equals_from_scratch(spark, sf_dir, tmp
     assert "index_sigs" in plan, plan
 
 
+@pytest.mark.parametrize("family", ["word", "char"])
+def test_index_signatures_plans_one_aggregate(spark, sf_dir, family):
+    """``index_signatures`` is ONE aggregate: the 64 min() columns and the
+    shingle collect_set share a single groupBy("doc_id"), with no second
+    aggregate over the shingles and no join back. The streaming near-dup
+    tier builds each batch's signature frame with it once and publishes
+    that frame, so a second aggregate or a join here is paid per batch."""
+    from mapreduce_framework_spark.catalog import table
+    from mapreduce_framework_spark.pipeline.dedup import (
+        N_PERMS,
+        char_shingles_of,
+        index_signatures,
+    )
+
+    docs = table(spark, "documents", sf_dir)
+    sigs = index_signatures(docs, char_shingles_of if family == "char" else None)
+    assert sigs.columns == ["doc_id", *[f"m{i}" for i in range(N_PERMS)], "shingles"]
+    plan = sigs._jdf.queryExecution().optimizedPlan().toString()
+    nodes = [line.lstrip(" :+-") for line in plan.splitlines()]
+    assert sum(n.startswith("Aggregate") for n in nodes) == 1, plan
+    assert not any(n.startswith("Join") for n in nodes), plan
+
+
 def test_match_batch_with_persisted_bands_is_identical(spark, sf_dir, tmp_path):
     """The banded-layout extension of the persisted-index contract:
     matching against a parquet-persisted ``banded_signatures`` table must

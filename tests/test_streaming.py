@@ -2533,6 +2533,69 @@ def test_ingest_bands_root_equals_plain(spark, sf_dir, tmp_path):
     assert band_rows == sig_rows * N_BANDS
 
 
+@pytest.mark.parametrize("with_bands", [False, True])
+def test_near_dup_delta_reuses_matched_signatures(spark, tmp_path, with_bands):
+    """The near-dup tier publishes the signature frame it matched,
+    semi-joined to the admitted docs, instead of re-shingling them. Its
+    delta must equal index_signatures(admitted) row for row (equal
+    m0..m63, set-equal shingles): on batch 0, where the tier is skipped
+    because its index is empty, and on batch 1, where it rejects and
+    admits. With a bands root, the band delta is that frame's bands."""
+    import random
+
+    from mapreduce_framework_spark.pipeline.dedup import (
+        JACCARD_THRESHOLD,
+        N_PERMS,
+        banded_signatures,
+        index_signatures,
+    )
+    from mapreduce_framework_spark.streaming.ingest import delta_dir, make_ingest_batch_fn
+
+    def words(seed):
+        rng = random.Random(seed)
+        return " ".join(
+            "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(rng.randint(2, 9)))
+            for _ in range(30)
+        )
+
+    a, b = words(1), words(2)
+    batches = [
+        [(1, a), (2, b), (3, words(3)), (4, "too short"), (5, None)],
+        [(10, a + " tail"), (11, b), (12, words(4)), (13, words(5)), (14, "")],
+    ]
+    roots = {k: str(tmp_path / k) for k in ("sig", "dec", "bands")}
+    fn = make_ingest_batch_fn(
+        spark, roots["sig"], roots["dec"], JACCARD_THRESHOLD, compact_every=None,
+        bands_root=roots["bands"] if with_bands else None,
+    )
+
+    def by_doc(frame):
+        rows = frame.collect()
+        out = {
+            r["doc_id"]: ([r[f"m{i}"] for i in range(N_PERMS)], set(r["shingles"]))
+            for r in rows
+        }
+        assert len(out) == len(rows)
+        return out
+
+    for batch_id, rows in enumerate(batches):
+        docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+        fn(docs, batch_id)
+        decisions = spark.read.parquet(delta_dir(roots["dec"], batch_id)).collect()
+        admitted_ids = sorted(r["doc_id"] for r in decisions if r["admitted"])
+        if batch_id == 1:
+            assert sorted(r["doc_id"] for r in decisions if not r["admitted"]) == [10, 11]
+        want = index_signatures(docs.where(F.col("doc_id").isin(admitted_ids)))
+        got = by_doc(spark.read.parquet(delta_dir(roots["sig"], batch_id)))
+        assert got == by_doc(want)
+        assert sorted(got) == [d for d in admitted_ids if d in (1, 2, 3, 12, 13)]
+        if with_bands:
+            got_bands = spark.read.parquet(delta_dir(roots["bands"], batch_id))
+            assert sorted(map(tuple, got_bands.collect())) == sorted(
+                map(tuple, banded_signatures(want).select(*got_bands.columns).collect())
+            )
+
+
 def test_ingest_bands_root_coverage_guard(spark, sf_dir, tmp_path):
     """Enabling bands_root MID-STREAM is a hard error before any match
     runs: the band index would silently miss every candidate from the
@@ -3373,8 +3436,9 @@ def test_steady_state_batch_spark_job_count(spark, tmp_path):
     count per steady-state batch is pinned for the two sinks the
     benchmark runs: the MinHash sink and the six-tier sink with the
     quality, media_dup and contaminated tiers on (every tier fires on the
-    second batch). The bounds are the counts measured when the four sinks
-    became one tiered sink (28 and 146); a change that adds a
+    second batch). The bounds are the counts measured once the near-dup
+    tier built each batch's signature frame once and published it as its
+    delta (26 and 142, down from 28 and 146); a change that adds a
     materialization or an action per batch fails here."""
     import random
 
@@ -3434,13 +3498,13 @@ def test_steady_state_batch_spark_job_count(spark, tmp_path):
     minhash = make_ingest_batch_fn(
         spark, r["sig"], r["dec"], JACCARD_THRESHOLD, compact_every=None
     )
-    assert steady_state_jobs(minhash) <= 28
+    assert steady_state_jobs(minhash) <= 26
     six_tier = make_full_cascade_ingest_batch_fn(
         spark, r["fp"], r["sig6"], r["sem"], r["dec6"], cents, JACCARD_THRESHOLD,
         compact_every=None, quality_gate=True, phash_index_root=r["ph"],
         benchmark_span_index=bench,
     )
-    assert steady_state_jobs(six_tier) <= 146
+    assert steady_state_jobs(six_tier) <= 142
     tiers = {row["doc_id"]: row["tier"] for row in _decisions(spark, r["dec6"]).values()}
     assert tiers == {
         1: None, 2: None, 3: None, 10: "exact", 11: "near_dup", 12: "semantic",
