@@ -60,13 +60,11 @@ def main(argv: list[str] | None = None) -> int:
         print(f"wrote {len(lines)} lines to {out_path}")
         return 0
 
-    from mapreduce_framework_spark.deploy import ensure_package_on_executors
     from mapreduce_framework_spark.mr import read_whole_files, run_job, write_text_output
     from mapreduce_framework_spark.session import get_spark
 
     spark = get_spark(app_name=f"mr-{args.app}")
     spark.sparkContext.setLogLevel("WARN")
-    ensure_package_on_executors(spark)
     result = run_job(
         read_whole_files(spark, files), map_fn, reduce_fn, n_reduce=args.n_reduce
     )

@@ -17,13 +17,20 @@ Spark-first mapping:
 
 - The map phase is ``mapInPandas`` (Arrow-batched; one Python round-trip per
   batch, never per record).
-- The reduce phase is ``groupBy(key).applyInPandas`` — the only Spark
-  primitive that preserves the holistic all-values-of-a-key contract.
+- The reduce phase is the reference's own sort-then-walk-runs reduce
+  (``src/mr/worker.go:177,198-214``): one hash shuffle on the key
+  (``repartition("key")``), ``sortWithinPartitions("key")``, then one
+  ``mapInPandas`` that walks runs of equal keys through the Arrow batches
+  and calls ``reduce_fn`` once per key with every value. A run that
+  crosses a batch boundary is carried into the next batch, so the
+  holistic all-values-of-a-key contract holds without a per-key pandas
+  frame or Arrow round trip.
   **Scale note:** like the reference (which materializes every value of a
   key in memory, ``src/mr/worker.go:148-177``), one group must fit in one
-  executor's memory. For combinable reducers use the algebraic DataFrame
-  rewrites in ``operators.mr_queries`` instead — those get map-side partial
-  aggregation and no per-group memory cliff.
+  executor's memory; per-task memory is that group plus one Arrow batch
+  (the sort itself spills). For combinable reducers use the algebraic
+  DataFrame rewrites in ``operators.mr_queries`` instead — those get
+  map-side partial aggregation and no per-group memory cliff.
 - ``n_reduce`` output buckets are written with ``partitionBy("bucket")`` so
   the file layout is reproducible without a custom physical partitioner
   (Spark's internal shuffle placement stays Murmur3; only the *visible*
@@ -61,13 +68,17 @@ INPUT_SCHEMA = StructType(
 def read_whole_files(spark: SparkSession, paths: Iterable[str]) -> DataFrame:
     """(filename, contents) source — reference F1 (``src/mr/worker.go:33-38``).
 
-    Whole-file granularity is the reference's model (one file = one map
-    task). For 100 TB bulk text DO NOT use this: use ``spark.read.text``
-    with ``input_file_name()`` so Spark splits large files; this reader
-    exists for MR-parity workloads where map_fn needs the full document.
+    Whole-file granularity is the reference's model: map_fn sees one whole
+    file per call. The ``binaryFile`` source never splits a file and packs
+    files into input partitions by size (``spark.sql.files.openCostInBytes``
+    per file), so small files share a map task, a large file gets its own,
+    and the read needs no shuffle. For 100 TB bulk text DO NOT use this:
+    use ``spark.read.text`` with ``input_file_name()`` so Spark splits large
+    files; this reader exists for MR-parity workloads where map_fn needs
+    the full document.
     """
     files = sorted(paths)
-    df = (
+    return (
         spark.read.format("binaryFile")
         .load(files)
         .select(
@@ -79,8 +90,6 @@ def read_whole_files(spark: SparkSession, paths: Iterable[str]) -> DataFrame:
             F.col("content").cast("string").alias("contents"),
         )
     )
-    # one map task per file, like the reference's task-per-file scheduler
-    return df.repartition(max(len(files), 1), "name")
 
 
 def frame_as_inputs(df: DataFrame, name_col: str, contents_col: str) -> DataFrame:
@@ -134,17 +143,49 @@ def run_job(
             F.approx_count_distinct("key").alias("approx_distinct_keys"),
         )
 
-    def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["key"].iloc[0]
-        out = reduce_fn(key, pdf["value"].tolist())
-        # bucket in Python (FNV over UTF-8 bytes, bucket_of) — the JVM
-        # expression hashes code points and diverges on non-ASCII keys
-        return pd.DataFrame(
-            {"key": [key], "value": [out], "bucket": [bucket_of(key, n_reduce)]}
-        )
+    def reduce_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # keys arrive sorted, so each key is one run; the open run carries
+        # across Arrow batches. A NULL key is a group like any other: the
+        # boundary test is the `started` flag, not a `cur = None` sentinel
+        # (same policy as operators.kv.fold_kv_history_streaming)
+        started = False
+        cur = None
+        vals: list[str] = []
 
-    return mapped.groupBy("key").applyInPandas(
-        reduce_group, schema="key string, value string, bucket int"
+        def frame(keys: list, outs: list[str]) -> pd.DataFrame:
+            # bucket in Python (FNV over UTF-8 bytes, bucket_of) — the JVM
+            # expression hashes code points and diverges on non-ASCII keys
+            return pd.DataFrame(
+                {
+                    "key": keys,
+                    "value": outs,
+                    "bucket": [bucket_of(k, n_reduce) for k in keys],
+                }
+            )
+
+        for pdf in batches:
+            keys = pdf["key"].tolist()
+            values = pdf["value"].tolist()
+            out_keys: list = []
+            outs: list[str] = []
+            start = 0
+            for i, k in enumerate(keys):
+                if not started or k != cur:
+                    if started:
+                        vals.extend(values[start:i])
+                        out_keys.append(cur)
+                        outs.append(reduce_fn(cur, vals))
+                    started, cur, vals, start = True, k, [], i
+            vals.extend(values[start:])
+            if out_keys:
+                yield frame(out_keys, outs)
+        if started:
+            yield frame([cur], [reduce_fn(cur, vals)])
+
+    return (
+        mapped.repartition("key")
+        .sortWithinPartitions("key")
+        .mapInPandas(reduce_runs, schema="key string, value string, bucket int")
     )
 
 

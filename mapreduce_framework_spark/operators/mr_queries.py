@@ -6,8 +6,8 @@ idiomatic, Catalyst-optimizable DataFrame query over the synthetic
 files, which are consumed as (filename, contents) pairs —
 ``src/mr/worker.go:33-38``). The generic imperative map/reduce path lives in
 ``mapreduce_framework_spark.mr``; these are the algebraic rewrites that scale
-(word count as ``groupBy.count`` is map-side-combinable; the holistic
-``applyInPandas`` route is not).
+(word count as ``groupBy.count`` is map-side-combinable; ``run_job``'s
+holistic reduce, which hands every value of a key to one call, is not).
 """
 
 from __future__ import annotations

@@ -17,6 +17,7 @@ from mapreduce_framework_spark.mr import (
     APPS,
     frame_as_inputs,
     read_text_output,
+    read_whole_files,
     run_job,
     run_sequential,
     write_text_output,
@@ -78,6 +79,89 @@ def test_reduce_sees_all_values_of_key(spark, sf_dir):
     result = run_job(inputs, map_fn, reduce_fn, n_reduce=3).collect()
     assert len(result) == 1
     assert result[0]["value"] == str(n_docs)
+
+
+def test_reduce_carries_key_runs_across_arrow_batches(spark):
+    """The reduce walks sorted key runs batch by batch; a run longer than
+    one Arrow batch must be carried into the next, so the hot key is still
+    reduced exactly once with every value."""
+    from mapreduce_framework_spark.mr.runner import bucket_of
+
+    files = [(f"f{i}", " ".join(["hot"] * 90 + [f"cold{i % 3}"])) for i in range(12)]
+    inputs = spark.createDataFrame(files, schema="name string, contents string")
+    calls = spark.sparkContext.accumulator(0)
+
+    def map_fn(name, contents):
+        return [(w, name) for w in contents.split()]
+
+    def reduce_fn(key, values):
+        calls.add(1)
+        return f"{len(values)} {','.join(sorted(values))}"
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "64")
+        rows = run_job(inputs, map_fn, reduce_fn, n_reduce=10).collect()
+    finally:
+        spark.conf.set(conf, old)
+    keys = [r["key"] for r in rows]
+    assert sorted(keys) == ["cold0", "cold1", "cold2", "hot"]
+    assert calls.value == 4
+    got = {r["key"]: r["value"] for r in rows}
+    assert got["hot"].startswith("1080 ")
+    assert all(r["bucket"] == bucket_of(r["key"], 10) for r in rows)
+    golden = sorted(run_sequential(files, map_fn, reduce_fn))
+    assert sorted(f"{k} {v}" for k, v in got.items()) == golden
+
+
+def _exchanges(df) -> tuple[str, list[str]]:
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple"
+    )
+    return plan, [ln for ln in plan.splitlines() if "Exchange" in ln]
+
+
+def _write_files(tmp_path, n: int) -> list[str]:
+    paths = []
+    for i in range(n):
+        p = tmp_path / f"in-{i}.txt"
+        p.write_text(" ".join(f"w{(i + j) % 7}" for j in range(200)))
+        paths.append(str(p))
+    return paths
+
+
+def test_run_job_plan_is_one_shuffle_then_sorted_runs(spark, tmp_path):
+    """The reduce is a key shuffle, a sort and a batched mapInPandas: no
+    per-key FlatMapGroupsInPandas, and exactly one Exchange between the
+    map and the reduce when the input is read without one."""
+    map_fn, reduce_fn = APPS["wc"]
+    inputs = read_whole_files(spark, _write_files(tmp_path, 3))
+    plan, exchanges = _exchanges(run_job(inputs, map_fn, reduce_fn))
+    assert "FlatMapGroupsInPandas" not in plan
+    assert len(exchanges) == 1, plan
+    assert "hashpartitioning(key" in exchanges[0]
+    assert plan.count("MapInPandas") == 2
+
+
+def test_read_whole_files_packs_files_without_a_shuffle(spark, tmp_path):
+    """The whole-file source reads without an Exchange, and with at least
+    as many files as cores every input partition gets a file."""
+    cores = spark.sparkContext.defaultParallelism
+    paths = _write_files(tmp_path, 2 * cores)
+    df = read_whole_files(spark, paths)
+    plan, exchanges = _exchanges(df)
+    assert exchanges == [], plan
+    per_part = dict(
+        df.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    )
+    n_parts = df.rdd.getNumPartitions()
+    assert n_parts >= cores
+    assert sorted(per_part) == list(range(n_parts))
+    assert sum(per_part.values()) == len(paths)
+    assert sorted(r["name"] for r in df.select("name").collect()) == sorted(
+        f"in-{i}.txt" for i in range(len(paths))
+    )
 
 
 CHAOS_SCRIPT = textwrap.dedent(
