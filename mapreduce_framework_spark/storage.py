@@ -115,39 +115,13 @@ def write_range_sorted(
 #   - tail batch ids are strictly increasing and CONTIGUOUS from
 #     compacted_through+1 (every batch writes a delta, even an empty one);
 #   - every referenced dir exists.
+#
+# The manifest is the ONLY way a root is read or owned: a root without one
+# reads as empty, and acquiring a manifest-less root that already holds
+# directories is refused (acquire_manifest_root) — starting it empty would
+# hide those dirs from every read and let the first prune delete them.
 
 INDEX_MANIFEST = "_manifest.json"  # underscore: invisible to Spark file scans (like _SUCCESS)
-
-# Delta-dir prefixes a PRE-MANIFEST root may contain: the current
-# ``delta_v{batch}`` naming, plus ``d_v{batch}`` — the name the pre-round-7
-# sinks gave DECISION deltas before the decisions log joined the manifest
-# lifecycle. Legacy adoption must recognize both, or resuming an upgraded
-# stream on an old decisions root builds a manifest whose tail starts at
-# the current batch and every historical decision becomes invisible (and
-# the next read hard-errors on the gap).
-_DELTA_PREFIXES = ("delta_v", "d_v")
-
-
-def legacy_delta_entries(index_root: str, exclude: tuple = ()) -> list[list]:
-    """``[batch_id, dirname]`` entries (sorted by batch id) for every delta
-    dir under a pre-manifest ``index_root``, recognizing every historical
-    naming in ``_DELTA_PREFIXES``. Used once per root, when the first
-    post-upgrade publish adopts the legacy layout into a manifest (the
-    manifest records dir NAMES, so no renames are needed). If one batch id
-    somehow exists under both namings, the current ``delta_v`` dir wins."""
-    found: dict[int, str] = {}
-    for d in os.listdir(index_root):
-        if d in exclude:
-            continue
-        for p in _DELTA_PREFIXES:
-            if d.startswith(p):
-                suffix = d[len(p):]
-                if suffix.isdigit():
-                    bid = int(suffix)
-                    if bid not in found or p == "delta_v":
-                        found[bid] = d
-                break
-    return sorted([b, n] for b, n in found.items())
 
 
 def read_json_atomic(path: str) -> dict | None:
@@ -186,12 +160,15 @@ def new_index_manifest() -> dict:
 # the reference's coordinator applies to task commits (only the coordinator
 # decides which attempt's output is adopted, src/mr/coordinator.go:220-232):
 #
-#   - a sink ACQUIRES the root at stream start (acquire_index_root → its
+#   - a sink ACQUIRES the root at stream start (acquire_manifest_root → its
 #     epoch), bumping the committed token;
-#   - every publish presents the token (check_index_epoch) BEFORE touching
+#   - every publish presents the token (check_manifest_epoch) BEFORE touching
 #     data and again immediately before the manifest commit — a writer
 #     whose token is no longer the committed one hard-errors having
 #     committed nothing, so the collision is loud, never a silent drop.
+#
+# Index roots and the merge sinks' state roots share this one acquire and
+# one epoch check, keyed by the manifest's path.
 #
 # The COMMIT SEAM (round 9, VERDICT r8 missing item 4): every fenced
 # manifest commit goes through ``commit_manifest(path-owning backend)``.
@@ -208,8 +185,8 @@ def new_index_manifest() -> dict:
 #
 # ACQUISITION is atomic too (round-9 ADVICE): two sinks constructed
 # concurrently over one root used to be able to both read epoch N and
-# both commit N+1 — each then passes check_index_epoch forever and
-# fencing silently degrades to last-writer-wins. acquire_index_root now
+# both commit N+1 — each then passes check_manifest_epoch forever and
+# fencing silently degrades to last-writer-wins. acquire_manifest_root now
 # (a) serializes same-host acquirers with an O_EXCL lock file next to the
 # manifest, and (b) commits the bump CONDITIONALLY on the epoch it read
 # (a CAS — the cross-host guarantee when the backend maps it to a
@@ -309,12 +286,6 @@ def read_manifest_doc(path: str) -> dict | None:
     return _MANIFEST_BACKEND.read(path)
 
 
-def manifest_lock(path: str, timeout_s: float = 30.0):
-    """The installed backend's acquisition lock for ``path`` (context
-    manager) — serializes read-bump-commit acquisition cycles."""
-    return _MANIFEST_BACKEND.lock(path, timeout_s)
-
-
 def commit_manifest(path: str, manifest: dict, expected_epoch: int | None = None) -> None:
     """THE pluggable commit point for every fenced manifest write.
     ``expected_epoch`` None = unconditional (callers that own the root by
@@ -333,57 +304,78 @@ def commit_manifest(path: str, manifest: dict, expected_epoch: int | None = None
         ) from ex
 
 
-def acquire_index_root(index_root: str, takeover: bool = True) -> int:
-    """Acquire ownership of a manifest root and return the new fencing
-    token (epoch). Bumping the committed epoch FENCES every earlier
-    owner: their next publish hard-errors in check_index_epoch. A fresh
-    root gets a new manifest (adopting any pre-manifest legacy deltas, so
-    acquisition never hides history); ``takeover=False`` refuses a root
-    that already has an owner instead of fencing it — the conservative
-    mode for operators who expect a virgin root.
+def acquire_manifest_root(
+    manifest_path: str, fresh: dict, takeover: bool = True
+) -> int:
+    """Acquire ownership of the root whose manifest is ``manifest_path``
+    (an index manifest, or a merge sink's state manifest) and return the
+    new fencing token (epoch). Bumping the committed epoch FENCES every
+    earlier owner: their next publish hard-errors in check_manifest_epoch.
+    A root without a manifest starts from the document ``fresh`` — unless
+    it already holds a directory, which is refused with nothing touched
+    (manifest note above). ``takeover=False`` refuses a root that already
+    has an owner instead of fencing it — the conservative mode for
+    operators who expect a virgin root.
 
     Atomic (see the seam note above): the read-bump-commit runs under the
     backend's acquisition lock AND commits conditionally on the epoch it
     read, retrying on a lost race — concurrent acquirers always end up
-    with distinct epochs."""
-    path = os.path.join(index_root, INDEX_MANIFEST)
-    with _MANIFEST_BACKEND.lock(path):
+    with distinct epochs. Only the fencing outcomes retry: a backend's
+    unrelated error propagates on its first raise."""
+    root = os.path.dirname(manifest_path)
+    with _MANIFEST_BACKEND.lock(manifest_path):
         for _ in range(16):  # CAS retry bound; the lock makes >1 pass rare
-            man = read_index_manifest(index_root)
+            man = _read_manifest_v1(manifest_path)
             if man is None:
-                man = new_index_manifest()
-                if os.path.isdir(index_root):
-                    man["deltas"] = legacy_delta_entries(index_root)
+                held = sorted(
+                    d for d in (os.listdir(root) if os.path.isdir(root) else ())
+                    if os.path.isdir(os.path.join(root, d))
+                )
+                if held:
+                    raise ValueError(
+                        f"root {root} has no manifest but holds directories "
+                        f"{held} — a manifest-less root reads as empty, so "
+                        "owning it would hide them and the first prune would "
+                        "delete them. Point the stream at an empty root."
+                    )
+                man = dict(fresh)
             prev = int(man.get("epoch", 0))
             if prev and not takeover:
                 raise ValueError(
-                    f"index root {index_root} is already owned (epoch {prev}) and "
+                    f"root {root} is already owned (epoch {prev}) and "
                     "takeover=False — point this stream at its own root, or pass "
                     "takeover=True to deliberately fence the current owner"
                 )
             man["epoch"] = prev + 1
             try:
-                _MANIFEST_BACKEND.commit(path, man, expected_epoch=prev)
+                _MANIFEST_BACKEND.commit(manifest_path, man, expected_epoch=prev)
             except ManifestPreconditionFailed:
                 continue  # lost the CAS to a concurrent acquirer: re-read
             return man["epoch"]
     raise RuntimeError(
-        f"acquire_index_root({index_root}): lost the epoch CAS 16 times — "
-        "a pathologically hot acquisition race; retry, or serialize "
+        f"acquire_manifest_root({manifest_path}): lost the epoch CAS 16 times "
+        "— a pathologically hot acquisition race; retry, or serialize "
         "acquirers operationally"
     )
 
 
-def check_index_epoch(index_root: str, epoch: int) -> None:
+def acquire_index_root(index_root: str, takeover: bool = True) -> int:
+    """:func:`acquire_manifest_root` for an index root."""
+    return acquire_manifest_root(
+        os.path.join(index_root, INDEX_MANIFEST), new_index_manifest(), takeover
+    )
+
+
+def check_manifest_epoch(manifest_path: str, epoch: int) -> None:
     """Hard error unless the COMMITTED manifest's fencing token is exactly
-    ``epoch``. Called by the streaming sinks before any per-batch write
-    and again immediately before each manifest commit."""
-    man = read_index_manifest(index_root)
+    ``epoch``. Called by the streaming sinks before any per-batch write;
+    the manifest commit itself enforces the token again."""
+    man = _MANIFEST_BACKEND.read(manifest_path)
     cur = None if man is None else man.get("epoch")
     if cur != epoch:
         raise WriterFenced(
-            f"writer fenced: index root {index_root} is owned by epoch "
-            f"{cur!r} but this writer holds epoch {epoch} — another sink "
+            f"writer fenced: root {os.path.dirname(manifest_path)} is owned by "
+            f"epoch {cur!r} but this writer holds epoch {epoch} — another sink "
             "acquired the root after this one (two streams pointed at one "
             "root, or a zombie retry of a replaced driver). Nothing was "
             "committed by this writer; re-point the stream at its own root "
@@ -391,13 +383,17 @@ def check_index_epoch(index_root: str, epoch: int) -> None:
         )
 
 
+def _read_manifest_v1(path: str) -> dict | None:
+    man = _MANIFEST_BACKEND.read(path)
+    if man is not None and man.get("version") != 1:
+        raise ValueError(f"unsupported manifest version in {path}: {man.get('version')!r}")
+    return man
+
+
 def read_index_manifest(index_root: str) -> dict | None:
     """The committed manifest, or None if the root has never been written.
     Reads through the installed manifest backend (commit seam above)."""
-    man = _MANIFEST_BACKEND.read(os.path.join(index_root, INDEX_MANIFEST))
-    if man is not None and man.get("version") != 1:
-        raise ValueError(f"unsupported index manifest version: {man.get('version')!r}")
-    return man
+    return _read_manifest_v1(os.path.join(index_root, INDEX_MANIFEST))
 
 
 def write_index_manifest(
@@ -451,6 +447,22 @@ def manifest_visible_paths(
     return paths
 
 
+def unreferenced_compact_name(manifest: dict, batch: int) -> str:
+    """``compact_v{batch}``, or ``compact_v{batch}_{gen}`` with the
+    smallest ``gen`` that ``manifest`` does not reference. A re-run with
+    an unchanged boundary (a redelivered compaction, a second reindex
+    with the same next batch) must never write INTO a dir the manifest
+    still references: Spark would read from and overwrite the same
+    directory. The manifest records names verbatim, and every
+    ``compact_v*`` name stays prunable."""
+    referenced = {manifest.get("compacted_path")} | {n for _, n in manifest["deltas"]}
+    dst, gen = f"compact_v{batch}", 0
+    while dst in referenced:
+        gen += 1
+        dst = f"compact_v{batch}_{gen}"
+    return dst
+
+
 def compact_index_manifest(
     spark: SparkSession,
     index_root: str,
@@ -480,17 +492,7 @@ def compact_index_manifest(
     fold = manifest_visible_paths(index_root, manifest, before_batch=below_batch)
     if not fold:
         return manifest
-    # never fold INTO a dir the manifest still references (a re-run with an
-    # unchanged boundary would read from and overwrite the same directory):
-    # pick a generation-unique compact_v name instead
-    referenced = {manifest.get("compacted_path")} | {
-        n for _, n in manifest["deltas"]
-    }
-    dst = f"compact_v{below_batch}"
-    gen = 0
-    while dst in referenced:
-        gen += 1
-        dst = f"compact_v{below_batch}_{gen}"
+    dst = unreferenced_compact_name(manifest, below_batch)
     folded = spark.read.option("recursiveFileLookup", "true").parquet(*fold)
     if transform is not None:
         folded = transform(folded)
@@ -514,9 +516,7 @@ def prune_superseded_index_dirs(index_root: str, manifest: dict) -> None:
         keep.add(manifest["compacted_path"])
     keep.update(name for _, name in manifest["deltas"])
     for entry in os.listdir(index_root):
-        if entry in keep or not entry.startswith(
-            (*_DELTA_PREFIXES, "compact_v")
-        ):
+        if entry in keep or not entry.startswith(("delta_v", "compact_v")):
             continue
         shutil.rmtree(os.path.join(index_root, entry), ignore_errors=True)
 

@@ -18,7 +18,9 @@ the read path never lists directories (object-storage-safe), and
 retention is bounded — only the last ``STATE_KEEP`` versions survive a
 commit, because the strictly-before redelivery rule only ever needs the
 version just below the in-flight batch. Without retention a 1e5-batch
-stream leaves 1e5 full-state snapshots on disk.
+stream leaves 1e5 full-state snapshots on disk. A root without a manifest
+reads as empty; a sink refuses a manifest-less root that already holds
+directories (storage.acquire_manifest_root).
 """
 
 from __future__ import annotations
@@ -30,8 +32,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.storage import (
+    acquire_manifest_root,
+    check_manifest_epoch,
     commit_manifest,
-    manifest_lock,
     read_manifest_doc,
 )
 
@@ -39,6 +42,8 @@ STATE_MANIFEST = "_state_manifest.json"  # underscore: invisible to Spark scans
 # current version + the one a redelivered in-flight batch reads — the only
 # versions the protocol can ever need
 STATE_KEEP = 2
+# the document a state root's first acquisition commits (no versions yet)
+_FRESH_STATE = {"version": 1, "versions": []}
 
 
 def _latest_state(
@@ -51,139 +56,59 @@ def _latest_state(
     merging batch N on top of its own output would double-count it (pinned
     by tests/test_streaming.py::test_merge_sinks_redelivery_idempotent).
 
-    Manifest-addressed (no directory listing; a root with state dirs but
-    no manifest is the pre-manifest legacy layout — POSIX listdir once,
-    adopted into a manifest at the next commit). Asking for a version
-    strictly below the whole retention window is a HARD ERROR, not an
-    empty state: it means the checkpoint and the state root belong to
-    different streams, and silently re-initializing would drop state."""
-    man = read_manifest_doc(os.path.join(state_root, STATE_MANIFEST))
-    if man is not None:
-        versions = sorted(man["versions"])
-        eligible = (
-            versions
-            if before_batch is None
-            else [v for v in versions if v < before_batch]
-        )
-        if not eligible:
-            if versions and before_batch is not None:
-                raise ValueError(
-                    f"state root retains versions {versions} but batch "
-                    f"{before_batch} needs a version strictly below it — "
-                    "checkpoint and state root belong to different streams"
-                )
-            return None
-        path = os.path.join(state_root, f"state_v{eligible[-1]}")
-        if not os.path.isdir(path):
-            raise ValueError(
-                f"state manifest references missing dir {path} — refusing to "
-                "re-initialize state"
-            )
-        return spark.read.parquet(path)
-    if not os.path.isdir(state_root):
-        return None
-    versions = sorted(
-        (d for d in os.listdir(state_root) if d.startswith("state_v")),
-        key=lambda d: int(d.split("state_v")[1]),
-    )
-    if before_batch is not None:
-        versions = [v for v in versions if int(v.split("state_v")[1]) < before_batch]
-    if not versions:
-        return None
-    return spark.read.parquet(os.path.join(state_root, versions[-1]))
-
-
-def _read_or_adopt_state_manifest(state_root: str) -> dict:
-    """The committed state manifest, adopting a pre-manifest legacy layout
-    (POSIX listdir once) when none exists yet."""
+    Manifest-addressed (no directory listing; no manifest = no state).
+    Asking for a version strictly below the whole retention window is a
+    HARD ERROR, not an empty state: it means the checkpoint and the state
+    root belong to different streams, and silently re-initializing would
+    drop state."""
     man = read_manifest_doc(os.path.join(state_root, STATE_MANIFEST))
     if man is None:
-        existing = (
-            [
-                int(d.split("state_v")[1])
-                for d in os.listdir(state_root)
-                if d.startswith("state_v")
-            ]
-            if os.path.isdir(state_root)
-            else []
-        )
-        man = {"version": 1, "versions": sorted(set(existing))}
-    return man
-
-
-def _acquire_state_root(state_root: str, takeover: bool = True) -> int:
-    """WRITER FENCING for a state root — the storage.acquire_index_root
-    discipline applied to the latest-pointer manifest: the merge sinks'
-    read-merge-write cycle is exactly as exposed to two-streams-one-root
-    last-writer-wins as the ingest indexes (worse, in fact: a lost state
-    commit silently forks the fold history). Same epoch-token semantics,
-    same ATOMIC acquisition (backend lock + epoch-CAS commit — round-9
-    ADVICE: two concurrent acquirers used to be able to both read N and
-    both commit N+1), same object-storage conditional-PUT mapping
-    through the storage.py commit seam."""
-    path = os.path.join(state_root, STATE_MANIFEST)
-    from mapreduce_framework_spark.storage import (
-        ManifestPreconditionFailed,
-        WriterFenced,
+        return None
+    versions = sorted(man["versions"])
+    eligible = (
+        versions if before_batch is None else [v for v in versions if v < before_batch]
     )
-
-    with manifest_lock(path):
-        for _ in range(16):
-            man = _read_or_adopt_state_manifest(state_root)
-            prev = int(man.get("epoch", 0))
-            if prev and not takeover:
-                raise ValueError(
-                    f"state root {state_root} is already owned (epoch {prev}) and "
-                    "takeover=False — point this stream at its own root, or pass "
-                    "takeover=True to deliberately fence the current owner"
-                )
-            man["epoch"] = prev + 1
-            try:
-                commit_manifest(path, man, expected_epoch=prev)
-            except (WriterFenced, ManifestPreconditionFailed):
-                # lost the CAS to a concurrent acquirer: re-read. ONLY the
-                # fencing outcomes retry (round-10 ADVICE) — a custom
-                # backend's unrelated ValueError propagates to the caller
-                # instead of being swallowed 16 times.
-                continue
-            return man["epoch"]
-    raise RuntimeError(
-        f"_acquire_state_root({state_root}): lost the epoch CAS 16 times"
-    )
-
-
-def _check_state_epoch(state_root: str, epoch: int) -> None:
-    from mapreduce_framework_spark.storage import WriterFenced
-
-    man = read_manifest_doc(os.path.join(state_root, STATE_MANIFEST))
-    cur = None if man is None else man.get("epoch")
-    if cur != epoch:
-        raise WriterFenced(
-            f"writer fenced: state root {state_root} is owned by epoch "
-            f"{cur!r} but this writer holds epoch {epoch} — another merge "
-            "sink acquired the root after this one. Nothing was committed "
-            "by this writer."
+    if not eligible:
+        if versions and before_batch is not None:
+            raise ValueError(
+                f"state root retains versions {versions} but batch "
+                f"{before_batch} needs a version strictly below it — "
+                "checkpoint and state root belong to different streams"
+            )
+        return None
+    path = os.path.join(state_root, f"state_v{eligible[-1]}")
+    if not os.path.isdir(path):
+        raise ValueError(
+            f"state manifest references missing dir {path} — refusing to "
+            "re-initialize state"
         )
+    return spark.read.parquet(path)
 
 
-def _commit_state_version(
-    state_root: str, batch_id: int, epoch: int | None = None
+def _write_state_version(
+    state: DataFrame, state_root: str, batch_id: int, epoch: int
 ) -> None:
-    """Publish ``state_v{batch_id}`` to the manifest (atomic JSON commit;
-    adopts a pre-manifest legacy layout on first contact) and prune
-    versions that fell out of the ``STATE_KEEP`` retention window —
-    strictly AFTER the commit, so a crash anywhere leaves either the old
-    manifest with all its dirs or the new one with harmless orphans.
-    ``epoch``: the writer's fencing token, re-checked at the commit point
-    (see _acquire_state_root); every manifest field outside the retention
-    window — including the epoch — is preserved by the rewrite."""
-    man = _read_or_adopt_state_manifest(state_root)
+    """Write ``state_v{batch_id}`` and publish it to the manifest (atomic
+    JSON commit), then prune versions that fell out of the ``STATE_KEEP``
+    retention window — strictly AFTER the commit, so a crash anywhere
+    leaves either the old manifest with all its dirs or the new one with
+    harmless orphans. Every manifest field outside the retention window —
+    including the epoch — is preserved by the rewrite.
+
+    ``epoch``: the writer's fencing token, checked BEFORE the state write
+    and enforced again at the manifest commit. The early check is what
+    keeps a fenced sink that redelivers a batch the new owner already
+    committed from overwriting that owner's ``state_v{batch_id}``. One race
+    remains: a takeover that lands while this write is already running
+    still has its dir overwritten; the commit then fails fenced."""
+    path = os.path.join(state_root, STATE_MANIFEST)
+    check_manifest_epoch(path, epoch)
+    state.write.mode("overwrite").parquet(os.path.join(state_root, f"state_v{batch_id}"))
+    man = read_manifest_doc(path)
     man["versions"] = sorted(set(man["versions"]) | {batch_id})[-STATE_KEEP:]
     # the fencing token is enforced AT the commit through the backend seam
     # (conditional PUT on object storage, last-moment re-check on POSIX)
-    commit_manifest(
-        os.path.join(state_root, STATE_MANIFEST), man, expected_epoch=epoch
-    )
+    commit_manifest(path, man, expected_epoch=epoch)
     for d in os.listdir(state_root):
         if d.startswith("state_v") and int(d.split("state_v")[1]) not in man["versions"]:
             shutil.rmtree(os.path.join(state_root, d), ignore_errors=True)
@@ -192,11 +117,14 @@ def _commit_state_version(
 def make_kv_merge_batch_fn(spark: SparkSession, state_root: str):
     """Returns the foreachBatch function: fold the batch's ops per key on
     top of the previous persisted state and write the next state version.
-    Constructing the sink ACQUIRES the state root (writer fencing — see
-    _acquire_state_root)."""
+    Constructing the sink ACQUIRES the state root (writer fencing,
+    storage.acquire_manifest_root: a lost state commit would silently fork
+    the fold history)."""
     from mapreduce_framework_spark.operators.kv import fold_ops
 
-    epoch = _acquire_state_root(state_root)
+    epoch = acquire_manifest_root(
+        os.path.join(state_root, STATE_MANIFEST), _FRESH_STATE
+    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         import pandas as pd
@@ -224,9 +152,7 @@ def make_kv_merge_batch_fn(spark: SparkSession, state_root: str):
         new_state = folded if prev is None else (
             prev.join(folded, "key", "left_anti").unionByName(folded)
         )
-        out = os.path.join(state_root, f"state_v{batch_id}")
-        new_state.write.mode("overwrite").parquet(out)
-        _commit_state_version(state_root, batch_id, epoch=epoch)
+        _write_state_version(new_state, state_root, batch_id, epoch)
 
     return apply_batch
 
@@ -239,10 +165,12 @@ def make_rollup_merge_batch_fn(spark: SparkSession, state_root: str):
     events are sliced into batches. This is the hypertable
     continuous-aggregate maintenance loop (q65's rollup, kept incrementally
     fresh); the state table is bounded by hours × types, tiny even when the
-    raw stream is 100 TB. Constructing the sink ACQUIRES the state root
-    (writer fencing — see _acquire_state_root)."""
+    raw stream is 100 TB. Constructing the sink ACQUIRES the state root,
+    as make_kv_merge_batch_fn does."""
 
-    epoch = _acquire_state_root(state_root)
+    epoch = acquire_manifest_root(
+        os.path.join(state_root, STATE_MANIFEST), _FRESH_STATE
+    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         from mapreduce_framework_spark.catalog import trunc_ntz_expr
@@ -263,9 +191,7 @@ def make_rollup_merge_batch_fn(spark: SparkSession, state_root: str):
             .groupBy("h", "event_type")
             .agg(F.sum("cnt").alias("cnt"), F.sum("val").alias("val"))
         )
-        out = os.path.join(state_root, f"state_v{batch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        _commit_state_version(state_root, batch_id, epoch=epoch)
+        _write_state_version(merged, state_root, batch_id, epoch)
 
     return apply_batch
 

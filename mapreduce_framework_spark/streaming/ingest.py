@@ -71,14 +71,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.storage import (
+    INDEX_MANIFEST,
     acquire_index_root,
-    check_index_epoch,
+    check_manifest_epoch,
     compact_index_manifest,
-    legacy_delta_entries,
     manifest_visible_paths,
-    new_index_manifest,
     prune_superseded_index_dirs,
     read_index_manifest,
+    unreferenced_compact_name,
     write_index_manifest,
 )
 
@@ -104,27 +104,13 @@ def _index_so_far(
 
     The index is addressed through its MANIFEST (storage.py: one atomic
     JSON commit per batch — object-storage-safe, no directory listing on
-    the read path, hard error on a gap or missing dir). A root with delta
-    dirs but no manifest is the pre-manifest legacy layout: fall back to
-    the POSIX listing once (recognizing BOTH historical delta namings —
-    storage.legacy_delta_entries); the next published batch adopts the
-    dirs into a manifest."""
+    the read path, hard error on a gap or missing dir). A root without a
+    manifest holds no index."""
     man = read_index_manifest(index_root)
-    if man is not None:
-        paths = manifest_visible_paths(index_root, man, before_batch)
-        if not paths:
-            return None
-        return spark.read.option("recursiveFileLookup", "true").parquet(*paths)
-    if not os.path.isdir(index_root):
+    paths = [] if man is None else manifest_visible_paths(index_root, man, before_batch)
+    if not paths:
         return None
-    entries = legacy_delta_entries(index_root)
-    if before_batch is not None:
-        entries = [e for e in entries if e[0] < before_batch]
-    if not entries:
-        return None
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        *[os.path.join(index_root, name) for _, name in entries]
-    )
+    return spark.read.option("recursiveFileLookup", "true").parquet(*paths)
 
 
 def _covered_batches(root: str, before_batch: int | None) -> frozenset:
@@ -173,8 +159,8 @@ def _require_stamp(index_root: str, key: str, held: str, mismatch) -> None:
     loaded index, and a load-gated check would let it publish a delta
     under the new config before any probe ever runs (round-12 ADVICE). So
     no decision is ever committed under a mismatch. A manifest without a
-    stamp (pre-check legacy root, or first batch) is accepted and stamped
-    at publish time. ``mismatch(stamped)`` builds the error message."""
+    stamp (no batch published yet) is accepted and stamped at publish
+    time. ``mismatch(stamped)`` builds the error message."""
     man = read_index_manifest(index_root)
     stamped = None if man is None else man.get(key)
     if stamped is not None and stamped != held:
@@ -228,7 +214,7 @@ def _batch_quantization_error(batch_embs: DataFrame, centroids: DataFrame) -> fl
 
 
 def _log_drift(
-    index_root: str, batch_id: int, qerr: float | None, epoch: int | None = None
+    index_root: str, batch_id: int, qerr: float | None, epoch: int
 ) -> None:
     """Append ``[batch_id, qerr]`` to the manifest's drift log (replacing
     a redelivered batch's entry — idempotent). Once DRIFT_BASELINE_K
@@ -243,8 +229,6 @@ def _log_drift(
     if qerr is None:
         return
     man = read_index_manifest(index_root)
-    if man is None:
-        return
     drift = [e for e in man.get("drift", []) if e[0] != batch_id]
     drift.append([batch_id, qerr])
     drift.sort()
@@ -349,32 +333,29 @@ def refresh_semantic_root_if_needed(
     return refreshed
 
 
-def _stamp_phash_config(
-    index_root: str, fingerprint: str, epoch: int | None = None
-) -> None:
+def _stamp_phash_config(index_root: str, fingerprint: str, epoch: int) -> None:
     """Record the sink's phash config in the index manifest if ABSENT
-    (first publish, or a pre-check legacy root) — same stamp-if-absent
-    contract and crash/fencing story as _stamp_codebook below. Never
-    overwrites a differing stamp: a mismatch is _require_stamp's hard
-    failure (the media tier's guard, run before every batch),
-    and overwriting here would let a batch-0 restart under a different
-    grid clobber the old stamp and silently legitimize a mixed-width
-    index (round-12 ADVICE)."""
+    (first publish) — same stamp-if-absent contract and crash/fencing
+    story as _stamp_codebook below. Never overwrites a differing stamp: a
+    mismatch is _require_stamp's hard failure (the media tier's guard,
+    run before every batch), and overwriting here would let a batch-0
+    restart under a different grid clobber the old stamp and silently
+    legitimize a mixed-width index (round-12 ADVICE)."""
     man = read_index_manifest(index_root)
-    if man is not None and man.get("phash_config") is None:
+    if man.get("phash_config") is None:
         man["phash_config"] = fingerprint
         write_index_manifest(index_root, man, expected_epoch=epoch)
 
 
-def _stamp_codebook(index_root: str, fingerprint: str, epoch: int | None = None) -> None:
+def _stamp_codebook(index_root: str, fingerprint: str, epoch: int) -> None:
     """Record the sink's codebook fingerprint in the index manifest if
-    absent (first publish, or a pre-check legacy root). Crash between the
-    delta publish and this stamp just redelivers: the check accepts the
-    unstamped manifest and the stamp is rewritten. ``epoch``: fencing
-    token — a writer fenced between its last publish and this stamp must
-    not clobber the new owner's manifest with its stale snapshot."""
+    absent (first publish). Crash between the delta publish and this
+    stamp just redelivers: the check accepts the unstamped manifest and
+    the stamp is rewritten. ``epoch``: fencing token — a writer fenced
+    between its last publish and this stamp must not clobber the new
+    owner's manifest with its stale snapshot."""
     man = read_index_manifest(index_root)
-    if man is not None and man.get("codebook_id") != fingerprint:
+    if man.get("codebook_id") != fingerprint:
         man["codebook_id"] = fingerprint
         write_index_manifest(index_root, man, expected_epoch=epoch)
 
@@ -431,18 +412,10 @@ def reindex_semantic_root(
             .select("vec_id", "embedding")
             .dropDuplicates(["vec_id"])
         )
-        # A second refresh with the same next_batch (double refresh, or a
-        # retry after a COMPLETED run) would make dst equal the manifest's
-        # current compacted_path — Spark would read from and overwrite the
-        # same directory (error, or corruption on stores without that
-        # guard). Pick a generation-unique name instead: the manifest
-        # records dir names verbatim, and compact_v* stays prunable.
-        referenced = {man.get("compacted_path")} | {n for _, n in man["deltas"]}
-        dst = f"compact_v{next_batch}"
-        gen = 0
-        while dst in referenced:
-            gen += 1
-            dst = f"compact_v{next_batch}_{gen}"
+        # a second refresh with the same next_batch (double refresh, or a
+        # retry after a COMPLETED run) must not write into the manifest's
+        # current compacted_path
+        dst = unreferenced_compact_name(man, next_batch)
         semantic_index(embs, centroids).coalesce(target_files).write.mode(
             "overwrite"
         ).parquet(os.path.join(index_root, dst))
@@ -481,7 +454,7 @@ def _publish_delta(
     batch_id: int,
     delta_df: DataFrame,
     compact_every: int | None,
-    epoch: int | None = None,
+    epoch: int,
     compact_transform=None,
 ) -> None:
     """Write one batch's delta (admitted-docs index rows, or the batch's
@@ -501,10 +474,9 @@ def _publish_delta(
     before the delta write AND enforced at the manifest commit itself
     (storage.commit_manifest), so a fenced writer (another stream took
     the root, or this is a zombie retry of a replaced driver) hard-errors
-    without committing anything — never silent last-writer-wins. None =
-    unfenced (library/batch callers that own their root by construction).
+    without committing anything — never silent last-writer-wins.
 
-    Fenced writers write their delta under an EPOCH-SUFFIXED dir name
+    Every writer writes its delta under an EPOCH-SUFFIXED dir name
     (``delta_v{batch}_e{epoch}`` — round-9 ADVICE): the pre-commit epoch
     check cannot protect the delta write that precedes it, so a zombie
     redelivering a batch id the new owner already committed would
@@ -515,18 +487,10 @@ def _publish_delta(
     records names verbatim, so readers are oblivious); the zombie's
     orphan dir is swept by the next compaction's prune. Resolve a
     batch's dir through :func:`delta_dir`, never by assembling the name."""
-    if epoch is not None:
-        check_index_epoch(index_root, epoch)
-    name = f"delta_v{batch_id}" if epoch is None else f"delta_v{batch_id}_e{epoch}"
+    check_manifest_epoch(os.path.join(index_root, INDEX_MANIFEST), epoch)
+    name = f"delta_v{batch_id}_e{epoch}"
     delta_df.write.mode("overwrite").parquet(os.path.join(index_root, name))
     man = read_index_manifest(index_root)
-    if man is None:
-        man = new_index_manifest()
-        # adopt a pre-manifest legacy layout so its deltas stay visible —
-        # including pre-round-7 d_v* decision deltas (the manifest records
-        # dir names verbatim, so no rename is needed and the historical
-        # decisions remain addressable forever)
-        man["deltas"] = legacy_delta_entries(index_root, exclude=(name,))
     man["deltas"] = sorted(
         [e for e in man["deltas"] if e[0] != batch_id] + [[batch_id, name]]
     )
@@ -538,8 +502,7 @@ def _publish_delta(
         )
     # the fencing token is enforced AT the commit through the manifest
     # backend seam (storage.commit_manifest): conditional PUT on object
-    # storage, last-moment re-check on POSIX — epoch=None commits
-    # unconditionally (library/batch callers that own their root)
+    # storage, last-moment re-check on POSIX
     write_index_manifest(index_root, man, expected_epoch=epoch)
     prune_superseded_index_dirs(index_root, man)
 
@@ -597,22 +560,17 @@ def _run_publish_chains(*chains) -> None:
 def delta_dir(index_root: str, batch_id: int) -> str:
     """The on-disk directory of one batch's (unfolded) delta, resolved
     through the manifest — the ONLY correct way to address a delta, since
-    fenced writers epoch-suffix their dir names (_publish_delta) and the
-    manifest records whatever name the committing writer used."""
+    writers epoch-suffix their dir names (_publish_delta) and the manifest
+    records whatever name the committing writer used."""
     man = read_index_manifest(index_root)
-    entries = (
-        man["deltas"] if man is not None else legacy_delta_entries(index_root)
-    )
-    for b, name in entries:
+    if man is None:
+        raise ValueError(f"no index manifest under {index_root}")
+    for b, name in man["deltas"]:
         if b == batch_id:
             return os.path.join(index_root, name)
     raise ValueError(
-        f"batch {batch_id} has no unfolded delta under {index_root}"
-        + (
-            f" (compacted through {man['compacted_through']})"
-            if man is not None
-            else ""
-        )
+        f"batch {batch_id} has no unfolded delta under {index_root} "
+        f"(compacted through {man['compacted_through']})"
     )
 
 

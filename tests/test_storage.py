@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.catalog import table
@@ -115,15 +116,16 @@ def test_concurrent_acquisition_yields_distinct_epochs(tmp_path):
     """Round-9 ADVICE (medium): two sinks constructed CONCURRENTLY over
     one root must get DISTINCT epochs — the old read-modify-write let
     both read N and both commit N+1, after which each passed
-    check_index_epoch forever and fencing silently degraded to
+    the epoch check forever and fencing silently degraded to
     last-writer-wins. Acquisition now holds the backend lock and commits
     the bump conditionally (CAS), so exactly one acquirer holds the final
     epoch."""
     from concurrent.futures import ThreadPoolExecutor
 
     from mapreduce_framework_spark.storage import (
+        INDEX_MANIFEST,
         acquire_index_root,
-        check_index_epoch,
+        check_manifest_epoch,
         read_index_manifest,
     )
 
@@ -135,29 +137,39 @@ def test_concurrent_acquisition_yields_distinct_epochs(tmp_path):
     # exactly one owner survives: every non-final token is fenced
     final = read_index_manifest(root)["epoch"]
     assert final == n
-    check_index_epoch(root, final)
+    path = os.path.join(root, INDEX_MANIFEST)
+    check_manifest_epoch(path, final)
     import pytest as _pytest
 
     for e in epochs:
         if e != final:
             with _pytest.raises(ValueError, match="fenced"):
-                check_index_epoch(root, e)
+                check_manifest_epoch(path, e)
 
 
-def test_state_acquisition_propagates_non_fencing_backend_errors(tmp_path):
-    """Round-10 ADVICE: _acquire_state_root's CAS retry must catch exactly
-    the fencing outcomes (WriterFenced / ManifestPreconditionFailed) — a
-    custom backend's UNRELATED ValueError must propagate on first raise
-    instead of being swallowed 16 times and resurfacing as the opaque
-    'lost the epoch CAS 16 times' RuntimeError."""
-    import pytest as _pytest
+def _acquire(kind, root):
+    """Acquire ``root`` through the shared acquire, as an index root or as
+    a merge sink's state root."""
+    from mapreduce_framework_spark.storage import acquire_index_root, acquire_manifest_root
+    from mapreduce_framework_spark.streaming.foreach_batch import STATE_MANIFEST
 
+    if kind == "index":
+        return acquire_index_root(root)
+    return acquire_manifest_root(
+        os.path.join(root, STATE_MANIFEST), {"version": 1, "versions": []}
+    )
+
+
+@pytest.mark.parametrize("kind", ["index", "state"])
+def test_acquisition_propagates_non_fencing_backend_errors(tmp_path, kind):
+    """Round-10 ADVICE: the acquire's CAS retry must catch exactly the
+    fencing outcome (ManifestPreconditionFailed) — a custom backend's
+    UNRELATED ValueError must propagate on first raise instead of being
+    swallowed 16 times and resurfacing as the opaque 'lost the epoch CAS
+    16 times' RuntimeError. Index and state roots share the acquire."""
     from mapreduce_framework_spark.storage import (
         PosixManifestBackend,
         set_manifest_backend,
-    )
-    from mapreduce_framework_spark.streaming.foreach_batch import (
-        _acquire_state_root,
     )
 
     class BrokenBackend(PosixManifestBackend):
@@ -173,25 +185,22 @@ def test_state_acquisition_propagates_non_fencing_backend_errors(tmp_path):
     backend = BrokenBackend()
     prev = set_manifest_backend(backend)
     try:
-        with _pytest.raises(ValueError, match="quota exceeded"):
-            _acquire_state_root(str(tmp_path / "state"))
+        with pytest.raises(ValueError, match="quota exceeded"):
+            _acquire(kind, str(tmp_path / "root"))
         assert backend.calls == 1  # first raise, no retry loop
     finally:
         set_manifest_backend(prev)
 
 
-def test_state_acquisition_retries_fenced_commits(tmp_path):
-    """The converse: genuine CAS losses (WriterFenced from
-    commit_manifest's mapping, or a backend's raw
+@pytest.mark.parametrize("kind", ["index", "state"])
+def test_acquisition_retries_fenced_commits(tmp_path, kind):
+    """The converse: genuine CAS losses (a backend's
     ManifestPreconditionFailed) DO retry and succeed once the race
     clears."""
     from mapreduce_framework_spark.storage import (
         ManifestPreconditionFailed,
         PosixManifestBackend,
         set_manifest_backend,
-    )
-    from mapreduce_framework_spark.streaming.foreach_batch import (
-        _acquire_state_root,
     )
 
     class FlakyBackend(PosixManifestBackend):
@@ -210,8 +219,7 @@ def test_state_acquisition_retries_fenced_commits(tmp_path):
     backend = FlakyBackend()
     prev = set_manifest_backend(backend)
     try:
-        epoch = _acquire_state_root(str(tmp_path / "state"))
-        assert epoch == 1
+        assert _acquire(kind, str(tmp_path / "root")) == 1
         assert backend.calls == 4  # 3 losses + the winning commit
     finally:
         set_manifest_backend(prev)

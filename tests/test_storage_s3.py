@@ -483,6 +483,13 @@ def test_live_wire_acquisition_fencing_and_zombie(live_backend, tmp_path):
     with pytest.raises(WriterFenced):
         commit_manifest(path, {"version": 1, "epoch": 99}, expected_epoch=1)
     assert read_manifest_doc(path)["epoch"] == 2
+    # a root holding data but no manifest in the store is refused, and
+    # acquisition commits nothing for it
+    old = tmp_path / "old"
+    (old / "delta_v0").mkdir(parents=True)
+    with pytest.raises(ValueError, match="delta_v0"):
+        acquire_index_root(str(old))
+    assert read_manifest_doc(str(old / "_manifest.json")) is None
 
 
 def test_live_wire_concurrent_acquirers_distinct_epochs(live_backend, tmp_path):

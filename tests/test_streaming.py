@@ -2747,64 +2747,38 @@ def test_writer_fencing_refuses_owned_root_without_takeover(tmp_path):
         acquire_index_root(root, takeover=False)
 
 
-def test_legacy_d_v_decisions_root_is_adopted(spark, sf_dir, tmp_path):
-    """A PRE-round-7 decisions root (deltas named d_v{batch}, no manifest)
-    must be adopted on resume: the first post-upgrade publish records the
-    legacy dirs in the manifest (no renames), historical decisions stay
-    visible, and the manifest's contiguity check passes — the round-7
-    migration regression the round-8 advice flagged (old roots previously
-    hard-errored with 'manifest has a gap' and lost all history)."""
+@pytest.mark.parametrize("held", ["delta_v0", "d_v0", "state_v0"])
+def test_manifest_less_root_with_data_is_refused(spark, tmp_path, held):
+    """The manifest is the only way a root is read or owned: a root with
+    data dirs but no manifest (a layout written before manifests, or by
+    something else) must fail at sink construction, naming the dirs —
+    never be adopted empty, which would hide the dirs from every read and
+    let the first prune delete them. Nothing under the root is touched."""
     from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
-    from mapreduce_framework_spark.storage import read_index_manifest
-    from mapreduce_framework_spark.streaming.ingest import (
-        _index_so_far,
-        make_ingest_batch_fn,
+    from mapreduce_framework_spark.streaming.foreach_batch import (
+        make_rollup_merge_batch_fn,
     )
+    from mapreduce_framework_spark.streaming.ingest import make_ingest_batch_fn
 
-    batches = _split_docs(spark, sf_dir, 3)
-    idx = str(tmp_path / "index")
-    dec = str(tmp_path / "decisions")
+    root = tmp_path / "root"
+    spark.range(3).write.parquet(str(root / held))
 
-    # simulate the pre-manifest sink: run the modern sink into scratch
-    # roots, then lay its outputs down under the legacy names
-    fn_old = make_ingest_batch_fn(
-        spark, str(tmp_path / "s_idx"), str(tmp_path / "s_dec"), JACCARD_THRESHOLD
-    )
-    for i, b in enumerate(batches[:2]):
-        fn_old(b, i)
-    for i in range(2):
-        _delta(spark, str(tmp_path / "s_dec"), i).write.parquet(
-            os.path.join(dec, f"d_v{i}")
-        )
-        _delta(spark, str(tmp_path / "s_idx"), i).write.parquet(
-            os.path.join(idx, f"d_v{i}")
-        )
+    def snapshot():
+        return {
+            p.relative_to(root): p.read_bytes()
+            for p in sorted(root.rglob("*")) if p.is_file()
+        }
 
-    # resume the stream on the legacy roots: batch 2 matches against the
-    # adopted history and publishes cleanly
-    fn = make_ingest_batch_fn(spark, idx, dec, JACCARD_THRESHOLD)
-    fn(batches[2], 2)
-
-    man = read_index_manifest(dec)
-    assert [e[0] for e in man["deltas"]] == [0, 1, 2]
-    assert [e[1] for e in man["deltas"][:2]] == ["d_v0", "d_v1"]
-    assert man["deltas"][2][1].startswith("delta_v2")  # fenced: epoch-suffixed
-    all_dec = _decisions(spark, dec)
-    want = {r["doc_id"] for b in batches for r in b.select("doc_id").collect()}
-    assert set(all_dec) == want
-    # the adopted index produced the same decisions the uninterrupted
-    # modern stream produces
-    fn_ref = make_ingest_batch_fn(
-        spark, str(tmp_path / "r_idx"), str(tmp_path / "r_dec"), JACCARD_THRESHOLD
-    )
-    for i, b in enumerate(batches):
-        fn_ref(b, i)
-    ref = _decisions(spark, str(tmp_path / "r_dec"))
-    assert {
-        (d, r["admitted"], r["matched_id"], r["jaccard"]) for d, r in all_dec.items()
-    } == {(d, r["admitted"], r["matched_id"], r["jaccard"]) for d, r in ref.items()}
-    # _index_so_far reads the adopted layout without a gap error
-    assert _index_so_far(spark, idx).count() > 0
+    before = snapshot()
+    with pytest.raises(ValueError, match=held):
+        if held == "state_v0":
+            make_rollup_merge_batch_fn(spark, str(root))
+        else:
+            make_ingest_batch_fn(
+                spark, str(root), str(tmp_path / "dec"), JACCARD_THRESHOLD
+            )
+    assert snapshot() == before
+    assert sorted(p.name for p in root.iterdir()) == [held]
 
 
 def test_reindex_twice_with_same_next_batch(spark, tmp_path):
@@ -3132,13 +3106,13 @@ def test_refresh_autopilot_fires_only_on_drift(spark, tmp_path):
 def test_merge_sink_writer_fencing(spark, sf_dir, tmp_path):
     """The merge sinks' read-merge-write cycle gets the same fencing as
     the ingest indexes: a second sink on the same state root fences the
-    first (hard error, nothing committed) and the epoch survives the
-    manifest's retention rewrite."""
+    first (hard error, nothing committed — not even a state dir the new
+    owner committed) and the epoch survives the manifest's retention
+    rewrite."""
     from mapreduce_framework_spark.catalog import table
-    from mapreduce_framework_spark.storage import read_json_atomic
+    from mapreduce_framework_spark.storage import acquire_manifest_root, read_json_atomic
     from mapreduce_framework_spark.streaming.foreach_batch import (
         STATE_MANIFEST,
-        _acquire_state_root,
         make_rollup_merge_batch_fn,
     )
 
@@ -3153,13 +3127,26 @@ def test_merge_sink_writer_fencing(spark, sf_dir, tmp_path):
 
     fn_b = make_rollup_merge_batch_fn(spark, root)  # takeover
     fn_b(batches[1], 1)
+
+    def state_v1():
+        return sorted(map(tuple, spark.read.parquet(os.path.join(root, "state_v1")).collect()))
+
+    committed = state_v1()
     with pytest.raises(ValueError, match="fenced"):
         fn_a(batches[1], 2)
+    # a fenced redelivery of a batch the new owner committed fails before
+    # its state write: the owner's state_v1 rows are untouched
+    with pytest.raises(ValueError, match="fenced"):
+        fn_a(batches[0], 1)
+    assert state_v1() == committed
     man = read_json_atomic(os.path.join(root, STATE_MANIFEST))
     assert man["epoch"] == 2 and man["versions"] == [0, 1]  # batch 2 never committed
 
     with pytest.raises(ValueError, match="already owned"):
-        _acquire_state_root(root, takeover=False)
+        acquire_manifest_root(
+            os.path.join(root, STATE_MANIFEST), {"version": 1, "versions": []},
+            takeover=False,
+        )
 
 
 @pytest.mark.slow  # r14 item 2: equality soak; decisions oracle-checked by the q94-q110 replays
