@@ -68,10 +68,6 @@ def fnv1a32_duckdb(expr: str) -> str:
     )
 
 
-def fnv1a32_bucket_duckdb(expr: str, n_buckets: int = 10) -> str:
-    return f"CAST(({fnv1a32_duckdb(expr)} & 2147483647) % {n_buckets} AS INT)"
-
-
 def fnv1a32_py(s: str | bytes) -> int:
     """Python twin (used by the MR runner's reducers and multimodal stubs)."""
     data = s.encode("utf-8") if isinstance(s, str) else s
@@ -92,11 +88,4 @@ def key2shard(col: str | Column, n_shards: int = 10) -> Column:
         F.when(F.length(c) > 0, F.ascii(F.substring(c, 1, 1)) % n_shards)
         .otherwise(F.lit(0))
         .cast("int")
-    )
-
-
-def key2shard_duckdb(expr: str, n_shards: int = 10) -> str:
-    return (
-        f"CAST(CASE WHEN length({expr}) > 0 "
-        f"THEN unicode(substr({expr}, 1, 1)) % {n_shards} ELSE 0 END AS INT)"
     )

@@ -1,13 +1,27 @@
 """Driver-checkable Structured Streaming replays.
 
-The streaming operators (streaming/windows.py, streaming/state.py) are
-pytest-verified for batch parity, but a streaming query can't be
-hash-compared by the external driver directly — so these builders *run*
-the stream to completion (``availableNow`` into a memory sink) inside a
-normal ``(spark, sf_dir) -> DataFrame`` builder and return the
-materialized result. Because streaming-equals-batch is the operators'
-contract, the batch twins' DuckDB oracles apply verbatim: the driver now
-hash-checks the streaming execution path itself.
+The streaming operators and ingest sinks are pytest-verified for batch
+parity, but a streaming query can't be hash-compared by the external
+driver directly — so these builders *run* the stream to completion
+(``availableNow``) inside a normal ``(spark, sf_dir) -> DataFrame``
+builder and return the materialized result, which a DuckDB oracle then
+hash-checks.
+
+Every replay works under one scratch root (:func:`_scratch_root`). The
+window and state replays (q82, q83, q94) stream into a memory sink and
+reuse their batch twins' oracles verbatim, because streaming-equals-batch
+is the operators' contract. The sink replays (q95, q96, q103, q104/q106,
+q107/q108/q110) share one staging path (:func:`_staged_replay`): each
+batch is written as one parquet part with a pinned, increasing mtime,
+streamed back one part per trigger, and the sink's result is
+checkpointed before the scratch root is removed. The admission cascades
+share one sink call (:func:`_cascade_sink`), which owns the
+no-usable-centroid fallback.
+
+The cascade oracles are configurations of one DuckDB builder
+(:func:`_cascade_oracle`) over per-tier CTE fragments. They are written
+independently of the sink's tier list and import nothing from
+streaming/ingest.py, so each differential compares two implementations.
 
 At scale the same topology runs continuously (file source → watermark →
 windowed agg / keyed state → sink); availableNow is just the bounded
@@ -17,7 +31,11 @@ replay of it.
 from __future__ import annotations
 
 import os
+import shutil
+import time
 import uuid
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,8 +58,6 @@ from mapreduce_framework_spark.streaming.windows import (
 def _stage_events(sf_dir: str, staging: str) -> None:
     """Copy the (read-only) events table into a file-stream staging dir — a
     parquet "file" may itself be a directory when written by Spark."""
-    import shutil
-
     src = parquet_path(sf_dir, "events")
     if os.path.isdir(src):
         for i, f in enumerate(sorted(os.listdir(src))):
@@ -67,6 +83,95 @@ def _set_staged_mtime(path: str, when: float) -> None:
                 os.utime(os.path.join(dirpath, f), (when, when))
 
 
+@contextmanager
+def _scratch_root(tag: str) -> Iterator[str]:
+    """A fresh, empty directory for one replay run, removed on exit. A
+    replay's result must not read from it after exit: the memory sink
+    holds its rows, or :func:`_staged_replay` checkpoints them."""
+    root = os.path.join("/tmp", f"mfs_{tag}_{uuid.uuid4().hex[:8]}")
+    os.makedirs(root)
+    try:
+        yield root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _staged_replay(
+    spark: SparkSession,
+    tag: str,
+    parts: Sequence[DataFrame],
+    run: Callable[[DataFrame, str], DataFrame],
+) -> DataFrame:
+    """Stream ``parts`` through ``run(stream, root)`` as one micro-batch
+    each, in order, and return its result checkpointed so that it
+    survives the removal of the scratch ``root``. Each part is written as
+    one parquet file with an explicit, increasing mtime (FileStreamSource
+    orders files by mtime) and read back with ``maxFilesPerTrigger`` 1."""
+    with _scratch_root(tag) as root:
+        staging = os.path.join(root, "staging")
+        now = time.time()
+        for i, part in enumerate(parts):
+            path = os.path.join(staging, f"part_{i}")
+            part.coalesce(1).write.parquet(path)
+            _set_staged_mtime(path, now - 300 + i * 100)
+        stream = (
+            spark.readStream.schema(parts[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(os.path.join(staging, "part_*"))
+        )
+        return run(stream, root).localCheckpoint(eager=True)
+
+
+def _empty_decisions(docs: DataFrame, score: str, tier: bool = True) -> DataFrame:
+    """The decisions of a replay over an empty corpus: no rows (``docs``
+    is empty), and the populated path's columns."""
+    return docs.select(
+        "doc_id",
+        F.lit(True).alias("admitted"),
+        F.lit(-1).cast("long").alias("matched_id"),
+        F.lit(0.0).alias(score),
+        *([F.lit(None).cast("string").alias("tier")] if tier else []),
+    )
+
+
+def _cascade_sink(
+    spark: SparkSession, stream: DataFrame, root: str, centroids: DataFrame, **tiers
+) -> DataFrame:
+    """Run the full admission cascade over ``stream`` with its indexes
+    under ``root`` and the opt-in ``tiers`` (keyword arguments of both
+    cascade sinks). A corpus with NO usable centroid (every embedding
+    NULL or zero-norm) leaves the semantic tier nothing to match against,
+    so the lexical sink runs instead — every other tier kept, its jaccard
+    reported as the tier-typed ``score``. That is the corpus-level analog
+    of the sink's per-doc unembedded-doc policy, and exactly what the
+    oracles compute (an empty ``e`` CTE makes the semantic tier
+    vacuous)."""
+    from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
+    from mapreduce_framework_spark.streaming.ingest import (
+        run_cascade_ingest_stream,
+        run_full_cascade_ingest_stream,
+    )
+
+    kw = dict(
+        fp_index_root=os.path.join(root, "fp_index"),
+        sig_index_root=os.path.join(root, "sig_index"),
+        decisions_root=os.path.join(root, "decisions"),
+        checkpoint=os.path.join(root, "ckpt"),
+        threshold=JACCARD_THRESHOLD,
+        **tiers,
+    )
+    if not centroids.take(1):
+        decisions = run_cascade_ingest_stream(stream, spark, **kw)
+        return decisions.withColumnRenamed("jaccard", "score")
+    return run_full_cascade_ingest_stream(
+        stream,
+        spark,
+        sem_index_root=os.path.join(root, "sem_index"),
+        centroids=centroids,
+        **kw,
+    )
+
+
 @register(
     "q82_streaming_tumbling_replay",
     oracle=REGISTRY["q25_tumbling_window"].oracle,
@@ -84,21 +189,14 @@ def q82_streaming_tumbling_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     and duplicate update-mode emissions per window key. Multi-batch
     watermark behavior is exercised where it is the point: the late-data
     and session-replay paths (tests + q94)."""
-    import shutil
-
     # the file stream source requires a directory — stage the (read-only)
-    # events table into one (a parquet "file" may itself be a directory
-    # when written by Spark, so branch on isdir)
-    staging = os.path.join("/tmp", f"mfs_q82_{uuid.uuid4().hex[:8]}")
-    os.makedirs(staging)
-    _stage_events(sf_dir, staging)
-    try:
+    # events table into one
+    with _scratch_root("q82") as staging:
+        _stage_events(sf_dir, staging)
         stream = streaming_tumbling_counts(
             read_events_stream(spark, staging, max_files_per_trigger=None)
         )
         out = run_stream_to_memory(stream, spark, output_mode="update", timeout_s=300)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)  # memory sink holds the rows
     return out.orderBy("window_start", "event_type")
 
 
@@ -125,8 +223,6 @@ def q94_streaming_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     out; per-user session counts must equal the batch q27 oracle
     verbatim."""
     import datetime as dt
-    import shutil
-    import time
 
     from mapreduce_framework_spark.catalog import EVENTS_SCHEMA, table
 
@@ -139,38 +235,23 @@ def q94_streaming_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("user_id")
         )
     delay_s = int((max_ts - tmin).total_seconds()) + 3600
-    staging = os.path.join("/tmp", f"mfs_q94_{uuid.uuid4().hex[:8]}")
-    os.makedirs(staging)
-    _stage_events(sf_dir, staging)
-    now = time.time()
-    _set_staged_mtime(staging, now - 300)
 
-    def advancer(name: str, hours: int, mtime: float) -> None:
-        row = [
-            (
-                -1,
-                max_ts + dt.timedelta(seconds=delay_s, hours=hours),
-                -1,
-                "sentinel",
-                0.0,
-                "{}",
+    with _scratch_root("q94") as staging:
+        _stage_events(sf_dir, staging)
+        now = time.time()
+        _set_staged_mtime(staging, now - 300)
+        for name, hours, mtime in (("adv1", 2, now - 200), ("adv2", 4, now - 100)):
+            ts = max_ts + dt.timedelta(seconds=delay_s, hours=hours)
+            adv = spark.createDataFrame(
+                [(-1, ts, -1, "sentinel", 0.0, "{}")], schema=EVENTS_SCHEMA
             )
-        ]
-        spark.createDataFrame(row, schema=EVENTS_SCHEMA).coalesce(1).write.parquet(
-            os.path.join(staging, name)
-        )
-        _set_staged_mtime(os.path.join(staging, name), mtime)
-
-    try:
-        advancer("adv1", 2, now - 200)
-        advancer("adv2", 4, now - 100)
+            adv.coalesce(1).write.parquet(os.path.join(staging, name))
+            _set_staged_mtime(os.path.join(staging, name), mtime)
         stream = streaming_session_sessions(
             read_events_stream(spark, os.path.join(staging, "*")),
             watermark=f"{delay_s} seconds",
         )
         out = run_stream_to_memory(stream, spark, output_mode="append", timeout_s=300)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)  # memory sink holds the rows
     return (
         # sentinel filter is NULL-SAFE (round 10, sweep's user_id null
         # plan): the advancers are user_id -1; a NULL user_id is a real
@@ -262,59 +343,135 @@ def q95_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(admitted). The oracle replays the sequential admission with exact
     cross-batch Jaccard. Within-batch self-dedup stays out of scope (q31's
     job), exactly like q91."""
-    import shutil
-
     from mapreduce_framework_spark.catalog import table
     from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
+    from mapreduce_framework_spark.streaming.ingest import run_ingest_stream
 
     docs = table(spark, "documents", sf_dir)
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]
     if max_id is None:  # empty corpus: no batches, no decisions
-        return docs.select(
-            "doc_id",
-            F.lit(True).alias("admitted"),
-            F.lit(-1).cast("long").alias("matched_id"),
-            F.lit(0.0).alias("jaccard"),
-        )
+        return _empty_decisions(docs, "jaccard", tier=False)
     c1, c2 = (max_id + 1) // 3, 2 * (max_id + 1) // 3
-    root = os.path.join("/tmp", f"mfs_q95_{uuid.uuid4().hex[:8]}")
-    staging = os.path.join(root, "staging")
-    os.makedirs(staging)
-    try:
-        import time
-
-        terciles = (
-            docs.where(F.col("doc_id") < c1),
-            docs.where((F.col("doc_id") >= c1) & (F.col("doc_id") < c2)),
-            docs.where(F.col("doc_id") >= c2),
-        )
-        now = time.time()
-        for i, part in enumerate(terciles):
-            part.coalesce(1).write.parquet(os.path.join(staging, f"terc_{i}"))
-            # explicit increasing mtimes → deterministic batch order with
-            # zero added latency (FileStreamSource sorts by mtime)
-            _set_staged_mtime(os.path.join(staging, f"terc_{i}"), now - 300 + i * 100)
-        from mapreduce_framework_spark.streaming.ingest import run_ingest_stream
-
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(staging, "terc_*"))
-        )
-        decisions = run_ingest_stream(
+    terciles = (
+        docs.where(F.col("doc_id") < c1),
+        docs.where((F.col("doc_id") >= c1) & (F.col("doc_id") < c2)),
+        docs.where(F.col("doc_id") >= c2),
+    )
+    return _staged_replay(
+        spark,
+        "q95",
+        terciles,
+        lambda stream, root: run_ingest_stream(
             stream,
             spark,
             index_root=os.path.join(root, "index"),
             decisions_root=os.path.join(root, "decisions"),
             checkpoint=os.path.join(root, "ckpt"),
             threshold=JACCARD_THRESHOLD,
-        ).localCheckpoint(eager=True)  # survives the staging cleanup below
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return decisions.orderBy("doc_id")
+        ),
+    ).orderBy("doc_id")
 
 
-def _q103_oracle() -> str:
+# --- the cascade oracles ------------------------------------------------------
+# One DuckDB replay per cascade, assembled from per-tier CTE fragments in the
+# sink's precedence order. Each tier fragment reads the docs that every
+# earlier tier passed, defines its reject CTE keyed by doc_id, and names the
+# docs it passes in turn (surv, msurv, surv2, surv3).
+
+_Q107_SPLIT = 17
+_Q107_CONT = 0.05
+
+
+def _cont_rej_cte(src: str, tag: str) -> str:
+    """Per-doc contaminated-token fraction of ``src`` vs the benchmark
+    span hashes (bref CTE) — the exact span_contamination arithmetic:
+    distinct covered positions / token count, 0.0 on token-free docs.
+    Used on both sides of every decontaminating oracle (seed batch and
+    streamed batch), so the decon arithmetic can never drift between
+    them."""
+    from mapreduce_framework_spark.pipeline.dedup import TOKS_DUCK
+    from mapreduce_framework_spark.pipeline.span_dedup import EXSUB_W, _sliding_duck
+
+    W = EXSUB_W
+    sl = _sliding_duck(W)
+    return f"""
+    {tag}t AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM {src}),
+    {tag}raw AS (
+      SELECT doc_id, unnest({sl}) AS s,
+             unnest(range(1, len({sl}) + 1)) AS pos
+      FROM {tag}t
+    ),
+    {tag}hits AS (
+      SELECT doc_id, CAST(pos AS BIGINT) AS pos FROM {tag}raw
+      WHERE md5(s) IN (SELECT sh FROM bref)
+    ),
+    {tag}cov AS (
+      SELECT DISTINCT doc_id,
+             CAST(unnest(range(pos, pos + {W})) AS BIGINT) AS tpos
+      FROM {tag}hits
+    ),
+    {tag}cnt AS (SELECT doc_id, count(*) AS nc FROM {tag}cov GROUP BY 1),
+    {tag}frac AS (
+      SELECT t.doc_id,
+             CASE WHEN coalesce(len(toks), 0) > 0
+                  THEN CAST(coalesce(nc, 0) AS DOUBLE) / len(toks)
+                  ELSE 0.0 END AS frac
+      FROM {tag}t t LEFT JOIN {tag}cnt USING (doc_id)
+    ),
+    {tag}rej AS (SELECT doc_id, frac FROM {tag}frac WHERE frac >= {_Q107_CONT})"""
+
+
+def _exact_ctes(index: str, new: str) -> str:
+    """Exact tier: ``ex`` maps each ``new`` doc whose text is
+    byte-identical (md5) to an ``index`` doc onto the smallest such index
+    id; ``surv`` is the rest of ``new``."""
+    return f"""
+    ex AS (
+      SELECT {new}.doc_id, min({index}.doc_id) AS ex_id
+      FROM {index} JOIN {new}
+        ON md5(coalesce({index}.text, '')) = md5(coalesce({new}.text, ''))
+      GROUP BY 1
+    ),
+    surv AS (SELECT * FROM {new} WHERE doc_id NOT IN (SELECT doc_id FROM ex))"""
+
+
+def _media_ctes(index: str, survivors: str) -> str:
+    """Perceptual tier: phash over the ``index`` docs joined to
+    ``survivors`` at Hamming <= PHASH_HAMMING_MAX. ``md`` holds the
+    LOWEST matching index id and ph_sim = (cells - its hamming)/cells,
+    exactly multimodal_dedup.phash_match_batch's min/min_by contract;
+    ``msurv`` is the rest of ``survivors``. MATERIALIZED because DuckDB
+    re-inlines the per-char phash fold at every reference otherwise."""
+    from mapreduce_framework_spark.pipeline.multimodal_dedup import (
+        PHASH_CELLS,
+        PHASH_HAMMING_MAX,
+        phash_duck,
+    )
+
+    return f"""{phash_duck(index, 'mi')},{phash_duck(survivors, 'mb')},
+    mdc AS (
+      SELECT b.doc_id, a.doc_id AS md_id,
+             CAST(bit_count(xor(a.phash, b.phash)) AS INT) AS hamming,
+             row_number() OVER (PARTITION BY b.doc_id ORDER BY a.doc_id) AS rn
+      FROM miph a JOIN mbph b
+        ON bit_count(xor(a.phash, b.phash)) <= {PHASH_HAMMING_MAX}
+    ),
+    md AS MATERIALIZED (
+      SELECT doc_id, md_id,
+             ({PHASH_CELLS} - hamming) / CAST({PHASH_CELLS} AS DOUBLE) AS ph_sim
+      FROM mdc WHERE rn = 1
+    ),
+    msurv AS MATERIALIZED (
+      SELECT * FROM {survivors} WHERE doc_id NOT IN (SELECT doc_id FROM md)
+    )"""
+
+
+def _near_dup_ctes(index: str, survivors: str) -> str:
+    """MinHash tier, replayed with exact cross-side Jaccard of
+    ``survivors`` against ``index`` (LSH banding at J >= 0.8 misses a pair
+    with probability < 1e-7 and the sink verifies every candidate): ``nd``
+    holds each survivor's best match at or above the threshold, ties to
+    the lowest index id; ``surv2`` is the rest of ``survivors``."""
     from mapreduce_framework_spark.pipeline.dedup import (
         JACCARD_THRESHOLD,
         SHINGLES_DUCK,
@@ -322,177 +479,10 @@ def _q103_oracle() -> str:
     )
 
     return f"""
-    WITH cut AS (SELECT (max(doc_id) + 1) // 2 AS c FROM documents),
-    b0 AS (SELECT doc_id, text FROM documents, cut WHERE doc_id < c),
-    b1 AS (
-      SELECT doc_id, text FROM documents, cut WHERE doc_id >= c
-      UNION ALL
-      SELECT doc_id + 10000000, text FROM documents, cut
-      WHERE doc_id < c AND doc_id % 50 = 0
-    ),
-    ex AS (
-      SELECT b1.doc_id AS id2, min(b0.doc_id) AS ex_id
-      FROM b0 JOIN b1 ON md5(coalesce(b0.text, '')) = md5(coalesce(b1.text, ''))
-      GROUP BY 1
-    ),
-    surv AS (SELECT * FROM b1 WHERE doc_id NOT IN (SELECT id2 FROM ex)),
-    t0 AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM b0),
+    t0 AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM {index}),
     sh0 AS (SELECT DISTINCT doc_id, unnest({SHINGLES_DUCK}) AS s FROM t0),
     sz0 AS (SELECT doc_id, count(*) AS n FROM sh0 GROUP BY doc_id),
-    t1 AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM surv),
-    sh1 AS (SELECT DISTINCT doc_id, unnest({SHINGLES_DUCK}) AS s FROM t1),
-    sz1 AS (SELECT doc_id, count(*) AS n FROM sh1 GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS id1, p.doc_id AS id2, count(*) AS common
-      FROM sh0 a JOIN sh1 p ON a.s = p.s
-      GROUP BY 1, 2
-    ),
-    jac AS (
-      SELECT id1, id2, CAST(common AS DOUBLE) / (x.n + y.n - common) AS jaccard
-      FROM pairs JOIN sz0 x ON pairs.id1 = x.doc_id
-                 JOIN sz1 y ON pairs.id2 = y.doc_id
-      WHERE CAST(common AS DOUBLE) / (x.n + y.n - common) >= {JACCARD_THRESHOLD}
-    ),
-    nb AS (
-      SELECT id2 AS doc_id, id1 AS nd_id, jaccard,
-             row_number() OVER (PARTITION BY id2
-                                ORDER BY jaccard DESC, id1 ASC) AS rn
-      FROM jac
-    ),
-    nd AS (SELECT doc_id, nd_id, jaccard FROM nb WHERE rn = 1)
-    SELECT doc_id, TRUE AS admitted, CAST(-1 AS BIGINT) AS matched_id,
-           0.0 AS jaccard, CAST(NULL AS VARCHAR) AS tier
-    FROM b0
-    UNION ALL
-    SELECT b1.doc_id,
-           (ex.ex_id IS NULL AND nd.nd_id IS NULL) AS admitted,
-           CAST(coalesce(ex.ex_id, nd.nd_id, -1) AS BIGINT) AS matched_id,
-           CASE WHEN ex.ex_id IS NOT NULL THEN 1.0
-                ELSE coalesce(nd.jaccard, 0.0) END AS jaccard,
-           CASE WHEN ex.ex_id IS NOT NULL THEN 'exact'
-                WHEN nd.nd_id IS NOT NULL THEN 'near_dup' END AS tier
-    FROM b1 LEFT JOIN ex ON b1.doc_id = ex.id2
-            LEFT JOIN nd ON b1.doc_id = nd.doc_id
-    ORDER BY doc_id
-    """
-
-
-@register(
-    "q103_cascade_admission",
-    oracle=_q103_oracle(),
-    tags=("ext", "streaming", "dedup", "incremental", "cascade", "replay"),
-)
-def q103_cascade_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tiered streaming admission run end-to-end (round 7; registered by
-    retiring q55 under the registry's retirement policy): the lower-id
-    half of the corpus is admitted as batch 0, then the upper half PLUS
-    planted byte-identical re-fetches of every 50th batch-0 doc (ids
-    shifted +10M) streams through ``run_cascade_ingest_stream`` — the
-    exact md5-fingerprint tier rejects the re-fetches at an equi-join's
-    cost before any shingling, the MinHash tier near-dup-matches only
-    the survivors, and decisions carry per-tier provenance ('exact' =
-    jaccard 1.0 with the smallest identical index doc; 'near_dup' = the
-    verified best match, ties to the lowest index id; NULL = admitted).
-    The oracle replays both tiers with exact SQL (md5 equi-join, then
-    exact cross-side Jaccard over exact-tier survivors); LSH banding at
-    J >= 0.8 has per-pair miss probability < 1e-7 and every candidate is
-    exact-verified — the q91/q95 argument. The planted re-fetches are
-    corpus-derived (no synthetic text), so the exact tier provably fires
-    on every sf table."""
-    import shutil
-    import time
-
-    from mapreduce_framework_spark.catalog import table
-    from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
-
-    docs = table(spark, "documents", sf_dir).select("doc_id", "text")
-    max_id = docs.agg(F.max("doc_id")).collect()[0][0]
-    if max_id is None:  # empty corpus: no batches, no decisions
-        return docs.select(
-            "doc_id",
-            F.lit(True).alias("admitted"),
-            F.lit(-1).cast("long").alias("matched_id"),
-            F.lit(0.0).alias("jaccard"),
-            F.lit(None).cast("string").alias("tier"),
-        )
-    cut = (max_id + 1) // 2
-    b0 = docs.where(F.col("doc_id") < cut)
-    b1 = docs.where(F.col("doc_id") >= cut).unionAll(
-        b0.where(F.col("doc_id") % 50 == 0).select(
-            (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
-        )
-    )
-    root = os.path.join("/tmp", f"mfs_q103_{uuid.uuid4().hex[:8]}")
-    staging = os.path.join(root, "staging")
-    os.makedirs(staging)
-    try:
-        from mapreduce_framework_spark.streaming.ingest import (
-            run_cascade_ingest_stream,
-        )
-
-        now = time.time()
-        for i, part in enumerate((b0, b1)):
-            part.coalesce(1).write.parquet(os.path.join(staging, f"b_{i}"))
-            _set_staged_mtime(os.path.join(staging, f"b_{i}"), now - 300 + i * 100)
-        stream = (
-            spark.readStream.schema(b0.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(staging, "b_*"))
-        )
-        decisions = run_cascade_ingest_stream(
-            stream,
-            spark,
-            fp_index_root=os.path.join(root, "fp_index"),
-            sig_index_root=os.path.join(root, "sig_index"),
-            decisions_root=os.path.join(root, "decisions"),
-            checkpoint=os.path.join(root, "ckpt"),
-            threshold=JACCARD_THRESHOLD,
-        ).localCheckpoint(eager=True)  # survives the staging cleanup below
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return decisions.orderBy("doc_id")
-
-
-def _q104_oracle() -> str:
-    from mapreduce_framework_spark.pipeline.dedup import (
-        JACCARD_THRESHOLD,
-        SHINGLES_DUCK,
-        TOKS_DUCK,
-    )
-    from mapreduce_framework_spark.pipeline.semantic_dedup import (
-        SEM_PROBES,
-        SEM_STRIDE,
-        SEMDEDUP_COS,
-    )
-    from mapreduce_framework_spark.pipeline.similarity import _E_CTE_DUCK, _dot_duck
-
-    icos = f"{_dot_duck('i.embedding', 'cents.cent')} / (i.norm * cents.cent_norm)"
-    ncos = f"{_dot_duck('nn.embedding', 'cents.cent')} / (nn.norm * cents.cent_norm)"
-    return f"""
-    WITH {_E_CTE_DUCK},
-    cut AS (SELECT (max(doc_id) + 1) // 2 AS c FROM documents),
-    b0 AS (SELECT doc_id, text FROM documents, cut WHERE doc_id < c),
-    up AS (SELECT doc_id, text FROM documents, cut WHERE doc_id >= c),
-    b1 AS (
-      SELECT doc_id, text, doc_id AS src FROM up
-      UNION ALL
-      SELECT doc_id + 10000000, text, doc_id FROM b0 WHERE doc_id % 50 = 0
-      UNION ALL
-      SELECT m.doc_id + 20000000, d.text, m.doc_id
-      FROM (SELECT doc_id FROM b0 WHERE doc_id % 70 = 0) m
-      CROSS JOIN cut
-      JOIN up d ON d.doc_id = m.doc_id + cut.c
-    ),
-    ex AS (
-      SELECT b1.doc_id AS id2, min(b0.doc_id) AS ex_id
-      FROM b0 JOIN b1 ON md5(coalesce(b0.text, '')) = md5(coalesce(b1.text, ''))
-      GROUP BY 1
-    ),
-    surv AS (SELECT * FROM b1 WHERE doc_id NOT IN (SELECT id2 FROM ex)),
-    t0 AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM b0),
-    sh0 AS (SELECT DISTINCT doc_id, unnest({SHINGLES_DUCK}) AS s FROM t0),
-    sz0 AS (SELECT doc_id, count(*) AS n FROM sh0 GROUP BY doc_id),
-    t1 AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM surv),
+    t1 AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM {survivors}),
     sh1 AS (SELECT DISTINCT doc_id, unnest({SHINGLES_DUCK}) AS s FROM t1),
     sz1 AS (SELECT doc_id, count(*) AS n FROM sh1 GROUP BY doc_id),
     pairs AS (
@@ -513,14 +503,34 @@ def _q104_oracle() -> str:
       FROM jac
     ),
     nd AS (SELECT doc_id, nd_id, jaccard FROM nb WHERE rn = 1),
-    surv2 AS (SELECT * FROM surv WHERE doc_id NOT IN (SELECT doc_id FROM nd)),
+    surv2 AS (SELECT * FROM {survivors} WHERE doc_id NOT IN (SELECT doc_id FROM nd))"""
+
+
+def _semantic_ctes(index: str, ne_on: str) -> str:
+    """Semantic tier over the near-dup survivors ``surv2``, replayed
+    EXACTLY: the same stride codebook, the same probes-nearest-cells
+    assignment on both sides, the same cell-equi-join candidates, cosine
+    folds in identical order on both engines. ``ne_on`` joins a survivor
+    ``s`` to its embedding in ``e``. ``sm`` holds each survivor's best
+    match at or above SEMDEDUP_COS, ties to the lowest index id;
+    ``surv3`` is the rest of ``surv2``."""
+    from mapreduce_framework_spark.pipeline.semantic_dedup import (
+        SEM_PROBES,
+        SEM_STRIDE,
+        SEMDEDUP_COS,
+    )
+    from mapreduce_framework_spark.pipeline.similarity import _dot_duck
+
+    icos = f"{_dot_duck('i.embedding', 'cents.cent')} / (i.norm * cents.cent_norm)"
+    ncos = f"{_dot_duck('nn.embedding', 'cents.cent')} / (nn.norm * cents.cent_norm)"
+    return f"""
     cents AS (
       SELECT vec_id AS cent_id, embedding AS cent, norm AS cent_norm
       FROM e WHERE vec_id % {SEM_STRIDE} = 0
     ),
     ie AS (
-      SELECT b0.doc_id, e.embedding, e.norm
-      FROM b0 JOIN e ON b0.doc_id = e.vec_id
+      SELECT {index}.doc_id, e.embedding, e.norm
+      FROM {index} JOIN e ON {index}.doc_id = e.vec_id
     ),
     asg_i AS (
       SELECT doc_id, cent_id FROM (
@@ -532,7 +542,7 @@ def _q104_oracle() -> str:
     ),
     ne AS (
       SELECT s.doc_id, e.embedding, e.norm
-      FROM surv2 s JOIN e ON s.src = e.vec_id
+      FROM surv2 s JOIN e ON {ne_on}
     ),
     asg_n AS (
       SELECT doc_id, cent_id FROM (
@@ -558,27 +568,198 @@ def _q104_oracle() -> str:
                                 ORDER BY cos DESC, index_id ASC) AS rn
       FROM sp WHERE cos >= {SEMDEDUP_COS}
     ),
-    sm AS (SELECT doc_id, sm_id, cos FROM sb WHERE rn = 1)
-    SELECT doc_id, TRUE AS admitted, CAST(-1 AS BIGINT) AS matched_id,
-           0.0 AS score, CAST(NULL AS VARCHAR) AS tier
-    FROM b0
+    sm AS (SELECT doc_id, sm_id, cos FROM sb WHERE rn = 1),
+    surv3 AS (SELECT * FROM surv2 WHERE doc_id NOT IN (SELECT doc_id FROM sm))"""
+
+
+def _decide(src: str, tiers: list[tuple[str, str | None, str, str]], score: str) -> str:
+    """The decision rows of batch ``src``. ``tiers`` lists, in precedence
+    order, each tier's reject CTE (keyed by doc_id), its matched-id
+    column (None: the hit has no index doc, matched_id -1), its score
+    expression and its name; the first tier that holds a doc rejects
+    it."""
+    if not tiers:
+        return (
+            f"SELECT doc_id, TRUE AS admitted, CAST(-1 AS BIGINT) AS matched_id,"
+            f" 0.0 AS {score}, CAST(NULL AS VARCHAR) AS tier FROM {src}"
+        )
+    admitted = " AND ".join(f"{cte}.doc_id IS NULL" for cte, *_ in tiers)
+    ids = ", ".join([f"{cte}.{col}" for cte, col, _, _ in tiers if col] + ["-1"])
+    scores = " ".join(f"WHEN {cte}.doc_id IS NOT NULL THEN {s}" for cte, _, s, _ in tiers)
+    names = " ".join(
+        f"WHEN {cte}.doc_id IS NOT NULL THEN '{name}'" for cte, _, _, name in tiers
+    )
+    joins = "".join(f" LEFT JOIN {cte} ON {src}.doc_id = {cte}.doc_id" for cte, *_ in tiers)
+    return f"""SELECT {src}.doc_id, ({admitted}) AS admitted,
+           CAST(coalesce({ids}) AS BIGINT) AS matched_id,
+           CASE {scores} ELSE 0.0 END AS {score},
+           CASE {names} END AS tier
+    FROM {src}{joins}"""
+
+
+def _cascade_oracle(
+    batches: str,
+    score: str = "score",
+    ne_on: str | None = None,
+    quality_gate: bool = False,
+    decon: bool = False,
+    media_tier: bool = False,
+) -> str:
+    """One admission-cascade replay in DuckDB. ``batches`` defines the
+    seed batch ``b0``, which only the index-free tiers can reject, and
+    the streamed batch ``b1``, which every tier checks against the seed
+    docs those tiers admitted. Tiers run in the sink's precedence:
+    quality → exact → media → near-dup → semantic → contamination; each
+    sees only the docs the tiers before it passed. ``ne_on`` turns the
+    semantic tier on (see :func:`_semantic_ctes`); ``decon`` needs a
+    ``bench`` CTE in ``batches``. ``score`` names the score column."""
+    from mapreduce_framework_spark.pipeline.dedup import TOKS_DUCK
+    from mapreduce_framework_spark.pipeline.quality import quality_reject_duck
+    from mapreduce_framework_spark.pipeline.similarity import _E_CTE_DUCK
+    from mapreduce_framework_spark.pipeline.span_dedup import EXSUB_W, _sliding_duck
+
+    ctes = [_E_CTE_DUCK, batches] if ne_on else [batches]
+    seed, new, seed_tiers, tiers = "b0", "b1", [], []
+    if decon:
+        ctes.append(f"""
+    bt AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM bench),
+    bref AS (
+      SELECT DISTINCT md5(s) AS sh
+      FROM (SELECT unnest({_sliding_duck(EXSUB_W)}) AS s FROM bt)
+    )""")
+    if quality_gate:
+        ctes += [
+            quality_reject_duck("b0", "qz"),
+            "l0 AS (SELECT * FROM b0 WHERE doc_id NOT IN (SELECT doc_id FROM qzrej))",
+            quality_reject_duck("b1", "qo"),
+            "l1 AS (SELECT * FROM b1 WHERE doc_id NOT IN (SELECT doc_id FROM qorej))",
+        ]
+        seed, new = "l0", "l1"
+        seed_tiers.append(("qzrej", None, "qzrej.frac", "quality"))
+        tiers.append(("qorej", None, "qorej.frac", "quality"))
+    index = seed
+    if decon:
+        ctes += [
+            _cont_rej_cte(seed, "c0"),
+            f"i0 AS (SELECT * FROM {seed} WHERE doc_id NOT IN (SELECT doc_id FROM c0rej))",
+        ]
+        index = "i0"
+        seed_tiers.append(("c0rej", None, "c0rej.frac", "contaminated"))
+    ctes.append(_exact_ctes(index, new))
+    tiers.append(("ex", "ex_id", "1.0", "exact"))
+    survivors = "surv"
+    if media_tier:
+        ctes.append(_media_ctes(index, survivors))
+        tiers.append(("md", "md_id", "md.ph_sim", "media_dup"))
+        survivors = "msurv"
+    ctes.append(_near_dup_ctes(index, survivors))
+    tiers.append(("nd", "nd_id", "nd.jaccard", "near_dup"))
+    survivors = "surv2"
+    if ne_on:
+        ctes.append(_semantic_ctes(index, ne_on))
+        tiers.append(("sm", "sm_id", "sm.cos", "semantic"))
+        survivors = "surv3"
+    if decon:
+        ctes.append(_cont_rej_cte(survivors, "c1"))
+        tiers.append(("c1rej", None, "c1rej.frac", "contaminated"))
+    sep = ",\n    "
+    return f"""
+    WITH {sep.join(c.strip() for c in ctes)}
+    {_decide("b0", seed_tiers, score)}
     UNION ALL
-    SELECT b1.doc_id,
-           (ex.ex_id IS NULL AND nd.nd_id IS NULL AND sm.sm_id IS NULL)
-             AS admitted,
-           CAST(coalesce(ex.ex_id, nd.nd_id, sm.sm_id, -1) AS BIGINT)
-             AS matched_id,
-           CASE WHEN ex.ex_id IS NOT NULL THEN 1.0
-                WHEN nd.nd_id IS NOT NULL THEN nd.jaccard
-                ELSE coalesce(sm.cos, 0.0) END AS score,
-           CASE WHEN ex.ex_id IS NOT NULL THEN 'exact'
-                WHEN nd.nd_id IS NOT NULL THEN 'near_dup'
-                WHEN sm.sm_id IS NOT NULL THEN 'semantic' END AS tier
-    FROM b1 LEFT JOIN ex ON b1.doc_id = ex.id2
-            LEFT JOIN nd ON b1.doc_id = nd.doc_id
-            LEFT JOIN sm ON b1.doc_id = sm.doc_id
+    {_decide("b1", tiers, score)}
     ORDER BY doc_id
     """
+
+
+def _q103_oracle() -> str:
+    return _cascade_oracle(
+        """
+    cut AS (SELECT (max(doc_id) + 1) // 2 AS c FROM documents),
+    b0 AS (SELECT doc_id, text FROM documents, cut WHERE doc_id < c),
+    b1 AS (
+      SELECT doc_id, text FROM documents, cut WHERE doc_id >= c
+      UNION ALL
+      SELECT doc_id + 10000000, text FROM documents, cut
+      WHERE doc_id < c AND doc_id % 50 = 0
+    )""",
+        score="jaccard",
+    )
+
+
+@register(
+    "q103_cascade_admission",
+    oracle=_q103_oracle(),
+    tags=("ext", "streaming", "dedup", "incremental", "cascade", "replay"),
+)
+def q103_cascade_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tiered streaming admission run end-to-end (round 7; registered by
+    retiring q55 under the registry's retirement policy): the lower-id
+    half of the corpus is admitted as batch 0, then the upper half PLUS
+    planted byte-identical re-fetches of every 50th batch-0 doc (ids
+    shifted +10M) streams through ``run_cascade_ingest_stream`` — the
+    exact md5-fingerprint tier rejects the re-fetches at an equi-join's
+    cost before any shingling, the MinHash tier near-dup-matches only
+    the survivors, and decisions carry per-tier provenance ('exact' =
+    jaccard 1.0 with the smallest identical index doc; 'near_dup' = the
+    verified best match, ties to the lowest index id; NULL = admitted).
+    The oracle replays both tiers with exact SQL (md5 equi-join, then
+    exact cross-side Jaccard over exact-tier survivors); LSH banding at
+    J >= 0.8 has per-pair miss probability < 1e-7 and every candidate is
+    exact-verified — the q91/q95 argument. The planted re-fetches are
+    corpus-derived (no synthetic text), so the exact tier provably fires
+    on every sf table."""
+    from mapreduce_framework_spark.catalog import table
+    from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
+    from mapreduce_framework_spark.streaming.ingest import run_cascade_ingest_stream
+
+    docs = table(spark, "documents", sf_dir).select("doc_id", "text")
+    max_id = docs.agg(F.max("doc_id")).collect()[0][0]
+    if max_id is None:  # empty corpus: no batches, no decisions
+        return _empty_decisions(docs, "jaccard")
+    cut = (max_id + 1) // 2
+    b0 = docs.where(F.col("doc_id") < cut)
+    b1 = docs.where(F.col("doc_id") >= cut).unionAll(
+        b0.where(F.col("doc_id") % 50 == 0).select(
+            (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
+        )
+    )
+    return _staged_replay(
+        spark,
+        "q103",
+        (b0, b1),
+        lambda stream, root: run_cascade_ingest_stream(
+            stream,
+            spark,
+            fp_index_root=os.path.join(root, "fp_index"),
+            sig_index_root=os.path.join(root, "sig_index"),
+            decisions_root=os.path.join(root, "decisions"),
+            checkpoint=os.path.join(root, "ckpt"),
+            threshold=JACCARD_THRESHOLD,
+        ),
+    ).orderBy("doc_id")
+
+
+def _q104_oracle() -> str:
+    # ``src`` is the doc whose embedding a b1 row carries in the stream:
+    # its own, the re-fetched seed doc's, or the twinned seed doc's
+    return _cascade_oracle(
+        """
+    cut AS (SELECT (max(doc_id) + 1) // 2 AS c FROM documents),
+    b0 AS (SELECT doc_id, text FROM documents, cut WHERE doc_id < c),
+    up AS (SELECT doc_id, text FROM documents, cut WHERE doc_id >= c),
+    b1 AS (
+      SELECT doc_id, text, doc_id AS src FROM up
+      UNION ALL
+      SELECT doc_id + 10000000, text, doc_id FROM b0 WHERE doc_id % 50 = 0
+      UNION ALL
+      SELECT m.doc_id + 20000000, d.text, m.doc_id
+      FROM (SELECT doc_id FROM b0 WHERE doc_id % 70 = 0) m
+      CROSS JOIN cut
+      JOIN up d ON d.doc_id = m.doc_id + cut.c
+    )""",
+        ne_on="s.src = e.vec_id",
+    )
 
 
 def _q104_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -587,11 +768,7 @@ def _q104_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     same log), so the two registered contracts can never diverge on what
     the replay produces. See q104_full_cascade_admission for the full
     replay semantics."""
-    import shutil
-    import time
-
     from mapreduce_framework_spark.catalog import table
-    from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
     from mapreduce_framework_spark.pipeline.semantic_dedup import stride_centroids
 
     docs = table(spark, "documents", sf_dir).select("doc_id", "text")
@@ -603,13 +780,7 @@ def _q104_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]
     if max_id is None:  # empty corpus: no batches, no decisions
-        return docs.select(
-            "doc_id",
-            F.lit(True).alias("admitted"),
-            F.lit(-1).cast("long").alias("matched_id"),
-            F.lit(0.0).alias("score"),
-            F.lit(None).cast("string").alias("tier"),
-        )
+        return _empty_decisions(docs, "score")
     cut = (max_id + 1) // 2
     b0 = de.where(F.col("doc_id") < cut)
     up = de.where(F.col("doc_id") >= cut)
@@ -634,62 +805,12 @@ def _q104_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b1 = up.unionByName(refetch).unionByName(twins)
     centroids = stride_centroids(embs_tbl)
-    root = os.path.join("/tmp", f"mfs_q104_{uuid.uuid4().hex[:8]}")
-    staging = os.path.join(root, "staging")
-    os.makedirs(staging)
-    try:
-        now = time.time()
-        for i, part in enumerate((b0, b1)):
-            part.coalesce(1).write.parquet(os.path.join(staging, f"b_{i}"))
-            _set_staged_mtime(os.path.join(staging, f"b_{i}"), now - 300 + i * 100)
-        stream = (
-            spark.readStream.schema(b0.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(staging, "b_*"))
-        )
-        if not centroids.take(1):
-            # corpus-level degradation (docstring): no usable centroid ⇒
-            # the semantic tier can reject nothing; run the lexical
-            # cascade and surface its jaccard as the tier-typed score
-            from mapreduce_framework_spark.streaming.ingest import (
-                run_cascade_ingest_stream,
-            )
-
-            decisions = run_cascade_ingest_stream(
-                stream,
-                spark,
-                fp_index_root=os.path.join(root, "fp_index"),
-                sig_index_root=os.path.join(root, "sig_index"),
-                decisions_root=os.path.join(root, "decisions"),
-                checkpoint=os.path.join(root, "ckpt"),
-                threshold=JACCARD_THRESHOLD,
-            ).select(
-                "doc_id",
-                "admitted",
-                "matched_id",
-                F.col("jaccard").alias("score"),
-                "tier",
-            )
-        else:
-            from mapreduce_framework_spark.streaming.ingest import (
-                run_full_cascade_ingest_stream,
-            )
-
-            decisions = run_full_cascade_ingest_stream(
-                stream,
-                spark,
-                fp_index_root=os.path.join(root, "fp_index"),
-                sig_index_root=os.path.join(root, "sig_index"),
-                sem_index_root=os.path.join(root, "sem_index"),
-                decisions_root=os.path.join(root, "decisions"),
-                checkpoint=os.path.join(root, "ckpt"),
-                centroids=centroids,
-                threshold=JACCARD_THRESHOLD,
-            )
-        decisions = decisions.localCheckpoint(eager=True)  # survives cleanup
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return decisions
+    return _staged_replay(
+        spark,
+        "q104",
+        (b0, b1),
+        lambda stream, root: _cascade_sink(spark, stream, root, centroids),
+    )
 
 
 @register(
@@ -810,9 +931,6 @@ def q96_incremental_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     regardless of slicing. The state table is bounded by hours × types —
     answering coarse queries from it instead of the raw 100 TB stream is
     the point of the pattern."""
-    import datetime as dt
-    import shutil
-
     from mapreduce_framework_spark.catalog import table
     from mapreduce_framework_spark.streaming.foreach_batch import (
         run_rollup_merge_stream,
@@ -823,40 +941,24 @@ def q96_incremental_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     if tmax is None:  # empty input: the batch-form rollup of zero events
         return _hourly_rollup_batch_form(ev)
     third = (tmax - tmin) / 3
-    cut1 = tmin + third
-    cut2 = tmin + 2 * third
-    root = os.path.join("/tmp", f"mfs_q96_{uuid.uuid4().hex[:8]}")
-    staging = os.path.join(root, "staging")
-    os.makedirs(staging)
-
-    def lit_ntz(d: dt.datetime):
-        return F.lit(d).cast("timestamp_ntz")
-
-    try:
-        slices = (
-            ev.where(F.col("ts") < lit_ntz(cut1)),
-            ev.where((F.col("ts") >= lit_ntz(cut1)) & (F.col("ts") < lit_ntz(cut2))),
-            ev.where(F.col("ts") >= lit_ntz(cut2)),
-        )
-        for i, part in enumerate(slices):
-            part.coalesce(1).write.parquet(os.path.join(staging, f"slice_{i}"))
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(staging, "slice_*"))
-        )
-        state = run_rollup_merge_stream(
+    cut1 = F.lit(tmin + third).cast("timestamp_ntz")
+    cut2 = F.lit(tmin + 2 * third).cast("timestamp_ntz")
+    slices = (
+        ev.where(F.col("ts") < cut1),
+        ev.where((F.col("ts") >= cut1) & (F.col("ts") < cut2)),
+        ev.where(F.col("ts") >= cut2),
+    )
+    return _staged_replay(
+        spark,
+        "q96",
+        slices,
+        lambda stream, root: run_rollup_merge_stream(
             stream,
             spark,
             state_root=os.path.join(root, "state"),
             checkpoint=os.path.join(root, "ckpt"),
-        )
-        out = state.select(
-            "h", "event_type", "cnt", F.col("val").cast("double").alias("val")
-        ).localCheckpoint(eager=True)  # survives the state-dir cleanup below
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out.orderBy("h", "event_type")
+        ).select("h", "event_type", "cnt", F.col("val").cast("double").alias("val")),
+    ).orderBy("h", "event_type")
 
 
 @register(
@@ -872,92 +974,39 @@ def q83_streaming_kv_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_framework_spark.deploy import ensure_package_on_executors
 
     ensure_package_on_executors(spark)
-    import shutil
-
     ops = kv_ops(spark, sf_dir).where(F.col("op") != "get")
-    staging = os.path.join("/tmp", f"mfs_q83_{uuid.uuid4().hex[:8]}")
-    ops.coalesce(1).write.mode("overwrite").parquet(staging)
-    try:
+    with _scratch_root("q83") as staging:
+        ops.coalesce(1).write.mode("overwrite").parquet(staging)
         stream = spark.readStream.schema(ops.schema).parquet(staging)
         out = run_stream_to_memory(
             streaming_kv_state(stream), spark, output_mode="update", timeout_s=300
         )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)  # memory sink holds the rows
     return out.orderBy("key")
 
 
-# --- q107 (round-9 LIBRARY-FIRST; REGISTERED round 10 by retiring q63
-# under the registry's retirement policy, in q63's scheduled round) ----------
-# The DECONTAMINATING admission cascade: q104's replay shape with the
-# round-9 fourth tier on — a benchmark split (doc_id % 17 == 0, the q105
-# rule) is span-indexed once, the remaining pool streams in two batches,
-# and every tier's decision is hash-checked against a full DuckDB replay
-# (exact + Jaccard + exact-semantic + exact span coverage).
-
-_Q107_SPLIT = 17
-_Q107_CONT = 0.05
+# --- q107/q108/q110: the DECONTAMINATING admission cascades ------------------
+# q104's replay shape with the round-9 fourth tier on — a benchmark split
+# (doc_id % 17 == 0, the q105 rule) is span-indexed once, the remaining pool
+# streams in two batches, and every tier's decision is hash-checked against a
+# full DuckDB replay (exact + Jaccard + exact-semantic + exact span coverage).
+# q108 adds the round-10 quality gate (five tiers) and q110 the round-11
+# perceptual media tier (six tiers, every opt-in tier of the production sink).
 
 
-def _cont_rej_cte(src: str, tag: str) -> str:
-    """Per-doc contaminated-token fraction of ``src`` vs the benchmark
-    span hashes (bref CTE) — the exact span_contamination arithmetic:
-    distinct covered positions / token count, 0.0 on token-free docs.
-    Shared by the q107 oracle and the q108 oracle (registered r11), so
-    the decon arithmetic can never drift between them."""
-    from mapreduce_framework_spark.pipeline.dedup import TOKS_DUCK
-    from mapreduce_framework_spark.pipeline.span_dedup import EXSUB_W, _sliding_duck
-
-    W = EXSUB_W
-    sl = _sliding_duck(W)
-    return f"""
-    {tag}t AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM {src}),
-    {tag}raw AS (
-      SELECT doc_id, unnest({sl}) AS s,
-             unnest(range(1, len({sl}) + 1)) AS pos
-      FROM {tag}t
-    ),
-    {tag}hits AS (
-      SELECT doc_id, CAST(pos AS BIGINT) AS pos FROM {tag}raw
-      WHERE md5(s) IN (SELECT sh FROM bref)
-    ),
-    {tag}cov AS (
-      SELECT DISTINCT doc_id,
-             CAST(unnest(range(pos, pos + {W})) AS BIGINT) AS tpos
-      FROM {tag}hits
-    ),
-    {tag}cnt AS (SELECT doc_id, count(*) AS nc FROM {tag}cov GROUP BY 1),
-    {tag}frac AS (
-      SELECT t.doc_id,
-             CASE WHEN coalesce(len(toks), 0) > 0
-                  THEN CAST(coalesce(nc, 0) AS DOUBLE) / len(toks)
-                  ELSE 0.0 END AS frac
-      FROM {tag}t t LEFT JOIN {tag}cnt USING (doc_id)
-    ),
-    {tag}rej AS (SELECT doc_id, frac FROM {tag}frac WHERE frac >= {_Q107_CONT})"""
-
-
-def _q107_oracle() -> str:
-    from mapreduce_framework_spark.pipeline.dedup import (
-        JACCARD_THRESHOLD,
-        SHINGLES_DUCK,
-        TOKS_DUCK,
-    )
-    from mapreduce_framework_spark.pipeline.semantic_dedup import (
-        SEM_PROBES,
-        SEM_STRIDE,
-        SEMDEDUP_COS,
-    )
-    from mapreduce_framework_spark.pipeline.similarity import _E_CTE_DUCK, _dot_duck
-    from mapreduce_framework_spark.pipeline.span_dedup import EXSUB_W, _sliding_duck
-
-    sl = _sliding_duck(EXSUB_W)  # the bref CTE below hashes the same windows
-    icos = f"{_dot_duck('i.embedding', 'cents.cent')} / (i.norm * cents.cent_norm)"
-    ncos = f"{_dot_duck('nn.embedding', 'cents.cent')} / (nn.norm * cents.cent_norm)"
-    cont_cte = _cont_rej_cte
-
-    return f"""
-    WITH {_E_CTE_DUCK},
+def _decon_oracle(quality_gate: bool = False, media_tier: bool = False) -> str:
+    """The DuckDB oracle of :func:`_decon_replay` with the same switches:
+    q107 (neither), q108 (``quality_gate``) and q110 (both). ``media_tier``
+    also adds the retouch plant to b1."""
+    retouch = """
+      UNION ALL
+      SELECT doc_id + 20000000, 'a' || substr(text, 2) AS text
+      FROM b0 WHERE doc_id % 7 = 3""" if media_tier else ""
+    # ne_on: the shifted plants (+10M re-fetches, +20M retouches, +30M
+    # benchmark copies) carry NULL embeddings in the stream; the doc_id
+    # guard keeps that structural at an SF where vec_id reaches the
+    # shifted range, where a bare equi-join would hand them embeddings
+    return _cascade_oracle(
+        f"""
     bench AS (SELECT doc_id, text FROM documents WHERE doc_id % {_Q107_SPLIT} = 0),
     pool AS (SELECT doc_id, text FROM documents WHERE doc_id % {_Q107_SPLIT} <> 0),
     cut AS (SELECT (max(doc_id) + 1) // 2 AS c FROM pool),
@@ -968,121 +1017,17 @@ def _q107_oracle() -> str:
       UNION ALL
       SELECT doc_id + 10000000, text FROM b0 WHERE doc_id % 50 = 0
       UNION ALL
-      SELECT doc_id + 30000000, text FROM bench WHERE doc_id % 3 = 0
-    ),
-    bt AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM bench),
-    bref AS (
-      SELECT DISTINCT md5(s) AS sh FROM (SELECT unnest({sl}) AS s FROM bt)
-    ),{cont_cte('b0', 'c0')},
-    i0 AS (SELECT * FROM b0 WHERE doc_id NOT IN (SELECT doc_id FROM c0rej)),
-    ex AS (
-      SELECT b1.doc_id AS id2, min(i0.doc_id) AS ex_id
-      FROM i0 JOIN b1 ON md5(coalesce(i0.text, '')) = md5(coalesce(b1.text, ''))
-      GROUP BY 1
-    ),
-    surv AS (SELECT * FROM b1 WHERE doc_id NOT IN (SELECT id2 FROM ex)),
-    t0 AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM i0),
-    sh0 AS (SELECT DISTINCT doc_id, unnest({SHINGLES_DUCK}) AS s FROM t0),
-    sz0 AS (SELECT doc_id, count(*) AS n FROM sh0 GROUP BY doc_id),
-    t1 AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM surv),
-    sh1 AS (SELECT DISTINCT doc_id, unnest({SHINGLES_DUCK}) AS s FROM t1),
-    sz1 AS (SELECT doc_id, count(*) AS n FROM sh1 GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS id1, p.doc_id AS id2, count(*) AS common
-      FROM sh0 a JOIN sh1 p ON a.s = p.s
-      GROUP BY 1, 2
-    ),
-    jac AS (
-      SELECT id1, id2, CAST(common AS DOUBLE) / (x.n + y.n - common) AS jaccard
-      FROM pairs JOIN sz0 x ON pairs.id1 = x.doc_id
-                 JOIN sz1 y ON pairs.id2 = y.doc_id
-      WHERE CAST(common AS DOUBLE) / (x.n + y.n - common) >= {JACCARD_THRESHOLD}
-    ),
-    nb AS (
-      SELECT id2 AS doc_id, id1 AS nd_id, jaccard,
-             row_number() OVER (PARTITION BY id2
-                                ORDER BY jaccard DESC, id1 ASC) AS rn
-      FROM jac
-    ),
-    nd AS (SELECT doc_id, nd_id, jaccard FROM nb WHERE rn = 1),
-    surv2 AS (SELECT * FROM surv WHERE doc_id NOT IN (SELECT doc_id FROM nd)),
-    cents AS (
-      SELECT vec_id AS cent_id, embedding AS cent, norm AS cent_norm
-      FROM e WHERE vec_id % {SEM_STRIDE} = 0
-    ),
-    ie AS (
-      SELECT i0.doc_id, e.embedding, e.norm
-      FROM i0 JOIN e ON i0.doc_id = e.vec_id
-    ),
-    asg_i AS (
-      SELECT doc_id, cent_id FROM (
-        SELECT i.doc_id, cents.cent_id,
-               ROW_NUMBER() OVER (PARTITION BY i.doc_id
-                 ORDER BY {icos} DESC, cents.cent_id) AS r
-        FROM ie i, cents
-      ) WHERE r <= {SEM_PROBES}
-    ),
-    ne AS (
-      -- s.doc_id < 10000000 makes the builder's NULL-embedding policy for
-      -- the shifted plants (+10M re-fetches, +30M benchmark copies)
-      -- STRUCTURAL: at an SF where vec_id reaches the shifted range, the
-      -- bare equi-join would hand plants embeddings the stream never
-      -- carries (round-10 ADVICE).
-      SELECT s.doc_id, e.embedding, e.norm
-      FROM surv2 s JOIN e ON s.doc_id = e.vec_id AND s.doc_id < 10000000
-    ),
-    asg_n AS (
-      SELECT doc_id, cent_id FROM (
-        SELECT nn.doc_id, cents.cent_id,
-               ROW_NUMBER() OVER (PARTITION BY nn.doc_id
-                 ORDER BY {ncos} DESC, cents.cent_id) AS r
-        FROM ne nn, cents
-      ) WHERE r <= {SEM_PROBES}
-    ),
-    scand AS (
-      SELECT DISTINCT a.doc_id AS index_id, b.doc_id AS new_id
-      FROM asg_i a JOIN asg_n b ON a.cent_id = b.cent_id
-    ),
-    sp AS (
-      SELECT scand.new_id, scand.index_id,
-             {_dot_duck('x.embedding', 'y.embedding')} / (x.norm * y.norm) AS cos
-      FROM scand JOIN ie x ON scand.index_id = x.doc_id
-                 JOIN ne y ON scand.new_id = y.doc_id
-    ),
-    sb AS (
-      SELECT new_id AS doc_id, index_id AS sm_id, cos,
-             row_number() OVER (PARTITION BY new_id
-                                ORDER BY cos DESC, index_id ASC) AS rn
-      FROM sp WHERE cos >= {SEMDEDUP_COS}
-    ),
-    sm AS (SELECT doc_id, sm_id, cos FROM sb WHERE rn = 1),
-    surv3 AS (SELECT * FROM surv2 WHERE doc_id NOT IN (SELECT doc_id FROM sm)),{cont_cte('surv3', 'c1')}
-    SELECT b0.doc_id,
-           (c0rej.doc_id IS NULL) AS admitted,
-           CAST(-1 AS BIGINT) AS matched_id,
-           coalesce(c0rej.frac, 0.0) AS score,
-           CASE WHEN c0rej.doc_id IS NOT NULL THEN 'contaminated' END AS tier
-    FROM b0 LEFT JOIN c0rej ON b0.doc_id = c0rej.doc_id
-    UNION ALL
-    SELECT b1.doc_id,
-           (ex.ex_id IS NULL AND nd.nd_id IS NULL AND sm.sm_id IS NULL
-            AND c1rej.doc_id IS NULL) AS admitted,
-           CAST(coalesce(ex.ex_id, nd.nd_id, sm.sm_id, -1) AS BIGINT)
-             AS matched_id,
-           CASE WHEN ex.ex_id IS NOT NULL THEN 1.0
-                WHEN nd.nd_id IS NOT NULL THEN nd.jaccard
-                WHEN sm.sm_id IS NOT NULL THEN sm.cos
-                ELSE coalesce(c1rej.frac, 0.0) END AS score,
-           CASE WHEN ex.ex_id IS NOT NULL THEN 'exact'
-                WHEN nd.nd_id IS NOT NULL THEN 'near_dup'
-                WHEN sm.sm_id IS NOT NULL THEN 'semantic'
-                WHEN c1rej.doc_id IS NOT NULL THEN 'contaminated' END AS tier
-    FROM b1 LEFT JOIN ex ON b1.doc_id = ex.id2
-            LEFT JOIN nd ON b1.doc_id = nd.doc_id
-            LEFT JOIN sm ON b1.doc_id = sm.doc_id
-            LEFT JOIN c1rej ON b1.doc_id = c1rej.doc_id
-    ORDER BY doc_id
-    """
+      SELECT doc_id + 30000000, text FROM bench WHERE doc_id % 3 = 0{retouch}
+    )""",
+        ne_on="s.doc_id = e.vec_id AND s.doc_id < 10000000",
+        quality_gate=quality_gate,
+        decon=True,
+        media_tier=media_tier,
+    )
+
+
+def _q107_oracle() -> str:
+    return _decon_oracle()
 
 
 def _decon_replay(
@@ -1106,11 +1051,7 @@ def _decon_replay(
     doc_id % 7 == 3 seed docs — byte-distinct (md5 misses it) and typically
     shingle-distant, but phash-near its original, the reject class only
     the perceptual tier can attribute."""
-    import shutil
-    import time
-
     from mapreduce_framework_spark.catalog import table
-    from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
     from mapreduce_framework_spark.pipeline.semantic_dedup import stride_centroids
     from mapreduce_framework_spark.pipeline.span_dedup import span_index
 
@@ -1124,13 +1065,7 @@ def _decon_replay(
     )
     max_id = pool.agg(F.max("doc_id")).collect()[0][0]
     if max_id is None:  # empty pool: no batches, no decisions
-        return pool.select(
-            "doc_id",
-            F.lit(True).alias("admitted"),
-            F.lit(-1).cast("long").alias("matched_id"),
-            F.lit(0.0).alias("score"),
-            F.lit(None).cast("string").alias("tier"),
-        )
+        return _empty_decisions(pool, "score")
     cut = (max_id + 1) // 2
     b0 = pool.where(F.col("doc_id") < cut)
     up = pool.where(F.col("doc_id") >= cut)
@@ -1151,75 +1086,26 @@ def _decon_replay(
         b1 = b1.unionByName(retouch)
 
     centroids = stride_centroids(embs_tbl)
-    root = os.path.join("/tmp", f"mfs_q107_{uuid.uuid4().hex[:8]}")
-    staging = os.path.join(root, "staging")
-    os.makedirs(staging)
-    try:
-        now = time.time()
-        for i, part in enumerate((b0, b1)):
-            part.coalesce(1).write.parquet(os.path.join(staging, f"b_{i}"))
-            _set_staged_mtime(os.path.join(staging, f"b_{i}"), now - 300 + i * 100)
-        stream = (
-            spark.readStream.schema(b0.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(staging, "b_*"))
-        )
-        if not centroids.take(1):
-            from mapreduce_framework_spark.streaming.ingest import (
-                run_cascade_ingest_stream,
-            )
-
-            # round-10 ADVICE: the decon tier is purely lexical, so the
-            # no-usable-centroid degradation keeps it — builder and oracle
-            # agree on the contamination tiers even on this path (only the
-            # semantic tier drops, mirroring q104's empty-e degradation).
-            decisions = run_cascade_ingest_stream(
-                stream,
-                spark,
-                fp_index_root=os.path.join(root, "fp_index"),
-                sig_index_root=os.path.join(root, "sig_index"),
-                decisions_root=os.path.join(root, "decisions"),
-                checkpoint=os.path.join(root, "ckpt"),
-                threshold=JACCARD_THRESHOLD,
-                benchmark_span_index=span_index(bench).localCheckpoint(eager=True),
-                cont_threshold=_Q107_CONT,
-                quality_gate=quality_gate,
-                phash_index_root=(
-                    os.path.join(root, "phash_index") if media_tier else None
-                ),
-            ).select(
-                "doc_id",
-                "admitted",
-                "matched_id",
-                F.col("jaccard").alias("score"),
-                "tier",
-            )
-        else:
-            from mapreduce_framework_spark.streaming.ingest import (
-                run_full_cascade_ingest_stream,
-            )
-
-            decisions = run_full_cascade_ingest_stream(
-                stream,
-                spark,
-                fp_index_root=os.path.join(root, "fp_index"),
-                sig_index_root=os.path.join(root, "sig_index"),
-                sem_index_root=os.path.join(root, "sem_index"),
-                decisions_root=os.path.join(root, "decisions"),
-                checkpoint=os.path.join(root, "ckpt"),
-                centroids=centroids,
-                threshold=JACCARD_THRESHOLD,
-                benchmark_span_index=span_index(bench).localCheckpoint(eager=True),
-                cont_threshold=_Q107_CONT,
-                quality_gate=quality_gate,
-                phash_index_root=(
-                    os.path.join(root, "phash_index") if media_tier else None
-                ),
-            )
-        decisions = decisions.localCheckpoint(eager=True)  # survives cleanup
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return decisions.orderBy("doc_id")
+    # the decon, quality and media tiers are lexical or pixel-only, so the
+    # no-usable-centroid fallback in _cascade_sink keeps them (round-10
+    # ADVICE): builder and oracle agree on every tier but the semantic one
+    return _staged_replay(
+        spark,
+        "q107",
+        (b0, b1),
+        lambda stream, root: _cascade_sink(
+            spark,
+            stream,
+            root,
+            centroids,
+            benchmark_span_index=span_index(bench).localCheckpoint(eager=True),
+            cont_threshold=_Q107_CONT,
+            quality_gate=quality_gate,
+            phash_index_root=(
+                os.path.join(root, "phash_index") if media_tier else None
+            ),
+        ),
+    ).orderBy("doc_id")
 
 
 @register(
@@ -1253,229 +1139,12 @@ def q107_decontaminating_admission(spark: SparkSession, sf_dir: str) -> DataFram
     return _decon_replay(spark, sf_dir, quality_gate=False)
 
 
-# --- q108 (round-10 LIBRARY-FIRST; REGISTERED round 11 in q47's retired
-# slot, exactly as the ROUND-11 HANDOFF scheduled) -----------------------------
-# The QUALITY-GATED decontaminating cascade: q107's replay with the
-# round-10 quality tier ON — the FIVE-tier admission shape (quality →
-# exact → MinHash → semantic → span-decontamination), reaching full tier
-# parity with the q105 batch flagship (quality + dedup + decon). The
-# corpus itself supplies the quality rejects (the synthetic docs' dup/
-# top-2-gram distributions straddle the Gopher thresholds by
-# construction, quality.py), so no quality plants are needed; the q107
-# plants keep exercising the other four tiers. Oracle proven at sf0.001
-# AND sf0.01 in round 10 BEFORE registration (the q105/q106/q107
-# playbook).
-
-
-def _gated_oracle(media_tier: bool = False) -> str:
-    """The DuckDB oracle shared by q108 (media_tier=False — byte-
-    identical to its registered r11 text) and the staged q110
-    (media_tier=True): the quality-gated five-tier cascade, plus — when
-    media_tier — the retouch plant in b1 and the perceptual 'media_dup'
-    tier between the exact and MinHash tiers (phash over the indexed
-    seed docs joined to the exact tier's survivors at Hamming <=
-    PHASH_HAMMING_MAX; matched_id = the LOWEST matching index doc_id and
-    score = (cells - its hamming)/cells, exactly
-    multimodal_dedup.phash_match_batch's min/min_by contract)."""
-    from mapreduce_framework_spark.pipeline.dedup import (
-        JACCARD_THRESHOLD,
-        SHINGLES_DUCK,
-        TOKS_DUCK,
-    )
-    from mapreduce_framework_spark.pipeline.multimodal_dedup import (
-        PHASH_CELLS,
-        PHASH_HAMMING_MAX,
-        phash_duck,
-    )
-    from mapreduce_framework_spark.pipeline.quality import quality_reject_duck
-    from mapreduce_framework_spark.pipeline.semantic_dedup import (
-        SEM_PROBES,
-        SEM_STRIDE,
-        SEMDEDUP_COS,
-    )
-    from mapreduce_framework_spark.pipeline.similarity import _E_CTE_DUCK, _dot_duck
-    from mapreduce_framework_spark.pipeline.span_dedup import EXSUB_W, _sliding_duck
-
-    sl = _sliding_duck(EXSUB_W)
-    if media_tier:
-        retouch = """
-      UNION ALL
-      SELECT doc_id + 20000000, 'a' || substr(text, 2) AS text
-      FROM b0 WHERE doc_id % 7 = 3"""
-        media_ctes = f"""{phash_duck('i0', 'mi')},{phash_duck('surv', 'mb')},
-    mdc AS (
-      SELECT b.doc_id, a.doc_id AS md_id,
-             CAST(bit_count(xor(a.phash, b.phash)) AS INT) AS hamming,
-             row_number() OVER (PARTITION BY b.doc_id ORDER BY a.doc_id) AS rn
-      FROM miph a JOIN mbph b
-        ON bit_count(xor(a.phash, b.phash)) <= {PHASH_HAMMING_MAX}
-    ),
-    md AS MATERIALIZED (
-      SELECT doc_id, md_id,
-             ({PHASH_CELLS} - hamming) / CAST({PHASH_CELLS} AS DOUBLE) AS ph_sim
-      FROM mdc WHERE rn = 1
-    ),
-    msurv AS MATERIALIZED (
-      SELECT * FROM surv WHERE doc_id NOT IN (SELECT doc_id FROM md)
-    ),"""
-        surv_src = "msurv"
-        md_null = " AND md.md_id IS NULL"
-        md_coal = "md.md_id, "
-        md_score = "WHEN md.md_id IS NOT NULL THEN md.ph_sim\n                "
-        md_tier = "WHEN md.md_id IS NOT NULL THEN 'media_dup'\n                "
-        md_join = "\n            LEFT JOIN md ON b1.doc_id = md.doc_id"
-    else:
-        retouch = ""
-        media_ctes = ""
-        surv_src = "surv"
-        md_null = ""
-        md_coal = ""
-        md_score = ""
-        md_tier = ""
-        md_join = ""
-    icos = f"{_dot_duck('i.embedding', 'cents.cent')} / (i.norm * cents.cent_norm)"
-    ncos = f"{_dot_duck('nn.embedding', 'cents.cent')} / (nn.norm * cents.cent_norm)"
-
-    return f"""
-    WITH {_E_CTE_DUCK},
-    bench AS (SELECT doc_id, text FROM documents WHERE doc_id % {_Q107_SPLIT} = 0),
-    pool AS (SELECT doc_id, text FROM documents WHERE doc_id % {_Q107_SPLIT} <> 0),
-    cut AS (SELECT (max(doc_id) + 1) // 2 AS c FROM pool),
-    b0 AS (SELECT doc_id, text FROM pool, cut WHERE doc_id < c),
-    up AS (SELECT doc_id, text FROM pool, cut WHERE doc_id >= c),
-    b1 AS (
-      SELECT doc_id, text FROM up
-      UNION ALL
-      SELECT doc_id + 10000000, text FROM b0 WHERE doc_id % 50 = 0
-      UNION ALL
-      SELECT doc_id + 30000000, text FROM bench WHERE doc_id % 3 = 0{retouch}
-    ),
-    bt AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM bench),
-    bref AS (
-      SELECT DISTINCT md5(s) AS sh FROM (SELECT unnest({sl}) AS s FROM bt)
-    ),{quality_reject_duck('b0', 'qz')},
-    l0 AS (SELECT * FROM b0 WHERE doc_id NOT IN (SELECT doc_id FROM qzrej)),{_cont_rej_cte('l0', 'c0')},
-    i0 AS (SELECT * FROM l0 WHERE doc_id NOT IN (SELECT doc_id FROM c0rej)),{quality_reject_duck('b1', 'qo')},
-    l1 AS (SELECT * FROM b1 WHERE doc_id NOT IN (SELECT doc_id FROM qorej)),
-    ex AS (
-      SELECT l1.doc_id AS id2, min(i0.doc_id) AS ex_id
-      FROM i0 JOIN l1 ON md5(coalesce(i0.text, '')) = md5(coalesce(l1.text, ''))
-      GROUP BY 1
-    ),
-    surv AS (SELECT * FROM l1 WHERE doc_id NOT IN (SELECT id2 FROM ex)),{media_ctes}
-    t0 AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM i0),
-    sh0 AS (SELECT DISTINCT doc_id, unnest({SHINGLES_DUCK}) AS s FROM t0),
-    sz0 AS (SELECT doc_id, count(*) AS n FROM sh0 GROUP BY doc_id),
-    t1 AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM {surv_src}),
-    sh1 AS (SELECT DISTINCT doc_id, unnest({SHINGLES_DUCK}) AS s FROM t1),
-    sz1 AS (SELECT doc_id, count(*) AS n FROM sh1 GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS id1, p.doc_id AS id2, count(*) AS common
-      FROM sh0 a JOIN sh1 p ON a.s = p.s
-      GROUP BY 1, 2
-    ),
-    jac AS (
-      SELECT id1, id2, CAST(common AS DOUBLE) / (x.n + y.n - common) AS jaccard
-      FROM pairs JOIN sz0 x ON pairs.id1 = x.doc_id
-                 JOIN sz1 y ON pairs.id2 = y.doc_id
-      WHERE CAST(common AS DOUBLE) / (x.n + y.n - common) >= {JACCARD_THRESHOLD}
-    ),
-    nb AS (
-      SELECT id2 AS doc_id, id1 AS nd_id, jaccard,
-             row_number() OVER (PARTITION BY id2
-                                ORDER BY jaccard DESC, id1 ASC) AS rn
-      FROM jac
-    ),
-    nd AS (SELECT doc_id, nd_id, jaccard FROM nb WHERE rn = 1),
-    surv2 AS (SELECT * FROM {surv_src} WHERE doc_id NOT IN (SELECT doc_id FROM nd)),
-    cents AS (
-      SELECT vec_id AS cent_id, embedding AS cent, norm AS cent_norm
-      FROM e WHERE vec_id % {SEM_STRIDE} = 0
-    ),
-    ie AS (
-      SELECT i0.doc_id, e.embedding, e.norm
-      FROM i0 JOIN e ON i0.doc_id = e.vec_id
-    ),
-    asg_i AS (
-      SELECT doc_id, cent_id FROM (
-        SELECT i.doc_id, cents.cent_id,
-               ROW_NUMBER() OVER (PARTITION BY i.doc_id
-                 ORDER BY {icos} DESC, cents.cent_id) AS r
-        FROM ie i, cents
-      ) WHERE r <= {SEM_PROBES}
-    ),
-    ne AS (
-      -- s.doc_id < 10000000: the shifted plants carry NULL embeddings in
-      -- the stream (the q107 structural policy, round-10 ADVICE)
-      SELECT s.doc_id, e.embedding, e.norm
-      FROM surv2 s JOIN e ON s.doc_id = e.vec_id AND s.doc_id < 10000000
-    ),
-    asg_n AS (
-      SELECT doc_id, cent_id FROM (
-        SELECT nn.doc_id, cents.cent_id,
-               ROW_NUMBER() OVER (PARTITION BY nn.doc_id
-                 ORDER BY {ncos} DESC, cents.cent_id) AS r
-        FROM ne nn, cents
-      ) WHERE r <= {SEM_PROBES}
-    ),
-    scand AS (
-      SELECT DISTINCT a.doc_id AS index_id, b.doc_id AS new_id
-      FROM asg_i a JOIN asg_n b ON a.cent_id = b.cent_id
-    ),
-    sp AS (
-      SELECT scand.new_id, scand.index_id,
-             {_dot_duck('x.embedding', 'y.embedding')} / (x.norm * y.norm) AS cos
-      FROM scand JOIN ie x ON scand.index_id = x.doc_id
-                 JOIN ne y ON scand.new_id = y.doc_id
-    ),
-    sb AS (
-      SELECT new_id AS doc_id, index_id AS sm_id, cos,
-             row_number() OVER (PARTITION BY new_id
-                                ORDER BY cos DESC, index_id ASC) AS rn
-      FROM sp WHERE cos >= {SEMDEDUP_COS}
-    ),
-    sm AS (SELECT doc_id, sm_id, cos FROM sb WHERE rn = 1),
-    surv3 AS (SELECT * FROM surv2 WHERE doc_id NOT IN (SELECT doc_id FROM sm)),{_cont_rej_cte('surv3', 'c1')}
-    SELECT b0.doc_id,
-           (qz.doc_id IS NULL AND c0rej.doc_id IS NULL) AS admitted,
-           CAST(-1 AS BIGINT) AS matched_id,
-           CASE WHEN qz.doc_id IS NOT NULL THEN qz.frac
-                ELSE coalesce(c0rej.frac, 0.0) END AS score,
-           CASE WHEN qz.doc_id IS NOT NULL THEN 'quality'
-                WHEN c0rej.doc_id IS NOT NULL THEN 'contaminated' END AS tier
-    FROM b0 LEFT JOIN qzrej qz ON b0.doc_id = qz.doc_id
-            LEFT JOIN c0rej ON b0.doc_id = c0rej.doc_id
-    UNION ALL
-    SELECT b1.doc_id,
-           (qo.doc_id IS NULL AND ex.ex_id IS NULL{md_null} AND nd.nd_id IS NULL
-            AND sm.sm_id IS NULL AND c1rej.doc_id IS NULL) AS admitted,
-           CAST(coalesce(ex.ex_id, {md_coal}nd.nd_id, sm.sm_id, -1) AS BIGINT)
-             AS matched_id,
-           CASE WHEN qo.doc_id IS NOT NULL THEN qo.frac
-                WHEN ex.ex_id IS NOT NULL THEN 1.0
-                {md_score}WHEN nd.nd_id IS NOT NULL THEN nd.jaccard
-                WHEN sm.sm_id IS NOT NULL THEN sm.cos
-                ELSE coalesce(c1rej.frac, 0.0) END AS score,
-           CASE WHEN qo.doc_id IS NOT NULL THEN 'quality'
-                WHEN ex.ex_id IS NOT NULL THEN 'exact'
-                {md_tier}WHEN nd.nd_id IS NOT NULL THEN 'near_dup'
-                WHEN sm.sm_id IS NOT NULL THEN 'semantic'
-                WHEN c1rej.doc_id IS NOT NULL THEN 'contaminated' END AS tier
-    FROM b1 LEFT JOIN qorej qo ON b1.doc_id = qo.doc_id
-            LEFT JOIN ex ON b1.doc_id = ex.id2{md_join}
-            LEFT JOIN nd ON b1.doc_id = nd.doc_id
-            LEFT JOIN sm ON b1.doc_id = sm.doc_id
-            LEFT JOIN c1rej ON b1.doc_id = c1rej.doc_id
-    ORDER BY doc_id
-    """
-
-
 def _q108_oracle() -> str:
-    return _gated_oracle(media_tier=False)
+    return _decon_oracle(quality_gate=True)
 
 
 def _q110_oracle() -> str:
-    return _gated_oracle(media_tier=True)
+    return _decon_oracle(quality_gate=True, media_tier=True)
 
 
 @register(
@@ -1498,25 +1167,6 @@ def q108_quality_gated_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     policies as q107 (shared _decon_replay body). Registered round 11 by
     retiring q47 (the scheduled swap)."""
     return _decon_replay(spark, sf_dir, quality_gate=True)
-
-
-# --- q110 (staged library-first round 12; REGISTERED round 13 into the
-# retired q36's window slot — registry.py ROUND-13 EXECUTED) -------------------
-# The MEDIA-GATED decontaminating cascade: q108's replay with the round-11
-# multimodal 'media_dup' tier ON — the SIX-tier admission shape (quality →
-# exact → media/phash → MinHash → semantic → span-decontamination), the
-# complete production sink with every opt-in tier engaged. The q107/q108
-# plants keep exercising their tiers; the RETOUCH plant ('a' || substr(text,
-# 2) of the doc_id % 7 == 3 seed docs, ids +20M, NULL embeddings) supplies the reject
-# class only the perceptual tier can attribute — byte-distinct (the md5
-# tier misses it) and typically shingle-distant, but phash-near its
-# original. Oracle = _gated_oracle(media_tier=True), sharing every CTE with
-# the registered q108 text (which stays byte-identical at
-# media_tier=False), plus the phash_duck CTEs of
-# pipeline/multimodal_dedup.py — builder and oracle arithmetic stay
-# unified exactly like the quality tier's quality_reject_duck. Staged with
-# the oracle proven at two SFs (the q105..q109 playbook):
-# tests/test_queries_oracle.py::test_q110_candidate_matches_oracle.
 
 
 @register(

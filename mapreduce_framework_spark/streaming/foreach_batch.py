@@ -37,6 +37,7 @@ from mapreduce_framework_spark.storage import (
     commit_manifest,
     read_manifest_doc,
 )
+from mapreduce_framework_spark.streaming.windows import _run_available_now
 
 STATE_MANIFEST = "_state_manifest.json"  # underscore: invisible to Spark scans
 # current version + the one a redelivered in-flight batch reads — the only
@@ -196,6 +197,35 @@ def make_rollup_merge_batch_fn(spark: SparkSession, state_root: str):
     return apply_batch
 
 
+def _run_merge_stream(
+    stream: DataFrame,
+    make_fn,
+    spark: SparkSession,
+    state_root: str,
+    checkpoint: str,
+    timeout_s: int,
+    what: str,
+) -> DataFrame:
+    """Drive ``stream`` through the merge sink ``make_fn(spark,
+    state_root)`` to completion (availableNow) and return the final
+    persisted state. A stream still running after ``timeout_s`` is
+    stopped and raises TimeoutError; one that processed no batch raises
+    ValueError."""
+    _run_available_now(
+        stream.writeStream.foreachBatch(make_fn(spark, state_root)).option(
+            "checkpointLocation", checkpoint
+        ),
+        timeout_s,
+        f"{what} stream",
+    )
+    state = _latest_state(spark, state_root)
+    if state is None:
+        raise ValueError(
+            f"stream processed no batches — no state version under {state_root}"
+        )
+    return state
+
+
 def run_rollup_merge_stream(
     events_stream: DataFrame,
     spark: SparkSession,
@@ -205,20 +235,10 @@ def run_rollup_merge_stream(
 ) -> DataFrame:
     """Drive the events stream through the rollup-merge sink and return the
     final persisted hourly rollup."""
-    q = (
-        events_stream.writeStream.foreachBatch(
-            make_rollup_merge_batch_fn(spark, state_root)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_merge_stream(
+        events_stream, make_rollup_merge_batch_fn, spark, state_root, checkpoint,
+        timeout_s, "rollup merge",
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"rollup merge stream did not finish in {timeout_s}s")
-    state = _latest_state(spark, state_root)
-    assert state is not None, "stream produced no rollup version"
-    return state
 
 
 def run_kv_merge_stream(
@@ -230,17 +250,7 @@ def run_kv_merge_stream(
 ) -> DataFrame:
     """Drive the ops stream through the foreachBatch merge sink and return
     the final persisted state."""
-    q = (
-        ops_stream.writeStream.foreachBatch(
-            make_kv_merge_batch_fn(spark, state_root)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_merge_stream(
+        ops_stream, make_kv_merge_batch_fn, spark, state_root, checkpoint,
+        timeout_s, "kv merge",
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"kv merge stream did not finish in {timeout_s}s")
-    state = _latest_state(spark, state_root)
-    assert state is not None, "stream produced no state version"
-    return state

@@ -81,6 +81,7 @@ from mapreduce_framework_spark.storage import (
     unreferenced_compact_name,
     write_index_manifest,
 )
+from mapreduce_framework_spark.streaming.windows import _run_available_now
 
 # Fold the delta tail into the compacted artifact once it reaches this many
 # dirs: steady-state per-batch index reads touch 1 compacted dir + a tail of
@@ -1172,15 +1173,13 @@ def _run_stream(stream: DataFrame, make_fn, args: dict, what: str) -> DataFrame:
     import inspect
 
     fn = make_fn(**{k: args[k] for k in inspect.signature(make_fn).parameters})
-    q = (
-        stream.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", args["checkpoint"])
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        stream.writeStream.foreachBatch(fn).option(
+            "checkpointLocation", args["checkpoint"]
+        ),
+        args["timeout_s"],
+        f"{what} stream",
     )
-    if not q.awaitTermination(args["timeout_s"]):
-        q.stop()
-        raise TimeoutError(f"{what} stream did not finish in {args['timeout_s']}s")
     decisions = _index_so_far(args["spark"], args["decisions_root"])
     if decisions is None:
         raise ValueError(

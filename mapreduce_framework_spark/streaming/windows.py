@@ -18,6 +18,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from mapreduce_framework_spark.catalog import ltz_to_ntz_expr
 
@@ -145,23 +146,29 @@ def run_stream_to_memory(
 
     name = f"mem_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join("/tmp", f"ckpt_{name}")
-    q = (
+    writer = (
         stream_df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
     try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            q.stop()
-            raise TimeoutError(
-                f"streaming query {name} did not finish within {timeout_s}s"
-            )
+        q = _run_available_now(writer, timeout_s, f"streaming query {name}")
         if progress_sink is not None:
             progress_sink.extend(q.recentProgress)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
+
+
+def _run_available_now(
+    writer: DataStreamWriter, timeout_s: int, what: str
+) -> StreamingQuery:
+    """Start ``writer`` with an availableNow trigger and wait for it to
+    drain its source. A query still running after ``timeout_s`` is
+    stopped and raises TimeoutError naming ``what``."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"{what} did not finish within {timeout_s}s")
+    return q

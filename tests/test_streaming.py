@@ -802,18 +802,25 @@ def test_streaming_replays_handle_empty_input(spark, tmp_path):
     at 100 TB) must yield the exactly-known empty result, not a crash:
     before the round-5 guards, the three replay builders' 1-row min/max
     sentinel collects returned NULLs and the driver-side arithmetic threw
-    TypeError. The early returns keep the populated path's schema."""
-    import pyarrow as pa
+    TypeError. The early returns keep the populated path's schema — for
+    the cascade replays that is the one shared empty-decisions frame (and
+    q106's rollup over it)."""
     import pyarrow.parquet as pq
 
     from mapreduce_framework_spark.operators.streaming_replay import (
         q94_streaming_session_replay,
         q95_incremental_ingest_dedup,
         q96_incremental_rollup_replay,
+        q103_cascade_admission,
+        q104_full_cascade_admission,
+        q106_admission_report,
+        q107_decontaminating_admission,
+        q108_quality_gated_admission,
+        q110_media_gated_admission,
     )
 
     src = "/root/testdata/sf0.001"
-    for t in ("events", "documents"):
+    for t in ("events", "documents", "embeddings"):
         pq.write_table(
             pq.read_table(f"{src}/{t}.parquet").slice(0, 0),
             str(tmp_path / f"{t}.parquet"),
@@ -838,6 +845,69 @@ def test_streaming_replays_handle_empty_input(spark, tmp_path):
         "cnt",
         "val",
     ]
+
+    out103 = q103_cascade_admission(spark, sf)
+    assert out103.collect() == [] and out103.columns == [
+        "doc_id",
+        "admitted",
+        "matched_id",
+        "jaccard",
+        "tier",
+    ]
+
+    for builder in (
+        q104_full_cascade_admission,
+        q107_decontaminating_admission,
+        q108_quality_gated_admission,
+        q110_media_gated_admission,
+    ):
+        out = builder(spark, sf)
+        assert out.collect() == [] and out.columns == [
+            "doc_id",
+            "admitted",
+            "matched_id",
+            "score",
+            "tier",
+        ], builder.__name__
+
+    out106 = q106_admission_report(spark, sf)
+    assert out106.collect() == [] and out106.columns == [
+        "outcome",
+        "n_docs",
+        "share",
+        "min_score",
+        "avg_score",
+        "max_score",
+    ]
+
+
+def test_merge_runners_raise_when_no_batch_ran(spark, sf_dir, tmp_path):
+    """A merge runner whose stream processed no batch has no state to
+    return: it must raise ValueError, as the ingest runners do. An
+    ``assert`` there would vanish under ``python -O`` and hand the caller
+    None."""
+    from mapreduce_framework_spark.catalog import table
+    from mapreduce_framework_spark.streaming.foreach_batch import (
+        run_kv_merge_stream,
+        run_rollup_merge_stream,
+    )
+
+    ops = kv_ops(spark, sf_dir).where(F.col("op") != "get")
+    events = table(spark, "events", sf_dir)
+    for name, run, schema in (
+        ("kv", run_kv_merge_stream, ops.schema),
+        ("rollup", run_rollup_merge_stream, events.schema),
+    ):
+        staging = tmp_path / f"{name}_staging"
+        staging.mkdir()  # staged source with no files: zero batches
+        stream = spark.readStream.schema(schema).parquet(str(staging))
+        with pytest.raises(ValueError, match="processed no batches"):
+            run(
+                stream,
+                spark,
+                state_root=str(tmp_path / f"{name}_state"),
+                checkpoint=str(tmp_path / f"{name}_ckpt"),
+            )
 
 
 def test_events_loader_excludes_null_ts(spark, tmp_path):
