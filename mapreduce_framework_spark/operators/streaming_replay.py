@@ -432,7 +432,9 @@ def _exact_ctes(index: str, new: str) -> str:
         ON md5(coalesce({index}.text, '')) = md5(coalesce({new}.text, ''))
       GROUP BY 1
     ),
-    surv AS (SELECT * FROM {new} WHERE doc_id NOT IN (SELECT doc_id FROM ex))"""
+    surv AS MATERIALIZED (
+      SELECT * FROM {new} WHERE doc_id NOT IN (SELECT doc_id FROM ex)
+    )"""
 
 
 def _media_ctes(index: str, survivors: str) -> str:

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.catalog import table
@@ -230,9 +230,7 @@ def _minhash_aggs() -> list:
 def _minhash_columns(sh: DataFrame) -> DataFrame:
     """(doc_id, m0..m63): the 64 MinHash values as plain codegen'd min()
     aggregate columns (see minhash_signatures docstring: arrays and
-    lambdas are slower). The aggregates follow the one-call rule: built
-    as SQL strings they take ~57 ms of driver time, against ~245 ms as
-    chained ``F.*`` calls."""
+    lambdas are slower)."""
     return sh.groupBy("doc_id").agg(*_minhash_aggs())
 
 
@@ -261,16 +259,40 @@ def _band_frame(mh: DataFrame) -> DataFrame:
     )
 
 
-def _estimate_pruned(
-    raw: DataFrame, sigs1: DataFrame, sigs2: DataFrame, threshold: float
+def _band_collisions(bands1: DataFrame, bands2: DataFrame) -> DataFrame:
+    """Distinct ``(id1, id2)`` pairs sharing a (band, bsig) key, id1 from
+    ``bands1`` and id2 from ``bands2`` — the LSH candidate equi-join."""
+    a = bands1.alias("a")
+    b = bands2.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bsig") == F.col("b.bsig")))
+        .select(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"))
+        .distinct()
+    )
+
+
+def _lsh_candidates(
+    sigs1: DataFrame,
+    sigs2: DataFrame,
+    threshold: float,
+    bands1: DataFrame | None = None,
 ) -> DataFrame:
-    """The minhash-estimate prune of raw ``(id1, id2)`` band candidates:
-    keep a pair when at least ``64 × (threshold − 0.25)`` of its
-    permutations agree. Ĵ = (matching perms)/64 has σ ≤ 1/16, so the
-    cut sits ≥4σ below any qualifying pair. ``sigs1`` holds the id1 side's
-    m0..m63 and ``sigs2`` the id2 side's (the same frame for a self-join).
-    64 codegen'd equality terms, no arrays; both projections are one
-    ``selectExpr`` call each (the one-call rule, minhash_signatures)."""
+    """MinHash-LSH candidates ``(id1, id2)`` of two m0..m63 frames: the
+    band collisions, then the minhash-estimate prune — keep a pair when at
+    least ``64 × (threshold − 0.25)`` of its permutations agree.
+    ``bands1``: a persisted ``banded_signatures`` layout of ``sigs1``,
+    joined instead of re-deriving its bands.
+
+    The prune is for shingle families with heavy cross-doc sharing (char
+    shingles over a small vocabulary), where band collisions far outnumber
+    true pairs and exact verification of wide sets dominates. Ĵ = (matching
+    perms)/64 is unbiased with σ ≤ 1/16, so the cut sits ≥4σ below any
+    qualifying pair; like banding, it can only drop candidates, and the
+    LSH queries' exact oracles check both recall margins. 64 codegen'd
+    equality terms, no arrays (the one-call rule, minhash_signatures)."""
+    raw = _band_collisions(
+        bands1 if bands1 is not None else _band_frame(sigs1), _band_frame(sigs2)
+    )
     min_matches = int(math.ceil(N_PERMS * max(threshold - 0.25, 0.0)))
     x = sigs1.selectExpr("doc_id AS id1", *[f"m{i} AS x{i}" for i in range(N_PERMS)])
     y = sigs2.selectExpr("doc_id AS id2", *[f"m{i} AS y{i}" for i in range(N_PERMS)])
@@ -278,6 +300,24 @@ def _estimate_pruned(
     return (
         raw.join(x, "id1").join(y, "id2").where(f"{est} >= {min_matches}")
         .select("id1", "id2")
+    )
+
+
+def _jaccard_verified(
+    candidates: DataFrame, sets1: DataFrame, sets2: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact Jaccard verification of ``(id1, id2)`` candidates against one
+    ``(doc_id, shingles)`` set frame per side; pairs at ``threshold`` or
+    above, with their jaccard."""
+    s1 = sets1.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("ss1"))
+    s2 = sets2.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("ss2"))
+    common = F.size(F.array_intersect("ss1", "ss2"))
+    jaccard = common.cast("double") / (F.size("ss1") + F.size("ss2") - common)
+    return (
+        candidates.join(s1, "id1")
+        .join(s2, "id2")
+        .select("id1", "id2", jaccard.alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
     )
 
 
@@ -293,7 +333,7 @@ def q31_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(64 perms) + LSH(16 bands × 4 rows) near-dup pairs, exact-
     verified at J ≥ 0.8 — the 100 TB dedup path: signatures are one scan,
     candidates come from equi-joins on (band, band-signature), and the
-    quadratic exact check runs only inside buckets."""
+    exact check runs only on them (the family body, _lsh_verified_pairs)."""
     return lsh_neardup_pairs(table(spark, "documents", sf_dir))
 
 
@@ -312,10 +352,6 @@ def lsh_neardup_pairs(docs: DataFrame, stop_shingle_df: int | None = None) -> Da
     Semantics with the cap: Jaccard over NON-STOP shingles (standard
     stop-gram removal — boilerplate no longer counts as similarity).
     Default None = exact q31 semantics, oracle-pinned."""
-    # shingling (tokenize+3-gram+distinct) feeds both the signature build
-    # and the exact verification — materialize it once (localCheckpoint:
-    # eager, lineage-truncating, and reclaimed by the ContextCleaner when
-    # the plan is garbage-collected, unlike a never-unpersisted cache)
     sh = shingles_of(docs)
     if stop_shingle_df is not None:
         # document frequency is a partial-aggregated count (sh is distinct
@@ -332,8 +368,7 @@ def lsh_neardup_pairs(docs: DataFrame, stop_shingle_df: int | None = None) -> Da
             .select("s")
         )
         sh = sh.join(stop, "s", "left_anti")
-    sh_cached = sh.localCheckpoint(eager=True)
-    return _lsh_verified_pairs(sh_cached, JACCARD_THRESHOLD)
+    return _lsh_verified_pairs(sh, JACCARD_THRESHOLD)
 
 
 def lsh_band_candidates(sh_cached: DataFrame) -> DataFrame:
@@ -341,53 +376,25 @@ def lsh_band_candidates(sh_cached: DataFrame) -> DataFrame:
     (doc_id, s) shingle frame — exposed for candidate-volume diagnostics
     (the quantity the stop-shingle cap exists to bound)."""
     bands = _band_frame(_minhash_columns(sh_cached))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"))
-        .distinct()
-    )
+    return _band_collisions(bands, bands).where(F.col("id1") < F.col("id2"))
 
 
-def _lsh_verified_pairs(sh_cached: DataFrame, threshold: float) -> DataFrame:
+def _lsh_verified_pairs(sh: DataFrame, threshold: float) -> DataFrame:
     """MinHash(64) + LSH(16 bands × 4 rows) candidate generation, a
     minhash-estimate prune, then exact Jaccard verification — over any
-    materialized (doc_id, s) distinct shingle frame (word n-grams, char
-    n-grams, ... — the caller's choice).
-
-    The estimate prune exists for shingle families with heavy cross-doc
-    sharing (char shingles over a small vocabulary): band collisions there
-    produce far more candidates than true pairs, and exact verification of
-    wide shingle sets is the dominant cost. Ĵ = (matching perms)/64 is an
-    unbiased Jaccard estimator with σ ≤ 1/16, so pruning at threshold−0.25
-    sits ≥4σ below any qualifying pair — the survivors (and only they) pay
-    the exact set intersection, and every emitted pair is still
-    exact-verified. Like banding itself, the prune can only drop
-    candidates, and both recall margins are machine-checked by the exact
-    oracles the LSH queries register."""
+    (doc_id, s) distinct shingle frame (word n-grams, char n-grams, ... —
+    the caller's choice). The all-pairs form of the family's body:
+    ``_lsh_candidates`` and ``_jaccard_verified`` with the corpus on both
+    sides, then ``id1 < id2``, which Catalyst pushes into the band join."""
+    # the shingles feed both the signature build and the exact
+    # verification — materialize them once (localCheckpoint: eager,
+    # lineage-truncating, and reclaimed by the ContextCleaner when the plan
+    # is garbage-collected, unlike a never-unpersisted cache)
+    sh_cached = sh.localCheckpoint(eager=True)
     # the 64 minhash columns feed three consumers (band keys + both sides
     # of the estimate join): materialize once — 65 longs per doc, tiny
     mh = _minhash_columns(sh_cached).localCheckpoint(eager=True)
-    bands = _band_frame(mh)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    raw_candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"))
-        .distinct()
-    )
-    candidates = _estimate_pruned(raw_candidates, mh, mh, threshold)
+    candidates = _lsh_candidates(mh, mh, threshold).where(F.col("id1") < F.col("id2"))
     # exact verification on candidates only — restrict the shingle-set build
     # to docs that actually appear in a candidate pair (semi-join) so the
     # collect_set shuffle is proportional to candidates, not the corpus
@@ -399,23 +406,9 @@ def _lsh_verified_pairs(sh_cached: DataFrame, threshold: float) -> DataFrame:
     sets = (
         sh_cached.join(F.broadcast(cand_docs), "doc_id", "left_semi")
         .groupBy("doc_id")
-        .agg(F.collect_set("s").alias("ss"))
+        .agg(F.collect_set("s").alias("shingles"))
     )
-    s1 = sets.select(F.col("doc_id").alias("id1"), F.col("ss").alias("ss1"))
-    s2 = sets.select(F.col("doc_id").alias("id2"), F.col("ss").alias("ss2"))
-    verified = (
-        candidates.join(s1, "id1")
-        .join(s2, "id2")
-        .select(
-            "id1",
-            "id2",
-            (
-                F.size(F.array_intersect("ss1", "ss2")).cast("double")
-                / (F.size("ss1") + F.size("ss2") - F.size(F.array_intersect("ss1", "ss2")))
-            ).alias("jaccard"),
-        )
-    )
-    return verified.where(F.col("jaccard") >= threshold).orderBy("id1", "id2")
+    return _jaccard_verified(candidates, sets, sets, threshold).orderBy("id1", "id2")
 
 
 # Spark computes the identical fingerprint via the dictionary-encoded
@@ -550,55 +543,79 @@ def q73_simhash_banded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     replacement for q55's all-pairs join. Split the 32-bit fingerprint into
     4 byte-bands; if hamming(a, b) <= 6 then at least one band differs by
     at most 1 bit (pigeonhole: 4 bands x 2 bits each would already be 8).
-    Build side emits, per band, the byte plus its 8 single-bit flips
-    (9 keys/band); probe side emits the exact byte; an equi-join on
-    (band, key) then finds every pair with a <=1-bit band — a shuffle join
-    on a 36-rows-per-doc key table, never a cross join. Exact Hamming
-    verification runs only on candidates."""
+    The byte-band body (:func:`_hamming_band_join`) finds every pair with
+    a <=1-bit band through a shuffle join on a 36-rows-per-doc key table,
+    never a cross join, and verifies the exact Hamming distance inside it."""
     return simhash_banded_pairs(table(spark, "documents", sf_dir))
 
 
 def simhash_banded_pairs(docs: DataFrame) -> DataFrame:
     """Library form of q73: banded SimHash near-dup pairs of any
     (doc_id, text) frame."""
-    # localCheckpoint: probe and build both branch off the fingerprints —
-    # materialize them once instead of recomputing the simhash DAG per branch
-    sims = simhash_of(docs).localCheckpoint(eager=True)
+    return _hamming_pairs(simhash_of(docs), "simhash", SIMHASH_BANDS, HAMMING_MAX)
+
+
+def _hamming_band_join(
+    build_hashes: DataFrame,
+    probe_hashes: DataFrame,
+    hash_col: str,
+    n_bands: int,
+    max_hamming: int,
+    band_cap: int | None = None,
+) -> tuple[DataFrame, Column]:
+    """The byte-band Hamming body of the SimHash and phash families: the
+    candidate join of two ``(doc_id, <hash_col>)`` frames, then the exact
+    Hamming check. Both sides explode into (band, bsig) byte rows; the
+    build side (alias ``a``) adds each byte's 8 single-bit flips.
+    Pigeonhole: hamming ≤ ``max_hamming`` < 2 × ``n_bands`` means some
+    band differs by ≤ 1 bit, so the equi-join emits every such pair —
+    never a cross join — and the check runs inside it (the hash rides
+    along). ``band_cap`` bounds the build side's hot bands
+    (:func:`cap_banded`). Returns the verified join and its hamming."""
     bands = F.expr(
-        f"transform(sequence(0, {SIMHASH_BANDS - 1}), "
-        f"b -> struct(b AS band, shiftright(simhash, 8 * b) & 255 AS byte))"
+        f"transform(sequence(0, {n_bands - 1}), "
+        f"b -> struct(b AS band, shiftright({hash_col}, 8 * b) & 255 AS bsig))"
     )
-    # the fingerprint rides along with the band keys, so the exact Hamming
-    # check runs inside the band join itself — no re-join to fetch it
-    probe = (
-        sims.select("doc_id", "simhash", F.explode(bands).alias("bb"))
-        .select("doc_id", "simhash", "bb.band", F.col("bb.byte").alias("key"))
-    )
-    # byte ^ 0 (exact) plus the 8 single-bit flips
-    variants = F.expr(
-        "transform(sequence(0, 8), f -> IF(f = 0, byte, byte ^ shiftleft(1, f - 1)))"
-    )
-    build = (
-        probe.withColumnRenamed("key", "byte")
-        .select("doc_id", "simhash", "band", F.explode(variants).alias("key"))
-    )
-    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).cast(
-        "int"
-    )
-    return (
-        build.alias("a")
-        .join(
-            probe.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+
+    def byte_bands(hashes: DataFrame) -> DataFrame:
+        return hashes.select("doc_id", hash_col, F.explode(bands).alias("bb")).select(
+            "doc_id", hash_col, "bb.band", "bb.bsig"
         )
-        .where(hamming <= HAMMING_MAX)
-        .select(
+
+    build = byte_bands(build_hashes)
+    if band_cap is not None:
+        build = cap_banded(build, band_cap)
+    variants = F.expr(
+        "transform(sequence(0, 8), f -> IF(f = 0, bsig, bsig ^ shiftleft(1, f - 1)))"
+    )
+    build = build.select("doc_id", hash_col, "band", F.explode(variants).alias("bsig"))
+    hamming = F.bit_count(
+        F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
+    ).cast("int")
+    joined = build.alias("a").join(
+        byte_bands(probe_hashes).alias("b"),
+        (F.col("a.band") == F.col("b.band")) & (F.col("a.bsig") == F.col("b.bsig")),
+    )
+    return joined.where(hamming <= max_hamming), hamming
+
+
+def _hamming_pairs(
+    hashes: DataFrame, hash_col: str, n_bands: int, max_hamming: int
+) -> DataFrame:
+    """All-pairs form: (id1 < id2, hamming) of one hash frame against
+    itself through :func:`_hamming_band_join`; Catalyst pushes the
+    ``id1 < id2`` filter into the band join. Both sides branch off the
+    hashes, so they are materialized once (localCheckpoint) instead of
+    recomputing the hash DAG per side."""
+    hashes = hashes.localCheckpoint(eager=True)
+    joined, hamming = _hamming_band_join(hashes, hashes, hash_col, n_bands, max_hamming)
+    return (
+        joined.select(
             F.col("a.doc_id").alias("id1"),
             F.col("b.doc_id").alias("id2"),
             hamming.alias("hamming"),
         )
+        .where(F.col("id1") < F.col("id2"))
         .distinct()
         .orderBy("id1", "id2")
     )
@@ -868,14 +885,11 @@ def q87_boilerplate_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q84_char_ngram_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character 8-gram near-dup pairs over the WHOLE corpus via
     MinHash(64) + LSH(16 bands × 4 rows) — the unbounded scale path that
-    replaces q72's capped exact self-join. Identical machinery to q31
-    (signatures are 64 codegen'd min() columns, candidates come from band
-    equi-joins, exact Jaccard verification only inside buckets) applied to
-    char shingles: cost is O(docs × 64) + per-bucket candidates, never the
-    all-pairs join that forces q72's cap."""
-    sh = char_shingles_of(table(spark, "documents", sf_dir)).localCheckpoint(
-        eager=True
-    )
+    replaces q72's capped exact self-join. q31's body
+    (``_lsh_verified_pairs``) applied to char shingles: cost is
+    O(docs × 64) + per-bucket candidates, never the all-pairs join that
+    forces q72's cap."""
+    sh = char_shingles_of(table(spark, "documents", sf_dir))
     return _lsh_verified_pairs(sh, CHAR_JACCARD_THRESHOLD)
 
 
@@ -914,9 +928,7 @@ def index_signatures(index_docs: DataFrame, shingler=None) -> DataFrame:
     ``collect_set`` share a single ``groupBy("doc_id")``, with no second
     aggregate and no join back (pinned by
     tests/test_pipeline.py::test_index_signatures_plans_one_aggregate).
-    ``match_batch`` builds the batch side with this same call, so the
-    streaming near-dup tier matches a batch's signature frame and then
-    publishes it (semi-joined to the admitted docs) as the index delta."""
+    ``match_batch`` builds the batch side with this same call."""
     sh = (shingler or shingles_of)(index_docs)
     return sh.groupBy("doc_id").agg(
         *_minhash_aggs(), F.expr("collect_set(s) AS shingles")
@@ -956,12 +968,21 @@ def cap_banded(bands: DataFrame, band_cap: int) -> DataFrame:
     redelivery and compaction. One window shuffle over the band frame —
     a BUILD/COMPACTION-time cost (banded_signatures(band_cap=...),
     compact_transform in the streaming sinks), never per batch."""
+    return _cap_groups(bands, ["band", "bsig"], "doc_id", band_cap)
+
+
+def _cap_groups(
+    frame: DataFrame, keys: list[str], order_col: str, cap: int
+) -> DataFrame:
+    """Keep each ``keys`` group's ``cap`` rows of lowest ``order_col``: the
+    capped ``row_number`` window behind cap_banded and
+    semantic_dedup.cap_cells."""
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy("band", "bsig").orderBy("doc_id")
+    w = Window.partitionBy(*keys).orderBy(order_col)
     return (
-        bands.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= band_cap)
+        frame.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= cap)
         .drop("_rn")
     )
 
@@ -988,6 +1009,9 @@ def banded_signatures(
     return bands if band_cap is None else cap_banded(bands, band_cap)
 
 
+BAND_BUCKETS = 32  # publish_banded_bucketed's default bucket count
+
+
 def publish_banded_bucketed(
     bands: DataFrame,
     name: str,
@@ -1012,21 +1036,20 @@ def publish_banded_bucketed(
     ``n_buckets`` sizes the probe stage's parallelism and per-bucket
     bytes: target the 100 MB–1 GB/bucket band (guide §2.2) — a band
     frame is ~17 raw B/row × 16 rows/doc, so ~4 billion docs/TB of band
-    rows wants thousands of buckets at 100 TB; the local default
-    (SPARK_GRAFT_BAND_BUCKETS, 32) matches the test-scale core count.
+    rows wants thousands of buckets at 100 TB, passed here per
+    deployment; the default (``BAND_BUCKETS``, 32) matches the test-scale
+    core count.
     Shingle-agnostic like the rest of the lifecycle: the same call
     publishes the word-shingle (q91) and char-shingle (q84 tier) band
     indexes. Catalog note: ``saveAsTable`` registers ``name`` in the
     session catalog with the bucket spec; readers in a NEW session must
     re-register the table (same DDL) — reading the bare parquet path
     still works but degrades to the unbucketed plan."""
-    import os as _os
-
     from mapreduce_framework_spark.storage import write_bucketed
 
-    n = n_buckets or int(_os.environ.get("SPARK_GRAFT_BAND_BUCKETS", "32"))
     write_bucketed(
-        bands, name, path, ["band", "bsig"], n, sort_cols=["band", "bsig", "doc_id"]
+        bands, name, path, ["band", "bsig"], n_buckets or BAND_BUCKETS,
+        sort_cols=["band", "bsig", "doc_id"],
     )
 
 
@@ -1040,18 +1063,16 @@ def match_batch(
     """Near-dup matches (id1 = index doc, id2 = new doc, jaccard) of a new
     batch against a PRECOMPUTED index (``index_signatures`` output, read
     back from its parquet table), via MinHash-LSH candidates + estimate
-    prune + exact verification — the cross-side twin of
-    ``_lsh_verified_pairs``. Only the batch side is scanned/shingled here:
-    it is ONE checkpointed ``index_signatures(new_docs)`` frame (one
+    prune + exact verification — ``_lsh_verified_pairs``' body over two
+    sides. Only the batch side is scanned/shingled here: it is ONE
+    checkpointed ``index_signatures(new_docs)`` frame (one
     aggregate, one job) that feeds the band join, the prune and the
     verification; the index side contributes projections of stored
     columns. ``shingler``: must match the index build's (see
     index_signatures). ``index_bands``: the persisted ``banded_signatures``
     artifact — at scale, pass it so the candidate join scans the narrow
     band table instead of re-deriving bands from the 64 minhash columns
-    per batch. The streaming near-dup tier runs the same body
-    (``_match_signatures``) on a batch frame it builds the same way, and
-    then publishes that frame as its index delta."""
+    per batch."""
     batch_sigs = index_signatures(new_docs, shingler).localCheckpoint(eager=True)
     return _match_signatures(index_sigs, batch_sigs, threshold, index_bands)
 
@@ -1062,42 +1083,20 @@ def _match_signatures(
     threshold: float,
     index_bands: DataFrame | None = None,
 ) -> DataFrame:
-    """The body of :func:`match_batch` over two ``index_signatures`` frames.
-    The streaming near-dup tier calls it with its own materialized batch
-    frame, which it then publishes as the admitted docs' index delta
-    instead of re-shingling them."""
-    a = (index_bands if index_bands is not None else _band_frame(index_sigs)).alias("a")
-    b = _band_frame(batch_sigs).alias("b")
-    raw = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bsig") == F.col("b.bsig")))
-        .select(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"))
-        .distinct()
+    """The body of :func:`match_batch` over two ``index_signatures`` frames:
+    the family's ``_lsh_candidates`` + ``_jaccard_verified`` with the index
+    on the id1 side. The streaming near-dup tier calls it with its own
+    materialized batch frame, which it then publishes as the admitted
+    docs' index delta instead of re-shingling them."""
+    candidates = _lsh_candidates(index_sigs, batch_sigs, threshold, index_bands)
+    # index shingle sets come straight off the stored column (candidate-
+    # bounded fetch); batch sets off the batch frame
+    sets_i = index_sigs.join(
+        F.broadcast(candidates.select(F.col("id1").alias("doc_id")).distinct()),
+        "doc_id",
+        "left_semi",
     )
-    candidates = _estimate_pruned(raw, index_sigs, batch_sigs, threshold)
-    # exact verification: index shingle sets come straight off the stored
-    # column (candidate-bounded fetch); batch sets off the batch frame
-    sets_i = (
-        index_sigs.join(
-            F.broadcast(candidates.select(F.col("id1").alias("doc_id")).distinct()),
-            "doc_id",
-            "left_semi",
-        )
-        .select(F.col("doc_id").alias("id1"), F.col("shingles").alias("ss1"))
-    )
-    sets_n = batch_sigs.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("ss2"))
-    verified = (
-        candidates.join(sets_i, "id1")
-        .join(sets_n, "id2")
-        .select(
-            "id1",
-            "id2",
-            (
-                F.size(F.array_intersect("ss1", "ss2")).cast("double")
-                / (F.size("ss1") + F.size("ss2") - F.size(F.array_intersect("ss1", "ss2")))
-            ).alias("jaccard"),
-        )
-    )
-    return verified.where(F.col("jaccard") >= threshold)
+    return _jaccard_verified(candidates, sets_i, batch_sigs, threshold)
 
 
 def cross_snapshot_matches(
@@ -1245,7 +1244,7 @@ def q91_cross_snapshot_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     plays the "new crawl", the lower half the existing index; each new doc
     that near-duplicates (J ≥ 0.8) an index doc is reported with its best
     match (highest Jaccard, ties to the lowest index id). Candidates come
-    from the cross-side LSH band join only — the index never self-joins,
+    from the cross-side band join only (match_batch) — no index self-join,
     so a small batch against a 100 TB index costs O(batch), not O(index).
     The oracle replays the decision with the exact cross-side Jaccard
     join; LSH banding at J ≥ 0.8 has per-pair miss probability < 1e-7 and

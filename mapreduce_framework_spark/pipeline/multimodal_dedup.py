@@ -43,7 +43,8 @@ Scale shape (SCALING.md round 11):
   inlined per exploded row). Exactness bound: s·L and T·n stay inside
   int64 for docs up to ~16M chars even at the max code point — far
   past any real document; the family's giant-doc sweep axis is 1M;
-- candidates come ONLY from the (band, bsig) equi-join — 4 byte-bands ×
+- candidates come ONLY from the (band, bsig) equi-join of q73's
+  byte-band body, pipeline/dedup.py:_hamming_band_join — 4 byte-bands ×
   9 keys/doc on the build side, 4 on the probe side; pigeonhole-complete
   for hamming ≤ PHASH_HAMMING_MAX (≤ 7: 4 bands × ≥2 flips each would
   already be 8);
@@ -55,10 +56,11 @@ Scale shape (SCALING.md round 11):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.catalog import table
+from mapreduce_framework_spark.pipeline.dedup import _hamming_band_join, _hamming_pairs
 from mapreduce_framework_spark.registry import register
 
 PHASH_CELLS = 32  # grid cells = hash bits; 32 reuses q73's 4-byte-band split
@@ -93,10 +95,10 @@ def phash_params(
     64-cell grid per index root (``phash_cells=64`` on the sink or the
     library calls) without editing module constants. Giving only one of
     the pair derives the other (bands = cells / 8 — bands are always
-    byte-wide so ``_variant_frame``'s 8-flip enumeration and the
-    ``& 255`` band extraction stay exact). Bounds: cells must be a
-    multiple of 8 (byte bands) and ≤ 64 (the hash packs one int64; cell
-    63 lands in the sign bit, proven exact by
+    byte-wide so the 8-flip enumeration and the ``& 255`` band
+    extraction of pipeline/dedup.py:_hamming_band_join stay exact).
+    Bounds: cells must be a multiple of 8 (byte bands) and ≤ 64 (the hash
+    packs one int64; cell 63 lands in the sign bit, proven exact by
     tests/test_multimodal_dedup_props.py::test_phash_64_cell_grid_generalizes)."""
     if cells is None and bands is not None:
         cells = 8 * bands
@@ -116,6 +118,27 @@ def phash_params(
             f"phash cells must be in [8, 64] (one int64 hash), got {cells}"
         )
     return cells, bands
+
+
+def _ahash_fn(g: int):
+    """The ``g``-cell aHash (module docstring's grid) of one non-empty
+    int64 pixel array: a closure both Arrow batch paths carry to the
+    executors by value."""
+    import numpy as np
+
+    bit_vals = np.int64(1) << np.arange(g, dtype=np.int64)
+
+    def ahash(a) -> int:
+        length = np.int64(a.shape[0])
+        total = a.sum()
+        bounds = (np.arange(g + 1, dtype=np.int64) * length) // g
+        csum = np.concatenate([[np.int64(0)], np.cumsum(a)])
+        s = csum[bounds[1:]] - csum[bounds[:-1]]
+        n = bounds[1:] - bounds[:-1]
+        bits = (n > 0) & (s * length > total * n)
+        return int((bit_vals[bits]).sum())
+
+    return ahash
 
 
 def _phash_cols(
@@ -150,25 +173,15 @@ def _phash_cols(
     """
     import pandas as pd
 
-    g, _ = phash_params(cells)
+    ahash = _ahash_fn(phash_params(cells)[0])
 
     def batches(it):
         import numpy as np
 
-        bit_vals = (np.int64(1) << np.arange(g, dtype=np.int64))
-
         def one(text: str) -> int:
-            a = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(
-                np.int64
+            return ahash(
+                np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
             )
-            length = np.int64(a.shape[0])
-            total = a.sum()
-            bounds = (np.arange(g + 1, dtype=np.int64) * length) // g
-            csum = np.concatenate([[np.int64(0)], np.cumsum(a)])
-            s = csum[bounds[1:]] - csum[bounds[:-1]]
-            n = bounds[1:] - bounds[:-1]
-            bits = (n > 0) & (s * length > total * n)
-            return int((bit_vals[bits]).sum())
 
         for pdf in it:
             yield pd.DataFrame(
@@ -238,14 +251,12 @@ def phash_of_images(
     at the same ``cells``."""
     import pandas as pd
 
-    g, _ = phash_params(cells)
+    ahash = _ahash_fn(phash_params(cells)[0])
 
     def batches(it):
         import numpy as np
 
         from mapreduce_framework_spark.pipeline.multimodal import decode_image
-
-        bit_vals = (np.int64(1) << np.arange(g, dtype=np.int64))
 
         def one(payload) -> int | None:
             if payload is None or len(payload) == 0:
@@ -254,16 +265,7 @@ def phash_of_images(
             px = np.frombuffer(d["pixels"], dtype=np.uint8).astype(np.int64)
             ch = len(d["mode"])  # 8-bit samples, mode-width pixels
             a = px.reshape(-1, ch).sum(axis=1)
-            length = np.int64(a.shape[0])
-            if length == 0:
-                return None
-            total = a.sum()
-            bounds = (np.arange(g + 1, dtype=np.int64) * length) // g
-            csum = np.concatenate([[np.int64(0)], np.cumsum(a)])
-            s = csum[bounds[1:]] - csum[bounds[:-1]]
-            n = bounds[1:] - bounds[:-1]
-            bits = (n > 0) & (s * length > total * n)
-            return int((bit_vals[bits]).sum())
+            return ahash(a) if a.shape[0] else None
 
         for pdf in it:
             hashes = [one(p) for p in pdf[payload_col]]
@@ -280,65 +282,17 @@ def phash_of_images(
     ).mapInPandas(batches, schema="doc_id bigint, phash bigint").orderBy("doc_id")
 
 
-def _band_frame(hashes: DataFrame, bands: int | None = None) -> DataFrame:
-    """Explode (doc_id, phash) into the probe-side band frame
-    (doc_id, phash, band, bsig) — bsig is the band's exact byte. Column
-    names follow pipeline/dedup.py's band contract so cap_banded applies
-    verbatim as the hot-band guard."""
-    _, nb = phash_params(bands=bands)
-    bands_expr = F.expr(
-        f"transform(sequence(0, {nb - 1}), "
-        f"b -> struct(b AS band, shiftright(phash, 8 * b) & 255 AS bsig))"
-    )
-    return hashes.select(
-        "doc_id", "phash", F.explode(bands_expr).alias("bb")
-    ).select("doc_id", "phash", "bb.band", "bb.bsig")
-
-
-def _variant_frame(band_frame: DataFrame) -> DataFrame:
-    """Build-side variants: per band, the exact byte plus its 8
-    single-bit flips (9 keys/band). Pigeonhole: hamming(a, b) ≤
-    PHASH_HAMMING_MAX < 2·PHASH_BANDS ⇒ some band differs by ≤ 1 bit ⇒
-    the (band, bsig) equi-join emits the pair — candidate generation is
-    provably complete, never a cross join."""
-    variants = F.expr(
-        "transform(sequence(0, 8), f -> IF(f = 0, bsig, bsig ^ shiftleft(1, f - 1)))"
-    )
-    return band_frame.select(
-        "doc_id", "phash", "band", F.explode(variants).alias("bsig")
-    )
-
-
 def phash_banded_pairs(
     docs: DataFrame, cells: int | None = None, bands: int | None = None
 ) -> DataFrame:
     """Library form of q109: perceptual near-dup pairs (id1 < id2,
     hamming ≤ PHASH_HAMMING_MAX) of any (doc_id, text) frame via the
-    banded candidate join + exact Hamming verify — q73's scale shape on
-    the perceptual hash. ``cells``/``bands`` select the grid width per
-    phash_params (default the module constants — q109's registered 32)."""
+    byte-band candidate join + exact Hamming verify it shares with q73
+    (pipeline/dedup.py:_hamming_band_join). ``cells``/``bands`` select the
+    grid width per phash_params (default the module constants — q109's
+    registered 32)."""
     cells, bands = phash_params(cells, bands)
-    hashes = _phash_cols(docs, cells=cells).localCheckpoint(eager=True)
-    probe = _band_frame(hashes, bands=bands)
-    build = _variant_frame(probe)
-    hamming = F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash"))).cast("int")
-    return (
-        build.alias("a")
-        .join(
-            probe.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .where(hamming <= PHASH_HAMMING_MAX)
-        .select(
-            F.col("a.doc_id").alias("id1"),
-            F.col("b.doc_id").alias("id2"),
-            hamming.alias("hamming"),
-        )
-        .distinct()
-        .orderBy("id1", "id2")
-    )
+    return _hamming_pairs(_phash_cols(docs, cells=cells), "phash", bands, PHASH_HAMMING_MAX)
 
 
 # --- incremental lifecycle (the q91 shape: build once, match O(batch)) ------
@@ -367,8 +321,9 @@ def phash_match_batch(
     matching index doc_id among the CANDIDATES (deterministic canonical
     pick, the family rule; with band_cap=None candidates are
     pigeonhole-complete, so this is the global lowest-id match).
-    O(batch): candidates come from the (band, bsig) equi-join of the
-    batch's 4 exact band keys against the index's 9-variant band frame.
+    O(batch): the family's byte-band body (pipeline/dedup.py:
+    _hamming_band_join) joins the batch's 4 exact band keys against the
+    index's 9-variant band frame.
     ``band_cap`` bounds adversarial hot bands via
     pipeline/dedup.py:cap_banded, whose documented semantics apply
     verbatim: every reported match is REAL (a genuine index doc within
@@ -383,33 +338,17 @@ def phash_match_batch(
     ``cells``/``bands`` select the grid width per phash_params and MUST
     match the width ``index_hashes`` was built at — the streaming sinks
     enforce that pairing through the manifest's phash_config stamp."""
-    from mapreduce_framework_spark.pipeline.dedup import cap_banded
-
     cells, bands = phash_params(cells, bands)
-    build_bands = _band_frame(index_hashes, bands=bands)
-    if band_cap is not None:
-        build_bands = cap_banded(build_bands, band_cap)
-    build = _variant_frame(build_bands)
     # materialize the batch hashes once before banding (the match_batch
     # family rule, pipeline/dedup.py): without this the Arrow hash pass
     # would sit under the join and re-run per plan reference
-    probe = _band_frame(
-        _phash_cols(batch_docs, cells=cells).localCheckpoint(eager=True),
-        bands=bands,
+    probe = _phash_cols(batch_docs, cells=cells).localCheckpoint(eager=True)
+    joined, hamming = _hamming_band_join(
+        index_hashes, probe, "phash", bands, PHASH_HAMMING_MAX, band_cap
     )
-    hamming = F.bit_count(F.col("i.phash").bitwiseXOR(F.col("n.phash"))).cast("int")
-    return (
-        build.alias("i")
-        .join(
-            probe.alias("n"),
-            (F.col("i.band") == F.col("n.band")) & (F.col("i.bsig") == F.col("n.bsig")),
-        )
-        .where(hamming <= PHASH_HAMMING_MAX)
-        .groupBy(F.col("n.doc_id").alias("doc_id"))
-        .agg(
-            F.min(F.col("i.doc_id")).alias("matched_id"),
-            F.min_by(hamming, F.col("i.doc_id")).alias("hamming"),
-        )
+    return joined.groupBy(F.col("b.doc_id").alias("doc_id")).agg(
+        F.min(F.col("a.doc_id")).alias("matched_id"),
+        F.min_by(hamming, F.col("a.doc_id")).alias("hamming"),
     )
 
 
@@ -491,9 +430,7 @@ def q109_multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
     """Perceptual (average-hash) near-dup pairs over the multimodal
     payload stand-in — the dedup tier for re-encoded/resized media
     copies that share no bytes. 32-cell integer-exact aHash, q73's
-    pigeonhole byte-band candidate join, exact Hamming verify; oracle is
+    byte-band body (candidate join + exact Hamming verify); oracle is
     the all-pairs exact form (DuckDB side only; the Spark side must stay
-    banded — that asymmetry is the point). Staged library-first in round
-    11, REGISTERED round 12 into the retired q29's window slot
-    (registry.py ROUND-12 EXECUTED)."""
+    banded — that asymmetry is the point)."""
     return phash_banded_pairs(table(spark, "documents", sf_dir))

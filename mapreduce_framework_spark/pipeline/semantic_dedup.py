@@ -56,10 +56,11 @@ split.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.catalog import table
+from mapreduce_framework_spark.pipeline.dedup import _cap_groups
 from mapreduce_framework_spark.registry import register
 from mapreduce_framework_spark.pipeline.similarity import (
     _DOT_SPARK,
@@ -137,8 +138,9 @@ def semantic_dedup(
 ) -> DataFrame:
     """Drop list of cell-bounded semantic dedup: (vec_id, dup_of, cos) for
     every vector condemned by a smaller-id partner sharing one of its
-    cells (see module docstring). ``centroids``: fitted fixed-K codebook
-    (production); default is the stride-derived oracle form.
+    cells (see module docstring), verified by :func:`_cosine_verified`.
+    ``centroids``: fitted fixed-K codebook (production); default is the
+    stride-derived oracle form.
 
     The assignment is materialized once (eager localCheckpoint — the
     match_batch/LSH family precedent): it feeds BOTH sides of the
@@ -153,20 +155,7 @@ def semantic_dedup(
         .distinct()
     )
     e = _norms_spark(embs)
-    x = e.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("e1"), F.col("norm").alias("n1"))
-    y = e.select(F.col("vec_id").alias("id2"), F.col("embedding").alias("e2"), F.col("norm").alias("n2"))
-    pairs = (
-        cand.join(x, "id1")
-        .join(y, "id2")
-        .select(
-            "id1",
-            "id2",
-            (
-                F.expr(_DOT_SPARK.format(a="e1", b="e2")) / (F.col("n1") * F.col("n2"))
-            ).alias("cos"),
-        )
-        .where(F.col("cos") >= F.lit(threshold))
-    )
+    pairs = _cosine_verified(cand, _side(e, "id1", 1), _side(e, "id2", 2), threshold)
     return pairs.groupBy("id2").agg(
         F.min("id1").alias("dup_of"),
         F.min_by("cos", "id1").alias("cos"),
@@ -236,14 +225,7 @@ def cap_cells(index: DataFrame, cell_cap: int) -> DataFrame:
     time cost (``cell_cap`` in the semantic sinks applies it at every
     sem-root compaction via the compact-transform hook), never per
     batch."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("cent_id").orderBy("vec_id")
-    return (
-        index.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= cell_cap)
-        .drop("_rn")
-    )
+    return _cap_groups(index, ["cent_id"], "vec_id", cell_cap)
 
 
 def semantic_match_batch(
@@ -255,13 +237,12 @@ def semantic_match_batch(
     """Semantic matches ``(index_id, new_id, cos)`` of a new batch
     against a PRECOMPUTED ``semantic_index`` artifact (read back from
     parquet): every (index vector, batch vector) pair sharing ≥ 1 cell
-    under the SAME codebook with cosine ≥ ``threshold``. The cross-side
-    twin of :func:`semantic_dedup`'s within-corpus pairs, and the
-    admission primitive of incremental semantic dedup: drop a batch
-    vector iff it has any index match (plus :func:`semantic_dedup` on
-    the batch alone for intra-batch copies), then append the admitted
-    rows' assignments to the index — O(batch) per batch, O(admitted)
-    index growth, exactly the q91/q95 cadence.
+    under the SAME codebook with cosine ≥ ``threshold`` (the cosine check
+    :func:`semantic_dedup` runs). The admission primitive of incremental
+    semantic dedup: drop a batch vector iff it has any index match (plus
+    :func:`semantic_dedup` on the batch alone for intra-batch copies),
+    then append the admitted rows' assignments to the index — O(batch)
+    per batch, O(admitted) index growth, exactly the q91/q95 cadence.
 
     Only the batch side scores centroids here (one broadcast pass over
     the BATCH); the index side contributes stored columns through
@@ -271,10 +252,8 @@ def semantic_match_batch(
     fan-out bound as semantic_dedup)."""
     cents = prepare_centroids(centroids, op="semantic_match_batch")
     n = _norms_spark(new_embs)
-    # the ONLY centroid scoring in the whole match: one eager pass over
-    # the batch (match_batch's localCheckpoint precedent; O(batch×probes)
-    # rows), so its result feeds both the candidate join and the
-    # candidate-bounded fetch without re-planning the broadcast loop
+    # the ONLY centroid scoring (see docstring), materialized so both the
+    # candidate join and the fetch read it without re-planning the loop
     asg_n = assign_cells(new_embs, centroids=cents).localCheckpoint(eager=True)
     cand = (
         index.select(F.col("vec_id").alias("index_id"), "cent_id")
@@ -285,35 +264,38 @@ def semantic_match_batch(
     # candidate-bounded embedding fetch (match_batch's shape): only index
     # rows that are actually candidates are deduped across their probed
     # cells and carried into scoring — never an O(index) distinct
-    xi = (
-        index.join(
-            F.broadcast(cand.select(F.col("index_id").alias("vec_id")).distinct()),
-            "vec_id",
-            "leftsemi",
-        )
-        .select(
-            F.col("vec_id").alias("index_id"),
-            F.col("embedding").alias("e1"),
-            F.col("norm").alias("n1"),
-        )
-        .dropDuplicates(["index_id"])
+    fetched = index.join(
+        F.broadcast(cand.select(F.col("index_id").alias("vec_id")).distinct()),
+        "vec_id",
+        "leftsemi",
     )
-    yn = n.select(
-        F.col("vec_id").alias("new_id"),
-        F.col("embedding").alias("e2"),
-        F.col("norm").alias("n2"),
+    xi = _side(fetched, "index_id", 1).dropDuplicates(["index_id"])
+    return _cosine_verified(cand, xi, _side(n, "new_id", 2), threshold)
+
+
+def _side(vecs: DataFrame, id_col: str, k: int) -> DataFrame:
+    """``(id_col, e{k}, n{k})`` of a ``(vec_id, embedding, norm)`` frame:
+    one side of :func:`_cosine_verified`."""
+    return vecs.select(
+        F.col("vec_id").alias(id_col),
+        F.col("embedding").alias(f"e{k}"),
+        F.col("norm").alias(f"n{k}"),
     )
+
+
+def _cosine_verified(
+    cand: DataFrame, x: DataFrame, y: DataFrame, threshold: float
+) -> DataFrame:
+    """The exact cosine check of the semantic family: the two-column
+    candidate frame joined to each side's ``_side`` projection, pairs at
+    cosine ≥ ``threshold`` with their cos. Shared by semantic_dedup (one
+    corpus on both sides) and semantic_match_batch (index × batch)."""
+    id1, id2 = cand.columns
+    cos = F.expr(_DOT_SPARK.format(a="e1", b="e2")) / (F.col("n1") * F.col("n2"))
     return (
-        cand.join(xi, "index_id")
-        .join(yn, "new_id")
-        .select(
-            "index_id",
-            "new_id",
-            (
-                F.expr(_DOT_SPARK.format(a="e1", b="e2"))
-                / (F.col("n1") * F.col("n2"))
-            ).alias("cos"),
-        )
+        cand.join(x, id1)
+        .join(y, id2)
+        .select(id1, id2, cos.alias("cos"))
         .where(F.col("cos") >= F.lit(threshold))
     )
 

@@ -52,30 +52,11 @@ def get_spark(
         # a planned sort-merge to shuffled-hash at runtime when every
         # post-shuffle partition is small (the threshold is per-partition,
         # so it is scale-safe: a 100 TB join whose partitions exceed it
-        # stays sort-merge and spills gracefully). Both env-overridable.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_MAX", "64m"),
-        )
-        # round 13 (guide §2.2/§6): the two size knobs a 100 TB deployment
-        # re-tunes — scan split size (512m-1g for large sequential scans:
-        # fewer map tasks feeding every shuffle) and AQE's post-shuffle
-        # target partition size (100 MB-1 GB band). Defaults here ARE
-        # Spark's defaults, so local runs and the driver's bench are
-        # byte-identical to an unset session; only the env override
-        # changes anything.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"),
-        )
+        # stays sort-merge and spills gracefully). Scan split and AQE
+        # target partition sizes stay at Spark's defaults; a deployment
+        # re-tunes any of these through ``extra_conf``.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.session.timeZone", "UTC")
