@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.catalog import table
+from mapreduce_framework_spark.functions.text import tokenize, tokenize_duckdb
 from mapreduce_framework_spark.registry import register
 
 
@@ -264,16 +265,16 @@ def q61_correlated_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
 # surface is subsumed by q23's array battery). Builder + oracle stay
 # permanently; dedicated differential:
 # tests/test_queries_oracle.py::test_retired_q63_matches_oracle.
-_Q63_POSEXPLODE_ORACLE = """
+_Q63_POSEXPLODE_ORACLE = f"""
     WITH t AS (
       SELECT doc_id,
-             list_filter(string_split_regex(text, '[^a-zA-Z]+'), w -> w <> '') AS toks
+             {tokenize_duckdb("text")} AS toks
       FROM documents WHERE doc_id < 20
     ),
     p AS (
       SELECT doc_id,
              unnest(list_transform(range(1, len(toks) + 1),
-                                   i -> {'pos': i - 1, 'word': toks[i]})) AS u
+                                   i -> {{'pos': i - 1, 'word': toks[i]}})) AS u
       FROM t
     )
     SELECT doc_id, CAST(u.pos AS INT) AS pos, u.word AS word
@@ -286,9 +287,8 @@ def q63_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (oracle builds {pos, word} structs and unnests — this DuckDB build has
     no WITH ORDINALITY)."""
     docs = table(spark, "documents", sf_dir).where(F.col("doc_id") < 20)
-    toks = F.filter(F.split("text", "[^a-zA-Z]+"), lambda w: w != "")
     return (
-        docs.select("doc_id", F.posexplode(toks).alias("pos", "word"))
+        docs.select("doc_id", F.posexplode(tokenize("text")).alias("pos", "word"))
         .select("doc_id", F.col("pos").cast("int"), "word")
         .orderBy("doc_id", "pos")
     )

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.catalog import table
+from mapreduce_framework_spark.functions.text import tokenize, tokenize_duckdb
 from mapreduce_framework_spark.registry import register
 
 DEC = "decimal(38,6)"
@@ -428,10 +429,10 @@ def q22_scalar_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q23_array_functions",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             list_filter(string_split_regex(text, '[^a-zA-Z]+'), w -> w <> '') AS toks
+             {tokenize_duckdb("text")} AS toks
       FROM documents
     )
     SELECT doc_id,
@@ -447,7 +448,7 @@ def q23_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array function battery over tokenized documents: size, distinct,
     contains, sort+slice+join."""
     docs = table(spark, "documents", sf_dir)
-    toks = F.filter(F.split("text", "[^a-zA-Z]+"), lambda w: w != "")
+    toks = tokenize("text")
     return docs.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),

@@ -630,11 +630,15 @@ def _cascade_oracle(
       FROM (SELECT unnest({_sliding_duck(EXSUB_W)}) AS s FROM bt)
     )""")
     if quality_gate:
+        # the survivors are MATERIALIZED like surv: every later tier reads
+        # them, and inlined each read re-ran the quality filter
         ctes += [
             quality_reject_duck("b0", "qz"),
-            "l0 AS (SELECT * FROM b0 WHERE doc_id NOT IN (SELECT doc_id FROM qzrej))",
+            "l0 AS MATERIALIZED ("
+            "SELECT * FROM b0 WHERE doc_id NOT IN (SELECT doc_id FROM qzrej))",
             quality_reject_duck("b1", "qo"),
-            "l1 AS (SELECT * FROM b1 WHERE doc_id NOT IN (SELECT doc_id FROM qorej))",
+            "l1 AS MATERIALIZED ("
+            "SELECT * FROM b1 WHERE doc_id NOT IN (SELECT doc_id FROM qorej))",
         ]
         seed, new = "l0", "l1"
         seed_tiers.append(("qzrej", None, "qzrej.frac", "quality"))

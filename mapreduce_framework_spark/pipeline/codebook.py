@@ -62,26 +62,46 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.pipeline.similarity import (
-    _DOT_SPARK,
+    _cos,
     _nearest_cells,
     _norms_spark,
+    prepare_centroids,
 )
 
 FIT_ITERS = 8  # Lloyd's iterations; SemDeDup-scale fits converge fast
 
 
-def _dim_of(e: DataFrame, op: str) -> int:
-    """Embedding dimensionality from one row (bounded scalar probe — the
-    array width is corpus-constant but not carried in the schema). Raises
-    on an empty corpus: fitting a codebook on nothing is a caller bug,
-    mirroring prepare_centroids' empty-codebook raise."""
+def _fit_corpus(
+    embs: DataFrame, sample_fraction: float | None, salt: str, op: str
+) -> tuple[DataFrame, int]:
+    """The shared prologue of fit_codebook / refit_codebook: the normed
+    ``(vec_id, embedding, norm)`` fit corpus — the deterministic hash
+    sample ``xxhash64(salt, vec_id) mod 1e6 < fraction·1e6`` when
+    ``sample_fraction`` is set — checkpointed (the fit re-scans it
+    ``iters`` times), and its dimensionality from one row (bounded scalar
+    probe — the array width is corpus-constant but not carried in the
+    schema). Raises on an empty fit corpus: fitting a codebook on nothing
+    is a caller bug, mirroring prepare_centroids' empty-codebook raise."""
+    e = _norms_spark(embs).select("vec_id", "embedding", "norm")
+    if sample_fraction is not None:
+        if not (0.0 < sample_fraction <= 1.0):
+            raise ValueError(
+                f"{op}: sample_fraction must be in (0, 1], got {sample_fraction}"
+            )
+        e = e.where(
+            F.pmod(F.xxhash64(F.lit(salt), F.col("vec_id")), F.lit(1_000_000))
+            < int(sample_fraction * 1_000_000)
+        )
+        # name the sample in the error so an empty SAMPLE of a non-empty
+        # corpus isn't misdiagnosed as an empty corpus
+        op = f"{op} (after sample_fraction={sample_fraction} hash sample)"
     row = e.select(F.size("embedding").alias("d")).take(1)
     if not row:
         raise ValueError(
             f"{op}: cannot fit a codebook on an empty corpus "
             "(no non-zero-norm embeddings)"
         )
-    return row[0]["d"]
+    return e.localCheckpoint(eager=True), row[0]["d"]
 
 
 def fit_codebook(
@@ -102,29 +122,7 @@ def fit_codebook(
     in the consumers, never here."""
     if k < 1:
         raise ValueError(f"fit_codebook: k must be >= 1, got {k}")
-    e = _norms_spark(embs).select("vec_id", "embedding", "norm")
-    if sample_fraction is not None:
-        if not (0.0 < sample_fraction <= 1.0):
-            raise ValueError(
-                f"fit_codebook: sample_fraction must be in (0, 1], got "
-                f"{sample_fraction}"
-            )
-        e = e.where(
-            F.pmod(F.xxhash64(F.lit(salt), F.col("vec_id")), F.lit(1_000_000))
-            < int(sample_fraction * 1_000_000)
-        )
-    dim = _dim_of(
-        e,
-        op=(
-            "fit_codebook"
-            if sample_fraction is None
-            # _dim_of runs AFTER the hash sample: name the sample in the
-            # error so an empty SAMPLE of a non-empty corpus isn't
-            # misdiagnosed as an empty corpus.
-            else f"fit_codebook (after sample_fraction={sample_fraction} hash sample)"
-        ),
-    )
-    e = e.localCheckpoint(eager=True)  # the fit re-scans it iters times
+    e, dim = _fit_corpus(embs, sample_fraction, salt, "fit_codebook")
 
     # deterministic data-order-independent init: K smallest by hash
     seeds = (
@@ -172,10 +170,7 @@ def _lloyd_iterations(e: DataFrame, cents: DataFrame, dim: int, iters: int) -> D
             "vec_id",
             "embedding",
             "cent_id",
-            (
-                F.expr(_DOT_SPARK.format(a="embedding", b="cent"))
-                / (F.col("norm") * F.col("cent_norm"))
-            ).alias("ccos"),
+            _cos("embedding", "cent", "norm", "cent_norm").alias("ccos"),
         )
         asg = scored.groupBy("vec_id").agg(
             F.min_by(
@@ -244,27 +239,7 @@ def refit_codebook(
 
     ``sample_fraction``: same bounded-fit-sample seam as fit_codebook
     (refit on a hash sample of the new corpus; assignment downstream)."""
-    from mapreduce_framework_spark.pipeline.similarity import prepare_centroids
-
-    e = _norms_spark(embs).select("vec_id", "embedding", "norm")
-    if sample_fraction is not None:
-        if not (0.0 < sample_fraction <= 1.0):
-            raise ValueError(
-                f"refit_codebook: sample_fraction must be in (0, 1], got "
-                f"{sample_fraction}"
-            )
-        e = e.where(
-            F.pmod(F.xxhash64(F.lit(salt), F.col("vec_id")), F.lit(1_000_000))
-            < int(sample_fraction * 1_000_000)
-        )
-    dim = _dim_of(
-        e,
-        op=(
-            "refit_codebook"
-            if sample_fraction is None
-            else f"refit_codebook (after sample_fraction={sample_fraction} hash sample)"
-        ),
-    )
+    e, dim = _fit_corpus(embs, sample_fraction, salt, "refit_codebook")
     cents = prepare_centroids(old_centroids, op="refit_codebook").localCheckpoint(
         eager=True
     )
@@ -274,7 +249,6 @@ def refit_codebook(
             f"refit_codebook: old codebook dimensionality {c0['d']} does not "
             f"match the new corpus ({dim})"
         )
-    e = e.localCheckpoint(eager=True)  # the refit re-scans it iters times
     return _lloyd_iterations(e, cents, dim, iters)
 
 
@@ -301,16 +275,21 @@ def codebook_fingerprint(centroids: DataFrame) -> str:
     return hashlib.md5(blob.encode("utf-8")).hexdigest()
 
 
-def quantization_error(embs: DataFrame, centroids: DataFrame) -> float:
+def quantization_error(embs: DataFrame, centroids: DataFrame) -> float | None:
     """Mean cosine distance (1 − cos) of each vector to its nearest cell —
     the quantity Lloyd's iterations monotonically non-increase (up to FP
-    reduction order). Diagnostic helper: ends in one bounded scalar
-    aggregate, so it belongs in fit-quality checks and probes, never in a
-    registered query plan."""
-    from mapreduce_framework_spark.pipeline.similarity import prepare_centroids
+    reduction order) — or None when ``embs`` holds no scorable
+    (non-zero-norm) vector. Diagnostic helper: ends in one bounded scalar
+    aggregate, so it belongs in fit-quality checks, probes and the
+    semantic index's drift log, never in a registered query plan."""
+    return _quantization_error(
+        _norms_spark(embs), prepare_centroids(centroids, op="quantization_error")
+    )
 
-    e = _norms_spark(embs)
-    cents = prepare_centroids(centroids, op="quantization_error")
+
+def _quantization_error(e: DataFrame, cents: DataFrame) -> float | None:
+    """:func:`quantization_error` of a normed frame under a checked
+    codebook."""
     best = _nearest_cells(e, cents, id_col="vec_id", k=1)
     (row,) = best.agg(F.avg(F.lit(1.0) - F.col("ccos")).alias("err")).collect()
-    return float(row["err"])
+    return None if row["err"] is None else float(row["err"])

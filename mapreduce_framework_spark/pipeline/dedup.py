@@ -32,6 +32,7 @@ from mapreduce_framework_spark.functions.hashing import (
     FNV_PRIME,
     TWO32,
 )
+from mapreduce_framework_spark.functions.text import WORD_SPLIT_RE, tokenize_duckdb
 from mapreduce_framework_spark.registry import register
 
 SHINGLE_K = 3
@@ -72,8 +73,9 @@ def _fnv_duck(expr: str) -> str:
     )
 
 
-TOKS_SPARK = "filter(split(text, '[^a-zA-Z]+'), w -> w != '')"
-TOKS_DUCK = "list_filter(string_split_regex(text, '[^a-zA-Z]+'), w -> w <> '')"
+# the word tokenizer of functions/text.py as SQL text over ``text``
+TOKS_SPARK = f"filter(split(text, '{WORD_SPLIT_RE}'), w -> w != '')"
+TOKS_DUCK = tokenize_duckdb("text")
 
 SHINGLES_SPARK = (
     f"CASE WHEN size(toks) >= {SHINGLE_K} THEN "

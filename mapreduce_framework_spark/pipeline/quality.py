@@ -29,6 +29,12 @@ from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.catalog import table
 from mapreduce_framework_spark.functions.text import tokenize, tokenize_duckdb
+from mapreduce_framework_spark.pipeline.sampling import (
+    _INT_QUALITY_DUCK,
+    _PUNCT_DUCK,
+    _int_quality_pass,
+    _punct_chars,
+)
 from mapreduce_framework_spark.registry import register
 
 # Thresholds chosen to split the synthetic corpus (dup_frac spans 0–0.72
@@ -161,15 +167,16 @@ def q88_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Gopher repetition flags above — the streaming counterpart of q105's
 # batch quality stage, completing tier parity between the batch flagship
 # and the cascade. Reject score is dup_frac (the primary Gopher signal;
-# cross-engine bit-exact, the q88 argument).
-_PUNCT_SPARK = "length(regexp_replace(text, '[^a-zA-Z0-9 ]', ''))"
+# cross-engine bit-exact, the q88 argument). ``{tag}rej`` is MATERIALIZED:
+# a cascade oracle reads it from its survivor filter and its decision join,
+# and inlined DuckDB re-ran the tokenize + gram chain at every reference.
 QUALITY_REJ_DUCK_TEMPLATE = """
     {tag}t AS (SELECT doc_id, text, {toks} AS toks FROM {src}),
     {tag}base AS (
       SELECT doc_id,
              CAST(len(toks) AS BIGINT) AS n_tokens,
              CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
-             length(text) - length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS n_punct,
+             {punct} AS n_punct,
              length(text) AS n_chars
       FROM {tag}t
     ),
@@ -192,10 +199,9 @@ QUALITY_REJ_DUCK_TEMPLATE = """
                   ELSE 0.0 END AS top2_frac
       FROM {tag}base b LEFT JOIN {tag}top t USING (doc_id)
     ),
-    {tag}rej AS (
+    {tag}rej AS MATERIALIZED (
       SELECT doc_id, dup_frac AS frac FROM {tag}j
-      WHERE NOT COALESCE(n_tokens >= {min_tokens}
-                         AND 10 * n_punct <= 3 * n_chars
+      WHERE NOT COALESCE({int_rule}
                          AND dup_frac <= {dup_max}
                          AND top2_frac <= {top2_max}, FALSE)
     )"""
@@ -206,13 +212,12 @@ def quality_reject_duck(src: str, tag: str) -> str:
     ``{tag}rej (doc_id, frac)`` — shared by the q108 replay oracle and any
     future quality-gated replay, so builder and oracle can never drift on
     the gate arithmetic."""
-    from mapreduce_framework_spark.pipeline.sampling import MIN_TOKENS
-
     return QUALITY_REJ_DUCK_TEMPLATE.format(
         src=src,
         tag=tag,
         toks=tokenize_duckdb("text"),
-        min_tokens=MIN_TOKENS,
+        punct=_PUNCT_DUCK,
+        int_rule=_INT_QUALITY_DUCK,
         dup_max=DUP_FRAC_MAX,
         top2_max=TOP2_FRAC_MAX,
     )
@@ -232,16 +237,9 @@ def quality_rejects(docs: DataFrame) -> DataFrame:
     Shape: one per-row integer/array pass + the q88 two-level gram
     aggregate — O(batch), no index, no Python."""
     stats = repetition_stats(docs.select("doc_id", "text"))
-    ints = docs.select(
-        "doc_id",
-        (F.length("text") - F.expr(_PUNCT_SPARK)).cast("long").alias("n_punct"),
-        F.length("text").cast("long").alias("n_chars"),
-    )
-    from mapreduce_framework_spark.pipeline.sampling import MIN_TOKENS
-
+    ints = docs.select("doc_id", *_punct_chars())
     passes = (
-        (F.col("n_tokens") >= MIN_TOKENS)
-        & (10 * F.col("n_punct") <= 3 * F.col("n_chars"))
+        _int_quality_pass()
         & (F.col("dup_frac") <= DUP_FRAC_MAX)
         & (F.col("top2_frac") <= TOP2_FRAC_MAX)
     )

@@ -26,7 +26,7 @@ The reference has no sampling/packing surface (batch MR only); these are
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.catalog import table
@@ -307,9 +307,55 @@ def contamination_check(
 
 
 # quality gate in pure integer arithmetic (cross-engine exact by
-# construction): enough tokens, and punctuation under 30% of characters
+# construction): enough tokens, and punctuation under 30% of characters.
+# Defined once per engine for q81/q105 and the streaming quality gate
+# (quality.py:quality_rejects / quality_reject_duck).
 MIN_TOKENS = 5
-_PUNCT_SPARK = "length(regexp_replace(text, '[^a-zA-Z0-9 ]', ''))"
+_PUNCT_RE = "[^a-zA-Z0-9 ]"
+_PUNCT_SPARK = f"length(regexp_replace(text, '{_PUNCT_RE}', ''))"
+_PUNCT_DUCK = f"length(text) - length(regexp_replace(text, '{_PUNCT_RE}', '', 'g'))"
+_INT_QUALITY_DUCK = f"n_tokens >= {MIN_TOKENS} AND 10 * n_punct <= 3 * n_chars"
+
+
+def _punct_chars() -> list[Column]:
+    """``n_punct`` and ``n_chars`` of the ``text`` column, as longs."""
+    return [
+        (F.length("text") - F.expr(_PUNCT_SPARK)).cast("long").alias("n_punct"),
+        F.length("text").cast("long").alias("n_chars"),
+    ]
+
+
+def _int_quality_pass() -> Column:
+    """The integer quality rule over ``n_tokens`` and :func:`_punct_chars`."""
+    return (F.col("n_tokens") >= MIN_TOKENS) & (
+        10 * F.col("n_punct") <= 3 * F.col("n_chars")
+    )
+
+
+def _sample_pack_duck(src: str) -> str:
+    """The q81/q105 oracle tail over the ``(doc_id, lang, source, text)``
+    CTE ``src``: the integer quality rule, the hash sample and the
+    packing, as CTEs ``q``, ``f`` and ``pk`` plus the final SELECT."""
+    return f"""q AS (
+      SELECT doc_id, lang, source,
+             CAST(len({TOKS_DUCK}) AS BIGINT) AS n_tokens,
+             {_PUNCT_DUCK} AS n_punct,
+             length(text) AS n_chars
+      FROM {src}
+    ),
+    f AS (
+      SELECT * FROM q
+      WHERE {_INT_QUALITY_DUCK}
+        AND {_fnv_duck(f"concat({_SALT}, CAST(doc_id AS VARCHAR))")} % 100 < {_RATE_CASE_SQL}
+    ),
+    pk AS (
+      SELECT doc_id, lang, source, n_tokens, {_PACK_START_DUCK} AS start_tok
+      FROM f
+    )
+    SELECT doc_id, lang, source, n_tokens,
+           CAST(start_tok // {SEQ_LEN} AS BIGINT) AS seq_id
+    FROM pk ORDER BY doc_id
+    """
 
 
 @register(
@@ -321,26 +367,7 @@ _PUNCT_SPARK = "length(regexp_replace(text, '[^a-zA-Z0-9 ]', ''))"
       SELECT * FROM documents
       WHERE doc_id NOT IN (SELECT doc_id FROM drop_list)
     ),
-    q AS (
-      SELECT doc_id, lang, source,
-             CAST(len({TOKS_DUCK}) AS BIGINT) AS n_tokens,
-             length(text) - length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS n_punct,
-             length(text) AS n_chars
-      FROM kept
-    ),
-    f AS (
-      SELECT * FROM q
-      WHERE n_tokens >= {MIN_TOKENS} AND 10 * n_punct <= 3 * n_chars
-        AND {_fnv_duck(f"concat({_SALT}, CAST(doc_id AS VARCHAR))")} % 100 < {_RATE_CASE_SQL}
-    ),
-    c AS (
-      SELECT doc_id, lang, source, n_tokens, {_PACK_START_DUCK} AS start_tok
-      FROM f
-    )
-    SELECT doc_id, lang, source, n_tokens,
-           CAST(start_tok // {SEQ_LEN} AS BIGINT) AS seq_id
-    FROM c ORDER BY doc_id
-    """,
+    {_sample_pack_duck("kept")}""",
     tags=("ext", "sampling", "pipeline", "flagship"),
 )
 def q81_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -414,26 +441,7 @@ def _q105_oracle() -> str:
       SELECT k.doc_id, k.lang, k.source, coalesce(c.text, '') AS text
       FROM kept k LEFT JOIN clean c USING (doc_id)
     ),
-    q AS (
-      SELECT doc_id, lang, source,
-             CAST(len({TOKS_DUCK}) AS BIGINT) AS n_tokens,
-             length(text) - length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS n_punct,
-             length(text) AS n_chars
-      FROM dk
-    ),
-    f AS (
-      SELECT * FROM q
-      WHERE n_tokens >= {MIN_TOKENS} AND 10 * n_punct <= 3 * n_chars
-        AND {_fnv_duck(f"concat({_SALT}, CAST(doc_id AS VARCHAR))")} % 100 < {_RATE_CASE_SQL}
-    ),
-    pk AS (
-      SELECT doc_id, lang, source, n_tokens, {_PACK_START_DUCK} AS start_tok
-      FROM f
-    )
-    SELECT doc_id, lang, source, n_tokens,
-           CAST(start_tok // {SEQ_LEN} AS BIGINT) AS seq_id
-    FROM pk ORDER BY doc_id
-    """
+    {_sample_pack_duck("dk")}"""
 
 
 @register(
@@ -505,21 +513,15 @@ def training_corpus(
             carry=("lang", "source"),
         ).select("doc_id", "lang", "source", F.col("clean_text").alias("text"))
 
-    n_punct = (F.length("text") - F.expr(_PUNCT_SPARK)).cast("long")
     q = kept.select(
         "doc_id",
         "lang",
         "source",
         F.size(F.expr(TOKS_SPARK)).cast("long").alias("n_tokens"),
-        n_punct.alias("n_punct"),
-        F.length("text").cast("long").alias("n_chars"),
+        *_punct_chars(),
     )
     h = F.expr(_fnv_sql(f"concat({_SALT}, CAST(doc_id AS STRING))"))
-    f = q.where(
-        (F.col("n_tokens") >= MIN_TOKENS)
-        & (10 * F.col("n_punct") <= 3 * F.col("n_chars"))
-        & ((h % 100) < F.expr(_RATE_CASE_SQL))
-    )
+    f = q.where(_int_quality_pass() & ((h % 100) < F.expr(_RATE_CASE_SQL)))
     return pack_sequences(f).select("doc_id", "lang", "source", "n_tokens", "seq_id")
 
 

@@ -63,10 +63,13 @@ from mapreduce_framework_spark.catalog import table
 from mapreduce_framework_spark.pipeline.dedup import _cap_groups
 from mapreduce_framework_spark.registry import register
 from mapreduce_framework_spark.pipeline.similarity import (
-    _DOT_SPARK,
     _E_CTE_DUCK,
+    _cos,
     _dot_duck,
+    _nearest_cells,
     _norms_spark,
+    _side,
+    _stride_codebook,
     prepare_centroids,
 )
 
@@ -76,15 +79,12 @@ SEM_PROBES = 2   # small cells + multi-probe (best measured tradeoff)
 
 
 def stride_centroids(embs: DataFrame) -> DataFrame:
-    """Deterministic stand-in for a k-means fit: every ``SEM_STRIDE``-th
-    vector as a centroid. Cardinality is n/SEM_STRIDE — scales with the
-    corpus, so this is the TEST/ORACLE form only; at scale pass a fitted
-    fixed-K codebook to :func:`assign_cells` / :func:`semantic_dedup`."""
-    return _norms_spark(embs).where((F.col("vec_id") % SEM_STRIDE) == 0).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("cent"),
-        F.col("norm").alias("cent_norm"),
-    )
+    """The q102 stride codebook of a ``(vec_id, embedding)`` frame: every
+    ``SEM_STRIDE``-th vector (similarity._stride_codebook). Cardinality is
+    n/SEM_STRIDE — scales with the corpus, so this is the TEST/ORACLE form
+    only; at scale pass a fitted fixed-K codebook to :func:`assign_cells` /
+    :func:`semantic_dedup`."""
+    return _stride_codebook(_norms_spark(embs), SEM_STRIDE)
 
 
 def assign_cells(
@@ -106,7 +106,7 @@ def assign_cells(
     place the default is sanctioned (module docstring)."""
     e = _norms_spark(embs)
     if centroids is None:
-        cents = stride_centroids(embs)
+        cents = _stride_codebook(e, SEM_STRIDE)
         # Probe emptiness on the norm-gated frame: a corpus whose vectors
         # are ALL zero-norm is correctly "empty" for cosine purposes (the
         # drop list is empty, not an error) — only a non-empty gated
@@ -126,8 +126,6 @@ def assign_cells(
     # now the assignment pass has NO shuffle at all. Same ccos fold,
     # same (ccos desc, cent_id asc) tie-break — bit-exact drop lists
     # (oracle-pinned by q102 and the two-SF differentials).
-    from mapreduce_framework_spark.pipeline.similarity import _nearest_cells
-
     return _nearest_cells(e, cents, "vec_id", probes).select("vec_id", "cent_id")
 
 
@@ -155,7 +153,9 @@ def semantic_dedup(
         .distinct()
     )
     e = _norms_spark(embs)
-    pairs = _cosine_verified(cand, _side(e, "id1", 1), _side(e, "id2", 2), threshold)
+    pairs = _cosine_verified(
+        cand, _side(e, "id1", "e1", "n1"), _side(e, "id2", "e2", "n2"), threshold
+    )
     return pairs.groupBy("id2").agg(
         F.min("id1").alias("dup_of"),
         F.min_by("cos", "id1").alias("cos"),
@@ -174,11 +174,18 @@ def semantic_index(embs: DataFrame, centroids: DataFrame) -> DataFrame:
     vector. ``centroids`` is REQUIRED here (the artifact only makes
     sense against a fixed fitted codebook — `pipeline/codebook.py`);
     the stride default stays confined to the q102 oracle form."""
-    e = _norms_spark(embs)
-    cents = prepare_centroids(centroids, op="semantic_index")
-    return assign_cells(embs, centroids=cents).join(
-        e.select("vec_id", "embedding", "norm"), "vec_id"
+    return _cell_index(
+        _norms_spark(embs), prepare_centroids(centroids, op="semantic_index")
     )
+
+
+def _cell_index(e: DataFrame, cents: DataFrame) -> DataFrame:
+    """:func:`semantic_index` of a normed frame under a checked codebook:
+    the embedding and norm ride through the assignment pass (``carry``),
+    so no join back on vec_id recovers them."""
+    return _nearest_cells(
+        e, cents, "vec_id", SEM_PROBES, carry=("embedding", "norm")
+    ).select("vec_id", "cent_id", "embedding", "norm")
 
 
 def cap_cells(index: DataFrame, cell_cap: int) -> DataFrame:
@@ -250,11 +257,26 @@ def semantic_match_batch(
     recompute, so the per-batch plan touches the snapshot corpus only
     through the shared-cell join (cell-population-bounded, the same
     fan-out bound as semantic_dedup)."""
-    cents = prepare_centroids(centroids, op="semantic_match_batch")
-    n = _norms_spark(new_embs)
-    # the ONLY centroid scoring (see docstring), materialized so both the
-    # candidate join and the fetch read it without re-planning the loop
-    asg_n = assign_cells(new_embs, centroids=cents).localCheckpoint(eager=True)
+    return _match_cells(
+        index,
+        _norms_spark(new_embs),
+        prepare_centroids(centroids, op="semantic_match_batch"),
+        threshold,
+    )
+
+
+def _match_cells(
+    index: DataFrame, n: DataFrame, cents: DataFrame, threshold: float
+) -> DataFrame:
+    """:func:`semantic_match_batch` of a normed batch ``n`` under a
+    checked codebook."""
+    # the ONLY centroid scoring (see semantic_match_batch), materialized so
+    # both the candidate join and the fetch read it without re-planning
+    asg_n = (
+        _nearest_cells(n, cents, "vec_id", SEM_PROBES)
+        .select("vec_id", "cent_id")
+        .localCheckpoint(eager=True)
+    )
     cand = (
         index.select(F.col("vec_id").alias("index_id"), "cent_id")
         .join(asg_n.select(F.col("vec_id").alias("new_id"), "cent_id"), "cent_id")
@@ -269,29 +291,20 @@ def semantic_match_batch(
         "vec_id",
         "leftsemi",
     )
-    xi = _side(fetched, "index_id", 1).dropDuplicates(["index_id"])
-    return _cosine_verified(cand, xi, _side(n, "new_id", 2), threshold)
-
-
-def _side(vecs: DataFrame, id_col: str, k: int) -> DataFrame:
-    """``(id_col, e{k}, n{k})`` of a ``(vec_id, embedding, norm)`` frame:
-    one side of :func:`_cosine_verified`."""
-    return vecs.select(
-        F.col("vec_id").alias(id_col),
-        F.col("embedding").alias(f"e{k}"),
-        F.col("norm").alias(f"n{k}"),
-    )
+    xi = _side(fetched, "index_id", "e1", "n1").dropDuplicates(["index_id"])
+    return _cosine_verified(cand, xi, _side(n, "new_id", "e2", "n2"), threshold)
 
 
 def _cosine_verified(
     cand: DataFrame, x: DataFrame, y: DataFrame, threshold: float
 ) -> DataFrame:
     """The exact cosine check of the semantic family: the two-column
-    candidate frame joined to each side's ``_side`` projection, pairs at
-    cosine ≥ ``threshold`` with their cos. Shared by semantic_dedup (one
-    corpus on both sides) and semantic_match_batch (index × batch)."""
+    candidate frame joined to each side's ``(id, e1, n1)`` /
+    ``(id, e2, n2)`` projection, pairs at cosine ≥ ``threshold`` with
+    their cos. Shared by semantic_dedup (one corpus on both sides) and
+    semantic_match_batch (index × batch)."""
     id1, id2 = cand.columns
-    cos = F.expr(_DOT_SPARK.format(a="e1", b="e2")) / (F.col("n1") * F.col("n2"))
+    cos = _cos("e1", "e2", "n1", "n2")
     return (
         cand.join(x, id1)
         .join(y, id2)

@@ -20,7 +20,7 @@ would replace the hash join with a centroid assignment join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.catalog import table
@@ -117,23 +117,42 @@ def ann_bruteforce(
     baseline the approximate paths (q35 LSH, q56 IVF) are recall-measured
     against (tests/test_pipeline.py, tools/scaling_probe.py --ann)."""
     e = _norms_spark(embs)
-    q = e.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("norm").alias("qnorm"),
+    q = _side(e.where(F.col("vec_id") < n_queries), *_QUERY)
+    pairs = F.broadcast(q).crossJoin(_side(e, *_CORPUS))
+    return _cosine_top_k(pairs.where(F.col("qid") != F.col("cid")), top_k)
+
+
+def _cos(a: str, b: str, na: str, nb: str) -> Column:
+    """Fold-order cosine of the array columns ``a`` and ``b`` whose norms
+    are ``na`` and ``nb`` (module note: bit-identical to the oracles)."""
+    return F.expr(_DOT_SPARK.format(a=a, b=b)) / (F.col(na) * F.col(nb))
+
+
+# (id, embedding, norm) column names of the query and corpus sides of the
+# ANN re-rank; the corpus side's are also the IVF posting table's columns
+_QUERY = ("qid", "qe", "qnorm")
+_CORPUS = ("cid", "ce", "cnorm")
+
+
+def _side(vecs: DataFrame, id_col: str, emb: str, norm: str) -> DataFrame:
+    """``(id_col, emb, norm)`` of a normed ``(vec_id, embedding, norm)``
+    frame: one side of an exact cosine check (the ANN re-rank here, the
+    semantic family's ``_cosine_verified``)."""
+    return vecs.select(
+        F.col("vec_id").alias(id_col),
+        F.col("embedding").alias(emb),
+        F.col("norm").alias(norm),
     )
-    c = e.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("norm").alias("cnorm"),
-    )
-    pairs = F.broadcast(q).crossJoin(c).where(F.col("qid") != F.col("cid"))
-    cos = (
-        F.expr(_DOT_SPARK.format(a="qe", b="ce")) / (F.col("qnorm") * F.col("cnorm"))
-    ).alias("cos")
+
+
+def _cosine_top_k(pairs: DataFrame, top_k: int) -> DataFrame:
+    """The exact re-rank of every ANN path (q34, q35, the IVF probe):
+    ``(qid, cid, cos, rank)``, each query's ``top_k`` corpus vectors by
+    cosine (ties → smaller cid), over ``(qid, cid)`` pairs that carry the
+    ``_QUERY`` and ``_CORPUS`` side columns."""
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
     return (
-        pairs.select("qid", "cid", cos)
+        pairs.select("qid", "cid", _cos("qe", "ce", "qnorm", "cnorm").alias("cos"))
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= top_k)
         .orderBy("qid", "rank")
@@ -247,26 +266,10 @@ def q35_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "cid")
         .distinct()
     )
-    q = e.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"), F.col("norm").alias("qnorm"))
-    c = e.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"), F.col("norm").alias("cnorm"))
-    scored = (
-        cand.join(F.broadcast(q), "qid")
-        .join(c, "cid")
-        .select(
-            "qid",
-            "cid",
-            (
-                F.expr(_DOT_SPARK.format(a="qe", b="ce"))
-                / (F.col("qnorm") * F.col("cnorm"))
-            ).alias("cos"),
-        )
+    pairs = cand.join(F.broadcast(_side(e, *_QUERY)), "qid").join(
+        _side(e, *_CORPUS), "cid"
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .orderBy("qid", "rank")
-    )
+    return _cosine_top_k(pairs, TOP_K)
 
 
 CORPUS_CHUNK_ROWS = 4096  # corpus tile resident per task at any moment
@@ -501,15 +504,14 @@ def prepare_centroids(centroids: DataFrame, op: str = "ann_ivf") -> DataFrame:
     return cents
 
 
-def ivf_stride_centroids(embs: DataFrame) -> DataFrame:
-    """Deterministic stand-in for a k-means fit: every
-    ``IVF_CENTROID_STRIDE``-th vector. Cardinality is n/stride — scales
-    with the corpus, so this is the TEST/ORACLE form only (same convention
-    as semantic_dedup.stride_centroids); at scale pass a fitted fixed-K
-    codebook to :func:`ann_ivf`, whose broadcast is then O(K·dim)."""
-    return _norms_spark(embs).where(
-        (F.col("vec_id") % IVF_CENTROID_STRIDE) == 0
-    ).select(
+def _stride_codebook(e: DataFrame, stride: int) -> DataFrame:
+    """Deterministic stand-in for a k-means fit over a normed frame
+    ``e``: every ``stride``-th vector is a centroid (``cent_id`` =
+    ``vec_id``). q56 uses ``IVF_CENTROID_STRIDE``, q102 and the cascades
+    ``semantic_dedup.SEM_STRIDE``. Cardinality is n/stride — it scales with
+    the corpus, so this is the TEST/ORACLE form only; at scale pass a
+    fitted fixed-K codebook, whose broadcast is O(K·dim)."""
+    return e.where((F.col("vec_id") % stride) == 0).select(
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").alias("cent"),
         F.col("norm").alias("cent_norm"),
@@ -620,36 +622,11 @@ def _ivf_probe(
         .select("qid", "cid")
         .distinct()
     )
-    q = qn.select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"), F.col("norm").alias("qnorm")
-    )
     rerank = (
-        index.select("cid", "ce", "cnorm")
-        if vectors is None
-        else vectors.select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("ce"),
-            F.col("norm").alias("cnorm"),
-        )
+        index.select(*_CORPUS) if vectors is None else _side(vectors, *_CORPUS)
     )
-    scored = (
-        cand.join(F.broadcast(q), "qid")
-        .join(rerank, "cid")
-        .select(
-            "qid",
-            "cid",
-            (
-                F.expr(_DOT_SPARK.format(a="qe", b="ce"))
-                / (F.col("qnorm") * F.col("cnorm"))
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
-        .orderBy("qid", "rank")
-    )
+    pairs = cand.join(F.broadcast(_side(qn, *_QUERY)), "qid").join(rerank, "cid")
+    return _cosine_top_k(pairs, top_k)
 
 
 def ivf_index(embs: DataFrame, centroids: DataFrame | None = None) -> DataFrame:
@@ -666,7 +643,9 @@ def ivf_index(embs: DataFrame, centroids: DataFrame | None = None) -> DataFrame:
     postings — probing requires the same one the index was built with."""
     e = _norms_spark(embs)
     cents = (
-        ivf_stride_centroids(embs) if centroids is None else prepare_centroids(centroids)
+        _stride_codebook(e, IVF_CENTROID_STRIDE)
+        if centroids is None
+        else prepare_centroids(centroids)
     )
     return _ivf_postings(e, cents)
 
@@ -710,19 +689,14 @@ def ann_ivf(
     # assignment pass, the query filter, and the exact re-rank side — and
     # with stride centroids, BOTH _nearest_cells centroid aggregations —
     # lazy, each consumer re-scanned + re-normed the embeddings (6 scans
-    # in plans/r13/q56_ann_ivf_before.txt). The stride-centroid frame is
-    # derived from the SAME checkpointed rows (identical expression
-    # pipeline as ivf_stride_centroids, so values are bit-identical).
-    # In-process alternating A/B at sf0.1: warm unchanged (2.02 s both —
-    # the repeated subtrees were page-cache-cheap locally), cold 3.3 s vs
-    # 8.8 s (-63%); at scale this is 1 corpus pass instead of 6.
+    # in plans/r13/q56_ann_ivf_before.txt). The stride codebook is derived
+    # from the SAME checkpointed rows. In-process alternating A/B at
+    # sf0.1: warm unchanged (2.02 s both — the repeated subtrees were
+    # page-cache-cheap locally), cold 3.3 s vs 8.8 s (-63%); at scale this
+    # is 1 corpus pass instead of 6.
     e = _norms_spark(embs).localCheckpoint(eager=True)
     cents = (
-        e.where((F.col("vec_id") % IVF_CENTROID_STRIDE) == 0).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("cent"),
-            F.col("norm").alias("cent_norm"),
-        )
+        _stride_codebook(e, IVF_CENTROID_STRIDE)
         if centroids is None
         else prepare_centroids(centroids)
     )

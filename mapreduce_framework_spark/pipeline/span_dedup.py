@@ -43,7 +43,7 @@ registered queries get (tests/test_span_dedup.py); registered round 5 as
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.catalog import table
@@ -224,10 +224,79 @@ def _sliding_spark(w: int) -> str:
     )
 
 
-def _toks_frame(docs: DataFrame) -> DataFrame:
-    """(doc_id, toks): tokenize once; the shared input of every exsub/
-    decontamination stage (shingles, per-doc counts, reassembly)."""
-    return docs.withColumn("toks", F.expr(TOKS_SPARK)).select("doc_id", "toks")
+def _toks_frame(docs: DataFrame, carry: tuple = ()) -> DataFrame:
+    """(doc_id[, *carry], toks): tokenize once; the shared input of every
+    exsub/decontamination stage (shingles, per-doc counts, reassembly)."""
+    return docs.withColumn("toks", F.expr(TOKS_SPARK)).select("doc_id", *carry, "toks")
+
+
+def _n_tokens(toks: DataFrame, carry: tuple = ()) -> DataFrame:
+    """(doc_id[, *carry], n_tokens) of a ``_toks_frame``. NULL text
+    tokenizes to a NULL array on both engines; the stated policy
+    (dirty-data convention, as q101) is n_tokens = 0, no drops, an empty
+    residue — coalesced identically in the oracles."""
+    return toks.select(
+        "doc_id",
+        *carry,
+        F.coalesce(F.size("toks"), F.lit(0)).cast("long").alias("n_tokens"),
+    )
+
+
+def _covered(inst: DataFrame, w: int) -> DataFrame:
+    """Distinct (doc_id, tpos): every token position inside one of the
+    w-token windows ``inst`` (doc_id, pos) starts — keyed by position, so
+    bounded by document length (no hot key even when one window repeats
+    everywhere)."""
+    return inst.select(
+        "doc_id", F.explode(F.expr(f"sequence(pos, pos + {w - 1})")).alias("tpos")
+    ).distinct()
+
+
+def _index_hits(toks: DataFrame, index: DataFrame, w: int) -> DataFrame:
+    """``_covered`` positions of the batch windows whose hash is in the
+    reference ``span_index``: only the batch is shingled; the index
+    contributes one semi-join side on the hash."""
+    hit = _shingle_rows(toks, w).join(index.select("sh").distinct(), "sh", "leftsemi")
+    return _covered(hit, w)
+
+
+def _span_stats(covered: DataFrame, count_col: str) -> DataFrame:
+    """(doc_id, count_col, n_spans) of a ``_covered`` frame: the covered
+    token count and the number of maximal runs of consecutive positions
+    (a per-doc lag window, bounded by document length)."""
+    per_doc = Window.partitionBy("doc_id").orderBy("tpos")
+    new_run = F.col("prev").isNull() | (F.col("tpos") > F.col("prev") + 1)
+    return (
+        covered.withColumn("prev", F.lag("tpos").over(per_doc))
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias(count_col),
+            F.sum(F.when(new_run, 1).otherwise(0)).alias("n_spans"),
+        )
+    )
+
+
+def _residue(toks: DataFrame, covered: DataFrame) -> DataFrame:
+    """(doc_id, clean_text, n_kept): the tokens of a ``_toks_frame`` at no
+    ``covered`` position, space-joined in position order. Docs with no
+    surviving token emit no row."""
+    tok_rows = toks.select(
+        "doc_id", F.posexplode("toks").alias("tpos0", "tok")
+    ).select("doc_id", (F.col("tpos0") + 1).alias("tpos"), "tok")
+    return (
+        tok_rows.join(covered, ["doc_id", "tpos"], "left_anti")
+        .groupBy("doc_id")
+        .agg(
+            F.concat_ws(
+                " ",
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("tpos", "tok"))),
+                    lambda x: x["tok"],
+                ),
+            ).alias("clean_text"),
+            F.count(F.lit(1)).alias("n_kept"),
+        )
+    )
 
 
 def _shingle_rows(toks: DataFrame, w: int) -> DataFrame:
@@ -251,8 +320,6 @@ def exact_substring_dedup(docs: DataFrame, w: int = EXSUB_W) -> DataFrame:
     w-shingle (comment block above); n_spans counts the maximal merged
     drop spans, clean_fp is the md5 of the surviving tokens space-joined
     ('' for empty docs). Every input document appears in the output."""
-    from pyspark.sql import Window
-
     # tokenize the corpus ONCE: toks feeds the shingle build, the per-doc
     # token counts, and the reassembly rows (lazy, each consumer would
     # re-run the tokenizer over the corpus)
@@ -270,46 +337,14 @@ def exact_substring_dedup(docs: DataFrame, w: int = EXSUB_W) -> DataFrame:
     redundant = inst.join(first, "sh").where(F.col("key") != F.col("min_key"))
     # covered feeds the span stats AND the clean-text anti-join — one
     # materialization (rows = covered positions, bounded by tokens)
-    covered = redundant.select(
-        "doc_id", F.explode(F.expr(f"sequence(pos, pos + {w - 1})")).alias("tpos")
-    ).distinct().localCheckpoint(eager=True)
-    per_doc = Window.partitionBy("doc_id").orderBy("tpos")
-    spans = (
-        covered.withColumn("prev", F.lag("tpos").over(per_doc))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_dup_tokens"),
-            F.sum(
-                F.when(F.col("prev").isNull() | (F.col("tpos") > F.col("prev") + 1), 1).otherwise(0)
-            ).alias("n_spans"),
-        )
-    )
-    tok_rows = toks.select(
-        "doc_id", F.posexplode("toks").alias("tpos0", "tok")
-    ).select("doc_id", (F.col("tpos0") + 1).alias("tpos"), "tok")
-    clean = (
-        tok_rows.join(covered, ["doc_id", "tpos"], "left_anti")
-        .groupBy("doc_id")
-        .agg(
-            F.md5(
-                F.concat_ws(
-                    " ",
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("tpos", "tok"))),
-                        lambda x: x["tok"],
-                    ),
-                )
-            ).alias("clean_fp")
-        )
-    )
-    # NULL text tokenizes to a NULL array on both engines; the stated
-    # policy (dirty-data convention, as q101) is n_tokens = 0, no drops,
-    # md5('') residue — coalesced identically in the oracle's base CTE
-    base = toks.select(
-        "doc_id", F.coalesce(F.size("toks"), F.lit(0)).cast("long").alias("n_tokens")
+    covered = _covered(redundant, w).localCheckpoint(eager=True)
+    spans = _span_stats(covered, "n_dup_tokens")
+    clean = _residue(toks, covered).select(
+        "doc_id", F.md5("clean_text").alias("clean_fp")
     )
     return (
-        base.join(spans, "doc_id", "left")
+        _n_tokens(toks)
+        .join(spans, "doc_id", "left")
         .join(clean, "doc_id", "left")
         .select(
             "doc_id",
@@ -419,31 +454,9 @@ def span_contamination(
     contributes one semi-join side on the hash — O(batch) per batch, and
     the coverage explode is keyed by (doc_id, tpos), bounded by document
     length (no corpus-wide hot key even when one window hits everywhere)."""
-    from pyspark.sql import Window
-
     toks = _toks_frame(new_docs).localCheckpoint(eager=True)  # tokenize once
-    inst = _shingle_rows(toks, w)
-    hit = inst.join(index.select("sh").distinct(), "sh", "leftsemi")
-    covered = hit.select(
-        "doc_id", F.explode(F.expr(f"sequence(pos, pos + {w - 1})")).alias("tpos")
-    ).distinct()
-    per_doc = Window.partitionBy("doc_id").orderBy("tpos")
-    spans = (
-        covered.withColumn("prev", F.lag("tpos").over(per_doc))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_cont_tokens"),
-            F.sum(
-                F.when(
-                    F.col("prev").isNull() | (F.col("tpos") > F.col("prev") + 1), 1
-                ).otherwise(0)
-            ).alias("n_spans"),
-        )
-    )
-    base = toks.select(
-        "doc_id", F.coalesce(F.size("toks"), F.lit(0)).cast("long").alias("n_tokens")
-    )
-    return base.join(spans, "doc_id", "left").select(
+    spans = _span_stats(_index_hits(toks, index, w), "n_cont_tokens")
+    return _n_tokens(toks).join(spans, "doc_id", "left").select(
         "doc_id",
         "n_tokens",
         F.coalesce("n_cont_tokens", F.lit(0)).cast("long").alias("n_cont_tokens"),
@@ -469,39 +482,9 @@ def decontaminate(
     (family policy). ``carry``: passthrough columns of ``new_docs`` (e.g.
     lang/source) preserved on the output so a composed pipeline
     (sampling.py:training_corpus) needs no re-join against the input."""
-    toks = (
-        new_docs.withColumn("toks", F.expr(TOKS_SPARK))
-        .select("doc_id", *carry, "toks")
-        .localCheckpoint(eager=True)
-    )  # tokenize once
-    inst = _shingle_rows(toks.select("doc_id", "toks"), w)
-    hit = inst.join(index.select("sh").distinct(), "sh", "leftsemi")
-    covered = hit.select(
-        "doc_id", F.explode(F.expr(f"sequence(pos, pos + {w - 1})")).alias("tpos")
-    ).distinct()
-    tok_rows = toks.select(
-        "doc_id", F.posexplode("toks").alias("tpos0", "tok")
-    ).select("doc_id", (F.col("tpos0") + 1).alias("tpos"), "tok")
-    clean = (
-        tok_rows.join(covered, ["doc_id", "tpos"], "left_anti")
-        .groupBy("doc_id")
-        .agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("tpos", "tok"))),
-                    lambda x: x["tok"],
-                ),
-            ).alias("clean_text"),
-            F.count(F.lit(1)).alias("n_kept"),
-        )
-    )
-    base = toks.select(
-        "doc_id",
-        *carry,
-        F.coalesce(F.size("toks"), F.lit(0)).cast("long").alias("n_tokens"),
-    )
-    return base.join(clean, "doc_id", "left").select(
+    toks = _toks_frame(new_docs, carry).localCheckpoint(eager=True)  # tokenize once
+    clean = _residue(toks, _index_hits(toks, index, w))
+    return _n_tokens(toks, carry).join(clean, "doc_id", "left").select(
         "doc_id",
         *carry,
         "n_tokens",

@@ -5,16 +5,16 @@ applyInPandasWithState): ``foreachBatch`` hands each micro-batch to
 arbitrary batch code, here a MERGE of the batch's per-key fold into a
 persisted state table — the standard lakehouse "streaming upsert" shape.
 
-State versions are written as ``state_v{batch_id}`` directories (write-new
-then read-latest), which keeps each batch's write atomic-by-directory the
-same way the reference commits via temp-file + rename
-(src/mr/worker.go:68-75); a table format (Delta/Iceberg) would replace the
-versioned directories with a real MERGE INTO.
+State versions are written as ``state_v{batch_id}_e{epoch}`` directories
+(write-new then read-latest), which keeps each batch's write
+atomic-by-directory the same way the reference commits via temp-file +
+rename (src/mr/worker.go:68-75); a table format (Delta/Iceberg) would
+replace the versioned directories with a real MERGE INTO.
 
 Round 7: the root is addressed through a STATE MANIFEST (the ingest-index
 discipline of streaming/ingest.py applied to the latest-pointer shape):
-one atomic JSON commit per batch records the retained version numbers, so
-the read path never lists directories (object-storage-safe), and
+one atomic JSON commit per batch records the retained versions and their
+dir names, so the read path never lists directories (object-storage-safe), and
 retention is bounded — only the last ``STATE_KEEP`` versions survive a
 commit, because the strictly-before redelivery rule only ever needs the
 version just below the in-flight batch. Without retention a 1e5-batch
@@ -77,7 +77,7 @@ def _latest_state(
                 "checkpoint and state root belong to different streams"
             )
         return None
-    path = os.path.join(state_root, f"state_v{eligible[-1]}")
+    path = os.path.join(state_root, _state_dir(man, eligible[-1]))
     if not os.path.isdir(path):
         raise ValueError(
             f"state manifest references missing dir {path} — refusing to "
@@ -86,32 +86,45 @@ def _latest_state(
     return spark.read.parquet(path)
 
 
+def _state_dir(man: dict, version: int) -> str:
+    """The dir name the state manifest ``man`` records for ``version``.
+    Writers epoch-suffix it (_write_state_version); a version committed
+    before the manifest recorded names lives at ``state_v{version}``."""
+    return man.get("dirs", {}).get(str(version), f"state_v{version}")
+
+
 def _write_state_version(
     state: DataFrame, state_root: str, batch_id: int, epoch: int
 ) -> None:
-    """Write ``state_v{batch_id}`` and publish it to the manifest (atomic
-    JSON commit), then prune versions that fell out of the ``STATE_KEEP``
-    retention window — strictly AFTER the commit, so a crash anywhere
-    leaves either the old manifest with all its dirs or the new one with
-    harmless orphans. Every manifest field outside the retention window —
-    including the epoch — is preserved by the rewrite.
+    """Write ``state_v{batch_id}_e{epoch}`` and publish it to the manifest
+    (atomic JSON commit that records the dir name), then prune versions
+    that fell out of the ``STATE_KEEP`` retention window — strictly AFTER
+    the commit, so a crash anywhere leaves either the old manifest with
+    all its dirs or the new one with harmless orphans. Every manifest
+    field outside the retention window — including the epoch — is
+    preserved by the rewrite.
 
     ``epoch``: the writer's fencing token, checked BEFORE the state write
-    and enforced again at the manifest commit. The early check is what
-    keeps a fenced sink that redelivers a batch the new owner already
-    committed from overwriting that owner's ``state_v{batch_id}``. One race
-    remains: a takeover that lands while this write is already running
-    still has its dir overwritten; the commit then fails fenced."""
+    and enforced again at the manifest commit. The early check cannot
+    cover a takeover that lands while the write is running; the epoch in
+    the dir name does, as with index deltas (ingest._publish_delta): a
+    fenced writer can only ever write a dir that no committed manifest
+    references, and its commit then fails fenced. The owner's next
+    commit prunes the orphan."""
     path = os.path.join(state_root, STATE_MANIFEST)
     check_manifest_epoch(path, epoch)
-    state.write.mode("overwrite").parquet(os.path.join(state_root, f"state_v{batch_id}"))
+    name = f"state_v{batch_id}_e{epoch}"
+    state.write.mode("overwrite").parquet(os.path.join(state_root, name))
     man = read_manifest_doc(path)
+    man.setdefault("dirs", {})[str(batch_id)] = name
     man["versions"] = sorted(set(man["versions"]) | {batch_id})[-STATE_KEEP:]
+    man["dirs"] = {str(v): _state_dir(man, v) for v in man["versions"]}
     # the fencing token is enforced AT the commit through the backend seam
     # (conditional PUT on object storage, last-moment re-check on POSIX)
     commit_manifest(path, man, expected_epoch=epoch)
+    keep = set(man["dirs"].values())
     for d in os.listdir(state_root):
-        if d.startswith("state_v") and int(d.split("state_v")[1]) not in man["versions"]:
+        if d.startswith("state_v") and d not in keep:
             shutil.rmtree(os.path.join(state_root, d), ignore_errors=True)
 
 

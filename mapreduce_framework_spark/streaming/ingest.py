@@ -197,23 +197,6 @@ DRIFT_WINDOW_MAX = 256  # manifest keeps at most this many drift entries
 DRIFT_BASELINE_K = 4  # baseline = median of the first K logged batches
 
 
-def _batch_quantization_error(batch_embs: DataFrame, centroids: DataFrame) -> float | None:
-    """Mean 1−cos of the batch's (nonzero-norm) vectors to their nearest
-    centroid; None when the batch carries no scorable vector (no signal,
-    nothing logged)."""
-    from mapreduce_framework_spark.pipeline.similarity import (
-        _nearest_cells,
-        _norms_spark,
-        prepare_centroids,
-    )
-
-    e = _norms_spark(batch_embs)
-    cents = prepare_centroids(centroids, op="_batch_quantization_error")
-    best = _nearest_cells(e, cents, id_col="vec_id", k=1)
-    (row,) = best.agg(F.avg(F.lit(1.0) - F.col("ccos")).alias("err")).collect()
-    return None if row["err"] is None else float(row["err"])
-
-
 def _log_drift(
     index_root: str, batch_id: int, qerr: float | None, epoch: int
 ) -> None:
@@ -314,16 +297,9 @@ def refresh_semantic_root_if_needed(
 
     if not needs_refit(index_root, threshold=threshold, window=window):
         return None
-    man = read_index_manifest(index_root)
-    paths = manifest_visible_paths(index_root, man)
-    if not paths:
+    embs = _committed_vectors(spark, index_root, read_index_manifest(index_root))
+    if embs is None:
         return None
-    embs = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(*paths)
-        .select("vec_id", "embedding")
-        .dropDuplicates(["vec_id"])
-    )
     refreshed = refit_codebook(
         embs,
         centroids,
@@ -332,6 +308,24 @@ def refresh_semantic_root_if_needed(
     ).localCheckpoint(eager=True)
     reindex_semantic_root(spark, index_root, refreshed, next_batch)
     return refreshed
+
+
+def _committed_vectors(
+    spark: SparkSession, index_root: str, man: dict
+) -> DataFrame | None:
+    """``(vec_id, embedding)`` of every vector the semantic index manifest
+    ``man`` commits, one row per vec_id (the index holds one row per
+    probed cell); None when it commits nothing. The fit corpus of a
+    refresh and the input of its reindex."""
+    paths = manifest_visible_paths(index_root, man)
+    if not paths:
+        return None
+    return (
+        spark.read.option("recursiveFileLookup", "true")
+        .parquet(*paths)
+        .select("vec_id", "embedding")
+        .dropDuplicates(["vec_id"])
+    )
 
 
 def _stamp_phash_config(index_root: str, fingerprint: str, epoch: int) -> None:
@@ -386,8 +380,15 @@ def reindex_semantic_root(
     Cost: one O(index) rewrite per refresh — the same amortized shape as
     compaction, paid only when the codebook actually drifts (SCALING.md
     ANN-drift series quantifies when that is worth it)."""
-    from mapreduce_framework_spark.pipeline.codebook import codebook_fingerprint
-    from mapreduce_framework_spark.pipeline.semantic_dedup import semantic_index
+    from mapreduce_framework_spark.pipeline.codebook import (
+        _quantization_error,
+        codebook_fingerprint,
+    )
+    from mapreduce_framework_spark.pipeline.semantic_dedup import _cell_index
+    from mapreduce_framework_spark.pipeline.similarity import (
+        _norms_spark,
+        prepare_centroids,
+    )
 
     man = read_index_manifest(index_root)
     if man is None:
@@ -403,27 +404,9 @@ def reindex_semantic_root(
             f"already commits batch {latest} — the reindex must run between "
             "batches, after the last commit and before the next delivery"
         )
-    fp = codebook_fingerprint(centroids)
-    paths = manifest_visible_paths(index_root, man)
+    cents = prepare_centroids(centroids, op="reindex_semantic_root")
+    embs = _committed_vectors(spark, index_root, man)
     out = dict(man)
-    if paths:
-        embs = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(*paths)
-            .select("vec_id", "embedding")
-            .dropDuplicates(["vec_id"])
-        )
-        # a second refresh with the same next_batch (double refresh, or a
-        # retry after a COMPLETED run) must not write into the manifest's
-        # current compacted_path
-        dst = unreferenced_compact_name(man, next_batch)
-        semantic_index(embs, centroids).coalesce(target_files).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(index_root, dst))
-        out["compacted_path"] = dst
-        out["compacted_through"] = next_batch - 1
-        out["deltas"] = []
-    out["codebook_id"] = fp
     # the drift log is only meaningful under ONE codebook: the swap resets
     # it and stamps the FIT-TIME quantization error of the reindexed
     # corpus under the new book as the baseline (one extra aggregate over
@@ -432,10 +415,22 @@ def reindex_semantic_root(
     # post-swap batch)
     out.pop("drift", None)
     out.pop("drift_baseline", None)
-    if paths:
-        fit_err = _batch_quantization_error(embs, centroids)
+    if embs is not None:
+        e = _norms_spark(embs)
+        # a second refresh with the same next_batch (double refresh, or a
+        # retry after a COMPLETED run) must not write into the manifest's
+        # current compacted_path
+        dst = unreferenced_compact_name(man, next_batch)
+        _cell_index(e, cents).coalesce(target_files).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(index_root, dst))
+        out["compacted_path"] = dst
+        out["compacted_through"] = next_batch - 1
+        out["deltas"] = []
+        fit_err = _quantization_error(e, cents)
         if fit_err is not None:
             out["drift_baseline"] = fit_err
+    out["codebook_id"] = codebook_fingerprint(centroids)
     # the swap FENCES any still-running sink (epoch bump): a zombie batch
     # that passed its codebook check before the swap would otherwise
     # commit rows assigned under the OLD codebook into the swapped index —
@@ -923,10 +918,15 @@ def _near_dup_tier(
 
 
 def _sem_side(docs: DataFrame) -> DataFrame:
-    # NULL embeddings are invisible to the semantic tier (see
-    # _semantic_tier); zero-norm ones are excluded downstream by _norms_spark.
-    return docs.where(F.col("embedding").isNotNull()).select(
-        F.col("doc_id").alias("vec_id"), "embedding"
+    """The normed ``(vec_id, embedding, norm)`` side of a doc frame: NULL
+    embeddings are invisible to the semantic tier (see _semantic_tier),
+    and zero-norm ones are excluded by _norms_spark."""
+    from mapreduce_framework_spark.pipeline.similarity import _norms_spark
+
+    return _norms_spark(
+        docs.where(F.col("embedding").isNotNull()).select(
+            F.col("doc_id").alias("vec_id"), "embedding"
+        )
     )
 
 
@@ -969,24 +969,29 @@ def _semantic_tier(
     lowest-vec_id rows (pipeline/semantic_dedup.py:cap_cells has the
     recall argument, exact for identical-embedding clusters). None
     (default) keeps the index exact."""
-    from mapreduce_framework_spark.pipeline.codebook import codebook_fingerprint
+    from mapreduce_framework_spark.pipeline.codebook import (
+        _quantization_error,
+        codebook_fingerprint,
+    )
     from mapreduce_framework_spark.pipeline.semantic_dedup import (
         SEMDEDUP_COS,
+        _cell_index,
+        _match_cells,
         cap_cells,
-        semantic_index,
-        semantic_match_batch,
     )
+    from mapreduce_framework_spark.pipeline.similarity import prepare_centroids
 
     if cos_threshold is None:
         cos_threshold = SEMDEDUP_COS
+    # the codebook is fixed for the sink's life: checked and normed once
+    # here, never again per batch
+    cents = prepare_centroids(centroids, op="semantic tier")
     codebook = codebook_fingerprint(centroids)
     epoch = acquire_index_root(sem_index_root)
 
     def match(survivors, sem_idx, _batch_id):
         return _best_match(
-            semantic_match_batch(
-                sem_idx, _sem_side(survivors), centroids, cos_threshold
-            ),
+            _match_cells(sem_idx, _sem_side(survivors), cents, cos_threshold),
             "new_id", "index_id", "cos", "sm_id", "sm_cos",
         )
 
@@ -994,13 +999,13 @@ def _semantic_tier(
         _stamp_codebook(sem_index_root, codebook, epoch=epoch)
         _log_drift(
             sem_index_root, batch_id,
-            _batch_quantization_error(_sem_side(batch), centroids), epoch=epoch,
+            _quantization_error(_sem_side(batch), cents), epoch=epoch,
         )
 
     return _Tier(
         "semantic", match, "sm_id", "sm_cos",
         root=sem_index_root, epoch=epoch,
-        delta=lambda adm, _: semantic_index(_sem_side(adm), centroids),
+        delta=lambda adm, _: _cell_index(_sem_side(adm), cents),
         compact_transform=(
             None if cell_cap is None else (lambda df: cap_cells(df, cell_cap))
         ),

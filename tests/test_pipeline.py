@@ -189,14 +189,18 @@ def test_ann_ivf_external_codebook_seam(spark, sf_dir):
     from mapreduce_framework_spark.catalog import table
     from mapreduce_framework_spark.pipeline.similarity import (
         ann_ivf,
-        ivf_stride_centroids,
+        IVF_CENTROID_STRIDE,
+        _norms_spark,
+        _stride_codebook,
     )
 
     embs = table(spark, "embeddings", sf_dir)
     default = {(r["qid"], r["rank"]): r["cid"] for r in ann_ivf(embs).collect()}
     explicit = {
         (r["qid"], r["rank"]): r["cid"]
-        for r in ann_ivf(embs, centroids=ivf_stride_centroids(embs)).collect()
+        for r in ann_ivf(
+            embs, centroids=_stride_codebook(_norms_spark(embs), IVF_CENTROID_STRIDE)
+        ).collect()
     }
     assert default == explicit and default
 
@@ -227,12 +231,16 @@ def test_probe_ivf_index_equals_from_scratch(spark, sf_dir, tmp_path):
         N_QUERIES,
         ann_ivf,
         ivf_index,
-        ivf_stride_centroids,
+        IVF_CENTROID_STRIDE,
+        _norms_spark,
+        _stride_codebook,
         probe_ivf_index,
     )
 
     embs = table(spark, "embeddings", sf_dir)
-    cents = ivf_stride_centroids(embs).localCheckpoint(eager=True)
+    cents = _stride_codebook(_norms_spark(embs), IVF_CENTROID_STRIDE).localCheckpoint(
+        eager=True
+    )
     idx_dir = str(tmp_path / "ivf_index")
     # snapshot-ish metadata column: probes must never read it (plan test)
     ivf_index(embs, centroids=cents).withColumn(
@@ -256,12 +264,16 @@ def test_probe_ivf_index_reads_index_column_pruned(spark, sf_dir, tmp_path):
     from mapreduce_framework_spark.pipeline.similarity import (
         N_QUERIES,
         ivf_index,
-        ivf_stride_centroids,
+        IVF_CENTROID_STRIDE,
+        _norms_spark,
+        _stride_codebook,
         probe_ivf_index,
     )
 
     embs = table(spark, "embeddings", sf_dir)
-    cents = ivf_stride_centroids(embs).localCheckpoint(eager=True)
+    cents = _stride_codebook(_norms_spark(embs), IVF_CENTROID_STRIDE).localCheckpoint(
+        eager=True
+    )
     idx_dir = str(tmp_path / "ivf_index")
     ivf_index(embs, centroids=cents).withColumn(
         "snapshot", F.lit("s1")

@@ -752,6 +752,7 @@ def test_merge_sinks_redelivery_idempotent(spark, sf_dir, tmp_path):
     rollup must not double-count the batch."""
     from mapreduce_framework_spark.catalog import table
     from mapreduce_framework_spark.streaming.foreach_batch import (
+        _latest_state,
         make_kv_merge_batch_fn,
         make_rollup_merge_batch_fn,
     )
@@ -768,12 +769,12 @@ def test_merge_sinks_redelivery_idempotent(spark, sf_dir, tmp_path):
     kv_fn(b1, 1)
     once = {
         (r["key"], r["value"])
-        for r in spark.read.parquet(kv_root + "/state_v1").collect()
+        for r in _latest_state(spark, kv_root, before_batch=2).collect()
     }
     kv_fn(b1, 1)  # redelivery
     twice = {
         (r["key"], r["value"])
-        for r in spark.read.parquet(kv_root + "/state_v1").collect()
+        for r in _latest_state(spark, kv_root, before_batch=2).collect()
     }
     assert twice == once, "KV merge re-applied the redelivered batch"
 
@@ -787,12 +788,12 @@ def test_merge_sinks_redelivery_idempotent(spark, sf_dir, tmp_path):
     ru_fn(eb1, 1)
     once = {
         (r["h"], r["event_type"], r["cnt"], str(r["val"]))
-        for r in spark.read.parquet(ru_root + "/state_v1").collect()
+        for r in _latest_state(spark, ru_root, before_batch=2).collect()
     }
     ru_fn(eb1, 1)  # redelivery
     twice = {
         (r["h"], r["event_type"], r["cnt"], str(r["val"]))
-        for r in spark.read.parquet(ru_root + "/state_v1").collect()
+        for r in _latest_state(spark, ru_root, before_batch=2).collect()
     }
     assert twice == once, "rollup merge double-counted the redelivered batch"
 
@@ -1469,7 +1470,7 @@ def test_merge_sink_state_retention_and_manifest(spark, sf_dir, tmp_path):
     man = read_json_atomic(os.path.join(root, STATE_MANIFEST))
     assert man["versions"] == [4, 5]
     dirs = sorted(d for d in os.listdir(root) if d.startswith("state_v"))
-    assert dirs == [f"state_v{v}" for v in man["versions"]]
+    assert dirs == [f"state_v{v}_e1" for v in man["versions"]]
     assert len(dirs) == STATE_KEEP
 
     final = {
@@ -3183,6 +3184,7 @@ def test_merge_sink_writer_fencing(spark, sf_dir, tmp_path):
     from mapreduce_framework_spark.storage import acquire_manifest_root, read_json_atomic
     from mapreduce_framework_spark.streaming.foreach_batch import (
         STATE_MANIFEST,
+        _latest_state,
         make_rollup_merge_batch_fn,
     )
 
@@ -3199,7 +3201,7 @@ def test_merge_sink_writer_fencing(spark, sf_dir, tmp_path):
     fn_b(batches[1], 1)
 
     def state_v1():
-        return sorted(map(tuple, spark.read.parquet(os.path.join(root, "state_v1")).collect()))
+        return sorted(map(tuple, _latest_state(spark, root, before_batch=2).collect()))
 
     committed = state_v1()
     with pytest.raises(ValueError, match="fenced"):
@@ -3217,6 +3219,37 @@ def test_merge_sink_writer_fencing(spark, sf_dir, tmp_path):
             os.path.join(root, STATE_MANIFEST), {"version": 1, "versions": []},
             takeover=False,
         )
+
+
+def test_fenced_merge_write_cannot_touch_owner_state(spark, sf_dir, tmp_path, monkeypatch):
+    """A takeover that lands while a fenced merge sink's state write is
+    already running (simulated by skipping the writer's early epoch
+    check) must leave the new owner's committed state untouched: the
+    fenced writer writes an epoch-suffixed dir no committed manifest
+    references, and its commit fails fenced."""
+    from mapreduce_framework_spark.catalog import table
+    from mapreduce_framework_spark.streaming import foreach_batch
+    from mapreduce_framework_spark.streaming.foreach_batch import (
+        _latest_state,
+        make_rollup_merge_batch_fn,
+    )
+
+    events = table(spark, "events", sf_dir)
+    batches = [events.where(F.col("event_id") % 3 == i) for i in range(3)]
+    root = str(tmp_path / "state")
+    fn_a = make_rollup_merge_batch_fn(spark, root)
+    fn_a(batches[0], 0)
+    fn_b = make_rollup_merge_batch_fn(spark, root)  # takeover
+    fn_b(batches[1], 1)
+
+    def owner_state():
+        return sorted(map(tuple, _latest_state(spark, root).collect()))
+
+    committed = owner_state()
+    monkeypatch.setattr(foreach_batch, "check_manifest_epoch", lambda *_: None)
+    with pytest.raises(ValueError, match="fenced"):
+        fn_a(batches[2], 1)  # a different batch 1 than the owner committed
+    assert owner_state() == committed
 
 
 @pytest.mark.slow  # r14 item 2: equality soak; decisions oracle-checked by the q94-q110 replays

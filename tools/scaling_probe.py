@@ -1527,13 +1527,18 @@ def probe_ann_fixed_k(spark, sf_dir) -> None:
         TOP_K,
         ann_bruteforce,
         ann_ivf,
-        ivf_stride_centroids,
+        IVF_CENTROID_STRIDE,
+        _norms_spark,
+        _stride_codebook,
     )
 
     base = table(spark, "embeddings", sf_dir)
     k = 64
     cents = (
-        ivf_stride_centroids(base).orderBy("cent_id").limit(k).localCheckpoint(eager=True)
+        _stride_codebook(_norms_spark(base), IVF_CENTROID_STRIDE)
+        .orderBy("cent_id")
+        .limit(k)
+        .localCheckpoint(eager=True)
     )
     print("| vectors | K | ivf wall (rows) | brute wall | recall@5 |")
     print("|---|---|---|---|---|")
