@@ -181,8 +181,7 @@ def semantic_index(embs: DataFrame, centroids: DataFrame) -> DataFrame:
 
 def _cell_index(e: DataFrame, cents: DataFrame) -> DataFrame:
     """:func:`semantic_index` of a normed frame under a checked codebook:
-    the embedding and norm ride through the assignment pass (``carry``),
-    so no join back on vec_id recovers them."""
+    the embedding and norm ride through the assignment pass (``carry``)."""
     return _nearest_cells(
         e, cents, "vec_id", SEM_PROBES, carry=("embedding", "norm")
     ).select("vec_id", "cent_id", "embedding", "norm")

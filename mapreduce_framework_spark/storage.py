@@ -107,7 +107,7 @@ def write_range_sorted(
 #   {"version": 1,
 #    "compacted_path": "compact_v{B}" | null,  # dir holding all folded deltas
 #    "compacted_through": B-1 | -1,            # max batch id folded in
-#    "deltas": [[batch_id, "delta_v{id}"], ...]}  # the UNFOLDED tail, sorted
+#    "deltas": [[batch_id, "delta_v{id}_e{epoch}"], ...]}  # UNFOLDED tail, sorted
 #
 # Invariants (validated on every read, hard error on violation — a missing
 # or out-of-sequence delta means index corruption and MUST NOT be silently
@@ -381,6 +381,28 @@ def check_manifest_epoch(manifest_path: str, epoch: int) -> None:
             "committed by this writer; re-point the stream at its own root "
             "or re-acquire deliberately."
         )
+
+
+def write_epoch_dir(
+    df: DataFrame, root: str, prefix: str, batch_id: int, epoch: int
+) -> list:
+    """Write one batch's dir under ``root`` as ``{prefix}_v{batch_id}_e{epoch}``
+    and return its manifest entry ``[batch_id, name]``. The caller checks
+    its epoch before the write and commits the entry fenced; the epoch in
+    the name covers a takeover that lands while the write is running, so
+    a fenced writer only ever writes a dir that no committed manifest
+    references (the owner's next prune sweeps it). Manifests record the
+    name verbatim: readers resolve a batch's dir through its entry, never
+    by assembling the name."""
+    name = f"{prefix}_v{batch_id}_e{epoch}"
+    df.write.mode("overwrite").parquet(os.path.join(root, name))
+    return [batch_id, name]
+
+
+def with_entry(entries: list, entry: list) -> list:
+    """``entries`` (``[batch_id, dir]`` pairs) with ``entry`` replacing any
+    entry of its batch, sorted by batch id."""
+    return sorted([e for e in entries if e[0] != entry[0]] + [entry])
 
 
 def _read_manifest_v1(path: str) -> dict | None:

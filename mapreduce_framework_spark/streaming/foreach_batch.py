@@ -13,8 +13,8 @@ replace the versioned directories with a real MERGE INTO.
 
 Round 7: the root is addressed through a STATE MANIFEST (the ingest-index
 discipline of streaming/ingest.py applied to the latest-pointer shape):
-one atomic JSON commit per batch records the retained versions and their
-dir names, so the read path never lists directories (object-storage-safe), and
+one atomic JSON commit per batch records the retained ``[version, dir]``
+pairs, so the read path never lists directories (object-storage-safe), and
 retention is bounded — only the last ``STATE_KEEP`` versions survive a
 commit, because the strictly-before redelivery rule only ever needs the
 version just below the in-flight batch. Without retention a 1e5-batch
@@ -36,6 +36,8 @@ from mapreduce_framework_spark.storage import (
     check_manifest_epoch,
     commit_manifest,
     read_manifest_doc,
+    with_entry,
+    write_epoch_dir,
 )
 from mapreduce_framework_spark.streaming.windows import _run_available_now
 
@@ -65,10 +67,10 @@ def _latest_state(
     man = read_manifest_doc(os.path.join(state_root, STATE_MANIFEST))
     if man is None:
         return None
-    versions = sorted(man["versions"])
-    eligible = (
-        versions if before_batch is None else [v for v in versions if v < before_batch]
-    )
+    versions = [v for v, _ in man["versions"]]
+    eligible = [
+        e for e in man["versions"] if before_batch is None or e[0] < before_batch
+    ]
     if not eligible:
         if versions and before_batch is not None:
             raise ValueError(
@@ -77,20 +79,13 @@ def _latest_state(
                 "checkpoint and state root belong to different streams"
             )
         return None
-    path = os.path.join(state_root, _state_dir(man, eligible[-1]))
+    path = os.path.join(state_root, eligible[-1][1])
     if not os.path.isdir(path):
         raise ValueError(
             f"state manifest references missing dir {path} — refusing to "
             "re-initialize state"
         )
     return spark.read.parquet(path)
-
-
-def _state_dir(man: dict, version: int) -> str:
-    """The dir name the state manifest ``man`` records for ``version``.
-    Writers epoch-suffix it (_write_state_version); a version committed
-    before the manifest recorded names lives at ``state_v{version}``."""
-    return man.get("dirs", {}).get(str(version), f"state_v{version}")
 
 
 def _write_state_version(
@@ -105,24 +100,19 @@ def _write_state_version(
     preserved by the rewrite.
 
     ``epoch``: the writer's fencing token, checked BEFORE the state write
-    and enforced again at the manifest commit. The early check cannot
-    cover a takeover that lands while the write is running; the epoch in
-    the dir name does, as with index deltas (ingest._publish_delta): a
-    fenced writer can only ever write a dir that no committed manifest
-    references, and its commit then fails fenced. The owner's next
-    commit prunes the orphan."""
+    and enforced again at the manifest commit. A takeover that lands
+    while the write is running is covered by the epoch in the dir name
+    (storage.write_epoch_dir), as with index deltas: the fenced writer's
+    commit fails and the owner's next commit prunes its orphan."""
     path = os.path.join(state_root, STATE_MANIFEST)
     check_manifest_epoch(path, epoch)
-    name = f"state_v{batch_id}_e{epoch}"
-    state.write.mode("overwrite").parquet(os.path.join(state_root, name))
+    entry = write_epoch_dir(state, state_root, "state", batch_id, epoch)
     man = read_manifest_doc(path)
-    man.setdefault("dirs", {})[str(batch_id)] = name
-    man["versions"] = sorted(set(man["versions"]) | {batch_id})[-STATE_KEEP:]
-    man["dirs"] = {str(v): _state_dir(man, v) for v in man["versions"]}
+    man["versions"] = with_entry(man["versions"], entry)[-STATE_KEEP:]
     # the fencing token is enforced AT the commit through the backend seam
     # (conditional PUT on object storage, last-moment re-check on POSIX)
     commit_manifest(path, man, expected_epoch=epoch)
-    keep = set(man["dirs"].values())
+    keep = {name for _, name in man["versions"]}
     for d in os.listdir(state_root):
         if d.startswith("state_v") and d not in keep:
             shutil.rmtree(os.path.join(state_root, d), ignore_errors=True)

@@ -79,6 +79,8 @@ from mapreduce_framework_spark.storage import (
     prune_superseded_index_dirs,
     read_index_manifest,
     unreferenced_compact_name,
+    with_entry,
+    write_epoch_dir,
     write_index_manifest,
 )
 from mapreduce_framework_spark.streaming.windows import _run_available_now
@@ -365,7 +367,7 @@ def reindex_semantic_root(
     """Swap a streaming semantic index under a REFRESHED codebook
     (pipeline/codebook.py:refit_codebook) — the between-batches step of
     the codebook-refresh lifecycle. Every committed index row's
-    ``(vec_id, embedding)`` is re-assigned through ``semantic_index``
+    ``(vec_id, embedding)`` is re-assigned (``semantic_dedup._cell_index``)
     under the new centroids and folded into ONE compacted dir; the
     manifest is then republished with ``compacted_through = next_batch-1``,
     an empty delta tail, and ``codebook_id`` = the new fingerprint — one
@@ -472,24 +474,15 @@ def _publish_delta(
     the root, or this is a zombie retry of a replaced driver) hard-errors
     without committing anything — never silent last-writer-wins.
 
-    Every writer writes its delta under an EPOCH-SUFFIXED dir name
-    (``delta_v{batch}_e{epoch}`` — round-9 ADVICE): the pre-commit epoch
-    check cannot protect the delta write that precedes it, so a zombie
-    redelivering a batch id the new owner already committed would
-    otherwise delete/replace parquet files inside a dir the COMMITTED
-    manifest references — corrupting visible data for the whole duration
-    of the write. With the epoch in the name, a fenced writer can only
-    ever touch dirs no committed manifest references (the manifest
-    records names verbatim, so readers are oblivious); the zombie's
-    orphan dir is swept by the next compaction's prune. Resolve a
-    batch's dir through :func:`delta_dir`, never by assembling the name."""
+    The delta dir is epoch-suffixed (storage.write_epoch_dir), so a
+    zombie redelivering a batch id the new owner already committed cannot
+    touch a dir the committed manifest references; its orphan is swept by
+    the next compaction's prune. Resolve a batch's dir through
+    :func:`delta_dir`."""
     check_manifest_epoch(os.path.join(index_root, INDEX_MANIFEST), epoch)
-    name = f"delta_v{batch_id}_e{epoch}"
-    delta_df.write.mode("overwrite").parquet(os.path.join(index_root, name))
+    entry = write_epoch_dir(delta_df, index_root, "delta", batch_id, epoch)
     man = read_index_manifest(index_root)
-    man["deltas"] = sorted(
-        [e for e in man["deltas"] if e[0] != batch_id] + [[batch_id, name]]
-    )
+    man["deltas"] = with_entry(man["deltas"], entry)
     tail_before = [e for e in man["deltas"] if e[0] < batch_id]
     if compact_every is not None and len(tail_before) >= compact_every:
         man = compact_index_manifest(

@@ -1468,9 +1468,9 @@ def test_merge_sink_state_retention_and_manifest(spark, sf_dir, tmp_path):
         fn(ev.where(F.col("event_id") % 6 == i), i)
 
     man = read_json_atomic(os.path.join(root, STATE_MANIFEST))
-    assert man["versions"] == [4, 5]
+    assert man["versions"] == [[4, "state_v4_e1"], [5, "state_v5_e1"]]
     dirs = sorted(d for d in os.listdir(root) if d.startswith("state_v"))
-    assert dirs == [f"state_v{v}_e1" for v in man["versions"]]
+    assert dirs == [name for _, name in man["versions"]]
     assert len(dirs) == STATE_KEEP
 
     final = {
@@ -3174,14 +3174,17 @@ def test_refresh_autopilot_fires_only_on_drift(spark, tmp_path):
     assert not needs_refit(idx, threshold=1.25, window=2)
 
 
-def test_merge_sink_writer_fencing(spark, sf_dir, tmp_path):
+def test_merge_sink_writer_fencing(spark, sf_dir, tmp_path, monkeypatch):
     """The merge sinks' read-merge-write cycle gets the same fencing as
     the ingest indexes: a second sink on the same state root fences the
     first (hard error, nothing committed — not even a state dir the new
     owner committed) and the epoch survives the manifest's retention
-    rewrite."""
+    rewrite. A takeover that lands while the fenced write is already
+    running (the early epoch check skipped) must not touch the owner's
+    committed state either."""
     from mapreduce_framework_spark.catalog import table
     from mapreduce_framework_spark.storage import acquire_manifest_root, read_json_atomic
+    from mapreduce_framework_spark.streaming import foreach_batch
     from mapreduce_framework_spark.streaming.foreach_batch import (
         STATE_MANIFEST,
         _latest_state,
@@ -3195,7 +3198,7 @@ def test_merge_sink_writer_fencing(spark, sf_dir, tmp_path):
     fn_a = make_rollup_merge_batch_fn(spark, root)
     fn_a(batches[0], 0)
     man = read_json_atomic(os.path.join(root, STATE_MANIFEST))
-    assert man["epoch"] == 1 and man["versions"] == [0]
+    assert man["epoch"] == 1 and man["versions"] == [[0, "state_v0_e1"]]
 
     fn_b = make_rollup_merge_batch_fn(spark, root)  # takeover
     fn_b(batches[1], 1)
@@ -3211,45 +3214,19 @@ def test_merge_sink_writer_fencing(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="fenced"):
         fn_a(batches[0], 1)
     assert state_v1() == committed
+    monkeypatch.setattr(foreach_batch, "check_manifest_epoch", lambda *_: None)
+    with pytest.raises(ValueError, match="fenced"):
+        fn_a(batches[0], 1)
+    assert state_v1() == committed
     man = read_json_atomic(os.path.join(root, STATE_MANIFEST))
-    assert man["epoch"] == 2 and man["versions"] == [0, 1]  # batch 2 never committed
+    # batch 2 never committed
+    assert man["epoch"] == 2 and man["versions"] == [[0, "state_v0_e1"], [1, "state_v1_e2"]]
 
     with pytest.raises(ValueError, match="already owned"):
         acquire_manifest_root(
             os.path.join(root, STATE_MANIFEST), {"version": 1, "versions": []},
             takeover=False,
         )
-
-
-def test_fenced_merge_write_cannot_touch_owner_state(spark, sf_dir, tmp_path, monkeypatch):
-    """A takeover that lands while a fenced merge sink's state write is
-    already running (simulated by skipping the writer's early epoch
-    check) must leave the new owner's committed state untouched: the
-    fenced writer writes an epoch-suffixed dir no committed manifest
-    references, and its commit fails fenced."""
-    from mapreduce_framework_spark.catalog import table
-    from mapreduce_framework_spark.streaming import foreach_batch
-    from mapreduce_framework_spark.streaming.foreach_batch import (
-        _latest_state,
-        make_rollup_merge_batch_fn,
-    )
-
-    events = table(spark, "events", sf_dir)
-    batches = [events.where(F.col("event_id") % 3 == i) for i in range(3)]
-    root = str(tmp_path / "state")
-    fn_a = make_rollup_merge_batch_fn(spark, root)
-    fn_a(batches[0], 0)
-    fn_b = make_rollup_merge_batch_fn(spark, root)  # takeover
-    fn_b(batches[1], 1)
-
-    def owner_state():
-        return sorted(map(tuple, _latest_state(spark, root).collect()))
-
-    committed = owner_state()
-    monkeypatch.setattr(foreach_batch, "check_manifest_epoch", lambda *_: None)
-    with pytest.raises(ValueError, match="fenced"):
-        fn_a(batches[2], 1)  # a different batch 1 than the owner committed
-    assert owner_state() == committed
 
 
 @pytest.mark.slow  # r14 item 2: equality soak; decisions oracle-checked by the q94-q110 replays
