@@ -96,8 +96,9 @@ def __getattr__(name):
         "streaming_dedup_within_watermark": "mapreduce_framework_spark.streaming.dedup",
         "exact_fingerprint_index": "mapreduce_framework_spark.pipeline.dedup",
         "exact_match_batch": "mapreduce_framework_spark.pipeline.dedup",
-        "run_ingest_stream": "mapreduce_framework_spark.streaming.ingest",
-        "run_semantic_ingest_stream": "mapreduce_framework_spark.streaming.ingest",
+        "make_ingest_batch_fn": "mapreduce_framework_spark.streaming.ingest",
+        "make_semantic_ingest_batch_fn": "mapreduce_framework_spark.streaming.ingest",
+        "run_sink_stream": "mapreduce_framework_spark.streaming.windows",
     }
     if name in _EXPORTS:
         return getattr(import_module(_EXPORTS[name]), name)

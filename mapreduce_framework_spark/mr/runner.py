@@ -44,6 +44,7 @@ executor side, exactly as Spark requires.
 from __future__ import annotations
 
 import glob
+import operator
 import os
 from collections.abc import Callable, Iterable, Iterator
 
@@ -144,18 +145,13 @@ def run_job(
         )
 
     def reduce_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # keys arrive sorted, so each key is one run; the open run carries
-        # across Arrow batches. A NULL key is a group like any other: the
-        # boundary test is the `started` flag, not a `cur = None` sentinel
-        # (same policy as operators.kv.fold_kv_history_streaming)
-        started = False
-        cur = None
-        vals: list[str] = []
-
-        def frame(keys: list, outs: list[str]) -> pd.DataFrame:
+        # each run collects its values in one list (iadd extends in place)
+        for keys, outs in walk_sorted_runs(
+            batches, ["value"], list, operator.iadd, reduce_fn
+        ):
             # bucket in Python (FNV over UTF-8 bytes, bucket_of) — the JVM
             # expression hashes code points and diverges on non-ASCII keys
-            return pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "key": keys,
                     "value": outs,
@@ -163,30 +159,54 @@ def run_job(
                 }
             )
 
-        for pdf in batches:
-            keys = pdf["key"].tolist()
-            values = pdf["value"].tolist()
-            out_keys: list = []
-            outs: list[str] = []
-            start = 0
-            for i, k in enumerate(keys):
-                if not started or k != cur:
-                    if started:
-                        vals.extend(values[start:i])
-                        out_keys.append(cur)
-                        outs.append(reduce_fn(cur, vals))
-                    started, cur, vals, start = True, k, [], i
-            vals.extend(values[start:])
-            if out_keys:
-                yield frame(out_keys, outs)
-        if started:
-            yield frame([cur], [reduce_fn(cur, vals)])
-
     return (
         mapped.repartition("key")
         .sortWithinPartitions("key")
         .mapInPandas(reduce_runs, schema="key string, value string, bucket int")
     )
+
+
+def walk_sorted_runs(
+    batches: Iterable[pd.DataFrame],
+    columns: list[str],
+    start: Callable,
+    add: Callable,
+    finish: Callable,
+) -> Iterator[tuple[list, list]]:
+    """Walk the runs of equal ``key`` through a key-sorted partition's
+    Arrow batches: the reduce walk of :func:`run_job` and the KV fold of
+    ``operators.kv.fold_kv_history_streaming``. A run opens with ``acc =
+    start()``; each batch's slice of it is folded in with ``acc =
+    add(acc, *slices)``, one list per name in ``columns``; the run closes
+    at the next key or the partition end with ``finish(key, acc)``. The
+    open run carries across batches, so per-task memory is one batch plus
+    one ``acc``. Yields, per batch, the keys and outputs of the runs it
+    closed.
+
+    A NULL key is a group like any other: the boundary test is the
+    ``started`` flag, not a ``cur = None`` sentinel, which would take the
+    first NULL-key row for "no run yet" and drop the group."""
+    started = False
+    cur = acc = None
+    for pdf in batches:
+        keys = pdf["key"].tolist()
+        cols = [pdf[c].tolist() for c in columns]
+        out_keys: list = []
+        outs: list = []
+        lo = 0
+        for i, k in enumerate(keys):
+            if started and k == cur:
+                continue
+            if started:
+                out_keys.append(cur)
+                outs.append(finish(cur, add(acc, *[c[lo:i] for c in cols])))
+            started, cur, acc, lo = True, k, start(), i
+        if started:
+            acc = add(acc, *[c[lo:] for c in cols])
+        if out_keys:
+            yield out_keys, outs
+    if started:
+        yield [cur], [finish(cur, acc)]
 
 
 def write_text_output(result: DataFrame, out_dir: str) -> None:

@@ -208,11 +208,17 @@ def q08_shard_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def fold_ops(state: str, pdf: pd.DataFrame) -> str:
     """THE imperative KV fold (src/models/kv.go:40-54): replay a batch of
-    ops sorted by (ts, event_id) onto a prior state. Single definition
-    shared by q28 (batch, initial state '') and the streaming keyed-state
-    handler (streaming/state.py, carrying state across micro-batches)."""
+    ops sorted by (ts, event_id) onto a prior state. Shared by q28 (batch,
+    initial state '') and the streaming keyed-state handler
+    (streaming/state.py, carrying state across micro-batches)."""
     pdf = pdf.sort_values(["ts", "event_id"])
-    for op, value in zip(pdf["op"], pdf["value"]):
+    return _replay_ops(state, pdf["op"], pdf["value"])
+
+
+def _replay_ops(state: str, ops, values) -> str:
+    """The put/append rule of :func:`fold_ops` over ops already in
+    linearization order: put replaces the state, append concatenates."""
+    for op, value in zip(ops, values):
         if op == "put":
             state = value
         elif op == "append":
@@ -248,32 +254,15 @@ def fold_kv_history_streaming(ops: DataFrame) -> DataFrame:
     scheduled for the round q28 rotates into the driver window
     (registry.py retirement notes)."""
 
+    from mapreduce_framework_spark.mr.runner import walk_sorted_runs
+
     def fold_partitions(batches):
-        # NULL-KEY POLICY (round-10 ADVICE): a NULL key is a group like any
-        # other — the boundary test is an explicit `started` flag, not a
-        # `cur = None` sentinel (which would make the first NULL-key row
-        # compare equal to "no group yet" and silently drop the group's
-        # emit). The SQL oracle's GROUP BY keeps the NULL group; so do we.
-        started = False
-        cur = None
-        state = ""
-        for pdf in batches:
-            out_keys: list = []
-            out_vals: list = []
-            for k, op, v in zip(pdf["key"], pdf["op"], pdf["value"]):
-                if not started or k != cur:
-                    if started:
-                        out_keys.append(cur)
-                        out_vals.append(state)
-                    started, cur, state = True, k, ""
-                if op == "put":
-                    state = v
-                elif op == "append":
-                    state = state + v
-            if out_keys:
-                yield pd.DataFrame({"key": out_keys, "value": out_vals})
-        if started:
-            yield pd.DataFrame({"key": [cur], "value": [state]})
+        # the rows arrive sorted by (key, ts, event_id): each key is one
+        # run, folded slice by slice onto one state string
+        for keys, states in walk_sorted_runs(
+            batches, ["op", "value"], str, _replay_ops, lambda _k, state: state
+        ):
+            yield pd.DataFrame({"key": keys, "value": states})
 
     return (
         ops.where(F.col("op") != "get")

@@ -13,10 +13,10 @@ reuse their batch twins' oracles verbatim, because streaming-equals-batch
 is the operators' contract. The sink replays (q95, q96, q103, q104/q106,
 q107/q108/q110) share one staging path (:func:`_staged_replay`): each
 batch is written as one parquet part with a pinned, increasing mtime,
-streamed back one part per trigger, and the sink's result is
-checkpointed before the scratch root is removed. The admission cascades
-share one sink call (:func:`_cascade_sink`), which owns the
-no-usable-centroid fallback.
+streamed back one part per trigger through ``run_sink_stream``, and the
+sink's result is checkpointed before the scratch root is removed. The
+admission cascades share one sink call (:func:`_cascade_sink`), which
+owns the no-usable-centroid fallback.
 
 The cascade oracles are configurations of one DuckDB builder
 (:func:`_cascade_oracle`) over per-tier CTE fragments. They are written
@@ -49,6 +49,7 @@ from mapreduce_framework_spark.registry import REGISTRY, register
 from mapreduce_framework_spark.streaming.state import streaming_kv_state
 from mapreduce_framework_spark.streaming.windows import (
     read_events_stream,
+    run_sink_stream,
     run_stream_to_memory,
     streaming_session_sessions,
     streaming_tumbling_counts,
@@ -148,28 +149,29 @@ def _cascade_sink(
     vacuous)."""
     from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
     from mapreduce_framework_spark.streaming.ingest import (
-        run_cascade_ingest_stream,
-        run_full_cascade_ingest_stream,
+        make_cascade_ingest_batch_fn,
+        make_full_cascade_ingest_batch_fn,
     )
 
     kw = dict(
         fp_index_root=os.path.join(root, "fp_index"),
         sig_index_root=os.path.join(root, "sig_index"),
         decisions_root=os.path.join(root, "decisions"),
-        checkpoint=os.path.join(root, "ckpt"),
         threshold=JACCARD_THRESHOLD,
         **tiers,
     )
+    checkpoint = os.path.join(root, "ckpt")
     if not centroids.take(1):
-        decisions = run_cascade_ingest_stream(stream, spark, **kw)
+        sink = make_cascade_ingest_batch_fn(spark, **kw)
+        decisions = run_sink_stream(stream, sink, checkpoint)
         return decisions.withColumnRenamed("jaccard", "score")
-    return run_full_cascade_ingest_stream(
-        stream,
+    sink = make_full_cascade_ingest_batch_fn(
         spark,
         sem_index_root=os.path.join(root, "sem_index"),
         centroids=centroids,
         **kw,
     )
+    return run_sink_stream(stream, sink, checkpoint)
 
 
 @register(
@@ -345,7 +347,7 @@ def q95_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     job), exactly like q91."""
     from mapreduce_framework_spark.catalog import table
     from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
-    from mapreduce_framework_spark.streaming.ingest import run_ingest_stream
+    from mapreduce_framework_spark.streaming.ingest import make_ingest_batch_fn
 
     docs = table(spark, "documents", sf_dir)
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]
@@ -361,13 +363,15 @@ def q95_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "q95",
         terciles,
-        lambda stream, root: run_ingest_stream(
+        lambda stream, root: run_sink_stream(
             stream,
-            spark,
-            index_root=os.path.join(root, "index"),
-            decisions_root=os.path.join(root, "decisions"),
-            checkpoint=os.path.join(root, "ckpt"),
-            threshold=JACCARD_THRESHOLD,
+            make_ingest_batch_fn(
+                spark,
+                index_root=os.path.join(root, "index"),
+                decisions_root=os.path.join(root, "decisions"),
+                threshold=JACCARD_THRESHOLD,
+            ),
+            os.path.join(root, "ckpt"),
         ),
     ).orderBy("doc_id")
 
@@ -703,7 +707,7 @@ def q103_cascade_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     retiring q55 under the registry's retirement policy): the lower-id
     half of the corpus is admitted as batch 0, then the upper half PLUS
     planted byte-identical re-fetches of every 50th batch-0 doc (ids
-    shifted +10M) streams through ``run_cascade_ingest_stream`` — the
+    shifted +10M) streams through the lexical cascade sink — the
     exact md5-fingerprint tier rejects the re-fetches at an equi-join's
     cost before any shingling, the MinHash tier near-dup-matches only
     the survivors, and decisions carry per-tier provenance ('exact' =
@@ -717,7 +721,9 @@ def q103_cascade_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     on every sf table."""
     from mapreduce_framework_spark.catalog import table
     from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
-    from mapreduce_framework_spark.streaming.ingest import run_cascade_ingest_stream
+    from mapreduce_framework_spark.streaming.ingest import (
+        make_cascade_ingest_batch_fn,
+    )
 
     docs = table(spark, "documents", sf_dir).select("doc_id", "text")
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]
@@ -734,14 +740,16 @@ def q103_cascade_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "q103",
         (b0, b1),
-        lambda stream, root: run_cascade_ingest_stream(
+        lambda stream, root: run_sink_stream(
             stream,
-            spark,
-            fp_index_root=os.path.join(root, "fp_index"),
-            sig_index_root=os.path.join(root, "sig_index"),
-            decisions_root=os.path.join(root, "decisions"),
-            checkpoint=os.path.join(root, "ckpt"),
-            threshold=JACCARD_THRESHOLD,
+            make_cascade_ingest_batch_fn(
+                spark,
+                fp_index_root=os.path.join(root, "fp_index"),
+                sig_index_root=os.path.join(root, "sig_index"),
+                decisions_root=os.path.join(root, "decisions"),
+                threshold=JACCARD_THRESHOLD,
+            ),
+            os.path.join(root, "ckpt"),
         ),
     ).orderBy("doc_id")
 
@@ -826,7 +834,7 @@ def _q104_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q104_full_cascade_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE three-tier admission cascade (exact → MinHash →
-    semantic; streaming/ingest.py::run_full_cascade_ingest_stream) run
+    semantic; streaming/ingest.py::make_full_cascade_ingest_batch_fn) run
     end-to-end and hash-checked (round 7; registered by retiring q72
     under the registry's retirement policy — q72's exact char-Jaccard
     differential stays in the local sweep). q103's two-batch replay plus
@@ -939,7 +947,7 @@ def q96_incremental_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     the point of the pattern."""
     from mapreduce_framework_spark.catalog import table
     from mapreduce_framework_spark.streaming.foreach_batch import (
-        run_rollup_merge_stream,
+        make_rollup_merge_batch_fn,
     )
 
     ev = table(spark, "events", sf_dir)
@@ -958,11 +966,10 @@ def q96_incremental_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         spark,
         "q96",
         slices,
-        lambda stream, root: run_rollup_merge_stream(
+        lambda stream, root: run_sink_stream(
             stream,
-            spark,
-            state_root=os.path.join(root, "state"),
-            checkpoint=os.path.join(root, "ckpt"),
+            make_rollup_merge_batch_fn(spark, os.path.join(root, "state")),
+            os.path.join(root, "ckpt"),
         ).select("h", "event_type", "cnt", F.col("val").cast("double").alias("val")),
     ).orderBy("h", "event_type")
 

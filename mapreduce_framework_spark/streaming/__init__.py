@@ -1,5 +1,6 @@
 from mapreduce_framework_spark.streaming.windows import (
     read_events_stream,
+    run_sink_stream,
     run_stream_to_memory,
     streaming_tumbling_counts,
 )
@@ -7,6 +8,7 @@ from mapreduce_framework_spark.streaming.state import streaming_kv_state
 
 __all__ = [
     "read_events_stream",
+    "run_sink_stream",
     "run_stream_to_memory",
     "streaming_tumbling_counts",
     "streaming_kv_state",

@@ -4,6 +4,9 @@ The third streaming output pattern (alongside the memory/file sinks and
 applyInPandasWithState): ``foreachBatch`` hands each micro-batch to
 arbitrary batch code, here a MERGE of the batch's per-key fold into a
 persisted state table — the standard lakehouse "streaming upsert" shape.
+Both merge sinks are configurations of one (``_merge_sink``); each reads
+its latest state back as ``result()``, and
+``streaming.windows.run_sink_stream`` drives either over a stream.
 
 State versions are written as ``state_v{batch_id}_e{epoch}`` directories
 (write-new then read-latest), which keeps each batch's write
@@ -39,7 +42,7 @@ from mapreduce_framework_spark.storage import (
     with_entry,
     write_epoch_dir,
 )
-from mapreduce_framework_spark.streaming.windows import _run_available_now
+from mapreduce_framework_spark.streaming.windows import _Sink
 
 STATE_MANIFEST = "_state_manifest.json"  # underscore: invisible to Spark scans
 # current version + the one a redelivered in-flight batch reads — the only
@@ -118,22 +121,37 @@ def _write_state_version(
             shutil.rmtree(os.path.join(state_root, d), ignore_errors=True)
 
 
-def make_kv_merge_batch_fn(spark: SparkSession, state_root: str):
-    """Returns the foreachBatch function: fold the batch's ops per key on
-    top of the previous persisted state and write the next state version.
+def _merge_sink(spark: SparkSession, state_root: str, name: str, merge) -> _Sink:
+    """The foreachBatch sink both merge factories configure: each batch is
+    folded onto the state persisted strictly before it by ``merge(batch_df,
+    prev)`` (``prev`` None: no state yet), and the fold is written as the
+    next state version. ``result()`` is the latest persisted state.
     Constructing the sink ACQUIRES the state root (writer fencing,
     storage.acquire_manifest_root: a lost state commit would silently fork
     the fold history)."""
-    from mapreduce_framework_spark.operators.kv import fold_ops
-
     epoch = acquire_manifest_root(
         os.path.join(state_root, STATE_MANIFEST), _FRESH_STATE
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import pandas as pd
-
         prev = _latest_state(spark, state_root, before_batch=batch_id)
+        _write_state_version(merge(batch_df, prev), state_root, batch_id, epoch)
+
+    return _Sink(
+        apply_batch,
+        lambda: _latest_state(spark, state_root),
+        name,
+        f"state version under {state_root}",
+    )
+
+
+def make_kv_merge_batch_fn(spark: SparkSession, state_root: str) -> _Sink:
+    """The KV merge sink: fold the batch's ops per key on top of the
+    previous persisted state (_merge_sink)."""
+    from mapreduce_framework_spark.operators.kv import fold_ops
+
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        import pandas as pd
 
         def fold_group(pdf: pd.DataFrame) -> pd.DataFrame:
             initial = ""
@@ -153,30 +171,24 @@ def make_kv_merge_batch_fn(spark: SparkSession, state_root: str):
         folded = withprev.groupBy("key").applyInPandas(
             fold_group, schema="key string, value string"
         )
-        new_state = folded if prev is None else (
+        return folded if prev is None else (
             prev.join(folded, "key", "left_anti").unionByName(folded)
         )
-        _write_state_version(new_state, state_root, batch_id, epoch)
 
-    return apply_batch
+    return _merge_sink(spark, state_root, "kv merge", merge)
 
 
-def make_rollup_merge_batch_fn(spark: SparkSession, state_root: str):
-    """foreachBatch function maintaining an hourly continuous aggregate:
+def make_rollup_merge_batch_fn(spark: SparkSession, state_root: str) -> _Sink:
+    """The rollup merge sink, maintaining an hourly continuous aggregate:
     the batch's (hour, event_type) partial aggregates are merged into the
-    persisted rollup by re-aggregation — pure algebraic merge (sum of
-    counts, sum of exact decimals), so the result is independent of how
-    events are sliced into batches. This is the hypertable
-    continuous-aggregate maintenance loop (q65's rollup, kept incrementally
-    fresh); the state table is bounded by hours × types, tiny even when the
-    raw stream is 100 TB. Constructing the sink ACQUIRES the state root,
-    as make_kv_merge_batch_fn does."""
+    persisted rollup by re-aggregation (_merge_sink) — pure algebraic
+    merge (sum of counts, sum of exact decimals), so the result is
+    independent of how events are sliced into batches. This is the
+    hypertable continuous-aggregate maintenance loop (q65's rollup, kept
+    incrementally fresh); the state table is bounded by hours × types,
+    tiny even when the raw stream is 100 TB."""
 
-    epoch = acquire_manifest_root(
-        os.path.join(state_root, STATE_MANIFEST), _FRESH_STATE
-    )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         from mapreduce_framework_spark.catalog import trunc_ntz_expr
 
         # NTZ-safe hour bucket — date_trunc coerces NTZ through the
@@ -187,73 +199,12 @@ def make_rollup_merge_batch_fn(spark: SparkSession, state_root: str):
             F.count(F.lit(1)).alias("cnt"),
             F.sum(F.col("value").cast("decimal(38,6)")).alias("val"),
         )
-        prev = _latest_state(spark, state_root, before_batch=batch_id)
-        merged = (
+        return (
             hourly
             if prev is None
             else prev.unionByName(hourly)
             .groupBy("h", "event_type")
             .agg(F.sum("cnt").alias("cnt"), F.sum("val").alias("val"))
         )
-        _write_state_version(merged, state_root, batch_id, epoch)
 
-    return apply_batch
-
-
-def _run_merge_stream(
-    stream: DataFrame,
-    make_fn,
-    spark: SparkSession,
-    state_root: str,
-    checkpoint: str,
-    timeout_s: int,
-    what: str,
-) -> DataFrame:
-    """Drive ``stream`` through the merge sink ``make_fn(spark,
-    state_root)`` to completion (availableNow) and return the final
-    persisted state. A stream still running after ``timeout_s`` is
-    stopped and raises TimeoutError; one that processed no batch raises
-    ValueError."""
-    _run_available_now(
-        stream.writeStream.foreachBatch(make_fn(spark, state_root)).option(
-            "checkpointLocation", checkpoint
-        ),
-        timeout_s,
-        f"{what} stream",
-    )
-    state = _latest_state(spark, state_root)
-    if state is None:
-        raise ValueError(
-            f"stream processed no batches — no state version under {state_root}"
-        )
-    return state
-
-
-def run_rollup_merge_stream(
-    events_stream: DataFrame,
-    spark: SparkSession,
-    state_root: str,
-    checkpoint: str,
-    timeout_s: int = 300,
-) -> DataFrame:
-    """Drive the events stream through the rollup-merge sink and return the
-    final persisted hourly rollup."""
-    return _run_merge_stream(
-        events_stream, make_rollup_merge_batch_fn, spark, state_root, checkpoint,
-        timeout_s, "rollup merge",
-    )
-
-
-def run_kv_merge_stream(
-    ops_stream: DataFrame,
-    spark: SparkSession,
-    state_root: str,
-    checkpoint: str,
-    timeout_s: int = 180,
-) -> DataFrame:
-    """Drive the ops stream through the foreachBatch merge sink and return
-    the final persisted state."""
-    return _run_merge_stream(
-        ops_stream, make_kv_merge_batch_fn, spark, state_root, checkpoint,
-        timeout_s, "kv merge",
-    )
+    return _merge_sink(spark, state_root, "rollup merge", merge)

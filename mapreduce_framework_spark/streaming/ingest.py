@@ -50,6 +50,9 @@ four public names are configurations of that sink:
   media_dup and contaminated are opt-in);
 - ``make_full_cascade_ingest_batch_fn``: all six, registered end-to-end
   as q104.
+Each returns a sink that foreachBatch calls directly and that reads its
+decisions back (``result()``); ``streaming.windows.run_sink_stream``
+drives any of them over a stream and returns those decisions.
 ``reindex_semantic_root`` is the codebook-refresh swap and
 ``admission_report`` the per-tier ops rollup over any decisions root.
 
@@ -64,7 +67,7 @@ from __future__ import annotations
 import operator
 import os
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -83,7 +86,7 @@ from mapreduce_framework_spark.storage import (
     write_epoch_dir,
     write_index_manifest,
 )
-from mapreduce_framework_spark.streaming.windows import _run_available_now
+from mapreduce_framework_spark.streaming.windows import _Sink
 
 # Fold the delta tail into the compacted artifact once it reaches this many
 # dirs: steady-state per-batch index reads touch 1 compacted dir + a tail of
@@ -738,10 +741,7 @@ def _exact_tiers(
 
 
 def _media_tier(
-    phash_index_root: str,
-    phash_band_cap: int | None,
-    phash_cells: int | None,
-    phash_bands: int | None,
+    phash_index_root: str, phash_cells: int | None, phash_bands: int | None
 ) -> _Tier:
     """MEDIA_DUP (opt-in ``phash_index_root``, round 11 — the q109 tier):
     the MULTIMODAL near-dup tier between the exact and MinHash tiers
@@ -759,18 +759,11 @@ def _media_tier(
     The tier is pixel/text-only (embeddings never touched), so an
     embeddings-free deployment keeps perceptual media dedup too.
 
-    ``phash_band_cap`` bounds adversarial hot bands via cap_banded at
-    match time, with cap_banded's documented semantics exactly: every
-    reported match is REAL (a genuine index doc within the Hamming
-    threshold), but under adversarial saturation — lower-id non-matching
-    docs filling every band the true best match occupies — matched_id can
-    shift to a retained member, and row-level subset-of-uncapped is NOT
-    guaranteed (pinned both ways by tests/test_multimodal_dedup_props.py::
-    test_phash_match_batch_cap_shifts_matched_id_under_saturation). Scale
-    note: the band frame is derived from the (doc_id, phash) index per
-    batch — a projection+explode of a 16-byte row; if profiles ever show
-    that derivation dominating, the persisted-banded-layout pattern of
-    the near-dup tier (cap at compaction) applies verbatim.
+    Scale note: the band frame is derived from the (doc_id, phash) index
+    per batch — a projection+explode of a 16-byte row, with no hot-band
+    cap; if profiles ever show that derivation or a saturated band
+    dominating, the persisted-banded-layout pattern of the near-dup tier
+    (cap at compaction) applies verbatim.
 
     ``phash_cells``/``phash_bands`` (round 13) select the grid width PER
     ROOT (multimodal_dedup.phash_params; default the module 32/4): a
@@ -791,8 +784,7 @@ def _media_tier(
 
     def match(survivors, ph_idx, _batch_id):
         return phash_match_batch(
-            ph_idx, survivors.select("doc_id", "text"),
-            band_cap=phash_band_cap, cells=cells, bands=bands,
+            ph_idx, survivors.select("doc_id", "text"), cells=cells, bands=bands
         ).select(
             "doc_id",
             F.col("matched_id").alias("ph_id"),
@@ -1056,13 +1048,15 @@ def _tiered_sink(
     compact_every: int | None,
     score_col: str,
     with_tier: bool,
+    name: str,
     key: str = "doc_id",
-):
-    """foreachBatch function running ``tiers`` in order over a
+) -> _Sink:
+    """foreachBatch sink running ``tiers`` in order over a
     ``doc_id``-keyed batch: each tier matches the survivors of every
     earlier tier, its rejects leave the batch, and what survives the last
     tier is ADMITTED — indexed by every tier that keeps a root — while
-    every doc gets one decision row in ``decisions_root``. The decision
+    every doc gets one decision row in ``decisions_root`` (the sink's
+    ``result()``, read back through _index_so_far). The decision
     row is ``(key, admitted, matched_id, score_col[, tier])``:
     ``matched_id`` is the first non-null tier id (else -1), and the score
     and ``tier`` come from the first tier that fired (score 0.0 and tier
@@ -1157,34 +1151,12 @@ def _tiered_sink(
             ],
         )
 
-    return apply_batch
-
-
-def _run_stream(stream: DataFrame, make_fn, args: dict, what: str) -> DataFrame:
-    """The one stream runner behind every ``run_*_stream`` name: build the
-    sink with ``make_fn`` from the wrapper's own arguments (``args`` is its
-    ``locals()``; every parameter of ``make_fn`` is forwarded by name),
-    drive ``stream`` through it to completion (availableNow), and return
-    the union of all per-batch decision frames. A stream still running
-    after ``timeout_s`` is stopped and raises TimeoutError; one that
-    processed no batch raises ValueError."""
-    import inspect
-
-    fn = make_fn(**{k: args[k] for k in inspect.signature(make_fn).parameters})
-    _run_available_now(
-        stream.writeStream.foreachBatch(fn).option(
-            "checkpointLocation", args["checkpoint"]
-        ),
-        args["timeout_s"],
-        f"{what} stream",
+    return _Sink(
+        apply_batch,
+        lambda: _index_so_far(spark, decisions_root),
+        name,
+        f"decisions under {decisions_root}",
     )
-    decisions = _index_so_far(args["spark"], args["decisions_root"])
-    if decisions is None:
-        raise ValueError(
-            "stream processed no batches — no decisions under "
-            f"{args['decisions_root']}"
-        )
-    return decisions
 
 
 def make_ingest_batch_fn(
@@ -1196,7 +1168,7 @@ def make_ingest_batch_fn(
     compact_every: int | None = DEFAULT_COMPACT_EVERY,
     bands_root: str | None = None,
     band_cap: int | None = None,
-):
+) -> _Sink:
     """The single-tier MinHash sink: the near-dup tier alone
     (_near_dup_tier documents ``shingler``, ``bands_root`` and
     ``band_cap``; _tiered_sink the shared lifecycle). Decisions are
@@ -1210,26 +1182,9 @@ def make_ingest_batch_fn(
         spark, index_root, threshold, shingler, compact_every, bands_root, band_cap
     )
     return _tiered_sink(
-        spark, [near_dup], decisions_root, compact_every, "jaccard", with_tier=False
+        spark, [near_dup], decisions_root, compact_every, "jaccard",
+        with_tier=False, name="ingest",
     )
-
-
-def run_ingest_stream(
-    docs_stream: DataFrame,
-    spark: SparkSession,
-    index_root: str,
-    decisions_root: str,
-    checkpoint: str,
-    threshold: float,
-    timeout_s: int = 300,
-    shingler=None,
-    compact_every: int | None = DEFAULT_COMPACT_EVERY,
-    bands_root: str | None = None,
-    band_cap: int | None = None,
-) -> DataFrame:
-    """Drive the document stream through :func:`make_ingest_batch_fn`
-    (:func:`_run_stream`)."""
-    return _run_stream(docs_stream, make_ingest_batch_fn, locals(), "ingest")
 
 
 def make_semantic_ingest_batch_fn(
@@ -1240,7 +1195,7 @@ def make_semantic_ingest_batch_fn(
     threshold: float | None = None,
     compact_every: int | None = DEFAULT_COMPACT_EVERY,
     cell_cap: int | None = None,
-):
+) -> _Sink:
     """The semantic-family twin of :func:`make_ingest_batch_fn`: the
     semantic tier alone over ``(vec_id, embedding)`` micro-batches
     (_semantic_tier documents ``centroids``, ``threshold`` and
@@ -1252,41 +1207,23 @@ def make_semantic_ingest_batch_fn(
     sink = _tiered_sink(
         spark,
         [_semantic_tier(index_root, centroids, threshold, cell_cap)],
-        decisions_root, compact_every, "cos", with_tier=False, key="vec_id",
+        decisions_root, compact_every, "cos", with_tier=False,
+        name="semantic ingest", key="vec_id",
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         sink(batch_df.select(F.col("vec_id").alias("doc_id"), "embedding"), batch_id)
 
-    return apply_batch
-
-
-def run_semantic_ingest_stream(
-    embs_stream: DataFrame,
-    spark: SparkSession,
-    index_root: str,
-    decisions_root: str,
-    checkpoint: str,
-    centroids: DataFrame,
-    threshold: float | None = None,
-    timeout_s: int = 300,
-    compact_every: int | None = DEFAULT_COMPACT_EVERY,
-    cell_cap: int | None = None,
-) -> DataFrame:
-    """Drive the embedding stream through
-    :func:`make_semantic_ingest_batch_fn` (:func:`_run_stream`)."""
-    return _run_stream(
-        embs_stream, make_semantic_ingest_batch_fn, locals(), "semantic ingest"
-    )
+    return replace(sink, apply_batch=apply_batch)
 
 
 def _cascade_sink(
     spark, fp_index_root, sig_index_root, decisions_root, threshold, shingler,
     compact_every, sig_bands_root, band_cap, fp_distinct, intra_batch_exact,
     benchmark_span_index, cont_threshold, quality_gate, phash_index_root,
-    phash_band_cap, phash_cells, phash_bands, semantic=False,
+    phash_cells, phash_bands, semantic=False,
     sem_index_root=None, centroids=None, cos_threshold=None, cell_cap=None,
-):
+) -> _Sink:
     """The two cascade names (each passes its own arguments): every tier in
     order, the semantic one only when ``semantic``. Its score is a cosine,
     not a Jaccard, so the six-tier decision row names the column ``score``
@@ -1295,19 +1232,16 @@ def _cascade_sink(
         raise ValueError(
             "band_cap requires sig_bands_root (the persisted banded layout)"
         )
-    phash_options = (phash_band_cap, phash_cells, phash_bands)
-    if phash_index_root is None and phash_options != (None, None, None):
+    if phash_index_root is None and (phash_cells, phash_bands) != (None, None):
         raise ValueError(
-            "phash_band_cap/phash_cells/phash_bands configure the media_dup tier, "
+            "phash_cells/phash_bands configure the media_dup tier, "
             "which only runs with phash_index_root — pass the root or drop them"
         )
     _require_compaction_for_caps(compact_every, band_cap=band_cap, cell_cap=cell_cap)
     tiers = [_quality_tier()] if quality_gate else []
     tiers += _exact_tiers(fp_index_root, fp_distinct, intra_batch_exact)
     if phash_index_root is not None:
-        tiers.append(
-            _media_tier(phash_index_root, phash_band_cap, phash_cells, phash_bands)
-        )
+        tiers.append(_media_tier(phash_index_root, phash_cells, phash_bands))
     tiers.append(_near_dup_tier(
         spark, sig_index_root, threshold, shingler, compact_every,
         sig_bands_root, band_cap,
@@ -1316,9 +1250,10 @@ def _cascade_sink(
         tiers.append(_semantic_tier(sem_index_root, centroids, cos_threshold, cell_cap))
     if benchmark_span_index is not None:
         tiers.append(_contamination_tier(benchmark_span_index, cont_threshold))
-    score_col = "score" if semantic else "jaccard"
     return _tiered_sink(
-        spark, tiers, decisions_root, compact_every, score_col, with_tier=True
+        spark, tiers, decisions_root, compact_every,
+        "score" if semantic else "jaccard", with_tier=True,
+        name="full-cascade ingest" if semantic else "cascade ingest",
     )
 
 
@@ -1338,18 +1273,17 @@ def make_cascade_ingest_batch_fn(
     cont_threshold: float = 0.05,
     quality_gate: bool = False,
     phash_index_root: str | None = None,
-    phash_band_cap: int | None = None,
     phash_cells: int | None = None,
     phash_bands: int | None = None,
-):
+) -> _Sink:
     """The LEXICAL cascade — the six-tier sink without its semantic tier:
     [quality →] exact → [media_dup →] near_dup [→ contaminated], each
     batch doc paying the cheapest test that can reject it. Parameters map
     to tiers: ``quality_gate`` → _quality_tier; ``fp_index_root``,
     ``fp_distinct``, ``intra_batch_exact`` → _exact_tiers;
-    ``phash_index_root``, ``phash_band_cap``, ``phash_cells``,
-    ``phash_bands`` → _media_tier (the options without the root are an
-    error); ``sig_index_root``, ``threshold``, ``shingler``,
+    ``phash_index_root``, ``phash_cells``, ``phash_bands`` → _media_tier
+    (the options without the root are an error); ``sig_index_root``,
+    ``threshold``, ``shingler``,
     ``sig_bands_root``, ``band_cap`` → _near_dup_tier;
     ``benchmark_span_index``, ``cont_threshold`` → _contamination_tier.
 
@@ -1368,36 +1302,6 @@ def make_cascade_ingest_batch_fn(
     single tier picks the lowest id among all 1.0 ties; the cascade never
     consults the near-dup tier for exact-rejected docs)."""
     return _cascade_sink(**locals())
-
-
-def run_cascade_ingest_stream(
-    docs_stream: DataFrame,
-    spark: SparkSession,
-    fp_index_root: str,
-    sig_index_root: str,
-    decisions_root: str,
-    checkpoint: str,
-    threshold: float,
-    timeout_s: int = 300,
-    shingler=None,
-    compact_every: int | None = DEFAULT_COMPACT_EVERY,
-    sig_bands_root: str | None = None,
-    band_cap: int | None = None,
-    fp_distinct: bool = True,
-    intra_batch_exact: bool = False,
-    benchmark_span_index: DataFrame | None = None,
-    cont_threshold: float = 0.05,
-    quality_gate: bool = False,
-    phash_index_root: str | None = None,
-    phash_band_cap: int | None = None,
-    phash_cells: int | None = None,
-    phash_bands: int | None = None,
-) -> DataFrame:
-    """Drive the document stream through
-    :func:`make_cascade_ingest_batch_fn` (:func:`_run_stream`)."""
-    return _run_stream(
-        docs_stream, make_cascade_ingest_batch_fn, locals(), "cascade ingest"
-    )
 
 
 def make_full_cascade_ingest_batch_fn(
@@ -1420,10 +1324,9 @@ def make_full_cascade_ingest_batch_fn(
     cont_threshold: float = 0.05,
     quality_gate: bool = False,
     phash_index_root: str | None = None,
-    phash_band_cap: int | None = None,
     phash_cells: int | None = None,
     phash_bands: int | None = None,
-):
+) -> _Sink:
     """The COMPLETE admission cascade over ``(doc_id, text, embedding)``
     batches — the real pretraining shape, registered end-to-end as q104:
     [quality →] exact → [media_dup →] near_dup → semantic
@@ -1436,40 +1339,6 @@ def make_full_cascade_ingest_batch_fn(
     since the semantic tier's metric (the exact cosine) is not a
     Jaccard."""
     return _cascade_sink(semantic=True, **locals())
-
-
-def run_full_cascade_ingest_stream(
-    docs_stream: DataFrame,
-    spark: SparkSession,
-    fp_index_root: str,
-    sig_index_root: str,
-    sem_index_root: str,
-    decisions_root: str,
-    checkpoint: str,
-    centroids: DataFrame,
-    threshold: float,
-    cos_threshold: float | None = None,
-    timeout_s: int = 300,
-    shingler=None,
-    compact_every: int | None = DEFAULT_COMPACT_EVERY,
-    sig_bands_root: str | None = None,
-    band_cap: int | None = None,
-    cell_cap: int | None = None,
-    fp_distinct: bool = True,
-    intra_batch_exact: bool = False,
-    benchmark_span_index: DataFrame | None = None,
-    cont_threshold: float = 0.05,
-    quality_gate: bool = False,
-    phash_index_root: str | None = None,
-    phash_band_cap: int | None = None,
-    phash_cells: int | None = None,
-    phash_bands: int | None = None,
-) -> DataFrame:
-    """Drive a ``(doc_id, text, embedding)`` stream through the six-tier
-    :func:`make_full_cascade_ingest_batch_fn` (:func:`_run_stream`)."""
-    return _run_stream(
-        docs_stream, make_full_cascade_ingest_batch_fn, locals(), "full-cascade ingest"
-    )
 
 
 def admission_report_frame(decisions: DataFrame) -> DataFrame:

@@ -9,12 +9,17 @@ sink, so batch-vs-streaming parity is testable (SURVEY §7 M4/M5).
 Design for scale: watermark + append output keeps state bounded (closed
 windows are evicted); the parquet file source here stands in for
 Kafka/object-store streams — swap ``readStream.format``.
+
+The module also holds the two availableNow runners: ``run_stream_to_memory``
+for the memory sink and ``run_sink_stream`` for every foreachBatch sink.
 """
 
 from __future__ import annotations
 
 import os
 import uuid
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -172,3 +177,39 @@ def _run_available_now(
         q.stop()
         raise TimeoutError(f"{what} did not finish within {timeout_s}s")
     return q
+
+
+@dataclass(frozen=True)
+class _Sink:
+    """A built foreachBatch sink: ``sink(batch_df, batch_id)`` applies one
+    micro-batch, and ``result()`` reads back what the sink has committed
+    (None while nothing is). ``name`` labels the sink's stream in errors;
+    ``committed`` says what ``result`` reads, e.g. ``"decisions under
+    <root>"``."""
+
+    apply_batch: Callable[[DataFrame, int], None]
+    result: Callable[[], DataFrame | None]
+    name: str
+    committed: str
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        self.apply_batch(batch_df, batch_id)
+
+
+def run_sink_stream(
+    stream: DataFrame, sink: _Sink, checkpoint: str, timeout_s: int = 300
+) -> DataFrame:
+    """The one runner of every foreachBatch sink (the ``make_*`` factories
+    of streaming/ingest.py and streaming/foreach_batch.py): run ``stream``
+    through ``sink`` to completion (availableNow) and return what it
+    committed. A stream still running after ``timeout_s`` is stopped and
+    raises TimeoutError; one that processed no batch raises ValueError."""
+    _run_available_now(
+        stream.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint),
+        timeout_s,
+        f"{sink.name} stream",
+    )
+    out = sink.result()
+    if out is None:
+        raise ValueError(f"stream processed no batches — no {sink.committed}")
+    return out

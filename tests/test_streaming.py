@@ -316,7 +316,8 @@ def test_foreach_batch_incremental_merge_matches_batch(spark, sf_dir, tmp_path):
     """foreachBatch merge sink: 3 time-sliced micro-batches incrementally
     merged into versioned parquet state must converge to the batch q06
     fold."""
-    from mapreduce_framework_spark.streaming.foreach_batch import run_kv_merge_stream
+    from mapreduce_framework_spark.streaming import run_sink_stream
+    from mapreduce_framework_spark.streaming.foreach_batch import make_kv_merge_batch_fn
 
     ops = kv_ops(spark, sf_dir).where(F.col("op") != "get")
     rows = ops.orderBy("ts", "event_id").collect()
@@ -337,11 +338,10 @@ def test_foreach_batch_incremental_merge_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(src, "slice_*"))
     )
-    state = run_kv_merge_stream(
+    state = run_sink_stream(
         stream_ops,
-        spark,
-        state_root=str(tmp_path / "fb_state"),
-        checkpoint=str(tmp_path / "fb_ckpt"),
+        make_kv_merge_batch_fn(spark, str(tmp_path / "fb_state")),
+        str(tmp_path / "fb_ckpt"),
     )
     got = {r["key"]: r["value"] for r in state.collect()}
     expected = {r["key"]: r["value"] for r in q06_kv_final_state(spark, sf_dir).collect()}
@@ -532,8 +532,9 @@ def test_incremental_rollup_is_slicing_invariant(spark, sf_dir, tmp_path):
     slicing (the registry form uses 3 time slices; both must equal the
     plain batch hourly aggregate)."""
     from mapreduce_framework_spark.catalog import table
+    from mapreduce_framework_spark.streaming import run_sink_stream
     from mapreduce_framework_spark.streaming.foreach_batch import (
-        run_rollup_merge_stream,
+        make_rollup_merge_batch_fn,
     )
 
     ev = table(spark, "events", sf_dir)
@@ -551,11 +552,10 @@ def test_incremental_rollup_is_slicing_invariant(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(src, "s*"))
     )
-    state = run_rollup_merge_stream(
+    state = run_sink_stream(
         stream,
-        spark,
-        state_root=str(tmp_path / "state"),
-        checkpoint=str(tmp_path / "ckpt"),
+        make_rollup_merge_batch_fn(spark, str(tmp_path / "state")),
+        str(tmp_path / "ckpt"),
     )
     got = {
         (r["h"], r["event_type"]): (r["cnt"], float(r["val"]))
@@ -883,31 +883,40 @@ def test_streaming_replays_handle_empty_input(spark, tmp_path):
 
 
 def test_merge_runners_raise_when_no_batch_ran(spark, sf_dir, tmp_path):
-    """A merge runner whose stream processed no batch has no state to
-    return: it must raise ValueError, as the ingest runners do. An
-    ``assert`` there would vanish under ``python -O`` and hand the caller
-    None."""
+    """A sink whose stream processed no batch has nothing committed to
+    return: the runner must raise ValueError for the merge sinks and the
+    ingest sinks alike. An ``assert`` there would vanish under
+    ``python -O`` and hand the caller None."""
     from mapreduce_framework_spark.catalog import table
+    from mapreduce_framework_spark.streaming import run_sink_stream
     from mapreduce_framework_spark.streaming.foreach_batch import (
-        run_kv_merge_stream,
-        run_rollup_merge_stream,
+        make_kv_merge_batch_fn,
+        make_rollup_merge_batch_fn,
     )
+    from mapreduce_framework_spark.streaming.ingest import make_ingest_batch_fn
 
     ops = kv_ops(spark, sf_dir).where(F.col("op") != "get")
     events = table(spark, "events", sf_dir)
-    for name, run, schema in (
-        ("kv", run_kv_merge_stream, ops.schema),
-        ("rollup", run_rollup_merge_stream, events.schema),
+    docs = table(spark, "documents", sf_dir).select("doc_id", "text")
+    for name, make, schema in (
+        ("kv", lambda root: make_kv_merge_batch_fn(spark, root), ops.schema),
+        ("rollup", lambda root: make_rollup_merge_batch_fn(spark, root), events.schema),
+        (
+            "ingest",
+            lambda root: make_ingest_batch_fn(
+                spark, os.path.join(root, "index"), os.path.join(root, "dec"), 0.8
+            ),
+            docs.schema,
+        ),
     ):
         staging = tmp_path / f"{name}_staging"
         staging.mkdir()  # staged source with no files: zero batches
         stream = spark.readStream.schema(schema).parquet(str(staging))
         with pytest.raises(ValueError, match="processed no batches"):
-            run(
+            run_sink_stream(
                 stream,
-                spark,
-                state_root=str(tmp_path / f"{name}_state"),
-                checkpoint=str(tmp_path / f"{name}_ckpt"),
+                make(str(tmp_path / f"{name}_state")),
+                str(tmp_path / f"{name}_ckpt"),
             )
 
 
@@ -1076,8 +1085,9 @@ def test_semantic_ingest_stream_equals_direct_batches(spark, tmp_path):
     from mapreduce_framework_spark.operators.streaming_replay import (
         _set_staged_mtime,
     )
+    from mapreduce_framework_spark.streaming import run_sink_stream
     from mapreduce_framework_spark.streaming.ingest import (
-        run_semantic_ingest_stream,
+        make_semantic_ingest_batch_fn,
     )
 
     cent_vecs, cents, batches, dfs = _sem_batches(spark)
@@ -1094,13 +1104,15 @@ def test_semantic_ingest_stream_equals_direct_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(_os.path.join(staging, "b*"))
     )
-    decisions = run_semantic_ingest_stream(
+    decisions = run_sink_stream(
         stream,
-        spark,
-        index_root=str(tmp_path / "index"),
-        decisions_root=str(tmp_path / "decisions"),
-        checkpoint=str(tmp_path / "ckpt"),
-        centroids=cents,
+        make_semantic_ingest_batch_fn(
+            spark,
+            index_root=str(tmp_path / "index"),
+            decisions_root=str(tmp_path / "decisions"),
+            centroids=cents,
+        ),
+        str(tmp_path / "ckpt"),
     )
     got = {
         r["vec_id"]: (r["admitted"], r["matched_id"])
@@ -1153,8 +1165,9 @@ def test_semantic_ingest_restart_processes_only_new_files(spark, tmp_path):
     from mapreduce_framework_spark.operators.streaming_replay import (
         _set_staged_mtime,
     )
+    from mapreduce_framework_spark.streaming import run_sink_stream
     from mapreduce_framework_spark.streaming.ingest import (
-        run_semantic_ingest_stream,
+        make_semantic_ingest_batch_fn,
     )
 
     cent_vecs, cents, batches, dfs = _sem_batches(spark)
@@ -1169,15 +1182,17 @@ def test_semantic_ingest_restart_processes_only_new_files(spark, tmp_path):
         _set_staged_mtime(p, 1_000_000_000.0 + 100 * i)
 
     def run():
-        return run_semantic_ingest_stream(
+        return run_sink_stream(
             spark.readStream.schema(dfs[0].schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(_os.path.join(staging, "b*")),
-            spark,
-            index_root=str(tmp_path / "index"),
-            decisions_root=str(tmp_path / "decisions"),
-            checkpoint=str(tmp_path / "ckpt"),
-            centroids=cents,
+            make_semantic_ingest_batch_fn(
+                spark,
+                index_root=str(tmp_path / "index"),
+                decisions_root=str(tmp_path / "decisions"),
+                centroids=cents,
+            ),
+            str(tmp_path / "ckpt"),
         )
 
     stage(0)
@@ -1711,13 +1726,13 @@ def test_cascade_ingest_redelivery_is_idempotent(spark, sf_dir, tmp_path):
 
 
 def test_cascade_stream_equals_direct_batches(spark, sf_dir, tmp_path):
-    """run_cascade_ingest_stream through a real file-source stream
+    """The lexical cascade sink through a real file-source stream
     (maxFilesPerTrigger=1) reaches the same decisions as driving the
     batch fn directly — checkpoint/trigger wiring adds nothing."""
     from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
+    from mapreduce_framework_spark.streaming import run_sink_stream
     from mapreduce_framework_spark.streaming.ingest import (
         make_cascade_ingest_batch_fn,
-        run_cascade_ingest_stream,
     )
 
     b0, b1 = _cascade_batches(spark, sf_dir)
@@ -1732,14 +1747,16 @@ def test_cascade_stream_equals_direct_batches(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(src, "b*"))
     )
-    got = run_cascade_ingest_stream(
+    got = run_sink_stream(
         stream,
-        spark,
-        str(tmp_path / "fp_idx"),
-        str(tmp_path / "sig_idx"),
-        str(tmp_path / "dec"),
+        make_cascade_ingest_batch_fn(
+            spark,
+            str(tmp_path / "fp_idx"),
+            str(tmp_path / "sig_idx"),
+            str(tmp_path / "dec"),
+            JACCARD_THRESHOLD,
+        ),
         str(tmp_path / "ckpt"),
-        JACCARD_THRESHOLD,
         timeout_s=240,
     )
     fn = make_cascade_ingest_batch_fn(
@@ -2024,15 +2041,16 @@ def test_full_cascade_parity_with_two_tier_when_semantic_cannot_fire(
 
 @pytest.mark.slow  # r14 item 2: equality soak; decisions oracle-checked by the q94-q110 replays
 def test_full_cascade_stream_equals_direct_batches(spark, tmp_path):
-    """run_full_cascade_ingest_stream through a real file-source stream
+    """The six-tier cascade sink through a real file-source stream
     (maxFilesPerTrigger=1, mtime-ordered staging) reaches the same
     decisions as driving the batch fn directly."""
     from mapreduce_framework_spark.operators.streaming_replay import (
         _set_staged_mtime,
     )
     from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
+    from mapreduce_framework_spark.streaming import run_sink_stream
     from mapreduce_framework_spark.streaming.ingest import (
-        run_full_cascade_ingest_stream,
+        make_full_cascade_ingest_batch_fn,
     )
 
     cents, dfs = _full_cascade_fixture(spark)
@@ -2047,16 +2065,18 @@ def test_full_cascade_stream_equals_direct_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(staging, "b*"))
     )
-    got = run_full_cascade_ingest_stream(
+    got = run_sink_stream(
         stream,
-        spark,
-        str(tmp_path / "s_fp"),
-        str(tmp_path / "s_sig"),
-        str(tmp_path / "s_sem"),
-        str(tmp_path / "s_dec"),
+        make_full_cascade_ingest_batch_fn(
+            spark,
+            str(tmp_path / "s_fp"),
+            str(tmp_path / "s_sig"),
+            str(tmp_path / "s_sem"),
+            str(tmp_path / "s_dec"),
+            cents,
+            JACCARD_THRESHOLD,
+        ),
         str(tmp_path / "s_ckpt"),
-        cents,
-        JACCARD_THRESHOLD,
         timeout_s=240,
     )
     roots, _ = _run_full_cascade(spark, tmp_path, dfs, cents, prefix="d")
@@ -3240,8 +3260,9 @@ def test_full_cascade_stream_with_bands_root(spark, tmp_path):
     )
     from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
     from mapreduce_framework_spark.storage import read_index_manifest
+    from mapreduce_framework_spark.streaming import run_sink_stream
     from mapreduce_framework_spark.streaming.ingest import (
-        run_full_cascade_ingest_stream,
+        make_full_cascade_ingest_batch_fn,
     )
 
     cents, dfs = _full_cascade_fixture(spark)
@@ -3258,18 +3279,20 @@ def test_full_cascade_stream_with_bands_root(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(os.path.join(staging, "b*"))
         )
-        dec = run_full_cascade_ingest_stream(
+        dec = run_sink_stream(
             stream,
-            spark,
-            str(tmp_path / f"{tag}_fp"),
-            str(tmp_path / f"{tag}_sig"),
-            str(tmp_path / f"{tag}_sem"),
-            str(tmp_path / f"{tag}_dec"),
+            make_full_cascade_ingest_batch_fn(
+                spark,
+                str(tmp_path / f"{tag}_fp"),
+                str(tmp_path / f"{tag}_sig"),
+                str(tmp_path / f"{tag}_sem"),
+                str(tmp_path / f"{tag}_dec"),
+                cents,
+                JACCARD_THRESHOLD,
+                **kw,
+            ),
             str(tmp_path / f"{tag}_ckpt"),
-            cents,
-            JACCARD_THRESHOLD,
             timeout_s=240,
-            **kw,
         )
         return {
             r["doc_id"]: (r["admitted"], r["tier"], r["matched_id"], r["score"])
@@ -3485,7 +3508,7 @@ def test_caps_require_compaction(spark, tmp_path):
         )
     # the media_dup tier's options without its root used to be silently
     # ignored; like band_cap without a bands root, they are a hard error
-    for opt in ({"phash_band_cap": 8}, {"phash_cells": 64}, {"phash_bands": 8}):
+    for opt in ({"phash_cells": 64}, {"phash_bands": 8}):
         with _pytest.raises(ValueError, match="phash_index_root"):
             make_cascade_ingest_batch_fn(
                 spark, str(tmp_path / "f5"), str(tmp_path / "s5"),
